@@ -1213,41 +1213,39 @@ object Bench {
         s"[bench] bench-summary.json write failed: ${e.getMessage}")
     }
     spark.stop()
-    // the summary AGAIN, on STDERR, as the process's last lines: sbt
-    // decorates stdout ([info] prefixes, a [success] trailer AFTER our
-    // last line) which has defeated the driver's tail parse for five
-    // consecutive rounds ("parsed": null) — stderr passes through sbt
-    // undecorated, and printing after spark.stop() puts it past the
-    // executor shutdown chatter. The committed bench-summary.json stays
-    // the durable record either way.
-    System.err.println(summary)
-    // r19: the PER-QUERY map, driver-visible at last. The driver's
-    // bounded (~2000-char) capture head-truncates the single ~7 KB
-    // stdout record line, so no driver round since r11 has had a
-    // per-query comparison (PERF_r18: n_common 0). Emit the map as the
-    // process's final stderr act, CHUNKED so every line fits the
-    // capture bound whole: each line is self-contained JSON
-    // {"metric":"queries_part","part":i,"parts":n,"queries":{...}};
-    // the union of the parts is exactly the full record's `queries`
-    // map. The metric name is distinct from "total" so a tail parser
-    // keyed on the summary can never mistake one part for the whole.
-    locally {
-      val entries = results.toSeq
-        .map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      val chunks = mutable.ArrayBuffer.empty[String]
-      val cur = new StringBuilder
-      entries.foreach { e =>
-        if (cur.nonEmpty && cur.length + e.length + 1 > 1600) {
-          chunks += cur.toString; cur.clear()
-        }
-        if (cur.nonEmpty) cur.append(',')
-        cur.append(e)
+    // stderr passes through sbt undecorated (stdout gets [info]
+    // prefixes and a [success] trailer after our last line), and
+    // printing after spark.stop() puts it past the executor shutdown
+    // chatter; see stderrTail for the line order
+    stderrTail(summary, results.toSeq).foreach(System.err.println)
+  }
+
+  /** The process's closing stderr lines. First the PER-QUERY map: the
+    * driver's bounded (~2000-char) capture head-truncates the single
+    * ~7 KB stdout record line, so the map is CHUNKED into
+    * self-contained lines that each fit the capture bound whole —
+    * {"metric":"queries_part","part":i,"parts":n,"queries":{...}}, whose
+    * union is exactly the full record's `queries` map; the metric name
+    * differs from "total" so a tail parser keyed on the summary can
+    * never mistake one part for the whole. Then the summary, LAST: a
+    * parser reading the last JSON line of the tail finds the total, and
+    * as many parts as fit come before it.
+    */
+  def stderrTail(summary: String, results: Seq[(String, Double)]): Seq[String] = {
+    val entries = results.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+    val chunks = mutable.ArrayBuffer.empty[String]
+    val cur = new StringBuilder
+    entries.foreach { e =>
+      if (cur.nonEmpty && cur.length + e.length + 1 > 1600) {
+        chunks += cur.toString; cur.clear()
       }
-      if (cur.nonEmpty) chunks += cur.toString
-      chunks.zipWithIndex.foreach { case (c, i) =>
-        System.err.println("{\"metric\":\"queries_part\",\"part\":" +
-          (i + 1) + ",\"parts\":" + chunks.size + ",\"queries\":{" + c + "}}")
-      }
+      if (cur.nonEmpty) cur.append(',')
+      cur.append(e)
     }
+    if (cur.nonEmpty) chunks += cur.toString
+    chunks.toSeq.zipWithIndex.map { case (c, i) =>
+      "{\"metric\":\"queries_part\",\"part\":" + (i + 1) + ",\"parts\":" +
+        chunks.size + ",\"queries\":{" + c + "}}"
+    } :+ summary
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import scala.jdk.CollectionConverters._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -2455,15 +2456,20 @@ object SparkEntry {
 
     // ESCAN through the store: ordered page of one stream.
     "es_scan_stream" -> ((s, d) =>
-      StoreProvider.storeFor(s, d).scan("user-42", count = 50).events
+      s.createDataFrame(
+        StoreProvider.storeFor(s, d).scan("user-42", count = 50).events.asJava,
+        graft.core.EventSchema.schema)
         .select(col("stream_id"), col("stream_version"), col("event_name"),
           col("payload").cast("string").as("payload"))
         .orderBy(col("stream_version"))),
 
     // ESCAN with an inclusive version range.
     "es_scan_range" -> ((s, d) =>
-      StoreProvider.storeFor(s, d)
-        .scan("user-7", startVersion = Some(10), endVersion = Some(25)).events
+      s.createDataFrame(
+        StoreProvider.storeFor(s, d)
+          .scan("user-7", startVersion = Some(10), endVersion = Some(25))
+          .events.asJava,
+        graft.core.EventSchema.schema)
         .select(col("stream_id"), col("stream_version"), col("event_name"))
         .orderBy(col("stream_version"))),
 

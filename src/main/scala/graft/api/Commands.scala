@@ -318,7 +318,7 @@ final class Commands(es: EventStore) {
     */
   def egetTransaction(eventId: String): Either[String, Seq[Map[String, Any]]] =
     parseUuid(eventId).map(id =>
-      es.readTransaction(id).collect().toSeq.map(encodeEvent))
+      es.readTransaction(id).map(encodeEvent))
 
   /** ESCAN stream_id start end [PARTITION_KEY u] [COUNT n] */
   def escan(streamId: String, start: String, end: String,
@@ -331,7 +331,7 @@ final class Commands(es: EventStore) {
     } yield {
       val res = es.scan(streamId, r._1, r._2, count, pk)
       Map("has_more" -> res.hasMore,
-        "events" -> res.events.collect().toSeq.map(encodeEvent))
+        "events" -> res.events.map(encodeEvent))
     }
 
   /** EPSCAN partition start end [COUNT n]; partition = id or key UUID. */
@@ -345,7 +345,7 @@ final class Commands(es: EventStore) {
     } yield {
       val res = es.pscan(pid, r._1, r._2, count)
       Map("has_more" -> res.hasMore,
-        "events" -> res.events.collect().toSeq.map(encodeEvent))
+        "events" -> res.events.map(encodeEvent))
     }
 
   /** ESVER stream_id [PARTITION_KEY u] → version or None. */

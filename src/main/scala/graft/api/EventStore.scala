@@ -3,15 +3,26 @@ package graft.api
 import java.util.UUID
 
 import graft.core._
-import graft.storage.{Manifest, ManifestState, StreamHead}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.storage.{HeadProbe, Manifest, ManifestState, StreamHead}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.LocalOutputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scan result: up to `count` events plus a has-more flag
-  * (`escan.rs:150-162`: fetch count+1, return count).
+  * (`escan.rs:150-162`: fetch count+1, return count). Rows carry
+  * [[graft.core.EventSchema.schema]].
   */
-final case class ScanResult(events: DataFrame, hasMore: Boolean)
+final case class ScanResult(events: Seq[Row], hasMore: Boolean)
 
 /** Spark-native event store with SierraDB's command semantics
   * (SURVEY.md §2.1): optimistic-concurrency appends, point lookups,
@@ -19,13 +30,26 @@ final case class ScanResult(events: DataFrame, hasMore: Boolean)
   *
   * Storage: a partitioned parquet event-log table
   * `<root>/events/partition_id=NN/part-....parquet`, each file sorted by
-  * `partition_sequence` (so parquet row-group min/max stats play the
-  * role of the reference's per-segment MPHF indexes — SURVEY §4), plus
-  * a commit manifest whose per-partition watermark bounds reader
-  * visibility (snapshot isolation; `docs/Watermarks.md` semantics).
+  * `partition_sequence` (so parquet row-group min/max stats and the
+  * `event_id` bloom filter play the role of the reference's per-segment
+  * MPHF indexes — SURVEY §4), plus a commit manifest whose
+  * per-partition watermark bounds reader visibility (snapshot
+  * isolation; `docs/Watermarks.md` semantics). Two paths share that
+  * layout:
   *
-  * Scale notes (100 TB): all reads are single-partition-pruned filters
-  * or partition-parallel scans; bulk ingest assigns gapless sequences
+  *   - the COMMAND path runs no Spark job. EAPPEND/EMAPPEND write one
+  *     file per touched partition from the driver (`writeRows`); EGET,
+  *     EGET TRANSACTION, ESCAN and EPSCAN list only the target
+  *     partition directory, read it through footer-pruned row groups
+  *     ([[graft.storage.HeadProbe.scan]]) clamped to one manifest
+  *     snapshot's watermark, and sort and limit on the driver;
+  *   - the ANALYTICS path is [[events]], a watermark-clamped Spark scan
+  *     of the whole log, used by the bulk operators and as the
+  *     reference the command reads are tested against.
+  *
+  * Scale notes (100 TB): command reads touch one partition directory
+  * and, after pruning, a row group or two; bulk reads are
+  * partition-parallel scans; bulk ingest assigns gapless sequences
   * with one shuffle (window over partition_id) — the per-partition
   * serialization the reference enforces with one writer thread per
   * bucket (`writer_thread_pool.rs:292-407`) is here enforced by the
@@ -241,6 +265,8 @@ final class EventStore private (
     java.nio.file.Files.move(ev, old)
     java.nio.file.Files.move(java.nio.file.Paths.get(tmp), ev)
     deleteRecursively(old.toFile)
+    // every event file was replaced: drop the probe's footers/blooms
+    HeadProbe.invalidate(eventsDir)
     commitState(state.copy(version = state.version + 1))
     // compaction also folds the head LSM into a fresh base table
     foldHeads()
@@ -441,30 +467,40 @@ final class EventStore private (
   }
 
   /** Crash recovery (the parquet analogue of the reference's segment
-    * reconciliation on open, `database.rs:463-700`): a crash between a
-    * data-file write and its manifest commit leaves orphan files whose
-    * sequences sit above the committed watermark. They are invisible to
-    * watermark-clamped reads, but a LATER commit would advance the
-    * watermark over them and surface duplicates — so delete them before
-    * accepting any new writes. Runs once per open.
+    * reconciliation on open, `database.rs:463-700`): a crash inside an
+    * append leaves either a hidden in-flight file (died before its
+    * rename) or a published file whose sequences sit above the
+    * committed watermark (died before the manifest commit). Both are
+    * invisible to watermark-clamped reads, but a LATER commit would
+    * advance the watermark over the second kind and surface duplicates
+    * — so delete both before accepting any new writes. Each file's
+    * lowest sequence comes from its footer statistics (no Spark job).
+    * Runs once per open.
     */
   private[api] def recoverOrphans(): Unit = lock.synchronized {
-    val files = listDataFiles()
-    if (files.isEmpty) return
-    val wmMap = state.watermarks
-    val perFile = spark.read
-      .schema(EventSchema.schema)
-      .option("basePath", eventsDir)
-      .parquet(eventsDir)
-      .groupBy(input_file_name().as("f"), col("partition_id"))
-      .agg(min(col("partition_sequence")).as("lo"))
-      .collect()
-    perFile.foreach { r =>
-      if (r.getAs[Long]("lo") > wmMap.getOrElse(r.getAs[Int]("partition_id"), -1L)) {
-        val p = java.nio.file.Paths.get(java.net.URI.create(r.getAs[String]("f")))
-        java.nio.file.Files.deleteIfExists(p)
+    val conf = probeHadoopConf
+    val base = new Path(eventsDir)
+    val fs = base.getFileSystem(conf)
+    if (!fs.exists(base)) return
+    fs.listStatus(base).iterator
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("partition_id="))
+      .foreach { st =>
+        val wm = state.watermark(
+          st.getPath.getName.stripPrefix("partition_id=").toInt)
+        fs.listStatus(st.getPath).iterator.map(_.getPath)
+          .filter(_.getName.startsWith(EventStore.InflightPrefix))
+          .foreach(fs.delete(_, false))
+        HeadProbe.listFiles(st.getPath.toString, conf).foreach { f =>
+          // both writers keep int64 statistics (README "Storage model")
+          val lo = HeadProbe.longRange(f, "partition_sequence", conf).map(_._1)
+            .getOrElse(throw new IllegalStateException(
+              s"$f has no partition_sequence statistics"))
+          if (lo > wm) {
+            fs.delete(f, false)
+            HeadProbe.invalidate(f.toString)
+          }
+        }
       }
-    }
   }
 
   // ------------------------------------------------------- head-state (LSM)
@@ -518,7 +554,7 @@ final class EventStore private (
     // entries for this store's layer files — drop them too, or folded-
     // away layers leak for the JVM's life and a deleted-and-recreated
     // store path would be served stale metadata
-    graft.storage.HeadProbe.invalidate(s"$root/_heads")
+    HeadProbe.invalidate(s"$root/_heads")
   }
 
   private def readHeads(dir: String): DataFrame =
@@ -590,7 +626,7 @@ final class EventStore private (
                  else Nil)
             val hit = layersNewestFirst.iterator
               .map(dir =>
-                graft.storage.HeadProbe.probe(dir, sid, pk, probeHadoopConf))
+                HeadProbe.probe(dir, sid, pk, probeHadoopConf))
               .collectFirst { case Some((pid, ver)) =>
                 StreamHead(ver, pk, pid)
               }
@@ -633,7 +669,7 @@ final class EventStore private (
           val merged =
             collection.mutable.LinkedHashMap.empty[String, StreamHead]
           layersNewestFirst.foreach { dir =>
-            graft.storage.HeadProbe.probeStream(dir, sid, probeHadoopConf)
+            HeadProbe.probeStream(dir, sid, probeHadoopConf)
               .foreach { case (pk, pid, ver) =>
                 if (!merged.contains(pk)) merged(pk) = StreamHead(ver, pk, pid)
               }
@@ -736,6 +772,10 @@ final class EventStore private (
       .write.mode("overwrite")
       .option("compression", "zstd")
       .option("parquet.bloom.filter.enabled#stream_id", "true")
+      // size the bitset to one shard's entries: unsized, parquet
+      // allocates its 1 MB maximum even for a 64-entry delta
+      .option("parquet.bloom.filter.expected.ndv#stream_id",
+        math.max(1L, (approxRows + shards - 1) / shards).toString)
       .parquet(dir)
   }
 
@@ -834,16 +874,55 @@ final class EventStore private (
     }
   }
 
-  /** EGET (`eget.rs:26-65`): point lookup routed by the partition hash
-    * embedded in the event UUID — prunes to ONE directory partition,
-    * then parquet bloom filter + row-group stats prune files.
+  /** Command-read core: the events of one partition directory, as of
+    * snapshot `snap`, that satisfy `preds`, handed to `visit` until it
+    * returns false. No Spark job: only `partition_id=pid` is listed,
+    * and files and row groups are pruned by footer statistics and
+    * bloom filters before a data page is read ([[HeadProbe.scan]]).
+    * The watermark clamp is one more predicate, so files an in-flight
+    * append has renamed in but not yet committed are never seen.
     */
-  def get(eventId: UUID): DataFrame = {
-    val pid = Ids.partitionIdForEventId(eventId, numPartitions)
-    events()
-      .where(col("partition_id") === pid && col("event_id") === eventId.toString)
-      .limit(1)
+  private def readPartition(snap: ManifestState, pid: Int,
+      preds: Seq[HeadProbe.Pred])(visit: Row => Boolean): Unit = {
+    val wm = snap.watermark(pid)
+    if (wm >= 0)
+      HeadProbe.scan(
+        HeadProbe.listFiles(s"$eventsDir/partition_id=$pid", probeHadoopConf),
+        HeadProbe.Between("partition_sequence", 0L, wm) +: preds,
+        probeHadoopConf)(g => visit(EventStore.eventRow(pid, g)))
   }
+
+  /** The `limit` matching events with the smallest `key` column, in
+    * ascending key order — the driver-side `ORDER BY key LIMIT n`,
+    * holding at most `limit` rows however many match.
+    */
+  private def firstByKey(snap: ManifestState, pid: Int,
+      preds: Seq[HeadProbe.Pred], key: String, limit: Long): Seq[Row] = {
+    val k = EventSchema.schema.fieldIndex(key)
+    val heap = collection.mutable.PriorityQueue.empty[Row](
+      Ordering.by((r: Row) => r.getLong(k)))
+    readPartition(snap, pid, preds) { r =>
+      heap.enqueue(r)
+      if (heap.size > limit) heap.dequeue()
+      true
+    }
+    heap.dequeueAll.reverse
+  }
+
+  private def lookup(snap: ManifestState, eventId: UUID): Option[Row] = {
+    var hit: Option[Row] = None
+    readPartition(snap, Ids.partitionIdForEventId(eventId, numPartitions),
+        Seq(HeadProbe.Eq("event_id", eventId.toString))) { r =>
+      hit = Some(r); false
+    }
+    hit
+  }
+
+  /** EGET (`eget.rs:26-65`): point lookup routed by the partition hash
+    * embedded in the event UUID — ONE partition directory, then the
+    * event_id bloom filter + row-group stats prune files.
+    */
+  def get(eventId: UUID): Option[Row] = lookup(state, eventId)
 
   /** read_transaction (`database.rs:138-208`): all committed events of
     * the transaction containing `eventId`, from that event's offset
@@ -853,27 +932,24 @@ final class EventStore private (
     * `id.rs` bit layout) short-circuits the second lookup for the
     * overwhelmingly common single-event case.
     */
-  def readTransaction(eventId: UUID): DataFrame = {
-    val pid = Ids.partitionIdForEventId(eventId, numPartitions)
-    val hit = events()
-      .where(col("partition_id") === pid && col("event_id") === eventId.toString)
-      .select(col("transaction_id"), col("partition_sequence"))
-      .limit(1).collect()
-    hit.headOption match {
-      case None => events().limit(0)
+  def readTransaction(eventId: UUID): Seq[Row] = {
+    val snap = state
+    lookup(snap, eventId) match {
+      case None => Nil
       case Some(r) =>
-        val tx = r.getString(0)
-        if (Ids.singleEventFlag(UUID.fromString(tx))) get(eventId)
-        else events()
-          .where(col("partition_id") === pid && col("transaction_id") === tx &&
-            col("partition_sequence") >= r.getLong(1))
-          .orderBy(col("partition_sequence"))
+        val tx = r.getAs[String]("transaction_id")
+        if (Ids.singleEventFlag(UUID.fromString(tx))) Seq(r)
+        else firstByKey(snap, r.getAs[Int]("partition_id"), Seq(
+          HeadProbe.Eq("transaction_id", tx),
+          HeadProbe.Between("partition_sequence",
+            r.getAs[Long]("partition_sequence"), Long.MaxValue)),
+          "partition_sequence", Long.MaxValue)
     }
   }
 
   /** ESCAN (`escan.rs`): stream scan by version range, ascending,
-    * `count` events max, has_more flag. Default count 100
-    * (`escan.rs:138`); start/end inclusive.
+    * `count` events max, has_more from a count+1 probe. Default count
+    * 100 (`escan.rs:138`); start/end inclusive.
     */
   def scan(
       streamId: String,
@@ -886,13 +962,12 @@ final class EventStore private (
     // partition_key conjunct: versions are scoped per (pk, stream), so
     // a colliding key's same-named stream in this partition must not
     // interleave (its versions also start at 0)
-    var q = events()
-      .where(col("partition_id") === pid && col("stream_id") === streamId &&
-        col("partition_key") === pk.toString)
-    startVersion.foreach(v => q = q.where(col("stream_version") >= v))
-    endVersion.foreach(v => q = q.where(col("stream_version") <= v))
-    val rows = q.orderBy(col("stream_version")).limit(count + 1)
-    page(rows, count)
+    page(firstByKey(state, pid, Seq(
+      HeadProbe.Eq("stream_id", streamId),
+      HeadProbe.Eq("partition_key", pk.toString),
+      HeadProbe.Between("stream_version",
+        startVersion.getOrElse(0L), endVersion.getOrElse(Long.MaxValue))),
+      "stream_version", count + 1L), count)
   }
 
   /** EPSCAN (`epscan.rs`, `read.rs:451-563`): partition scan by
@@ -902,23 +977,14 @@ final class EventStore private (
       partitionId: Int,
       startSeq: Option[Long] = None,
       endSeq: Option[Long] = None,
-      count: Int = 100): ScanResult = {
-    var q = events().where(col("partition_id") === partitionId)
-    startSeq.foreach(v => q = q.where(col("partition_sequence") >= v))
-    endSeq.foreach(v => q = q.where(col("partition_sequence") <= v))
-    val rows = q.orderBy(col("partition_sequence")).limit(count + 1)
-    page(rows, count)
-  }
+      count: Int = 100): ScanResult =
+    page(firstByKey(state, partitionId, Seq(
+      HeadProbe.Between("partition_sequence",
+        startSeq.getOrElse(0L), endSeq.getOrElse(Long.MaxValue))),
+      "partition_sequence", count + 1L), count)
 
-  private def page(rows: DataFrame, count: Int): ScanResult = {
-    val collected = rows.collect()
-    val hasMore = collected.length > count
-    val kept = collected.take(count)
-    ScanResult(
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(kept.toIndexedSeq, 1), rows.schema),
-      hasMore)
-  }
+  private def page(rows: Seq[Row], count: Int): ScanResult =
+    ScanResult(rows.take(count), rows.length > count)
 
   // ------------------------------------------------------------ read cache
 
@@ -943,7 +1009,10 @@ final class EventStore private (
     64L + r.toSeq.map(len).sum
   }
 
-  /** EGET through the read cache (hit = no scan at all). */
+  /** EGET through the read cache: a hit touches no file; a miss is the
+    * jobless [[get]] probe, and a found event is cached (committed
+    * events are immutable, absent ids are not cached).
+    */
   def getCached(eventId: UUID): Option[Row] = {
     val key = eventId.toString
     egetCache.synchronized(Option(egetCache.get(key))) match {
@@ -952,7 +1021,7 @@ final class EventStore private (
         some
       case None =>
         cacheMisses.incrementAndGet()
-        val row = get(eventId).collect().headOption
+        val row = get(eventId)
         row.foreach { r =>
           egetCache.synchronized {
             // re-check under the lock: a concurrent miss on the same id
@@ -1042,17 +1111,46 @@ final class EventStore private (
 
   // ------------------------------------------------------------- internals
 
+  /** The append write path, driver-side (no Spark job): one parquet
+    * file per touched partition in the layout Spark's own writer
+    * produces (see [[EventStore.fileSchema]]) — zstd, rows sorted by
+    * `partition_sequence`, an `event_id` bloom filter sized to the
+    * file's rows. Each file is written under a hidden in-flight name,
+    * which every listing skips, and renamed in whole before the caller
+    * commits the manifest; a crash leaves either a hidden temp file or
+    * a file above the watermark, and [[recoverOrphans]] removes both.
+    * A failure here deletes what this call already wrote, so the
+    * sequences it held can be reused by the next append.
+    */
   private def writeRows(rows: Seq[Event]): Unit = {
-    spark.createDataset(rows.toList)
-      .toDF()
-      .coalesce(1)
-      .sortWithinPartitions($"partition_sequence")
-      .write
-      .mode("append")
-      .partitionBy("partition_id")
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#event_id", "true")
-      .parquet(eventsDir)
+    val written = collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    try rows.groupBy(_.partition_id).foreach { case (pid, prs) =>
+      val dir = java.nio.file.Paths.get(eventsDir, s"partition_id=$pid")
+      java.nio.file.Files.createDirectories(dir)
+      val name = s"part-${UUID.randomUUID()}.zstd.parquet"
+      val tmp = dir.resolve(EventStore.InflightPrefix + name)
+      written += tmp
+      // a plain local file, like the manifest: Hadoop's local
+      // filesystem would fork a `chmod` per create (~7 ms on a 4-core
+      // VM, most of an append) and add a checksum side file
+      val w = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
+        .withConf(probeHadoopConf)
+        .withType(EventStore.fileParquetSchema)
+        .withExtraMetaData(EventStore.fileMetadata)
+        .withCompressionCodec(CompressionCodecName.ZSTD)
+        .withBloomFilterEnabled("event_id", true)
+        .withBloomFilterNDV("event_id", prs.size.toLong)
+        .build()
+      try prs.sortBy(_.partition_sequence).foreach(e => w.write(EventStore.toGroup(e)))
+      finally w.close()
+      val dst = dir.resolve(name)
+      java.nio.file.Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      written += dst
+    } catch {
+      case e: Throwable =>
+        written.foreach(java.nio.file.Files.deleteIfExists)
+        throw e
+    }
   }
 
   private def commitState(next: ManifestState): Unit = {
@@ -1089,8 +1187,8 @@ object EventStore {
       spark, root, st.numPartitions.max(1), st, strictVersioning, maxInlineHeads)
     // a fresh handle must not trust process-wide probe caches for this
     // path: the same root may have been deleted and recreated since a
-    // previous store cached its layer metadata
-    graft.storage.HeadProbe.invalidate(s"$root/_heads")
+    // previous store cached its layer or event-file metadata
+    HeadProbe.invalidate(root)
     es.recoverOrphans()
     es.recoverOrphanHeads()
     register(es)
@@ -1215,6 +1313,65 @@ object EventStore {
       org.apache.spark.sql.types.IntegerType, nullable = false),
     org.apache.spark.sql.types.StructField("version",
       org.apache.spark.sql.types.LongType, nullable = false)))
+
+  /** Name prefix of an append's file while it is written: hidden, so
+    * Spark's file index, the command reads and the streaming source all
+    * skip it until the rename publishes it.
+    */
+  private[api] val InflightPrefix = ".inflight-"
+
+  /** An event file's columns exactly as Spark writes a dataset of
+    * [[graft.core.Event]] partitioned by `partition_id`: the encoder's
+    * types and nullability (strings and binaries optional, longs
+    * required), the partition column left to the directory name.
+    */
+  private[api] val fileSchema: StructType = StructType(
+    Encoders.product[Event].schema.filterNot(_.name == EventSchema.PartitionIdCol))
+
+  private val fileParquetSchema = new SparkToParquetSchemaConverter().convert(fileSchema)
+
+  /** the footer key/values Spark writes: a read without a schema infers
+    * [[fileSchema]] from them
+    */
+  private val fileMetadata = java.util.Map.of(
+    "org.apache.spark.version", org.apache.spark.SPARK_VERSION_SHORT,
+    "org.apache.spark.sql.parquet.row.metadata", fileSchema.json)
+
+  private def toGroup(e: Event): Group = {
+    val g = new SimpleGroup(fileParquetSchema)
+    g.add("event_id", e.event_id)
+    g.add("transaction_id", e.transaction_id)
+    g.add("partition_key", e.partition_key)
+    g.add("partition_sequence", e.partition_sequence)
+    g.add("stream_version", e.stream_version)
+    g.add("stream_id", e.stream_id)
+    g.add("event_name", e.event_name)
+    g.add("timestamp_ns", e.timestamp_ns)
+    // a null blob is an absent optional value, as Spark writes it
+    if (e.metadata != null) g.add("metadata", Binary.fromConstantByteArray(e.metadata))
+    if (e.payload != null) g.add("payload", Binary.fromConstantByteArray(e.payload))
+    g
+  }
+
+  /** One stored record as an [[EventSchema.schema]] row; `partition_id`
+    * comes from the directory, like Spark's partition discovery.
+    */
+  private def eventRow(pid: Int, g: Group): Row = {
+    def bin(c: String): Array[Byte] =
+      if (g.getFieldRepetitionCount(c) == 0) null else g.getBinary(c, 0).getBytes
+    new GenericRowWithSchema(Array[Any](
+      g.getString("event_id", 0),
+      g.getString("transaction_id", 0),
+      g.getString("partition_key", 0),
+      pid,
+      g.getLong("partition_sequence", 0),
+      g.getLong("stream_version", 0),
+      g.getString("stream_id", 0),
+      g.getString("event_name", 0),
+      g.getLong("timestamp_ns", 0),
+      bin("metadata"),
+      bin("payload")), EventSchema.schema)
+  }
 
   /** heads map key: 36-char uuid prefix + ':' + stream id (fixed-width
     * prefix, safe for any stream id content).

@@ -3,13 +3,15 @@ package graft.streaming
 import java.util.{Map => JMap, Set => JSet}
 
 import graft.core.EventSchema
-import graft.storage.Manifest
+import graft.storage.{HeadProbe, Manifest}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
@@ -82,14 +84,17 @@ object SeqVectorOffset {
   *     driver-side mutable cursor to re-initialize on restart (the
   *     fragile part of the v1 `Source` contract this replaces).
   *
-  * Scale: `planInputPartitions` emits one task per (pid, file) under
-  * the subscribed partition directories only — directory pruning comes
+  * Scale: `planInputPartitions` emits one task per pid under the
+  * subscribed partition directories only — directory pruning comes
   * from the subscription matcher's pid set (`pids` option), not from
-  * optimizer goodwill — and every reader pushes the (start, end]
-  * sequence bounds into parquet row-group statistics, so catch-up over
-  * a long-compacted log skips cold files on footer stats alone.
-  * Readers run on executors, distributed like any batch scan; nothing
-  * funnels through the driver.
+  * optimizer goodwill. Files wholly outside the batch's (start, end]
+  * range are dropped at planning from their cached footer statistics
+  * (a partition fed by single-event appends holds thousands of small
+  * files, and a task per file cost ~10 ms each on a 4-core VM), and
+  * every reader pushes the same bounds into parquet row-group
+  * statistics, so catch-up over a long-compacted log skips cold files
+  * on footer stats alone. Readers run on executors, distributed like
+  * any batch scan; nothing funnels through the driver.
   */
 final class GraftEventMicroBatchStream(
     root: String,
@@ -165,22 +170,15 @@ final class GraftEventMicroBatchStream(
     val conf = new Configuration()
     e.toSeq.sortBy(_._1).flatMap { case (pid, hi) =>
       val lo = s.getOrElse(pid, -1L)
-      if (hi <= lo) Nil
-      else listParquet(conf, s"$root/events/partition_id=$pid")
-        .map(f => GraftFilePartition(pid, lo, hi, f))
+      // footer statistics (cached by the shared probe) drop every file
+      // wholly outside (lo, hi] before any task opens it
+      val files =
+        if (hi <= lo) Nil
+        else HeadProbe.listFiles(s"$root/events/partition_id=$pid", conf)
+          .filter(f => HeadProbe.longRange(f, "partition_sequence", conf)
+            .forall { case (min, max) => max > lo && min <= hi })
+      Option.when(files.nonEmpty)(GraftFilePartition(pid, lo, hi, files.map(_.toString)))
     }.toArray
-  }
-
-  private def listParquet(conf: Configuration, dir: String): Seq[String] = {
-    val p = new HPath(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Nil
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isFile && {
-        val n = st.getPath.getName
-        n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-      })
-      .map(_.getPath.toString)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = new GraftReaderFactory
@@ -192,10 +190,11 @@ final class GraftEventMicroBatchStream(
   override def toString: String = s"GraftEventMicroBatchStream[$root]"
 }
 
-/** One file of one store partition, bounded to the batch's (lo, hi]
-  * sequence range.
+/** The files of one store partition that hold part of the batch's
+  * (lo, hi] sequence range — one task per partition, so a partition of
+  * many small append files costs one task, not one per file.
   */
-final case class GraftFilePartition(pid: Int, lo: Long, hi: Long, file: String)
+final case class GraftFilePartition(pid: Int, lo: Long, hi: Long, files: Seq[String])
   extends InputPartition
 
 final class GraftReaderFactory extends PartitionReaderFactory {
@@ -203,32 +202,46 @@ final class GraftReaderFactory extends PartitionReaderFactory {
     new GraftPartitionReader(partition.asInstanceOf[GraftFilePartition])
 }
 
-/** Reads one event-log parquet file through parquet-hadoop's Group API
-  * with the (lo, hi] sequence bounds compiled into a parquet filter
-  * predicate — row-group statistics pruning happens inside the reader,
-  * so a file wholly outside the range costs one footer read. The
-  * directory-derived `partition_id` is re-attached here (Hive-style
-  * layout keeps it out of the files).
+/** Reads a partition's event-log parquet files, one after another,
+  * through parquet-hadoop's Group API with the (lo, hi] sequence bounds
+  * compiled into a parquet filter predicate — row-group statistics
+  * pruning happens inside the reader. The directory-derived
+  * `partition_id` is re-attached here (Hive-style layout keeps it out
+  * of the files).
   */
 final class GraftPartitionReader(p: GraftFilePartition)
   extends PartitionReader[InternalRow] {
 
-  private val reader: ParquetReader[Group] = {
+  private val filter = {
     val seqCol = FilterApi.longColumn("partition_sequence")
-    val pred = FilterApi.and(
+    FilterCompat.get(FilterApi.and(
       FilterApi.gt(seqCol, java.lang.Long.valueOf(p.lo)),
-      FilterApi.ltEq(seqCol, java.lang.Long.valueOf(p.hi)))
-    ParquetReader.builder(new GroupReadSupport(), new HPath(p.file))
-      .withConf(new Configuration())
-      .withFilter(FilterCompat.get(pred))
-      .build()
+      FilterApi.ltEq(seqCol, java.lang.Long.valueOf(p.hi))))
   }
+  private val pending = p.files.iterator
+  private var reader: ParquetReader[Group] = _
+  private val conf = new Configuration()
+
+  // built from an InputFile: the Path-based builder lists the path and
+  // reads its footer on a fresh thread pool, ~13 ms per file on a
+  // 4-core VM against ~0.2 ms this way
+  private def open(file: String): ParquetReader[Group] =
+    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(new HPath(file), conf)) {
+      override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
+    }.withConf(conf)
+      .withFilter(filter)
+      .build()
 
   private val toUnsafe = UnsafeProjection.create(EventSchema.schema)
   private var current: Group = _
 
   override def next(): Boolean = {
-    current = reader.read()
+    current = if (reader == null) null else reader.read()
+    while (current == null && pending.hasNext) {
+      if (reader != null) reader.close()
+      reader = open(pending.next())
+      current = reader.read()
+    }
     current != null
   }
 
@@ -256,7 +269,7 @@ final class GraftPartitionReader(p: GraftFilePartition)
       binOrNull("payload"))))
   }
 
-  override def close(): Unit = reader.close()
+  override def close(): Unit = if (reader != null) reader.close()
 }
 
 /** `spark.readStream.format(classOf[GraftEventSourceProvider].getName)

@@ -32,8 +32,8 @@ object Probe {
     val es = graft.api.EventStore.open(spark, dir, 32)
     val n = time("ingest-1M") { es.ingest(big, "arrival") }
     println(s"INGESTED=$n RATE=${(n / 1).toDouble} ev")
-    time("scan-after") { es.scan("user-42", count = 100).events.count() }
-    time("pscan-after") { es.pscan(0, count = 1000).events.count() }
+    time("scan-after") { es.scan("user-42", count = 100).events.size }
+    time("pscan-after") { es.pscan(0, count = 1000).events.size }
 
     // heads-at-scale probe: 1M DISTINCT streams must ingest with the
     // driver holding only the bounded inline overlay (heads spill to

@@ -1,0 +1,268 @@
+package graft.api
+
+import java.nio.file.{Files, Paths}
+import java.util.UUID
+
+import scala.jdk.CollectionConverters._
+
+import graft.core._
+import graft.streaming.GraftEventMicroBatchStream
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types._
+import org.scalacheck.Gen
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+
+/** The command reads (EGET, EGET TRANSACTION, ESCAN, EPSCAN) are served
+  * from the driver by footer-pruned parquet reads; [[EventStore.events]]
+  * is the Spark scan of the same files. Random stores built from every
+  * write path — bulk ingest, EAPPEND, EMAPPEND, multi-partition
+  * appendMany, compaction — must answer every command exactly as the
+  * Spark plans over `events()` do, including past an uncommitted
+  * orphan file and across partition keys sharing one stream name. The
+  * driver-written files must also read back field for field through
+  * Spark and through the streaming source.
+  */
+class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
+    with graft.PropHelpers {
+
+  private lazy val spark = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
+
+  private sealed trait Op
+  private final case class Ingest(sids: Seq[String]) extends Op
+  private final case class Append(sid: String, keyOf: Option[String]) extends Op
+  private final case class MAppend(keyOf: String, sids: Seq[String]) extends Op
+  private final case class Many(sids: Seq[String]) extends Op
+  private case object Compact extends Op
+
+  private val streams = Seq("shared", "alpha", "beta", "gamma", "delta", "eps")
+  private val genSid = Gen.oneOf(streams)
+  private val genOp: Gen[Op] = Gen.frequency(
+    2 -> Gen.chooseNum(1, 12).flatMap(Gen.listOfN(_, genSid)).map(Ingest(_)),
+    4 -> Gen.zip(genSid, Gen.option(genSid)).map { case (s, k) => Append(s, k) },
+    3 -> Gen.zip(genSid, Gen.chooseNum(1, 4).flatMap(Gen.listOfN(_, genSid)))
+      .map { case (k, ss) => MAppend(k, ss) },
+    2 -> Gen.chooseNum(2, 6).flatMap(Gen.listOfN(_, genSid)).map(Many(_)),
+    1 -> Gen.const(Compact))
+  private val genStore: Gen[(Int, List[Op], Long)] = for {
+    np <- Gen.oneOf(1, 3, 4)
+    n <- Gen.chooseNum(4, 10)
+    ops <- Gen.listOfN(n, genOp)
+    seed <- Gen.chooseNum(0L, Long.MaxValue)
+  } yield (np, ops, seed)
+
+  /** metadata cycles through empty, null and non-empty blobs */
+  private def input(sid: String, i: Int): EventInput = EventInput(sid, s"E$i",
+    payload = s"payload-$sid-$i".getBytes,
+    metadata = i % 3 match {
+      case 0 => Array.emptyByteArray
+      case 1 => null
+      case _ => s"""{"i":$i}""".getBytes
+    })
+
+  /** Build the store; returns a reader handle opened on the final
+    * committed state, after which one more append's manifest commit is
+    * rolled back — the reader then sees an uncommitted file above its
+    * watermark, as after a crash between rename and commit.
+    */
+  private def build(np: Int, ops: Seq[Op]): (EventStore, String) = {
+    val dir = Files.createTempDirectory("graft-diff-").toString
+    val es = EventStore.open(spark, dir, np)
+    var i = 0
+    def next(): Int = { i += 1; i }
+    // two partition keys share the stream name "shared" in every store
+    es.append(input("shared", next()))
+    es.mappend(Ids.partitionKeyForStream("alpha"), Seq(input("shared", next())))
+    val schema = StructType(Seq(
+      StructField("stream_id", StringType), StructField("event_name", StringType),
+      StructField("payload", BinaryType), StructField("metadata", BinaryType),
+      StructField("ord", LongType)))
+    ops.foreach {
+      case Ingest(sids) =>
+        val rows = sids.map { s =>
+          val in = input(s, next()); Row(s, in.eventName, in.payload, in.metadata, i.toLong)
+        }
+        es.ingest(spark.createDataFrame(rows.asJava, schema), "ord")
+      case Append(s, k) =>
+        es.append(input(s, next()), k.map(Ids.partitionKeyForStream))
+      case MAppend(k, sids) =>
+        es.mappend(Ids.partitionKeyForStream(k), sids.map(s => input(s, next())))
+      case Many(sids) => es.appendMany(sids.map(s => input(s, next())))
+      case Compact => es.compact()
+    }
+    val reader = EventStore.open(spark, dir, np)
+    val lostVersion = es.manifest.version + 1
+    es.append(input(streams(i % streams.size), next()))
+    Files.delete(graft.storage.Manifest.dirFor(dir).resolve(s"v$lostVersion.json"))
+    (reader, dir)
+  }
+
+  /** field values by name (`events()` puts the partition column last) */
+  private def norm(r: Row): Seq[Any] = EventSchema.columnNames.map(r.getAs[Any](_) match {
+    case b: Array[Byte] => b.toSeq
+    case v => v
+  })
+  private def norm(rs: Seq[Row]): Seq[Seq[Any]] = rs.map(norm)
+
+  // ---- the reference answers: Spark plans over the watermark-clamped log
+
+  private def refGet(ev: DataFrame, np: Int, id: UUID): Seq[Row] =
+    ev.where(col("partition_id") === Ids.partitionIdForEventId(id, np) &&
+      col("event_id") === id.toString).limit(1).collect().toSeq
+
+  private def refTransaction(ev: DataFrame, np: Int, id: UUID): Seq[Row] =
+    refGet(ev, np, id).headOption.toSeq.flatMap { r =>
+      ev.where(col("partition_id") === r.getAs[Int]("partition_id") &&
+        col("transaction_id") === r.getAs[String]("transaction_id") &&
+        col("partition_sequence") >= r.getAs[Long]("partition_sequence"))
+        .orderBy(col("partition_sequence")).collect().toSeq
+    }
+
+  private def refPage(q: DataFrame, key: String, count: Int): (Seq[Row], Boolean) = {
+    val rows = q.orderBy(col(key)).limit(count + 1).collect().toSeq
+    (rows.take(count), rows.size > count)
+  }
+
+  private def refScan(ev: DataFrame, np: Int, sid: String, pk: UUID,
+      lo: Option[Long], hi: Option[Long], count: Int): (Seq[Row], Boolean) = {
+    var q = ev.where(col("partition_id") === Ids.partitionIdFor(Ids.partitionHash(pk), np) &&
+      col("stream_id") === sid && col("partition_key") === pk.toString)
+    lo.foreach(v => q = q.where(col("stream_version") >= v))
+    hi.foreach(v => q = q.where(col("stream_version") <= v))
+    refPage(q, "stream_version", count)
+  }
+
+  private def refPscan(ev: DataFrame, pid: Int, lo: Option[Long], hi: Option[Long],
+      count: Int): (Seq[Row], Boolean) = {
+    var q = ev.where(col("partition_id") === pid)
+    lo.foreach(v => q = q.where(col("partition_sequence") >= v))
+    hi.foreach(v => q = q.where(col("partition_sequence") <= v))
+    refPage(q, "partition_sequence", count)
+  }
+
+  test("command reads equal the Spark-path answers on random stores") {
+    forAllSampled(genStore, runs = 5) { case (np, ops, seed) =>
+      val (es, dir) = build(np, ops)
+      val rnd = new scala.util.Random(seed)
+      val ev = es.events()
+      val all = ev.collect().toSeq
+      // the orphan is on disk but above the reader's watermark
+      val onDisk = spark.read.schema(EventSchema.schema).parquet(s"$dir/events").count()
+      assert(onDisk == all.size + 1, "the rolled-back append left its file")
+
+      // EGET + EGET TRANSACTION: every stored id, plus absent ids
+      val ids = all.map(r => UUID.fromString(r.getAs[String]("event_id"))) ++
+        Seq.fill(3)(Ids.newEventId(rnd.nextInt(1 << 16)))
+      ids.foreach { id =>
+        assert(norm(es.get(id).toSeq) == norm(refGet(ev, np, id)), s"EGET $id")
+      }
+      rnd.shuffle(ids).take(8).foreach { id =>
+        assert(norm(es.readTransaction(id)) == norm(refTransaction(ev, np, id)),
+          s"EGET $id TRANSACTION")
+      }
+
+      // ESCAN: every (stream, key) pair, random inclusive ranges/counts
+      val pairs = all.map(r => (r.getAs[String]("stream_id"), r.getAs[String]("partition_key")))
+        .distinct :+ ("absent" -> Ids.partitionKeyForStream("absent").toString)
+      pairs.foreach { case (sid, pk) =>
+        Seq.fill(2) {
+          (Option.when(rnd.nextBoolean())(rnd.nextInt(4).toLong),
+            Option.when(rnd.nextBoolean())(rnd.nextInt(8).toLong), 1 + rnd.nextInt(5))
+        }.foreach { case (lo, hi, count) =>
+          val got = es.scan(sid, lo, hi, count, Some(UUID.fromString(pk)))
+          val (want, more) = refScan(ev, np, sid, UUID.fromString(pk), lo, hi, count)
+          assert(norm(got.events) == norm(want) && got.hasMore == more,
+            s"ESCAN $sid $pk $lo $hi COUNT $count")
+        }
+      }
+
+      // EPSCAN: every partition plus an out-of-range id
+      (0 to np).foreach { pid =>
+        val lo = Option.when(rnd.nextBoolean())(rnd.nextInt(5).toLong)
+        val hi = Option.when(rnd.nextBoolean())(rnd.nextInt(12).toLong)
+        val count = 1 + rnd.nextInt(8)
+        val got = es.pscan(pid, lo, hi, count)
+        val (want, more) = refPscan(ev, pid, lo, hi, count)
+        assert(norm(got.events) == norm(want) && got.hasMore == more,
+          s"EPSCAN $pid $lo $hi COUNT $count")
+      }
+    }
+  }
+
+  test("driver-written files read back field for field through Spark and the event source") {
+    val dir = Files.createTempDirectory("graft-diff-rt-").toString
+    val es = EventStore.open(spark, dir, 4)
+    (0 until 6).foreach(i => assert(es.append(input(s"rt-${i % 2}", i)).isRight))
+    assert(es.mappend(Ids.partitionKeyForStream("rt-0"),
+      (6 until 9).map(i => input("rt-0", i))).isRight)
+    assert(es.appendMany((9 until 13).map(i => input(s"rt-m$i", i))).forall(_.isRight))
+    val expected = es.events().collect().toSeq.sortBy(r =>
+      (r.getAs[Int]("partition_id"), r.getAs[Long]("partition_sequence")))
+    assert(expected.size == 13)
+    // empty and null metadata both survive the round trip
+    val metadata = expected.map(r => Option(r.getAs[Array[Byte]]("metadata")).map(_.length))
+    assert(metadata.contains(None) && metadata.contains(Some(0)))
+
+    // the files carry the parquet schema Spark's own writer gives a
+    // dataset of Event partitioned by partition_id
+    def parquetSchema(root: String) = {
+      val f = Files.walk(Paths.get(root)).iterator().asScala
+        .find(p => p.toString.endsWith(".parquet") && !p.getFileName.toString.startsWith("."))
+        .get.toString
+      org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        new org.apache.hadoop.conf.Configuration(), new org.apache.hadoop.fs.Path(f))
+        .getFileMetaData.getSchema
+    }
+    val bySpark = Files.createTempDirectory("graft-diff-spark-").toString + "/events"
+    import spark.implicits._
+    Seq(Event("e", "t", "k", 0, 0L, 0L, "s", "n", 0L, null, null)).toDS()
+      .write.partitionBy("partition_id").parquet(bySpark)
+    assert(parquetSchema(s"$dir/events") == parquetSchema(bySpark))
+
+    // Spark without a schema: the footer metadata yields the log's
+    // columns and the directory yields partition_id
+    val inferred = spark.read.parquet(s"$dir/events")
+    assert(inferred.schema.fields.map(f => f.name -> f.dataType).toSet ==
+      (EventStore.fileSchema.fields.map(f => f.name -> f.dataType) :+
+        ("partition_id" -> IntegerType)).toSet)
+    val viaSpark = inferred.select(EventSchema.columnNames.map(col): _*).collect().toSeq
+      .sortBy(r => (r.getAs[Int]("partition_id"), r.getAs[Long]("partition_sequence")))
+    assert(norm(viaSpark) == norm(expected))
+
+    // the streaming source's parquet-hadoop reader
+    val stream = new GraftEventMicroBatchStream(dir, None, None)
+    val end = stream.latestOffset(stream.initialOffset(), ReadLimit.allAvailable())
+    val rf = stream.createReaderFactory()
+    val viaSource = stream.planInputPartitions(stream.initialOffset(), end).toSeq.flatMap { ip =>
+      val r = rf.createReader(ip)
+      val out = Seq.newBuilder[Row]
+      try while (r.next()) {
+        val ir = r.get()
+        out += new GenericRowWithSchema(EventSchema.schema.fields.indices.map { i =>
+          if (ir.isNullAt(i)) null else ir.get(i, EventSchema.schema(i).dataType) match {
+            case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+            case v => v
+          }
+        }.toArray, EventSchema.schema)
+      } finally r.close()
+      out.result()
+    }.sortBy(r => (r.getInt(3), r.getLong(4)))
+    assert(norm(viaSource) == norm(expected))
+
+    // every append file is a few KB: the bloom filter is sized to its rows
+    val files = Files.walk(Paths.get(dir, "events")).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq
+    assert(files.nonEmpty && files.forall(Files.size(_) < 16 * 1024),
+      files.map(f => f.getFileName -> Files.size(f)).mkString(", "))
+  }
+}

@@ -233,4 +233,39 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(cmd.epsub("0,1,2").isRight)
     assert(cmd.epsub("bogus").isLeft)
   }
+
+  test("EAPPEND, EMAPPEND, EGET miss, EGET TRANSACTION, ESCAN and EPSCAN launch no Spark job") {
+    val store = EventStore.open(spark,
+      Files.createTempDirectory("graft-cmd-jobless-").toString, 8)
+    val c = new Commands(store)
+    // files from both writers: a bulk ingest (Spark) and appends (driver)
+    import spark.implicits._
+    store.ingest((0 until 40).map(i => (s"jl-${i % 5}", "Seeded", i.toLong))
+      .toDF("stream_id", "event_name", "ord"), "ord")
+    assert(c.eappend("jl-0", "warm").isRight)
+    Thread.sleep(500) // listener bus is async: let the set-up's jobs land first
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val id = c.eappend("jl-1", "A", "EXPECTED_VERSION", "7").toOption.get("event_id")
+      val pk = graft.core.Ids.partitionKeyForStream("jl-2").toString
+      val tx = c.emappend(pk, Seq(("jl-2", "B", None), ("jl-2b", "C", None)))
+        .toOption.get("events").asInstanceOf[Seq[Map[String, Any]]].head("event_id")
+      assert(c.eget(id.toString).toOption.get.exists(_("event_name") == "A"))
+      assert(c.eget(java.util.UUID.randomUUID().toString).toOption.get.isEmpty)
+      assert(c.egetTransaction(tx.toString).toOption.get.map(_("event_name")) == Seq("B", "C"))
+      val scan = c.escan("jl-1", "-", "+", "COUNT", "3").toOption.get
+      assert(scan("has_more") == true &&
+        scan("events").asInstanceOf[Seq[Map[String, Any]]].size == 3)
+      assert(c.epscan("0", "-", "+").isRight)
+      Thread.sleep(500) // let any job event land
+      assert(jobs.get() == 0, s"command path launched ${jobs.get()} Spark job(s)")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }

@@ -3,6 +3,8 @@ package graft.api
 import java.nio.file.Files
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import graft.core._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -42,7 +44,7 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Seq(r0, r1, r2).map(_.partitionSequence) == Seq(0L, 1L, 2L))
 
     val scan = es.scan("my-stream")
-    val rows = scan.events.collect()
+    val rows = scan.events
     assert(rows.length == 3)
     assert(rows.map(_.getAs[Long]("stream_version")).toSeq == Seq(0L, 1L, 2L))
     assert(rows.map(_.getAs[String]("stream_id")).distinct.toSeq == Seq("my-stream"))
@@ -120,10 +122,9 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("EGET routes by embedded hash and finds the event") {
     val es = freshStore()
     val r = es.append(in("lookup-stream")).toOption.get
-    val got = es.get(UUID.fromString(r.eventId)).collect()
-    assert(got.length == 1)
-    assert(got(0).getAs[String]("stream_id") == "lookup-stream")
-    assert(es.get(UUID.randomUUID()).collect().isEmpty)
+    val got = es.get(UUID.fromString(r.eventId))
+    assert(got.map(_.getAs[String]("stream_id")).contains("lookup-stream"))
+    assert(es.get(UUID.randomUUID()).isEmpty)
   }
 
   test("event id must carry the transaction's partition hash") {
@@ -140,19 +141,19 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 7).foreach(_ => es.append(in("paged")))
     val p1 = es.scan("paged", count = 3)
     assert(p1.hasMore)
-    assert(p1.events.collect().map(_.getAs[Long]("stream_version")).toSeq == Seq(0L, 1L, 2L))
+    assert(p1.events.map(_.getAs[Long]("stream_version")).toSeq == Seq(0L, 1L, 2L))
     val p2 = es.scan("paged", startVersion = Some(3), count = 10)
     assert(!p2.hasMore)
-    assert(p2.events.count() == 4)
+    assert(p2.events.size == 4)
     val mid = es.scan("paged", startVersion = Some(2), endVersion = Some(4))
-    assert(mid.events.collect().map(_.getAs[Long]("stream_version")).toSeq == Seq(2L, 3L, 4L))
+    assert(mid.events.map(_.getAs[Long]("stream_version")).toSeq == Seq(2L, 3L, 4L))
   }
 
   test("pscan is ordered by partition sequence and clamped to watermark") {
     val es = freshStore(np = 1)
     es.append(in("s1")); es.append(in("s2")); es.append(in("s3"))
     val r = es.pscan(0)
-    assert(r.events.collect().map(_.getAs[Long]("partition_sequence")).toSeq == Seq(0L, 1L, 2L))
+    assert(r.events.map(_.getAs[Long]("partition_sequence")).toSeq == Seq(0L, 1L, 2L))
     assert(es.pseq(0) == Some(2L))
     assert(es.pseq(0 + 1).isEmpty || es.numPartitions == 1)
   }
@@ -165,21 +166,42 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       graft.storage.Manifest.dirFor(dir)).count()
     es1.append(in("orph")) // this commit will be "lost"
 
-    // simulate a crash between data write and manifest commit by
-    // rolling the manifest back one version
+    // crash point 1, between the rename and the manifest commit:
+    // simulated by rolling the manifest back one version
     val mdir = graft.storage.Manifest.dirFor(dir)
     java.nio.file.Files.delete(mdir.resolve(s"v${committed + 1}.json"))
+    val pdir = java.nio.file.Paths.get(dir, "events",
+      s"partition_id=${Ids.partitionIdForStream("orph", EventStore.DefaultNumPartitions)}")
+    def dataFiles(hidden: Boolean) = {
+      val s = java.nio.file.Files.list(pdir)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.endsWith(".parquet") && n.startsWith(".") == hidden).toSeq
+      finally s.close()
+    }
+    assert(dataFiles(hidden = false).size == 3)
+
+    // crash point 2, inside the write before its rename: a finished
+    // and a torn in-flight file. Every listing skips them (Spark would
+    // fail on the torn one), and open removes them.
+    java.nio.file.Files.write(pdir.resolve(EventStore.InflightPrefix + "torn.parquet"),
+      "not parquet".getBytes)
+    java.nio.file.Files.copy(pdir.resolve(dataFiles(hidden = false).head),
+      pdir.resolve(EventStore.InflightPrefix + "done.parquet"))
+    assert(es1.events().count() == 3)
+    assert(es1.scan("orph").events.size == 3)
 
     val es2 = EventStore.open(spark, dir)
+    assert(dataFiles(hidden = true).isEmpty, "open removes in-flight files")
     // the orphan file is gone: no duplicate/ghost event now or after
     // the watermark advances again
+    assert(dataFiles(hidden = false).size == 2)
     assert(es2.sver("orph") == Some(1L))
     assert(es2.events().count() == 2)
     val r = es2.append(in("orph", ev = ExpectedVersion.Exact(1)))
     assert(r.toOption.get.streamVersion == 2L)
     assert(es2.events().count() == 3)
-    assert(es2.scan("orph").events.collect()
-      .map(_.getAs[Long]("stream_version")).toSeq == Seq(0L, 1L, 2L))
+    assert(es2.scan("orph").events
+      .map(_.getAs[Long]("stream_version")) == Seq(0L, 1L, 2L))
   }
 
   test("manifest recovery: reopening preserves heads and sequences") {
@@ -192,7 +214,7 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(es2.sver("persist") == Some(1L))
     val r = es2.append(in("persist", ev = ExpectedVersion.Exact(1)))
     assert(r.toOption.get.streamVersion == 2L)
-    assert(es2.scan("persist").events.count() == 3)
+    assert(es2.scan("persist").events.size == 3)
   }
 
   test("bulk ingest assigns gapless sequences per partition and stream") {
@@ -245,6 +267,6 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r = es.append(in("s", ev = ExpectedVersion.Exact(1))).toOption.get
     assert(r.streamVersion == 2L)
     val scan = es.scan("s")
-    assert(scan.events.collect().map(_.getAs[Long]("stream_version")).toSeq == Seq(0L, 1L, 2L))
+    assert(scan.events.map(_.getAs[Long]("stream_version")).toSeq == Seq(0L, 1L, 2L))
   }
 }

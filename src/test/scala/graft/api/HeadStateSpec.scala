@@ -36,6 +36,13 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
     // overlay bounded, spilled layers referenced
     assert(es.manifest.streamHeads.size <= 4)
     assert(es.manifest.headsDeltas.nonEmpty || es.manifest.headsBase > 0)
+    // the stream_id bloom filter is sized to the layer, not parquet's
+    // 1 MB default
+    val layerFiles = Files.walk(java.nio.file.Paths.get(dir, "_heads")).iterator()
+    while (layerFiles.hasNext) {
+      val f = layerFiles.next()
+      if (f.toString.endsWith(".parquet")) assert(Files.size(f) < 16 * 1024, f.toString)
+    }
 
     // every stream's head resolves through the layers
     (0 until 10).foreach(i => assert(es.sver(s"h-$i") == Some(0L)))
