@@ -400,9 +400,11 @@ final class Commands(es: EventStore) {
 
   /** INFO CACHE (`info.rs:30-113`): the reference's exact key set —
     * hits/misses/hit_ratio(3dp)/entries/memory_bytes/max_bytes/
-    * block_size_bytes/evictions — from the store's read cache.
+    * block_size_bytes/evictions — from the store's read cache. INFO
+    * STORE: the store's own counters ([[EventStore.storeInfo]]).
     */
-  def info(section: String = "CACHE"): Map[String, Any] = es.cacheInfo
+  def info(section: String = "CACHE"): Map[String, Any] =
+    if (section.equalsIgnoreCase("STORE")) es.storeInfo else es.cacheInfo
 
   // ---------------------------------------------------------------- helpers
 

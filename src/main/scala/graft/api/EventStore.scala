@@ -2,6 +2,8 @@ package graft.api
 
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import graft.core._
 import graft.storage.{HeadProbe, Manifest, ManifestState, StreamHead}
 import org.apache.hadoop.fs.Path
@@ -37,12 +39,14 @@ final case class ScanResult(events: Seq[Row], hasMore: Boolean)
   * isolation; `docs/Watermarks.md` semantics). Two paths share that
   * layout:
   *
-  *   - the COMMAND path runs no Spark job. EAPPEND/EMAPPEND write one
-  *     file per touched partition from the driver (`writeRows`); EGET,
-  *     EGET TRANSACTION, ESCAN and EPSCAN list only the target
-  *     partition directory, read it through footer-pruned row groups
-  *     ([[graft.storage.HeadProbe.scan]]) clamped to one manifest
-  *     snapshot's watermark, and sort and limit on the driver;
+  *   - the COMMAND path runs no Spark job and lists no directory.
+  *     EAPPEND/EMAPPEND write one file per touched partition from the
+  *     driver (`writeRows`) and commit a manifest delta of what they
+  *     changed. EGET, EGET TRANSACTION, ESCAN and EPSCAN take the
+  *     target partition's files from the snapshot's file index, read
+  *     them through footer-pruned row groups
+  *     ([[graft.storage.HeadProbe.scan]]) clamped to the snapshot's
+  *     watermark, and sort and limit on the driver;
   *   - the ANALYTICS path is [[events]], a watermark-clamped Spark scan
   *     of the whole log, used by the bulk operators and as the
   *     reference the command reads are tested against.
@@ -59,14 +63,24 @@ final class EventStore private (
     val spark: SparkSession,
     val root: String,
     val numPartitions: Int,
-    @volatile private var state: ManifestState,
+    initial: ManifestState,
+    initialChain: Int,
     strictVersioning: Boolean,
     maxInlineHeads: Int) {
 
   import spark.implicits._
+  import EventStore.{DataFile, Snapshot}
 
   private val eventsDir = s"$root/events"
   private val lock = new Object
+
+  /** What readers see, published by one volatile write: the committed
+    * manifest state with the data files it covers. The file index is
+    * filled by [[recoverOrphans]] at open.
+    */
+  @volatile private var snap = Snapshot(initial, Map.empty, initialChain)
+
+  private def state: ManifestState = snap.state
 
   def manifest: ManifestState = state
 
@@ -86,6 +100,7 @@ final class EventStore private (
     */
   def mappend(partitionKey: UUID, inputs: Seq[EventInput]): Either[String, MultiAppendResult] = {
     if (inputs.isEmpty) return Left("ERR no events")
+    val t0 = System.nanoTime()
     for (in <- inputs) {
       StreamId.validate(in.streamId) match {
         case Left(e) => return Left(s"ERR $e")
@@ -141,14 +156,16 @@ final class EventStore private (
           payload = in.payload)
       }
 
-      writeRows(rows)
-
+      val t1 = System.nanoTime()
+      val written = writeRows(rows)
+      val t2 = System.nanoTime()
       val newHeads = rows.groupBy(_.stream_id).map { case (sid, evs) =>
         EventStore.headKey(partitionKey.toString, sid) ->
           StreamHead(evs.map(_.stream_version).max, partitionKey.toString, pid)
       }
       commitAppend(
-        Map(pid -> (startSeq + rows.size - 1)), newHeads.toMap)
+        Map(pid -> (startSeq + rows.size - 1)), newHeads.toMap, written)
+      appendLayers.record(t1 - t0, t2 - t1, System.nanoTime() - t2)
 
       Right(MultiAppendResult(
         partitionKey.toString, pid, startSeq, startSeq + rows.size - 1,
@@ -166,7 +183,8 @@ final class EventStore private (
     * Versions validate against stored state plus earlier accepted
     * events in the batch, like EMAPPEND's intra-batch rule.
     */
-  def appendMany(inputs: Seq[EventInput]): Seq[Either[String, AppendResult]] =
+  def appendMany(inputs: Seq[EventInput]): Seq[Either[String, AppendResult]] = {
+    val t0 = System.nanoTime()
     lock.synchronized {
       val nowMs = System.currentTimeMillis()
       val seqCursor = collection.mutable.Map.empty[Int, Long]
@@ -216,16 +234,20 @@ final class EventStore private (
         }
       }
       if (rows.nonEmpty) {
-        writeRows(rows.toSeq)
+        val t1 = System.nanoTime()
+        val written = writeRows(rows.toSeq)
+        val t2 = System.nanoTime()
         val newHeads = rows.groupBy(_.stream_id).map { case (sid, evs) =>
           EventStore.headKey(evs.head.partition_key, sid) ->
             StreamHead(evs.map(_.stream_version).max,
               evs.head.partition_key, evs.head.partition_id)
         }
-        commitAppend(seqCursor.toMap, newHeads.toMap)
+        commitAppend(seqCursor.toMap, newHeads.toMap, written)
+        appendLayers.record(t1 - t0, t2 - t1, System.nanoTime() - t2)
       }
       results
     }
+  }
 
   /** Compaction — the segment-rollover analogue
     * (`writer_thread_pool.rs:698-793`): rewrite each partition
@@ -246,6 +268,9 @@ final class EventStore private (
     */
   def compact(): Unit = lock.synchronized {
     if (state.watermarks.isEmpty) return
+    // one file per partition: size its bloom filters to the largest
+    // partition's rows, or parquet allocates its 1 MB maximum per column
+    val ndv = (state.watermarks.values.max + 1).max(1L).toString
     val compacted = spark.read
       .schema(EventSchema.schema)
       .option("basePath", eventsDir)
@@ -259,6 +284,8 @@ final class EventStore private (
       .option("compression", "zstd")
       .option("parquet.bloom.filter.enabled#event_id", "true")
       .option("parquet.bloom.filter.enabled#stream_id", "true")
+      .option("parquet.bloom.filter.expected.ndv#event_id", ndv)
+      .option("parquet.bloom.filter.expected.ndv#stream_id", ndv)
       .parquet(tmp)
     val ev = java.nio.file.Paths.get(eventsDir)
     val old = java.nio.file.Paths.get(s"$root/events.pre-compact")
@@ -267,7 +294,7 @@ final class EventStore private (
     deleteRecursively(old.toFile)
     // every event file was replaced: drop the probe's footers/blooms
     HeadProbe.invalidate(eventsDir)
-    commitState(state.copy(version = state.version + 1))
+    commitState(state.copy(version = state.version + 1), listIndex())
     // compaction also folds the head LSM into a fresh base table
     foldHeads()
   }
@@ -391,7 +418,8 @@ final class EventStore private (
       .withColumn("timestamp_ns", $"timestamp_ms" * lit(1000000L))
       .select(EventSchema.columnNames.map(col): _*)
 
-    val preFiles = listDataFiles()
+    def paths(ix: Map[Int, Vector[DataFile]]) = ix.values.flatten.map(_.path.toString).toSet
+    val preFiles = paths(listIndex())
     assigned
       // each partition_id already lives in exactly one task: both
       // windows above run under the ONE hash(partition_id) exchange
@@ -413,7 +441,8 @@ final class EventStore private (
     // head/watermark roll-up: ONE columnar scan over just the files
     // this commit wrote (4 columns, stats-friendly) — cheaper than
     // caching and re-walking the whole assignment plan
-    val newFiles = (listDataFiles() -- preFiles).toSeq
+    val index = listIndex()
+    val newFiles = (paths(index) -- preFiles).toSeq
     val rollup = spark.read
       .schema(EventSchema.schema)
       .option("basePath", eventsDir)
@@ -441,7 +470,7 @@ final class EventStore private (
       commitState(withTag(state.copy(
         version = state.version + 1,
         watermarks = wmMap ++ newWm,
-        streamHeads = state.streamHeads ++ newHeads)))
+        streamHeads = state.streamHeads ++ newHeads)), index)
     } else {
       // big batch (the 100 TB path): spill batch heads ∪ inline overlay
       // to ONE parquet delta, straight from the executors — the driver
@@ -459,7 +488,7 @@ final class EventStore private (
         version = v,
         watermarks = wmMap ++ newWm,
         streamHeads = Map.empty,
-        headsDeltas = state.headsDeltas :+ v)))
+        headsDeltas = state.headsDeltas :+ v)), index)
       invalidateHeadCache() // after the commit (see commitAppend)
       maybeFoldHeads()
     }
@@ -475,33 +504,67 @@ final class EventStore private (
     * advance the watermark over the second kind and surface duplicates
     * — so delete both before accepting any new writes. Each file's
     * lowest sequence comes from its footer statistics (no Spark job).
-    * Runs once per open.
+    * The surviving files become the snapshot's file index. Runs once
+    * per open.
     */
   private[api] def recoverOrphans(): Unit = lock.synchronized {
-    val conf = probeHadoopConf
-    val base = new Path(eventsDir)
-    val fs = base.getFileSystem(conf)
-    if (!fs.exists(base)) return
-    fs.listStatus(base).iterator
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("partition_id="))
-      .foreach { st =>
-        val wm = state.watermark(
-          st.getPath.getName.stripPrefix("partition_id=").toInt)
-        fs.listStatus(st.getPath).iterator.map(_.getPath)
-          .filter(_.getName.startsWith(EventStore.InflightPrefix))
-          .foreach(fs.delete(_, false))
-        HeadProbe.listFiles(st.getPath.toString, conf).foreach { f =>
-          // both writers keep int64 statistics (README "Storage model")
-          val lo = HeadProbe.longRange(f, "partition_sequence", conf).map(_._1)
-            .getOrElse(throw new IllegalStateException(
-              s"$f has no partition_sequence statistics"))
-          if (lo > wm) {
-            fs.delete(f, false)
-            HeadProbe.invalidate(f.toString)
-          }
-        }
+    partitionDirs().foreach { case (_, dir) =>
+      val ls = java.nio.file.Files.list(dir)
+      try ls.iterator().asScala
+        .filter(_.getFileName.toString.startsWith(EventStore.InflightPrefix))
+        .foreach(java.nio.file.Files.deleteIfExists)
+      finally ls.close()
+    }
+    val files = listIndex().map { case (pid, fs) =>
+      val (orphans, kept) = fs.partition(_.minOf("partition_sequence") > state.watermark(pid))
+      orphans.foreach { f =>
+        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.path.toUri))
+        HeadProbe.invalidate(f.path.toString)
       }
+      pid -> kept
+    }
+    snap = snap.copy(files = files)
   }
+
+  /** The `partition_id=N` directories of the log, with their N. */
+  private def partitionDirs(): Seq[(Int, java.nio.file.Path)] = {
+    val dir = java.nio.file.Paths.get(eventsDir)
+    if (!java.nio.file.Files.isDirectory(dir)) Nil
+    else {
+      val ls = java.nio.file.Files.list(dir)
+      try ls.iterator().asScala
+        .filter(p => java.nio.file.Files.isDirectory(p) &&
+          p.getFileName.toString.startsWith("partition_id="))
+        .map(p => p.getFileName.toString.stripPrefix("partition_id=").toInt -> p)
+        .toSeq
+      finally ls.close()
+    }
+  }
+
+  /** Every visible data file of the log by partition, from one listing
+    * — the file index [[ingest]] and [[compact]] publish. The files'
+    * key minimums are read from their footers when a read first needs
+    * them.
+    */
+  private def listIndex(): Map[Int, Vector[DataFile]] =
+    partitionDirs().map { case (pid, dir) =>
+      val ls = java.nio.file.Files.list(dir)
+      pid -> (try ls.iterator().asScala
+        .filter(p => HeadProbe.isDataFile(p.getFileName.toString) &&
+          java.nio.file.Files.isRegularFile(p))
+        .map { p =>
+          val f = new Path(p.toUri)
+          new DataFile(f, {
+            // both writers keep int64 statistics (README "Storage model")
+            def min(c: String) = HeadProbe.longRange(f, c, probeHadoopConf).map(_._1)
+            (min("partition_sequence").getOrElse(throw new IllegalStateException(
+                s"$f has no partition_sequence statistics")),
+              min("stream_version").getOrElse(Long.MinValue))
+          })
+        }
+        .toVector
+      finally ls.close())
+    }.toMap
 
   // ------------------------------------------------------- head-state (LSM)
 
@@ -686,29 +749,46 @@ final class EventStore private (
     inline ++ layered.filterNot(h => inlineKeys.contains(h.partitionKey))
   }
 
-  /** Commit an append's watermark/head updates; spill the inline
-    * overlay to a parquet delta when it outgrows maxInlineHeads.
+  /** Commit an append's watermark/head updates and publish its
+    * `written` files to the file index in the same snapshot swap. An
+    * inline commit is a manifest delta of just these updates
+    * ([[Manifest.commitDelta]]); when the inline overlay outgrows
+    * maxInlineHeads it spills to a parquet delta under a full
+    * checkpoint. If the commit fails, the written files are deleted
+    * before the failure propagates: left in place they would sit above
+    * the watermark, and the next append would reuse their sequences.
     */
-  private def commitAppend(
-      newWm: Map[Int, Long], newHeads: Map[String, StreamHead]): Unit = {
-    val inline = state.streamHeads ++ newHeads
-    if (inline.size <= maxInlineHeads) {
-      commitState(state.copy(
-        version = state.version + 1,
-        watermarks = state.watermarks ++ newWm,
-        streamHeads = inline))
-    } else {
-      val v = state.version + 1
-      writeHeadsParquet(
-        inline.toSeq.map { case (k, h) =>
-          (EventStore.headKeyStream(k), h.partitionKey, h.partitionId, h.version)
-        }.toDF("stream_id", "partition_key", "partition_id", "version"),
-        headsDeltaDir(v), approxRows = inline.size)
-      commitState(state.copy(
-        version = v,
-        watermarks = state.watermarks ++ newWm,
-        streamHeads = Map.empty,
-        headsDeltas = state.headsDeltas :+ v))
+  private def commitAppend(newWm: Map[Int, Long],
+      newHeads: Map[String, StreamHead], written: Map[Int, DataFile]): Unit = {
+    val s = snap
+    val files = s.files ++ written.map { case (pid, f) =>
+      pid -> (s.files.getOrElse(pid, Vector.empty) :+ f)
+    }
+    val inline = s.state.streamHeads ++ newHeads
+    val next = s.state.copy(
+      version = s.state.version + 1, watermarks = s.state.watermarks ++ newWm)
+    val spill = inline.size > maxInlineHeads
+    try {
+      if (!spill) {
+        val withHeads = next.copy(streamHeads = inline)
+        val chain = Manifest.commitDelta(root, withHeads, s.chain, newWm, newHeads)
+        snap = Snapshot(withHeads, files, chain)
+      } else {
+        writeHeadsParquet(
+          inline.toSeq.map { case (k, h) =>
+            (EventStore.headKeyStream(k), h.partitionKey, h.partitionId, h.version)
+          }.toDF("stream_id", "partition_key", "partition_id", "version"),
+          headsDeltaDir(next.version), approxRows = inline.size)
+        commitState(next.copy(streamHeads = Map.empty,
+          headsDeltas = next.headsDeltas :+ next.version), files)
+      }
+    } catch {
+      case e: Throwable =>
+        written.values.foreach(f =>
+          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.path.toUri)))
+        throw e
+    }
+    if (spill) {
       // invalidate AFTER the commit: a lookup racing the window between
       // bump and commit would otherwise cache an old-layer result under
       // the new generation
@@ -797,19 +877,6 @@ final class EventStore private (
     } finally listing.close()
   }
 
-  private def listDataFiles(): Set[String] = {
-    val dir = java.nio.file.Paths.get(eventsDir)
-    if (!java.nio.file.Files.isDirectory(dir)) Set.empty
-    else {
-      val s = java.nio.file.Files.walk(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.toString)
-          .filter(_.endsWith(".parquet")).toSet
-      } finally s.close()
-    }
-  }
-
   /** Streaming ingest: continuous EAPPEND through Structured Streaming.
     * Each micro-batch rides the bulk `ingest` path (exactly-once per
     * batch via the sink checkpoint: a batch that fails before the
@@ -874,44 +941,66 @@ final class EventStore private (
     }
   }
 
-  /** Command-read core: the events of one partition directory, as of
-    * snapshot `snap`, that satisfy `preds`, handed to `visit` until it
-    * returns false. No Spark job: only `partition_id=pid` is listed,
-    * and files and row groups are pruned by footer statistics and
-    * bloom filters before a data page is read ([[HeadProbe.scan]]).
-    * The watermark clamp is one more predicate, so files an in-flight
-    * append has renamed in but not yet committed are never seen.
+  /** Run a command read against the current snapshot. Its files can
+    * vanish under it only when [[compact]] swaps the log; the read is
+    * then retried once under the write lock, which waits out the swap,
+    * against the snapshot compaction published.
     */
-  private def readPartition(snap: ManifestState, pid: Int,
+  private def onSnapshot[A](read: Snapshot => A): A =
+    try read(snap)
+    catch {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException =>
+        lock.synchronized(read(snap))
+    }
+
+  /** Command-read core: the events of partition `pid`, as of snapshot
+    * `s`, in `files` order, that satisfy `preds`, handed to `visit`
+    * until it returns false. No Spark job and no listing: the files
+    * come from the snapshot's index, and files and row groups are
+    * pruned by footer statistics and bloom filters before a data page
+    * is read ([[HeadProbe.scan]]). The watermark clamp is one more
+    * predicate, so an in-flight append's file is never seen.
+    */
+  private def readPartition(s: Snapshot, pid: Int, files: Seq[DataFile],
       preds: Seq[HeadProbe.Pred])(visit: Row => Boolean): Unit = {
-    val wm = snap.watermark(pid)
+    val wm = s.state.watermark(pid)
     if (wm >= 0)
-      HeadProbe.scan(
-        HeadProbe.listFiles(s"$eventsDir/partition_id=$pid", probeHadoopConf),
+      HeadProbe.scan(files.map(_.path),
         HeadProbe.Between("partition_sequence", 0L, wm) +: preds,
         probeHadoopConf)(g => visit(EventStore.eventRow(pid, g)))
   }
 
   /** The `limit` matching events with the smallest `key` column, in
     * ascending key order — the driver-side `ORDER BY key LIMIT n`,
-    * holding at most `limit` rows however many match.
+    * holding at most `limit` rows however many match. Files are read in
+    * order of their footer minimum of `key`, and reading stops once
+    * `limit` rows are held and the next file's minimum is above all of
+    * them: a stream spread over thousands of small files opens about
+    * `limit` of them.
     */
-  private def firstByKey(snap: ManifestState, pid: Int,
+  private def firstByKey(s: Snapshot, pid: Int,
       preds: Seq[HeadProbe.Pred], key: String, limit: Long): Seq[Row] = {
     val k = EventSchema.schema.fieldIndex(key)
     val heap = collection.mutable.PriorityQueue.empty[Row](
       Ordering.by((r: Row) => r.getLong(k)))
-    readPartition(snap, pid, preds) { r =>
-      heap.enqueue(r)
-      if (heap.size > limit) heap.dequeue()
-      true
+    val files = s.files.getOrElse(pid, Vector.empty).sortBy(_.minOf(key)).iterator
+    var more = true
+    while (more && files.hasNext) {
+      val f = files.next()
+      if (heap.size >= limit && f.minOf(key) > heap.head.getLong(k)) more = false
+      else readPartition(s, pid, Seq(f), preds) { r =>
+        heap.enqueue(r)
+        if (heap.size > limit) heap.dequeue()
+        true
+      }
     }
     heap.dequeueAll.reverse
   }
 
-  private def lookup(snap: ManifestState, eventId: UUID): Option[Row] = {
+  private def lookup(s: Snapshot, eventId: UUID): Option[Row] = {
     var hit: Option[Row] = None
-    readPartition(snap, Ids.partitionIdForEventId(eventId, numPartitions),
+    val pid = Ids.partitionIdForEventId(eventId, numPartitions)
+    readPartition(s, pid, s.files.getOrElse(pid, Vector.empty),
         Seq(HeadProbe.Eq("event_id", eventId.toString))) { r =>
       hit = Some(r); false
     }
@@ -922,7 +1011,7 @@ final class EventStore private (
     * embedded in the event UUID — ONE partition directory, then the
     * event_id bloom filter + row-group stats prune files.
     */
-  def get(eventId: UUID): Option[Row] = lookup(state, eventId)
+  def get(eventId: UUID): Option[Row] = onSnapshot(lookup(_, eventId))
 
   /** read_transaction (`database.rs:138-208`): all committed events of
     * the transaction containing `eventId`, from that event's offset
@@ -932,14 +1021,13 @@ final class EventStore private (
     * `id.rs` bit layout) short-circuits the second lookup for the
     * overwhelmingly common single-event case.
     */
-  def readTransaction(eventId: UUID): Seq[Row] = {
-    val snap = state
-    lookup(snap, eventId) match {
+  def readTransaction(eventId: UUID): Seq[Row] = onSnapshot { s =>
+    lookup(s, eventId) match {
       case None => Nil
       case Some(r) =>
         val tx = r.getAs[String]("transaction_id")
         if (Ids.singleEventFlag(UUID.fromString(tx))) Seq(r)
-        else firstByKey(snap, r.getAs[Int]("partition_id"), Seq(
+        else firstByKey(s, r.getAs[Int]("partition_id"), Seq(
           HeadProbe.Eq("transaction_id", tx),
           HeadProbe.Between("partition_sequence",
             r.getAs[Long]("partition_sequence"), Long.MaxValue)),
@@ -962,12 +1050,12 @@ final class EventStore private (
     // partition_key conjunct: versions are scoped per (pk, stream), so
     // a colliding key's same-named stream in this partition must not
     // interleave (its versions also start at 0)
-    page(firstByKey(state, pid, Seq(
+    page(onSnapshot(firstByKey(_, pid, Seq(
       HeadProbe.Eq("stream_id", streamId),
       HeadProbe.Eq("partition_key", pk.toString),
       HeadProbe.Between("stream_version",
         startVersion.getOrElse(0L), endVersion.getOrElse(Long.MaxValue))),
-      "stream_version", count + 1L), count)
+      "stream_version", count + 1L)), count)
   }
 
   /** EPSCAN (`epscan.rs`, `read.rs:451-563`): partition scan by
@@ -978,10 +1066,10 @@ final class EventStore private (
       startSeq: Option[Long] = None,
       endSeq: Option[Long] = None,
       count: Int = 100): ScanResult =
-    page(firstByKey(state, partitionId, Seq(
+    page(onSnapshot(firstByKey(_, partitionId, Seq(
       HeadProbe.Between("partition_sequence",
         startSeq.getOrElse(0L), endSeq.getOrElse(Long.MaxValue))),
-      "partition_sequence", count + 1L), count)
+      "partition_sequence", count + 1L)), count)
 
   private def page(rows: Seq[Row], count: Int): ScanResult =
     ScanResult(rows.take(count), rows.length > count)
@@ -1109,6 +1197,27 @@ final class EventStore private (
     "num_partitions" -> numPartitions.toString,
     "manifest_version" -> state.version.toString)
 
+  /** validation + lock wait, row write, manifest commit of recent appends */
+  private val appendLayers = new EventStore.LayerTimes(1024, 3)
+
+  /** INFO STORE: the manifest and file-index shape, and p50/p99 (ms) of
+    * the three append layers over the last 1,024 appends.
+    */
+  def storeInfo: Map[String, Any] = {
+    val s = snap
+    val layerStats = Seq("validate", "write", "commit").zip(appendLayers.percentiles(0.5, 0.99))
+      .flatMap { case (layer, Seq(p50, p99)) =>
+        Seq(s"append_${layer}_p50_ms" -> p50, s"append_${layer}_p99_ms" -> p99)
+      }
+    Map(
+      "manifest_version" -> s.state.version,
+      "delta_chain" -> s.chain.toLong,
+      "data_files" -> s.files.values.map(_.size.toLong).sum,
+      "inline_heads" -> s.state.streamHeads.size.toLong,
+      "head_layers" -> (s.state.headsDeltas.size + (if (s.state.headsBase > 0) 1 else 0)).toLong,
+      "appends_sampled" -> appendLayers.size.toLong) ++ layerStats
+  }
+
   // ------------------------------------------------------------- internals
 
   /** The append write path, driver-side (no Spark job): one parquet
@@ -1120,11 +1229,12 @@ final class EventStore private (
     * commits the manifest; a crash leaves either a hidden temp file or
     * a file above the watermark, and [[recoverOrphans]] removes both.
     * A failure here deletes what this call already wrote, so the
-    * sequences it held can be reused by the next append.
+    * sequences it held can be reused by the next append. Returns the
+    * files by partition, with their key minimums, for the file index.
     */
-  private def writeRows(rows: Seq[Event]): Unit = {
+  private def writeRows(rows: Seq[Event]): Map[Int, DataFile] = {
     val written = collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    try rows.groupBy(_.partition_id).foreach { case (pid, prs) =>
+    try rows.groupBy(_.partition_id).map { case (pid, prs) =>
       val dir = java.nio.file.Paths.get(eventsDir, s"partition_id=$pid")
       java.nio.file.Files.createDirectories(dir)
       val name = s"part-${UUID.randomUUID()}.zstd.parquet"
@@ -1146,6 +1256,8 @@ final class EventStore private (
       val dst = dir.resolve(name)
       java.nio.file.Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       written += dst
+      pid -> new DataFile(new Path(dst.toUri),
+        (prs.map(_.partition_sequence).min, prs.map(_.stream_version).min))
     } catch {
       case e: Throwable =>
         written.foreach(java.nio.file.Files.deleteIfExists)
@@ -1153,9 +1265,11 @@ final class EventStore private (
     }
   }
 
-  private def commitState(next: ManifestState): Unit = {
+  /** Commit `next` as a full checkpoint and publish it with `files`. */
+  private def commitState(next: ManifestState,
+      files: Map[Int, Vector[DataFile]] = snap.files): Unit = {
     Manifest.commit(root, next)
-    state = next
+    snap = Snapshot(next, files, 0)
   }
 }
 
@@ -1175,7 +1289,13 @@ object EventStore {
       numPartitions: Int = DefaultNumPartitions,
       strictVersioning: Boolean = false,
       maxInlineHeads: Int = 100000): EventStore = {
-    val st0 = Manifest.load(root).getOrElse(Manifest.empty(numPartitions))
+    val (loaded, chain) =
+      Manifest.loadChain(root).getOrElse((Manifest.empty(numPartitions), -1))
+    // newer versions that did not resolve (torn, or a broken chain) are
+    // dead: commit past them, never reusing their numbers, or a delta
+    // left above them could later resolve over a new base
+    val newest = Manifest.newestVersion(root).getOrElse(0L)
+    val st0 = if (newest > loaded.version) loaded.copy(version = newest) else loaded
     // migrate legacy manifests whose heads were keyed by bare stream id
     // (the StreamHead value always carried the partition key)
     val st =
@@ -1183,8 +1303,10 @@ object EventStore {
       else st0.copy(streamHeads = st0.streamHeads.map { case (k, h) =>
         (if (isCompositeHeadKey(k)) k else headKey(h.partitionKey, k)) -> h
       })
-    val es = new EventStore(
-      spark, root, st.numPartitions.max(1), st, strictVersioning, maxInlineHeads)
+    // unless the state is exactly the newest version on disk, the first
+    // commit must be a checkpoint, not a delta over it
+    val es = new EventStore(spark, root, st.numPartitions.max(1), st,
+      if (st eq loaded) chain else -1, strictVersioning, maxInlineHeads)
     // a fresh handle must not trust process-wide probe caches for this
     // path: the same root may have been deleted and recreated since a
     // previous store cached its layer or event-file metadata
@@ -1193,6 +1315,50 @@ object EventStore {
     es.recoverOrphanHeads()
     register(es)
     es
+  }
+
+  /** A reader's view of the store: a committed manifest state, the data
+    * files it covers by partition, and the delta chain its version sits
+    * on (-1: the version is not on disk).
+    */
+  private final case class Snapshot(
+      state: ManifestState, files: Map[Int, Vector[DataFile]], chain: Int)
+
+  /** One committed data file of the file index, with the minimums of
+    * the two sort keys the scan cut-off orders by: known when an append
+    * writes the file, else read from its footer on first use.
+    */
+  private final class DataFile(val path: Path, mins: => (Long, Long)) {
+    private lazy val (minSeq, minVersion) = mins
+    def minOf(key: String): Long = key match {
+      case "partition_sequence" => minSeq
+      case "stream_version"     => minVersion
+    }
+  }
+
+  /** The last `n` samples of `layers` durations (ns), as a ring. */
+  private final class LayerTimes(n: Int, layers: Int) {
+    private val ring = Array.ofDim[Long](layers, n)
+    private var count = 0L
+
+    def record(ns: Long*): Unit = synchronized {
+      val i = (count % n).toInt
+      ns.indices.foreach(l => ring(l)(i) = ns(l))
+      count += 1
+    }
+
+    def size: Int = synchronized(math.min(count, n.toLong).toInt)
+
+    /** per layer, the nearest-rank quantiles `qs` in ms (0 when empty) */
+    def percentiles(qs: Double*): Seq[Seq[Double]] = synchronized {
+      val m = size
+      ring.toSeq.map { samples =>
+        val sorted = samples.take(m).sorted
+        qs.map(q =>
+          if (m == 0) 0.0
+          else math.round(sorted(math.ceil(q * m).toInt.max(1) - 1) / 1e3) / 1e3)
+      }
+    }
   }
 
   // ---- store registry (optimizer rules resolve relations to stores) ----

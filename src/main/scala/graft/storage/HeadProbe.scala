@@ -26,7 +26,8 @@ import org.apache.parquet.io.api.Binary
   *     bloom filter ([[probe]], [[probeStream]]);
   *   - event partitions (`<root>/events/partition_id=N`): files sorted
   *     by partition_sequence, event_id bloom filter (`EventStore`'s
-  *     command reads call [[scan]] directly).
+  *     command reads call [[scan]] directly on the files of their
+  *     snapshot's file index).
   *
   * [[scan]] prunes in three steps, metadata-only until a row group
   * survives:
@@ -45,10 +46,11 @@ import org.apache.parquet.io.api.Binary
   * reopen, version number reused by the next spill) — safe because
   * callers only probe layers a committed manifest snapshot references,
   * so an uncommitted layer is never listed, hence never cached. An
-  * event partition gains a file per append and is listed per read.
-  * The caches are bounded by the live file count: callers drop a
-  * store's entries when its files are replaced ([[invalidate]] on head
-  * fold/spill, compaction and open).
+  * event partition gains a file per append: its listing is not cached
+  * here; the command reads take its files from the event store's
+  * snapshot file index instead. The caches are bounded by the live
+  * file count: callers drop a store's entries when its files are
+  * replaced ([[invalidate]] on head fold/spill, compaction and open).
   */
 object HeadProbe {
 
@@ -116,16 +118,16 @@ object HeadProbe {
       val fs = dirPath.getFileSystem(conf)
       if (!fs.exists(dirPath)) Nil
       else fs.listStatus(dirPath).toSeq
-        .filter(_.isFile)
+        .filter(st => st.isFile && isDataFile(st.getPath.getName))
         .map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
-        }
         .sortBy(_.getName)
     }
     if (immutable) dirListings.computeIfAbsent(dir, list(_)) else list(dir)
   }
+
+  /** A visible parquet data file name: not hidden by a `.`/`_` prefix. */
+  def isDataFile(name: String): Boolean =
+    name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")
 
   /** (min, max) of an int64 column over the whole file, from footer
     * statistics alone; None when some row group carries no statistics.

@@ -199,6 +199,77 @@ class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
     }
   }
 
+  test("scans that stop early: one-event files, small COUNTs, tied EMAPPEND minimums") {
+    forAllSampled(Gen.zip(Gen.oneOf(1, 2), Gen.chooseNum(0L, Long.MaxValue)), runs = 2) {
+      case (np, seed) =>
+        val rnd = new scala.util.Random(seed)
+        val dir = Files.createTempDirectory("graft-diff-cut-").toString
+        val es = EventStore.open(spark, dir, np)
+        // three streams under one key share a partition; an EMAPPEND of
+        // all three writes one file whose minimum ties with the one-event
+        // files of whichever stream is furthest behind
+        val key = Ids.partitionKeyForStream("cut-a")
+        val sids = Seq("cut-a", "cut-b", "cut-c")
+        // bulk-ingested files of one stream, each a version range above
+        // the last, enter the index in directory order, not range order
+        val schema = StructType(Seq(StructField("stream_id", StringType),
+          StructField("event_name", StringType), StructField("ord", LongType)))
+        (0 until 4).foreach { b =>
+          es.ingest(spark.createDataFrame(
+            (0 until 3).map(i => Row("cut-a", s"I$b", i.toLong)).asJava, schema), "ord")
+        }
+        (0 until 48).foreach { i =>
+          rnd.nextInt(6) match {
+            case 0 => assert(es.mappend(key, sids.map(input(_, i))).isRight)
+            case 1 => assert(es.append(input(sids(rnd.nextInt(3)), i)).isRight)
+            case _ => assert(es.append(input(sids(rnd.nextInt(3)), i), Some(key)).isRight)
+          }
+        }
+        val ev = es.events()
+        ev.collect()
+        val pairs = sids.map(_ -> key) ++ sids.map(s => s -> Ids.partitionKeyForStream(s))
+        val pages = for {
+          (sid, pk) <- pairs
+          count <- Seq(1, 2, 3, 5)
+          lo <- Seq(None, Some(rnd.nextInt(6).toLong))
+        } yield (sid, pk, lo, count)
+        val want = pages.map { case (sid, pk, lo, count) => refScan(ev, np, sid, pk, lo, None, count) }
+        pages.zip(want).foreach { case ((sid, pk, lo, count), (rows, more)) =>
+          val got = es.scan(sid, lo, None, count, Some(pk))
+          assert(norm(got.events) == norm(rows) && got.hasMore == more,
+            s"ESCAN $sid $pk $lo COUNT $count")
+        }
+        (0 until np).foreach { pid =>
+          Seq(1, 3, 7).foreach { count =>
+            val lo = Option.when(rnd.nextBoolean())(rnd.nextInt(10).toLong)
+            val got = es.pscan(pid, lo, None, count)
+            val (rows, more) = refPscan(ev, pid, lo, None, count)
+            assert(norm(got.events) == norm(rows) && got.hasMore == more,
+              s"EPSCAN $pid $lo COUNT $count")
+          }
+        }
+        // the cut-off opens no file whose minimum is past the page: with
+        // every such file deleted, the first page of each stream under
+        // the shared key still reads back, from the files before it
+        val firstPages = sids.map(sid => es.scan(sid, None, None, 3, Some(key)))
+        assert(firstPages.forall(_.hasMore), "each stream has more than one page")
+        val files = Files.walk(Paths.get(dir, "events")).iterator().asScala
+          .filter(_.toString.endsWith(".parquet")).toSeq
+        val late = files.filter(f => org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            new org.apache.hadoop.conf.Configuration(), new org.apache.hadoop.fs.Path(f.toUri))
+          .getBlocks.asScala.forall { b =>
+            b.getColumns.asScala.find(_.getPath.toDotString == "stream_version").get
+              .getStatistics.genericGetMin.asInstanceOf[java.lang.Long] > 3L
+          })
+        assert(late.nonEmpty)
+        late.foreach(Files.delete)
+        sids.zip(firstPages).foreach { case (sid, page) =>
+          val again = es.scan(sid, None, None, 3, Some(key))
+          assert(norm(again.events) == norm(page.events) && again.hasMore, s"ESCAN $sid COUNT 3")
+        }
+    }
+  }
+
   test("driver-written files read back field for field through Spark and the event source") {
     val dir = Files.createTempDirectory("graft-diff-rt-").toString
     val es = EventStore.open(spark, dir, 4)

@@ -2,6 +2,8 @@ package graft.api
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import graft.core._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
@@ -88,5 +90,20 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
       in("x", "c")))
     assert(r.forall(_.isRight))
     assert(r.map(_.toOption.get.streamVersion) == Seq(0L, 1L, 2L))
+  }
+
+  test("compacted files carry bloom filters sized to their rows") {
+    val dir = Files.createTempDirectory("graft-cp-bloom-").toString
+    val es = EventStore.open(spark, dir, 4)
+    (0 until 4).foreach { b =>
+      assert(es.appendMany((0 until 50).map(i => in(s"b-${i % 9}", s"e$b-$i"))).forall(_.isRight))
+    }
+    es.compact()
+    assert(es.events().count() == 200)
+    val files = Files.walk(Paths.get(dir, "events")).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq
+    // unsized, each file carried a ~1 MB event_id bitset
+    assert(files.nonEmpty && files.forall(Files.size(_) < 64 * 1024),
+      files.map(f => f.getFileName -> Files.size(f)).mkString(", "))
   }
 }

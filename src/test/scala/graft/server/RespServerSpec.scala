@@ -328,4 +328,31 @@ class RespServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(afterAck2.collect { case p: PushF => cursorOf(p) } == Seq(4L))
     c.close()
   }
+
+  test("INFO STORE reports the manifest, the file index and append layer times") {
+    val c = new Client
+    (1 to 3).foreach(i => asMap(c.call("EAPPEND", "store-s", s"E$i")))
+    val info = asMap(c.call("INFO", "STORE"))
+    val layers = for {
+      l <- Seq("validate", "write", "commit"); q <- Seq("p50", "p99")
+    } yield s"append_${l}_${q}_ms"
+    assert(info.keySet == Set("manifest_version", "delta_chain", "data_files",
+      "inline_heads", "head_layers", "appends_sampled") ++ layers)
+    assert(info("manifest_version") == Num(es.manifest.version))
+    assert(info("inline_heads") == Num(es.manifest.streamHeads.size.toLong))
+    assert(info("head_layers") == Num(0))
+    val n = (k: String) => info(k).asInstanceOf[Num].v
+    assert(n("delta_chain") >= 0 && n("delta_chain") < graft.storage.Manifest.CheckpointEvery)
+    assert(n("data_files") >= 3 && n("appends_sampled") >= 3)
+    val ms = (k: String) => info(k).asInstanceOf[Dbl].v
+    Seq("validate", "write", "commit").foreach { l =>
+      assert(0.0 <= ms(s"append_${l}_p50_ms") &&
+        ms(s"append_${l}_p50_ms") <= ms(s"append_${l}_p99_ms"))
+    }
+    assert(ms("append_write_p99_ms") > 0.0 && ms("append_commit_p99_ms") > 0.0)
+    // INFO CACHE keeps the reference key set
+    assert(asMap(c.call("INFO", "CACHE")).keySet == Set("hits", "misses", "hit_ratio",
+      "entries", "memory_bytes", "max_bytes", "block_size_bytes", "evictions"))
+    c.close()
+  }
 }
