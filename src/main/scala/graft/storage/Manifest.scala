@@ -75,7 +75,7 @@ object Manifest {
     */
   val Retain = 16
 
-  /** Every this-many-th version is a checkpoint, and no delta chain is
+  /** Every this-many-th version is a checkpoint, so no delta chain is
     * longer than this minus one: half the retention window, so the
     * newest version's whole chain always lies inside the window.
     */
@@ -191,26 +191,26 @@ object Manifest {
     */
   def commit(root: String, state: ManifestState): Unit = {
     val dir = write(root, state.version, render(state))
-    gc(dir, state.version, chainStart = state.version)
+    gc(dir, state.version)
   }
 
   /** Commit `next`, which differs from its base — the committed version
     * `next.version - 1`, `chain` deltas above its checkpoint (-1: the
     * base is not on disk) — only by the `watermarks` and inline `heads`
     * it adds or replaces. Written as a delta of just those entries;
-    * as a full checkpoint when the base is not on disk, the chain is
-    * full, or `next.version` is a multiple of [[CheckpointEvery]].
+    * as a full checkpoint when the base is not on disk or `next.version`
+    * is a multiple of [[CheckpointEvery]].
     * Returns the new chain length (0 = checkpoint).
     */
   def commitDelta(root: String, next: ManifestState, chain: Int,
       watermarks: Map[Int, Long], heads: Map[String, StreamHead]): Int =
-    if (chain < 0 || chain + 1 >= CheckpointEvery || next.version % CheckpointEvery == 0) {
+    if (chain < 0 || next.version % CheckpointEvery == 0) {
       commit(root, next)
       0
     } else {
       val d = Delta(next.version, next.version - 1, watermarks, heads)
       val dir = write(root, d.version, renderDelta(d))
-      gc(dir, d.version, chainStart = d.version - chain - 1)
+      gc(dir, d.version)
       chain + 1
     }
 
@@ -226,12 +226,12 @@ object Manifest {
 
   /** Best-effort retention after a successful commit: drop versions
     * ≤ `newest - Retain` (and any stale temp files from crashed commits
-    * in that range), but never the checkpoint `chainStart` or anything
-    * above it, which the newest version needs. Deletion failures are
+    * in that range). The newest version's chain is shorter than
+    * [[CheckpointEvery]], so it is never among them. Deletion failures are
     * ignored — the next commit retries, and a lingering old version is
     * harmless because readers always take the max.
     */
-  private def gc(dir: Path, newest: Long, chainStart: Long): Unit =
+  private def gc(dir: Path, newest: Long): Unit =
     // Truly best-effort: the manifest rename has already succeeded when gc
     // runs, so NOTHING thrown here may escape and report a durably
     // committed append as failed. Concurrent gc can make the directory
@@ -239,7 +239,7 @@ object Manifest {
     // UncheckedIOException on entries vanishing mid-walk), not just the
     // deletes — swallow all non-fatal failures; the next commit retries.
     try {
-      val cutoff = math.min(newest - Retain, chainStart - 1)
+      val cutoff = newest - Retain
       if (cutoff < 0) return
       val listing = Files.list(dir)
       try listing.iterator().asScala.foreach { p =>

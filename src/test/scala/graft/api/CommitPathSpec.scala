@@ -114,6 +114,49 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
     assertGapless(reopened)
   }
 
+  test("command reads racing compact() retry on the new snapshot") {
+    val dir = Files.createTempDirectory("graft-commit-race-").toString
+    val es = EventStore.open(spark, dir, 1)
+    val sids = (0 until 3).map(i => s"r-$i")
+    (0 until 2).foreach { round =>
+      // one file per event: a read spans many files, so compaction
+      // moves the log away while reads of the old snapshot are open
+      (0 until 120).foreach(i => assert(es.append(in(sids(i % 3))).isRight))
+      val all = es.events().orderBy("partition_sequence").collect().toSeq
+      val ids = all.map(r => UUID.fromString(r.getAs[String]("event_id")))
+      // by name: `events()` puts the partition column last
+      def byName(rs: Seq[Row]): Seq[Seq[Any]] =
+        norm(rs.map(r => Row.fromSeq(EventSchema.columnNames.map(r.getAs[Any](_)))))
+      def read(): Seq[Any] =
+        Seq(byName(es.pscan(0, count = 1000).events)) ++
+          sids.map(s => byName(es.scan(s, count = 1000).events)) ++
+          Seq(ids.head, ids.last).flatMap(id =>
+            Seq(byName(es.get(id).toSeq), byName(es.readTransaction(id))))
+      val expected = Seq(byName(all)) ++
+        sids.map(s => byName(all.filter(_.getAs[String]("stream_id") == s))) ++
+        Seq(all.head, all.last).flatMap(r => Seq(byName(Seq(r)), byName(Seq(r))))
+      assert(read() == expected)
+
+      val compacting = new java.util.concurrent.atomic.AtomicBoolean(true)
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val reads = new java.util.concurrent.atomic.AtomicInteger()
+      val readers = (0 until 3).map { _ =>
+        val t = new Thread(() =>
+          while (compacting.get()) {
+            try assert(read() == expected, s"round $round")
+            catch { case e: Throwable => errors.add(e) }
+            reads.incrementAndGet()
+          })
+        t.start(); t
+      }
+      while (reads.get() < 3) Thread.sleep(5)
+      try es.compact()
+      finally { compacting.set(false); readers.foreach(_.join()) }
+      Option(errors.peek()).foreach(e => fail(s"round $round: ${errors.size} failed reads", e))
+      assert(read() == expected)
+    }
+  }
+
   // ---- property: every write path, interleaved
 
   private sealed trait Op
