@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Round benchmark: one JSON line on stdout (driver contract).
   *
@@ -43,25 +43,38 @@ object Bench {
       Map.empty
     }
 
+  /** Worker threads of the measuring session: `SPARK_GRAFT_CPUS`, else 32. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** The session conf every measuring main (`Bench`, `tools.ProbeLeg`,
+    * `tools.Plans`) runs on, so a settled level, a plan dump and a
+    * bench reading all come from the same session.
+    */
+  def sessionConf(cpus: String): Seq[(String, String)] = Seq(
+    "spark.master" -> s"local[$cpus]",
+    "spark.sql.shuffle.partitions" -> cpus,
+    "spark.sql.session.timeZone" -> "UTC",
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.adaptive.enabled" -> "true",
+    // static conf, default 100: this bench compiles ~85 queries × 2
+    // scales × several codegen stages each in ONE JVM, so the
+    // generated-class LRU thrashes and an unlucky eviction order
+    // makes an expensive-to-compile leg (e.g. the quality filter's
+    // stopword alternation) pay Janino recompilation on BOTH
+    // min-of-2 passes — measured as a 3× run-to-run swing on the
+    // same data. Size the cache to the workload.
+    "spark.sql.codegen.cache.maxEntries" -> "2000",
+    "spark.ui.enabled" -> "false")
+
+  def session(): SparkSession =
+    sessionConf(cpus).foldLeft(SparkSession.builder()) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // static conf, default 100: this bench compiles ~85 queries × 2
-      // scales × several codegen stages each in ONE JVM, so the
-      // generated-class LRU thrashes and an unlucky eviction order
-      // makes an expensive-to-compile leg (e.g. the quality filter's
-      // stopword alternation) pay Janino recompilation on BOTH
-      // min-of-2 passes — measured as a 3× run-to-run swing on the
-      // same data. Size the cache to the workload.
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Bench.cpus
+    val spark = session()
     spark.sparkContext.setLogLevel("WARN")
 
     def time(f: => Unit): Double = {
@@ -264,9 +277,6 @@ object Bench {
       val c0 = procCpuNs(); val g0 = gcTotalMs()
       val t0w = System.nanoTime()
       try {
-        // the workload is the SHARED graft.tools.ServerSustained —
-        // the same implementation ProbeServer settles regressions
-        // with, so a bench reading and its idle probe can never drift
         val r = graft.tools.ServerSustained.run(spark)
         serverAppendsPerSec = r.appendsPerSec
         serverDeliveredPerSec = r.deliveredPerSec
@@ -503,7 +513,7 @@ object Bench {
         // candidates the noisy ADC would rank above a true neighbor,
         // so the number approaches (not strictly from below) the flat
         // canary as nprobe -> nlist. IvfPqProbes is chosen as the
-        // smallest nprobe matching the flat canary (ProbeIvfPq sweep).
+        // smallest nprobe matching the flat canary (an nprobe sweep at sf0.1).
         val ivfpq = {
           val got = graft.ops.Similarity.ivfPqTopKBatch(e, pred, kNN = 5,
               nlist = SparkEntry.IvfLists, nprobe = SparkEntry.IvfPqProbes,
@@ -517,7 +527,7 @@ object Bench {
         // toy geometry, but the composed path at prod geometry is the
         // one a 100 TB ANN deployment actually runs. Same exact-L2
         // ground truth, same coarse quantizer split (nlist=IvfLists,
-        // nprobe=IvfPqProbes — the ProbeIvfPq-swept split), same
+        // nprobe=IvfPqProbes — the swept split), same
         // training budget as the flat prod canary so the only new
         // variable vs pq_recall_at_5_prod is the probe set. Margin:
         // probing nprobe/nlist lists can only lose neighbors whose
@@ -784,17 +794,16 @@ object Bench {
     //     vocab-join swap — the measured curve behind "vocab-join is
     //     the production-depth shape" (the gate runs both paths only
     //     at oracle-unrollable depth, so without this the crossover
-    //     claim was prose). ONE implementation shared with the probe
-    //     tool (tools/ProbeBpeDepth.sweep — synthetic batched-rounds
-    //     merge table, corpus-capped depth, per-cell failure markers
-    //     so a deep-cell pathology never discards measured shallow
-    //     cells). Both paths must agree on the corpus-wide token sum
-    //     at every depth — a diverging or failed cell records -1, a
+    //     claim was prose). [[bpeDepthSweep]]: synthetic
+    //     batched-rounds merge table, corpus-capped depth, per-cell
+    //     failure markers so a deep-cell pathology never discards
+    //     measured shallow cells. Both paths must agree on the
+    //     corpus-wide token sum at every depth — a diverging or failed cell records -1, a
     //     finding, not a silent skip.
     val bpeDepthJson =
       try {
         // depths past the corpus's merge exhaustion are padded
-        // (ProbeBpeDepth.padMerges) so the curve reaches
+        // (BpeTrain.padMerges) so the curve reaches
         // production-depth territory (512/2048/8192 — the r17 record
         // stopped at the 152-merge corpus cap and the 30k-merge claim
         // was an extrapolation); the sweep carries its own hard
@@ -802,7 +811,7 @@ object Bench {
         // compile cliff is a FINDING in the record (-1), never an
         // unbounded bench wall — and a budget skip (-2) is
         // distinguishable from a failure.
-        val (tableDepth, cells) = graft.tools.ProbeBpeDepth.sweep(
+        val (tableDepth, cells) = bpeDepthSweep(
           Tables.documents(spark, sfDir),
           budgetSec = sys.env
             .getOrElse("SPARK_GRAFT_BPE_DEPTH_BUDGET_SEC", "300").toDouble)
@@ -834,7 +843,7 @@ object Bench {
     // Fixed work — one build + min-of-3 query pair per scale — so no
     // watchdog budget is needed; failure records {} and is named.
     val bm25ServeJson =
-      try "{" + graft.tools.ProbeBm25Serve.measure(spark, sfDir) + "}"
+      try "{" + bm25Serve(spark, sfDir) + "}"
       catch { case e: Throwable =>
         System.err.println(s"[bench] bm25 serve diagnostic failed: ${e.getMessage}")
         "{}"
@@ -1220,6 +1229,160 @@ object Bench {
     stderrTail(summary, results.toSeq).foreach(System.err.println)
   }
 
+
+  /** The `bpe_depth` diagnostic: BPE encode wall vs merge-table depth
+    * for the direct chained-replace projection, the vocab-join swap and
+    * the fold — where the documented crossover actually sits. The merge
+    * table is SYNTHETIC (`BpeTrain.syntheticMerges`, padded past the
+    * corpus's exhaustion with `BpeTrain.padMerges`): apply cost depends
+    * on the table's size and hit rate, not on the merges being the
+    * argmax sequence, and the encoders must agree on ANY table
+    * (checked per depth on the corpus-wide token sum).
+    *
+    * BUDGETED: a deep chained-replace plan can hit a compile-time
+    * cliff, and finding that cliff is the point, but the bench's wall
+    * must stay bounded, so each pass runs on a watchdog thread
+    * (job-group cancel + abandon on timeout).
+    *
+    * Returns the real table depth and one cell per depth: (depth,
+    * direct sec, vocab-join sec, fold sec, measured paths agree). A
+    * pass that THREW or was cancelled records -1; a pass never started
+    * because the budget was spent records -2 — so a pathology at the
+    * deepest cell never discards the shallower cells' points and a skip
+    * is distinguishable from a failure.
+    */
+  def bpeDepthSweep(docs: DataFrame, maxDepth: Int = 8192,
+      budgetSec: Double = 300.0)
+      : (Int, Seq[(Int, Double, Double, Double, Boolean)]) = {
+    import org.apache.spark.sql.functions.{col, lit, sum}
+    val spark = docs.sparkSession
+    val t0 = System.nanoTime()
+    def elapsed = (System.nanoTime() - t0) / 1e9
+    // one timed pass, bounded: the pass runs on a daemon worker (its
+    // OWN job group — setJobGroup is thread-local) joined with the
+    // sweep's remaining budget; on timeout the group is cancelled and
+    // the worker abandoned. Driver-side plan analysis is not
+    // cancellable, but once a timeout fires elapsed ≥ budget, so every
+    // remaining cell is skipped and an abandoned analysis never
+    // overlaps another timed pass.
+    def timedPass(label: String)(f: => Long): (Double, Long) = {
+      val group = s"bpe-depth-$label"
+      val remainMs = math.max(5000L, ((budgetSec - elapsed) * 1000).toLong)
+      @volatile var out: (Double, Long) = (-1.0, Long.MinValue)
+      val worker = new Thread(() => {
+        spark.sparkContext.setJobGroup(group, label, interruptOnCancel = true)
+        try {
+          val s0 = System.nanoTime()
+          val sum = f
+          out = ((System.nanoTime() - s0) / 1e9, sum)
+        } catch { case e: Throwable =>
+          // e.toString, not getMessage: a StackOverflowError from a
+          // plan-depth cliff carries a null message, and the CLASS is
+          // the finding
+          System.err.println(s"[bpe-depth] $label failed: $e")
+        } finally spark.sparkContext.clearJobGroup()
+      })
+      worker.setDaemon(true)
+      worker.start()
+      worker.join(remainMs)
+      if (worker.isAlive) {
+        System.err.println(s"[bpe-depth] budget: cancelling $label")
+        spark.sparkContext.cancelJobGroup(group)
+        worker.join(10000)
+      }
+      out
+    }
+    val real = graft.ops.BpeTrain.syntheticMerges(docs, "text", maxDepth)
+    val merges =
+      if (real.length >= maxDepth) real
+      else real ++ graft.ops.BpeTrain.padMerges(real.length, maxDepth)
+    val depths = (Seq(16, 64, real.length, 512, 2048) :+ merges.length)
+      .filter(d => d > 0 && d <= merges.length).distinct.sorted
+    val cells = depths.map { k =>
+      if (elapsed > budgetSec) (k, -2.0, -2.0, -2.0, false)
+      else {
+        val mk = merges.take(k)
+        def pass(label: String, enc: => DataFrame): (Double, Long) =
+          if (elapsed > budgetSec) (-2.0, Long.MinValue)
+          else timedPass(s"$label-$k") {
+            enc.agg(sum(col("n_bpe_tokens"))).collect()(0).getLong(0)
+          }
+        val (td, sd) = pass("direct", graft.ops.BpeTrain
+          .bpeEncode(docs, "text", "doc_id", mk, lit(false)))
+        val (tv, sv) = pass("vocab", graft.ops.BpeTrain
+          .bpeEncodeVocab(docs, "text", "doc_id", mk, lit(false)))
+        val (tf, sf) = pass("fold", graft.ops.BpeTrain
+          .bpeEncodeVocabFold(docs, "text", "doc_id", mk, lit(false)))
+        // agreement over the paths that MEASURED: at depths past the
+        // expression cliff only the fold survives, which must not
+        // read as disagreement
+        val sums = Seq((td, sd), (tv, sv), (tf, sf))
+          .collect { case (t, s) if t >= 0 => s }
+        (k, td, tv, tf, sums.nonEmpty && sums.distinct.size == 1)
+      }
+    }
+    (real.length, cells)
+  }
+
+  /** The `bm25_serve` diagnostic (JSON body, no braces): persisted-index
+    * BM25 serve ([[graft.ops.Bm25Store]]) vs the corpus scan
+    * ([[graft.ops.Ranking.bm25TopK]]) on the gated query, at the bench
+    * corpus and its 10× replica. At bench SF both walls are sub-second
+    * and overhead-dominated, so the claim-bearing numbers are the
+    * STRUCTURAL bytes beside them: corpus text MB (the scan's per-query
+    * read), total postings MB, and the MB of the ≤|terms| bucket
+    * directories the pruned serve opens. Those grow to 100 TB, and
+    * machine load cannot touch them. Flatness of serve is NOT claimed:
+    * Σ df_t grows with the corpus for a fixed query.
+    */
+  def bm25Serve(spark: SparkSession, sfDir: String, reps: Int = 3): String = {
+    import org.apache.spark.sql.functions.{col, length, lit, pmod, sum, xxhash64}
+    // the gated query's terms and parameters
+    val terms = SparkEntry.Bm25Terms
+    val (k1, b, topK) = (SparkEntry.Bm25K1, SparkEntry.Bm25B, SparkEntry.Bm25TopK)
+    def secs(body: => Unit): Double = {
+      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
+    }
+    def atScale(dir: String): Seq[Double] = {
+      val docs = Tables.documents(spark, dir)
+      val root = java.nio.file.Files.createTempDirectory("bench-bm25ix-")
+      try {
+        val build = secs(graft.ops.Bm25Store.seed(docs, root.toString))
+        val scan = (1 to reps).map(_ => secs(
+          graft.ops.Ranking.bm25TopK(docs, "text", "doc_id", terms,
+            k1 = k1, b = b, topK = topK).collect())).min
+        val serve = (1 to reps).map(_ => secs(
+          graft.ops.Bm25Store.scoreQuery(spark, root.toString, terms,
+            k1 = k1, b = b, topK = topK).collect())).min
+        val textMb = docs.agg(sum(length(col("text"))))
+          .head.getLong(0) / 1e6
+        val gen = graft.streaming.GenIndex.currentGen(root.toString)
+        def dirMb(p: String): Double = {
+          val (fs, path) = graft.core.Fs.hadoop(p)
+          fs.getContentSummary(path).getLength / 1e6
+        }
+        // the bucket dirs the gated query's pruned read opens
+        val buckets = {
+          import spark.implicits._
+          terms.toDF("term")
+            .select(pmod(xxhash64(col("term")),
+              lit(graft.ops.Bm25Store.NumBuckets.toLong)))
+            .distinct().collect().map(_.getLong(0)).toSeq
+        }
+        Seq(build, scan, serve, textMb, dirMb(s"$gen/postings"),
+          buckets.map(bk => dirMb(s"$gen/postings/tbucket=$bk")).sum)
+      } finally graft.core.Fs.deleteRecursively(root.toFile)
+    }
+    val keys = Seq("build", "scan", "serve", "text_mb", "post_mb", "pruned_mb")
+    val fmts = Seq("%.3f", "%.3f", "%.3f", "%.2f", "%.2f", "%.3f")
+    val one = atScale(sfDir)
+    val ten = atScale(graft.tools.ScaleGen.ensure10x(spark, sfDir))
+    Seq("1x" -> one, "10x" -> ten).flatMap { case (tag, vs) =>
+      keys.lazyZip(fmts).lazyZip(vs).map { (k, f, v) =>
+        "\"" + k + "_" + tag + "\":" + f.format(v)
+      }
+    }.mkString(",")
+  }
   /** The process's closing stderr lines. First the PER-QUERY map: the
     * driver's bounded (~2000-char) capture head-truncates the single
     * ~7 KB stdout record line, so the map is CHUNKED into

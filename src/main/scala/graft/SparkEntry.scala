@@ -2741,8 +2741,8 @@ object SparkEntry {
     // mod parts), and each micro-batch's probe reads ONLY the
     // directories its own band keys hash into (partition pruning at
     // the scan; StreamingDedupPrunedSpec pins the PartitionFilters
-    // evidence and the strict file subset; tools/ProbePruned measures
-    // the crossover — 3× at a 20M-row index / 16-doc batch). Per-batch
+    // evidence and the strict file subset; the measured crossover is
+    // 3× at a 20M-row index / 16-doc batch). Per-batch
     // index I/O is bounded by the batch's keyspace instead of
     // re-reading the corpus-sized index every batch. Pair semantics
     // are identical by construction (shared verify core), so the
@@ -3352,21 +3352,18 @@ object SparkEntry {
     *
     * Parameterised, not local[32]-tuned: state partitions stay
     * `spark.sql.shuffle.partitions` (= SPARK_GRAFT_CPUS in the driver
-    * mains) and `SPARK_GRAFT_STATE_STORE=hdfs` restores the default
-    * provider for A/B measurement. Results are provider-independent
-    * (the operator semantics live above the store); the oracle gate
-    * and EventTimeAggsSpec's provider-equality pin hold that line.
+    * mains). Results are provider-independent (the operator semantics
+    * live above the store); the oracle gate and EventTimeAggsSpec's
+    * provider-equality pin hold that line.
     */
-  private[graft] def tuneStateStore(s: SparkSession): Unit =
-    if (sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "rocksdb")
-        == "rocksdb") {
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled", "true")
-      s.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
-    }
+  private[graft] def tuneStateStore(s: SparkSession): Unit = {
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider")
+    s.conf.set("spark.sql.streaming.stateStore.rocksdb." +
+      "changelogCheckpointing.enabled", "true")
+    s.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
+  }
 
   private def drainStream[T](stream: DataFrame, ckPrefix: String,
       perBatch: DataFrame => DataFrame = identity)(
@@ -3853,12 +3850,8 @@ object SparkEntry {
     measure = "round(CAST(ni AS DOUBLE) / least(na.n, nb.n), 6)",
     mName = "containment", minVal = 0.5)
 
-  /** Posting-list cap shared by the Spark query, its oracle, and the
-    * settle-probe's volume diagnostic (tools/ProbeContainment) —
-    * non-private so the diagnostic cannot drift from the leg it
-    * measures.
-    */
-  val NgramMaxDf = 64
+  /** Posting-list cap shared by the Spark query and its oracle. */
+  private val NgramMaxDf = 64
 
   /** Incremental-dedup "new batch" membership: md5 bucket under 1000
     * bp = a deterministic ~10% of documents play the ingest batch.
@@ -4219,11 +4212,13 @@ object SparkEntry {
   private val PackBudget = 256L
   private val PackLanes = 8
 
-  /** BM25 query terms, shared by the Spark query and its oracle. */
-  private val Bm25Terms = Seq("spark", "join", "window")
-  private val Bm25K1 = 1.2
-  private val Bm25B = 0.75
-  private val Bm25TopK = 20
+  /** BM25 query terms, shared by the Spark query, its oracle and the
+    * bench's `bm25_serve` diagnostic.
+    */
+  private[graft] val Bm25Terms = Seq("spark", "join", "window")
+  private[graft] val Bm25K1 = 1.2
+  private[graft] val Bm25B = 0.75
+  private[graft] val Bm25TopK = 20
 
   /** Pairs→clusters oracle: the minhash-LSH pair chain (threshold 0.5)
     * feeding a recursive-CTE label propagation — min reachable id per
@@ -4675,7 +4670,7 @@ object SparkEntry {
   // ranking (multiplicative losses), and at the deliberately coarse
   // gated geometry (m=4, k=8 — SQL-oracle-unrollable) recall vs nprobe
   // is even slightly non-monotone from ADC rank displacement
-  // (ProbeIvfPq sweep at sf0.1: np2 .0371, np3 .0378, np4 .0371,
+  // (nprobe sweep at sf0.1: np2 .0371, np3 .0378, np4 .0371,
   // np5 .0392 = flat parity, np6 .0399 > flat). np5 is the smallest
   // value matching the flat-ADC canary; at production nlist (1000s)
   // the probed fraction shrinks accordingly.

@@ -277,7 +277,7 @@ final class EventStore private (
       .parquet(eventsDir)
       .repartition(col("partition_id"))
       .sortWithinPartitions(col("partition_sequence"))
-    val tmp = s"$root/events.compact.tmp"
+    val tmp = s"$root/${EventStore.CompactTmp}"
     compacted.write
       .mode("overwrite")
       .partitionBy("partition_id")
@@ -288,7 +288,7 @@ final class EventStore private (
       .option("parquet.bloom.filter.expected.ndv#stream_id", ndv)
       .parquet(tmp)
     val ev = java.nio.file.Paths.get(eventsDir)
-    val old = java.nio.file.Paths.get(s"$root/events.pre-compact")
+    val old = java.nio.file.Paths.get(s"$root/${EventStore.PreCompact}")
     java.nio.file.Files.move(ev, old)
     java.nio.file.Files.move(java.nio.file.Paths.get(tmp), ev)
     deleteRecursively(old.toFile)
@@ -352,15 +352,14 @@ final class EventStore private (
     // default keys, so join the bases on both columns — PLUS the
     // derived partition_id (r19): a stream lives in exactly one
     // partition, so adding partition_id to the join keys changes no
-    // matches, but it lets a DISTRIBUTED head join (heads spilled to
-    // parquet and too big to broadcast) satisfy its clustering from
-    // the hash(partition_id) exchange established below — the event
-    // payload crosses ONE exchange on every head path, instead of a
-    // join-key re-shuffle sneaking a second payload pass back in at
-    // exactly the scale where heads stop broadcasting (guide §3.3).
-    // While the head side fits the broadcast threshold (the common
-    // case, and everything the bench exercises) AQE still plans a
-    // broadcast join and the shape is unchanged.
+    // matches. While the head side fits the broadcast threshold (the
+    // common case, and everything the bench exercises) AQE plans a
+    // broadcast join and the event payload crosses ONE exchange on
+    // both head paths (IngestPlanSpec). A DISTRIBUTED head join (heads
+    // spilled to parquet and too big to broadcast) does NOT reuse the
+    // hash(partition_id) exchange below: co-partitioning requires all
+    // three join keys, so the payload is shuffled on them and then
+    // again on partition_id for the windows — three payload exchanges.
     val wmDf = broadcast(wmMap.toSeq.toDF("partition_id", "wm_base"))
     val pidOfKey = udf((pk: String) =>
       Ids.partitionIdFor(Ids.partitionHash(java.util.UUID.fromString(pk)), np))
@@ -398,10 +397,7 @@ final class EventStore private (
       // THE one payload exchange, established before the joins: the
       // broadcast wm/head joins preserve it, both windows' clustering
       // is satisfied by it (subset rule), and the partitioned write
-      // inherits it — and if the head side ever degrades to a
-      // distributed join, its requirement (clustering on the join
-      // keys, partition_id included) is ALSO satisfied by it, so the
-      // payload still moves exactly once.
+      // inherits it (a distributed head join does not — see above)
       .repartition($"partition_id")
       .join(wmDf, Seq("partition_id"), "left")
       .join(headDf, Seq("partition_id", "stream_id", "partition_key"),
@@ -577,8 +573,8 @@ final class EventStore private (
     */
   private val headsSchema = EventStore.headsParquetSchema
 
-  private def headsBaseDir(v: Long) = s"$root/_heads/base-v$v"
-  private def headsDeltaDir(v: Long) = s"$root/_heads/delta-v$v"
+  private def headsBaseDir(v: Long) = EventStore.headsBaseDir(root, v)
+  private def headsDeltaDir(v: Long) = EventStore.headsDeltaDir(root, v)
 
   /** point-lookup cache over the parquet layers (positive + negative);
     * invalidated whenever the layer structure changes (spill/fold).
@@ -683,11 +679,7 @@ final class EventStore private (
             // pay a Spark job launch (~90 ms) per probe. Newest-first
             // + stop-at-first-hit equals the layered max-priority
             // merge, because keys are unique within a layer.
-            val layersNewestFirst =
-              snap.headsDeltas.sorted.reverse.map(headsDeltaDir) ++
-                (if (snap.headsBase > 0) Seq(headsBaseDir(snap.headsBase))
-                 else Nil)
-            val hit = layersNewestFirst.iterator
+            val hit = EventStore.layersNewestFirst(root, snap).iterator
               .map(dir =>
                 HeadProbe.probe(dir, sid, pk, probeHadoopConf))
               .collectFirst { case Some((pid, ver)) =>
@@ -703,51 +695,26 @@ final class EventStore private (
     }
   }
 
-  /** Every head entry of one stream id across all partition keys, from
-    * the given snapshot: inline overlay (newest, wins per key) merged
-    * with the parquet layers. The layered part is cached per stream id
-    * under the same generation discipline as [[lookupHead]] — layers
-    * only change on spill/fold, which bumps the generation — so a hot
-    * caller (the ESVER head-lookup rewrite) runs the layer aggregate at
-    * most once per (stream, layer-generation).
+  /** [[EventStore.streamHeadsOf]] on this store, with the layer probe
+    * cached per stream id under the same generation discipline as
+    * [[lookupHead]] — layers only change on spill/fold, which bumps the
+    * generation — so a hot caller (the ESVER head-lookup rewrite)
+    * probes the layers at most once per (stream, layer-generation).
     */
   private[api] def lookupStreamHeads(
-      snap: ManifestState, sid: String): Seq[StreamHead] = {
-    val inline = snap.streamHeads.collect {
-      case (k, h) if EventStore.isCompositeHeadKey(k) &&
-        EventStore.headKeyStream(k) == sid => h
-    }.toSeq
-    val layered =
-      if (!hasParquetHeadLayers(snap)) Nil
-      else {
-        val (cached, gen0) = headCache.synchronized(
-          (Option(streamHeadsCache.get(sid)), headCacheGen.get()))
-        cached.getOrElse {
-          // JOBLESS, like lookupHead: per-layer driver-side probes,
-          // newest layer wins per partition key
-          val layersNewestFirst =
-            snap.headsDeltas.sorted.reverse.map(headsDeltaDir) ++
-              (if (snap.headsBase > 0) Seq(headsBaseDir(snap.headsBase))
-               else Nil)
-          val merged =
-            collection.mutable.LinkedHashMap.empty[String, StreamHead]
-          layersNewestFirst.foreach { dir =>
-            HeadProbe.probeStream(dir, sid, probeHadoopConf)
-              .foreach { case (pk, pid, ver) =>
-                if (!merged.contains(pk)) merged(pk) = StreamHead(ver, pk, pid)
-              }
-          }
-          val hit = merged.values.toSeq
-          headCache.synchronized {
-            // drop the result if a spill/fold happened mid-lookup
-            if (headCacheGen.get() == gen0) streamHeadsCache.put(sid, hit)
-          }
-          hit
+      snap: ManifestState, sid: String): Seq[StreamHead] =
+    EventStore.streamHeadsOf(root, snap, sid, probeHadoopConf, probe => {
+      val (cached, gen0) = headCache.synchronized(
+        (Option(streamHeadsCache.get(sid)), headCacheGen.get()))
+      cached.getOrElse {
+        val hit = probe
+        headCache.synchronized {
+          // drop the result if a spill/fold happened mid-lookup
+          if (headCacheGen.get() == gen0) streamHeadsCache.put(sid, hit)
         }
+        hit
       }
-    val inlineKeys = inline.map(_.partitionKey).toSet
-    inline ++ layered.filterNot(h => inlineKeys.contains(h.partitionKey))
-  }
+    })
 
   /** Commit an append's watermark/head updates and publish its
     * `written` files to the file index in the same snapshot swap. An
@@ -1311,11 +1278,32 @@ object EventStore {
     // path: the same root may have been deleted and recreated since a
     // previous store cached its layer or event-file metadata
     HeadProbe.invalidate(root)
+    recoverCompaction(root)
     es.recoverOrphans()
     es.recoverOrphanHeads()
     register(es)
     es
   }
+
+  /** `compact()` writes the rewritten log to [[CompactTmp]], moves
+    * `events/` to [[PreCompact]], moves the rewritten log in, then
+    * deletes [[PreCompact]]. A crash between the two moves leaves no
+    * `events/`: move the old log back. Either tree holds the same
+    * events under the same sequences (compaction never renumbers), so
+    * rolling back is always sound; whatever is left of the other tree
+    * is then deleted.
+    */
+  private def recoverCompaction(root: String): Unit = {
+    val ev = java.nio.file.Paths.get(root, "events")
+    val pre = java.nio.file.Paths.get(root, PreCompact)
+    if (!java.nio.file.Files.exists(ev) && java.nio.file.Files.exists(pre))
+      java.nio.file.Files.move(pre, ev)
+    graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(root, CompactTmp).toFile)
+    graft.core.Fs.deleteRecursively(pre.toFile)
+  }
+
+  private[api] val CompactTmp = "events.compact.tmp"
+  private[api] val PreCompact = "events.pre-compact"
 
   /** A reader's view of the store: a committed manifest state, the data
     * files it covers by partition, and the delta chain its version sits
@@ -1441,34 +1429,47 @@ object EventStore {
       reg: RegisteredStore,
       streamId: String): Option[(ManifestState, Seq[StreamHead])] =
     Manifest.load(reg.root).map { snap =>
-      val inline = snap.streamHeads.collect {
-        case (k, h) if isCompositeHeadKey(k) && headKeyStream(k) == streamId => h
-      }.toSeq
-      val layered =
-        if (snap.headsBase == 0 && snap.headsDeltas.isEmpty) Nil
-        else {
-          import org.apache.spark.sql.functions.{col, lit, max_by, struct}
-          val layers =
-            (if (snap.headsBase > 0)
-              Seq(s"${reg.root}/_heads/base-v${snap.headsBase}" -> 0L)
-            else Nil) ++
-              snap.headsDeltas.map(v => s"${reg.root}/_heads/delta-v$v" -> v)
-          layers.map { case (dir, pri) =>
-            spark.read.schema(headsParquetSchema).parquet(dir)
-              .withColumn("pri", lit(pri))
-          }.reduce(_ unionByName _)
-            .where(col("stream_id") === streamId)
-            .groupBy(col("partition_key"))
-            .agg(max_by(struct(col("version"), col("partition_id")), col("pri")).as("h"))
-            .collect()
-            .map(r => StreamHead(
-              r.getStruct(1).getLong(0), r.getString(0), r.getStruct(1).getInt(1)))
-            .toSeq
-        }
-      // the inline overlay is the newest layer: it wins per key
-      val inlineKeys = inline.map(_.partitionKey).toSet
-      (snap, inline ++ layered.filterNot(h => inlineKeys.contains(h.partitionKey)))
+      (snap, streamHeadsOf(reg.root, snap, streamId,
+        spark.sparkContext.hadoopConfiguration))
     }
+
+  private def headsBaseDir(root: String, v: Long) = s"$root/_heads/base-v$v"
+  private def headsDeltaDir(root: String, v: Long) = s"$root/_heads/delta-v$v"
+
+  /** the snapshot's parquet head layers, newest first */
+  private def layersNewestFirst(root: String, snap: ManifestState): Seq[String] =
+    snap.headsDeltas.sorted.reverse.map(headsDeltaDir(root, _)) ++
+      (if (snap.headsBase > 0) Seq(headsBaseDir(root, snap.headsBase)) else Nil)
+
+  /** Every head entry of one stream id across all partition keys in
+    * `snap`: the inline overlay (newest, wins per key) merged with the
+    * parquet layers. The layers are probed newest-first on the driver
+    * (footer-pruned reads, see [[HeadProbe]]) — no Spark job — and the
+    * first hit per key wins, which equals the layered max-priority merge
+    * because keys are unique within a layer. `cached` wraps that probe:
+    * a live handle serves it from its generation cache.
+    */
+  private[api] def streamHeadsOf(root: String, snap: ManifestState,
+      sid: String, conf: org.apache.hadoop.conf.Configuration,
+      cached: (=> Seq[StreamHead]) => Seq[StreamHead] = probe => probe)
+      : Seq[StreamHead] = {
+    val inline = snap.streamHeads.collect {
+      case (k, h) if isCompositeHeadKey(k) && headKeyStream(k) == sid => h
+    }.toSeq
+    val layered =
+      if (snap.headsBase == 0 && snap.headsDeltas.isEmpty) Nil
+      else cached {
+        val merged = collection.mutable.LinkedHashMap.empty[String, StreamHead]
+        layersNewestFirst(root, snap).foreach { dir =>
+          HeadProbe.probeStream(dir, sid, conf).foreach { case (pk, pid, ver) =>
+            if (!merged.contains(pk)) merged(pk) = StreamHead(ver, pk, pid)
+          }
+        }
+        merged.values.toSeq
+      }
+    val inlineKeys = inline.map(_.partitionKey).toSet
+    inline ++ layered.filterNot(h => inlineKeys.contains(h.partitionKey))
+  }
 
   private[api] val headsParquetSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("stream_id",

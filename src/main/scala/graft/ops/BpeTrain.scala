@@ -377,4 +377,21 @@ object BpeTrain {
     }
     merges.toSeq
   }
+
+  /** Padding merges past a corpus's exhaustion depth (the vocabulary
+    * collapses to single symbols after ~150 real merges at bench SF):
+    * deterministic pairs over a \u0005-prefixed alphabet that occurs in
+    * no document and no real merge product, so a padding merge can
+    * never change a token — but the encoders cannot know that, so each
+    * still costs what a zero-hit real merge costs: one literal-replace
+    * scan per row (direct) / per vocab word (vocab-join) and one more
+    * level of expression depth in the plan. That is exactly the term
+    * the bench's `bpe_depth` diagnostic measures — where the k-deep
+    * chained-replace plan stops being viable (plan-size/compile-time
+    * cliff, not just wall) — and it is a LOWER bound on real-merge
+    * cost (hits add string rebuilds). Token sums at padded depths must
+    * equal the full-real-table sums.
+    */
+  def padMerges(from: Int, to: Int): Seq[(String, String)] =
+    (from until to).map(i => ("\u0005a" + i, "\u0005b" + i))
 }

@@ -1,21 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Generic off-load leg probe: `runMain graft.tools.ProbeLeg q1 q2 …`
-  * times each named gated query at base and 10× (min-of-3 warm, idle
-  * machine) — the settle-the-trend discipline of ProbeBpe/
-  * ProbeContainment/ProbeRegressed without a new tool file per drift.
+/** Off-load leg probe: `runMain graft.tools.ProbeLeg q1 q2 …` times
+  * each named gated query at base and 10× (min-of-3 warm, idle machine)
+  * on the bench's own session ([[graft.Bench.session]]), so the settled
+  * levels in `bench-baselines.json` come from the session they
+  * adjudicate.
   */
 object ProbeLeg {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProbeLeg <query> [<query> ...]")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Bench.session()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val big = ScaleGen.ensure10x(spark, sf)

@@ -2,12 +2,8 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-/** The sustained server-throughput workload — ONE implementation
-  * behind the bench's `server_sustained` leg and [[ProbeServer]]'s
-  * idle settlement runs (the never-drift discipline the query legs
-  * get from SparkEntry.queries; r13→r14 the appends/s reading swung
-  * 368.6 → 255.6 at loads 7.7 vs 16 and could not be attributed
-  * because no idle probe existed for this family).
+/** The sustained server-throughput workload behind the bench's
+  * `server_sustained` leg.
   *
   * Shape (mirrors a real consumer): 2 streams seeded with history so
   * every subscription tail crosses the history→live seam, 2

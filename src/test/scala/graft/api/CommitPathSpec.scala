@@ -157,6 +157,59 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
     }
   }
 
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    val walk = Files.walk(from)
+    try walk.iterator().asScala.foreach { p =>
+      Files.copy(p, to.resolve(from.relativize(p).toString))
+    } finally walk.close()
+  }
+
+  test("a crash inside compact() reopens to the log as it was") {
+    import java.nio.file.{Path, Paths}
+    // the three states compact() can leave: rewritten log written only,
+    // old log moved aside, rewritten log moved in
+    val crashes: Seq[(String, (Path, Path, Path) => Unit)] = Seq(
+      "rewritten log written" -> ((_, _, _) => ()),
+      "old log moved aside" -> ((ev, pre, _) => Files.move(ev, pre)),
+      "rewritten log moved in" -> { (ev, pre, tmp) =>
+        Files.move(ev, pre); Files.move(tmp, ev)
+      })
+    crashes.foreach { case (crash, step) =>
+      val dir = Files.createTempDirectory("graft-compact-crash-").toString
+      val es = EventStore.open(spark, dir, 3)
+      streams.foreach(s => assert(es.append(in(s)).isRight))
+      ingest(es, streams ++ streams.take(3))
+      (0 until 12).foreach(i => assert(es.append(in(streams(i % 5))).isRight))
+      def rows(e: EventStore) = norm(e.events()
+        .orderBy("partition_id", "partition_sequence").collect().toSeq)
+      val expectedRows = rows(es)
+      val expected = answers(es)
+      val wm = es.manifest
+      val heads = streams.map(s => s -> es.sver(s)).toMap
+
+      // a real compacted tree: compact a copy of the store
+      val copy = Files.createTempDirectory("graft-compact-copy-").resolve("store")
+      copyTree(Paths.get(dir), copy)
+      EventStore.open(spark, copy.toString, 3).compact()
+      val ev = Paths.get(dir, "events")
+      val pre = Paths.get(dir, EventStore.PreCompact)
+      val tmp = Paths.get(dir, EventStore.CompactTmp)
+      copyTree(copy.resolve("events"), tmp)
+      step(ev, pre, tmp)
+
+      val reopened = EventStore.open(spark, dir, 3)
+      assert(!Files.exists(pre) && !Files.exists(tmp), crash)
+      assert(rows(reopened) == expectedRows, crash)
+      assert(answers(reopened) == expected, crash)
+      val r = reopened.append(in("p-1")).toOption.get
+      assert(r.partitionSequence == wm.watermark(r.partitionId) + 1, crash)
+      assert(r.streamVersion == heads("p-1").get + 1, crash)
+      assertGapless(reopened)
+      reopened.compact()
+      assertGapless(reopened)
+    }
+  }
+
   // ---- property: every write path, interleaved
 
   private sealed trait Op

@@ -126,7 +126,7 @@ class BpeTrainSpec extends AnyFunSuite with BeforeAndAfterAll {
     // depths
     val merges = BpeTrain.trainBpe(corpus, "text", 4)
     val padded =
-      merges ++ graft.tools.ProbeBpeDepth.padMerges(merges.length, 64)
+      merges ++ BpeTrain.padMerges(merges.length, 64)
     def rows(out: org.apache.spark.sql.DataFrame) =
       out.collect().map(r => (r.getAs[Long]("doc_id"),
         r.getAs[Long]("n_bpe_tokens"), r.getAs[String]("enc"))).toSet

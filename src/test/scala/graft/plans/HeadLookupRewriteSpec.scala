@@ -129,6 +129,57 @@ class HeadLookupRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("disk path: a handle behind disk answers like the scan, with no Spark job") {
+    val root = java.nio.file.Files.createTempDirectory("graft-hlr-disk-").toString
+    val writer = graft.api.EventStore.open(spark, root, 8, maxInlineHeads = 4)
+    (1 to 12).foreach(i => writer.append(graft.core.EventInput(s"hd-$i", "E")))
+    // the same stream under a second key, so one stream has two heads
+    val customPk = java.util.UUID.randomUUID()
+    (1 to 3).foreach(_ =>
+      writer.append(graft.core.EventInput("hd-2", "E"), Some(customPk)))
+    // the registry now holds this handle; the writer then moves disk
+    // past it, so the rewrite cannot trust its memory and reads disk
+    val stale = graft.api.EventStore.open(spark, root, 8, maxInlineHeads = 4)
+    (1 to 5).foreach(i => writer.append(graft.core.EventInput(s"hd-$i", "E")))
+    assert(stale.manifest.version < writer.manifest.version)
+    assert(writer.manifest.headsDeltas.nonEmpty || writer.manifest.headsBase > 0)
+
+    val sids = (1 to 12).map(i => s"hd-$i") :+ "hd-absent"
+    // the writer's clamp is current; an extra predicate keeps the scan
+    def rewritten(sid: String) =
+      maxVer(writer.events().where(col("stream_id") === sid))
+    def scanned(sid: String) = maxVer(writer.events()
+      .where(col("stream_id") === sid && col("event_name") === "E"))
+    val expected = sids.map { sid =>
+      assert(usesScan(scanned(sid)))
+      val r = scanned(sid).collect().head
+      if (r.isNullAt(0)) None else Some(r.getLong(0))
+    }
+    assert(expected(1).contains(2L)) // hd-2: max over both keys
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val loads0 = graft.storage.Manifest.loads.get()
+    try {
+      val got = sids.map { sid =>
+        val df = rewritten(sid)
+        assert(!usesScan(df), sid)
+        val r = df.collect().head
+        if (r.isNullAt(0)) None else Some(r.getLong(0))
+      }
+      assert(got == expected)
+      assert(graft.storage.Manifest.loads.get() > loads0,
+        "the stale handle must send the rewrite to disk")
+      Thread.sleep(500) // listener bus is async; let any job event land
+      assert(jobs.get() == 0, "the disk-path rewrite must not run Spark jobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("unregistered parquet with the same columns is untouched") {
     // copy the files elsewhere: same schema, no registered store
     val other = java.nio.file.Files.createTempDirectory("graft-hlr-copy-").toString
