@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import graft.core._
 import graft.storage.{HeadProbe, Manifest, ManifestState, StreamHead}
-import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
@@ -69,16 +68,17 @@ final class EventStore private (
     maxInlineHeads: Int) {
 
   import spark.implicits._
-  import EventStore.{DataFile, Snapshot}
+  import EventStore.{DataFile, HeadLayers, Snapshot}
 
   private val eventsDir = s"$root/events"
   private val lock = new Object
 
   /** What readers see, published by one volatile write: the committed
-    * manifest state with the data files it covers. The file index is
-    * filled by [[recoverOrphans]] at open.
+    * manifest state with the data files and head layers it covers. The
+    * file index is filled by [[recoverOrphans]] at open.
     */
-  @volatile private var snap = Snapshot(initial, Map.empty, initialChain)
+  @volatile private var snap =
+    Snapshot(initial, Map.empty, initialChain, new HeadLayers(root, initial))
 
   private def state: ManifestState = snap.state
 
@@ -292,8 +292,6 @@ final class EventStore private (
     java.nio.file.Files.move(ev, old)
     java.nio.file.Files.move(java.nio.file.Paths.get(tmp), ev)
     deleteRecursively(old.toFile)
-    // every event file was replaced: drop the probe's footers/blooms
-    HeadProbe.invalidate(eventsDir)
     commitState(state.copy(version = state.version + 1), listIndex())
     // compaction also folds the head LSM into a fresh base table
     foldHeads()
@@ -414,7 +412,7 @@ final class EventStore private (
       .withColumn("timestamp_ns", $"timestamp_ms" * lit(1000000L))
       .select(EventSchema.columnNames.map(col): _*)
 
-    def paths(ix: Map[Int, Vector[DataFile]]) = ix.values.flatten.map(_.path.toString).toSet
+    def paths(ix: Map[Int, Vector[DataFile]]) = ix.values.flatten.map(_.file.path).toSet
     val preFiles = paths(listIndex())
     assigned
       // each partition_id already lives in exactly one task: both
@@ -485,7 +483,6 @@ final class EventStore private (
         watermarks = wmMap ++ newWm,
         streamHeads = Map.empty,
         headsDeltas = state.headsDeltas :+ v)), index)
-      invalidateHeadCache() // after the commit (see commitAppend)
       maybeFoldHeads()
     }
     n
@@ -513,10 +510,7 @@ final class EventStore private (
     }
     val files = listIndex().map { case (pid, fs) =>
       val (orphans, kept) = fs.partition(_.minOf("partition_sequence") > state.watermark(pid))
-      orphans.foreach { f =>
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.path.toUri))
-        HeadProbe.invalidate(f.path.toString)
-      }
+      orphans.foreach(f => java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.file.path)))
       pid -> kept
     }
     snap = snap.copy(files = files)
@@ -544,22 +538,15 @@ final class EventStore private (
     */
   private def listIndex(): Map[Int, Vector[DataFile]] =
     partitionDirs().map { case (pid, dir) =>
-      val ls = java.nio.file.Files.list(dir)
-      pid -> (try ls.iterator().asScala
-        .filter(p => HeadProbe.isDataFile(p.getFileName.toString) &&
-          java.nio.file.Files.isRegularFile(p))
-        .map { p =>
-          val f = new Path(p.toUri)
-          new DataFile(f, {
-            // both writers keep int64 statistics (README "Storage model")
-            def min(c: String) = HeadProbe.longRange(f, c, probeHadoopConf).map(_._1)
-            (min("partition_sequence").getOrElse(throw new IllegalStateException(
-                s"$f has no partition_sequence statistics")),
-              min("stream_version").getOrElse(Long.MinValue))
-          })
-        }
-        .toVector
-      finally ls.close())
+      pid -> HeadProbe.listFiles(dir.toString).map { f =>
+        new DataFile(f, {
+          // both writers keep int64 statistics (README "Storage model")
+          def min(c: String) = f.longRange(c).map(_._1)
+          (min("partition_sequence").getOrElse(throw new IllegalStateException(
+              s"$f has no partition_sequence statistics")),
+            min("stream_version").getOrElse(Long.MinValue))
+        })
+      }.toVector
     }.toMap
 
   // ------------------------------------------------------- head-state (LSM)
@@ -576,45 +563,10 @@ final class EventStore private (
   private def headsBaseDir(v: Long) = EventStore.headsBaseDir(root, v)
   private def headsDeltaDir(v: Long) = EventStore.headsDeltaDir(root, v)
 
-  /** point-lookup cache over the parquet layers (positive + negative);
-    * invalidated whenever the layer structure changes (spill/fold).
-    * Invalidation is a GENERATION bump, not just clear(): a lookup that
-    * started against the old layers must not insert its result after
-    * the structure changed, or the stale entry would survive until the
-    * next spill (and append validation would read it).
-    */
   /** built once — newHadoopConf() copies the entire SQL conf and costs
-    * ~10 ms, which would dominate a jobless point lookup
+    * ~10 ms, which would dominate a jobless append
     */
-  private lazy val probeHadoopConf = spark.sessionState.newHadoopConf()
-
-  private val headCache =
-    new java.util.LinkedHashMap[String, Option[StreamHead]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Option[StreamHead]]): Boolean =
-        size() > 8192
-    }
-  // per-STREAM layered heads (all partition keys of one stream id) —
-  // the optimizer's head-lookup rewrite hits this instead of running a
-  // Spark aggregate inside the rule; same generation discipline
-  private val streamHeadsCache =
-    new java.util.LinkedHashMap[String, Seq[StreamHead]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[StreamHead]]): Boolean =
-        size() > 4096
-    }
-  private val headCacheGen = new java.util.concurrent.atomic.AtomicLong(0)
-
-  private def invalidateHeadCache(): Unit = headCache.synchronized {
-    headCacheGen.incrementAndGet()
-    headCache.clear()
-    streamHeadsCache.clear()
-    // the process-wide probe caches (listings/footers/blooms) hold
-    // entries for this store's layer files — drop them too, or folded-
-    // away layers leak for the JVM's life and a deleted-and-recreated
-    // store path would be served stale metadata
-    HeadProbe.invalidate(s"$root/_heads")
-  }
+  private lazy val writerConf = spark.sessionState.newHadoopConf()
 
   private def readHeads(dir: String): DataFrame =
     spark.read.schema(headsSchema).parquet(dir)
@@ -662,59 +614,15 @@ final class EventStore private (
     resolveLayers(layers)
   }
 
-  private def lookupHead(pk: String, sid: String): Option[StreamHead] = {
-    val snap = state
-    val key = EventStore.headKey(pk, sid)
-    snap.streamHeads.get(key) match {
-      case some @ Some(_) => some
-      case None =>
-        if (!hasParquetHeadLayers(snap)) None
-        else {
-          val (cached, gen0) = headCache.synchronized(
-            (Option(headCache.get(key)), headCacheGen.get()))
-          cached.getOrElse {
-            // JOBLESS serving path: probe layers newest-first with a
-            // driver-side footer-pruned parquet read (row-group stats +
-            // bloom filter, see HeadProbe) — a point lookup must not
-            // pay a Spark job launch (~90 ms) per probe. Newest-first
-            // + stop-at-first-hit equals the layered max-priority
-            // merge, because keys are unique within a layer.
-            val hit = EventStore.layersNewestFirst(root, snap).iterator
-              .map(dir =>
-                HeadProbe.probe(dir, sid, pk, probeHadoopConf))
-              .collectFirst { case Some((pid, ver)) =>
-                StreamHead(ver, pk, pid)
-              }
-            headCache.synchronized {
-              // drop the result if a spill/fold happened mid-lookup
-              if (headCacheGen.get() == gen0) headCache.put(key, hit)
-            }
-            hit
-          }
-        }
-    }
-  }
-
-  /** [[EventStore.streamHeadsOf]] on this store, with the layer probe
-    * cached per stream id under the same generation discipline as
-    * [[lookupHead]] — layers only change on spill/fold, which bumps the
-    * generation — so a hot caller (the ESVER head-lookup rewrite)
-    * probes the layers at most once per (stream, layer-generation).
+  /** The head of (pk, sid): the inline overlay's entry, else the layered
+    * entry for `pk` among the stream's layered heads, which the
+    * snapshot's [[HeadLayers]] probe once per stream id — no Spark job.
     */
-  private[api] def lookupStreamHeads(
-      snap: ManifestState, sid: String): Seq[StreamHead] =
-    EventStore.streamHeadsOf(root, snap, sid, probeHadoopConf, probe => {
-      val (cached, gen0) = headCache.synchronized(
-        (Option(streamHeadsCache.get(sid)), headCacheGen.get()))
-      cached.getOrElse {
-        val hit = probe
-        headCache.synchronized {
-          // drop the result if a spill/fold happened mid-lookup
-          if (headCacheGen.get() == gen0) streamHeadsCache.put(sid, hit)
-        }
-        hit
-      }
-    })
+  private def lookupHead(pk: String, sid: String): Option[StreamHead] = {
+    val s = snap
+    s.state.streamHeads.get(EventStore.headKey(pk, sid))
+      .orElse(s.heads.of(sid).find(_.partitionKey == pk))
+  }
 
   /** Commit an append's watermark/head updates and publish its
     * `written` files to the file index in the same snapshot swap. An
@@ -739,7 +647,7 @@ final class EventStore private (
       if (!spill) {
         val withHeads = next.copy(streamHeads = inline)
         val chain = Manifest.commitDelta(root, withHeads, s.chain, newWm, newHeads)
-        snap = Snapshot(withHeads, files, chain)
+        snap = s.copy(state = withHeads, files = files, chain = chain)
       } else {
         writeHeadsParquet(
           inline.toSeq.map { case (k, h) =>
@@ -752,16 +660,10 @@ final class EventStore private (
     } catch {
       case e: Throwable =>
         written.values.foreach(f =>
-          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.path.toUri)))
+          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.file.path)))
         throw e
     }
-    if (spill) {
-      // invalidate AFTER the commit: a lookup racing the window between
-      // bump and commit would otherwise cache an old-layer result under
-      // the new generation
-      invalidateHeadCache()
-      maybeFoldHeads()
-    }
+    if (spill) maybeFoldHeads()
   }
 
   private val MaxHeadDeltas = 8
@@ -792,12 +694,10 @@ final class EventStore private (
             StreamHead(r.getLong(3), r.getString(1), r.getInt(2))).toMap
         commitState(state.copy(
           version = v, streamHeads = inline, headsBase = 0L, headsDeltas = Nil))
-        invalidateHeadCache() // after the commit (see commitAppend)
       } else {
         writeHeadsParquet(resolved, headsBaseDir(v), approxRows = total)
         commitState(state.copy(
           version = v, streamHeads = Map.empty, headsBase = v, headsDeltas = Nil))
-        invalidateHeadCache() // after the commit (see commitAppend)
       }
     } finally resolved.unpersist()
   }
@@ -932,9 +832,9 @@ final class EventStore private (
       preds: Seq[HeadProbe.Pred])(visit: Row => Boolean): Unit = {
     val wm = s.state.watermark(pid)
     if (wm >= 0)
-      HeadProbe.scan(files.map(_.path),
-        HeadProbe.Between("partition_sequence", 0L, wm) +: preds,
-        probeHadoopConf)(g => visit(EventStore.eventRow(pid, g)))
+      HeadProbe.scan(files.map(_.file),
+        HeadProbe.Between("partition_sequence", 0L, wm) +: preds)(
+        g => visit(EventStore.eventRow(pid, g)))
   }
 
   /** The `limit` matching events with the smallest `key` column, in
@@ -1211,7 +1111,7 @@ final class EventStore private (
       // filesystem would fork a `chmod` per create (~7 ms on a 4-core
       // VM, most of an append) and add a checksum side file
       val w = ExampleParquetWriter.builder(new LocalOutputFile(tmp))
-        .withConf(probeHadoopConf)
+        .withConf(writerConf)
         .withType(EventStore.fileParquetSchema)
         .withExtraMetaData(EventStore.fileMetadata)
         .withCompressionCodec(CompressionCodecName.ZSTD)
@@ -1223,7 +1123,7 @@ final class EventStore private (
       val dst = dir.resolve(name)
       java.nio.file.Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       written += dst
-      pid -> new DataFile(new Path(dst.toUri),
+      pid -> new DataFile(new HeadProbe.File(dst.toString),
         (prs.map(_.partition_sequence).min, prs.map(_.stream_version).min))
     } catch {
       case e: Throwable =>
@@ -1232,11 +1132,16 @@ final class EventStore private (
     }
   }
 
-  /** Commit `next` as a full checkpoint and publish it with `files`. */
+  /** Commit `next` as a full checkpoint and publish it with `files`. A
+    * spill or fold changes the head layers: the new snapshot then
+    * carries new [[HeadLayers]], and the old layers' files and probed
+    * heads go with the old snapshot.
+    */
   private def commitState(next: ManifestState,
       files: Map[Int, Vector[DataFile]] = snap.files): Unit = {
     Manifest.commit(root, next)
-    snap = Snapshot(next, files, 0)
+    val heads = if (snap.heads.describes(next)) snap.heads else new HeadLayers(root, next)
+    snap = Snapshot(next, files, 0, heads)
   }
 }
 
@@ -1274,10 +1179,6 @@ object EventStore {
     // commit must be a checkpoint, not a delta over it
     val es = new EventStore(spark, root, st.numPartitions.max(1), st,
       if (st eq loaded) chain else -1, strictVersioning, maxInlineHeads)
-    // a fresh handle must not trust process-wide probe caches for this
-    // path: the same root may have been deleted and recreated since a
-    // previous store cached its layer or event-file metadata
-    HeadProbe.invalidate(root)
     recoverCompaction(root)
     es.recoverOrphans()
     es.recoverOrphanHeads()
@@ -1306,22 +1207,60 @@ object EventStore {
   private[api] val PreCompact = "events.pre-compact"
 
   /** A reader's view of the store: a committed manifest state, the data
-    * files it covers by partition, and the delta chain its version sits
-    * on (-1: the version is not on disk).
+    * files it covers by partition, the delta chain its version sits on
+    * (-1: the version is not on disk) and its parquet head layers.
     */
-  private final case class Snapshot(
-      state: ManifestState, files: Map[Int, Vector[DataFile]], chain: Int)
+  private final case class Snapshot(state: ManifestState,
+      files: Map[Int, Vector[DataFile]], chain: Int, heads: HeadLayers)
 
-  /** One committed data file of the file index, with the minimums of
-    * the two sort keys the scan cut-off orders by: known when an append
-    * writes the file, else read from its footer on first use.
+  /** One committed data file of the file index (its footer and bloom
+    * filters live with `file`), with the minimums of the two sort keys
+    * the scan cut-off orders by: known when an append writes the file,
+    * else read from its footer on first use.
     */
-  private final class DataFile(val path: Path, mins: => (Long, Long)) {
+  private final class DataFile(val file: HeadProbe.File, mins: => (Long, Long)) {
     private lazy val (minSeq, minVersion) = mins
     def minOf(key: String): Long = key match {
       case "partition_sequence" => minSeq
       case "stream_version"     => minVersion
     }
+  }
+
+  /** The parquet head layers of one manifest state, newest first: each
+    * layer's files, listed on first use, and the layered heads of the
+    * last 4,096 stream ids looked up. The layers of one object never
+    * change: a spill or fold commits a state with other layers, and the
+    * snapshot that publishes it carries a new object. Keys are unique
+    * within a layer, so the newest layer's entry per partition key is
+    * the layered max-priority merge.
+    */
+  private final class HeadLayers(root: String, st: ManifestState) {
+    private val base = st.headsBase
+    private val deltas = st.headsDeltas
+    private lazy val files: Seq[Seq[HeadProbe.File]] =
+      (deltas.sorted.reverse.map(headsDeltaDir(root, _)) ++
+        (if (base > 0) Seq(headsBaseDir(root, base)) else Nil)).map(HeadProbe.listFiles)
+    private val byStream =
+      new java.util.LinkedHashMap[String, Seq[StreamHead]](64, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, Seq[StreamHead]]): Boolean = size() > 4096
+      }
+
+    def describes(next: ManifestState): Boolean =
+      next.headsBase == base && next.headsDeltas == deltas
+
+    /** every layered head of stream `sid`, one per partition key */
+    def of(sid: String): Seq[StreamHead] =
+      if (base == 0 && deltas.isEmpty) Nil
+      else byStream.synchronized(Option(byStream.get(sid))).getOrElse {
+        val merged = collection.mutable.LinkedHashMap.empty[String, StreamHead]
+        files.foreach(layer => HeadProbe.probeStream(layer, sid).foreach {
+          case (pk, pid, ver) => if (!merged.contains(pk)) merged(pk) = StreamHead(ver, pk, pid)
+        })
+        val heads = merged.values.toSeq
+        byStream.synchronized(byStream.put(sid, heads))
+        heads
+      }
   }
 
   /** The last `n` samples of `layers` durations (ns), as a ring. */
@@ -1393,27 +1332,22 @@ object EventStore {
     *   1. if the registered LIVE handle's in-memory manifest version
     *      matches the newest on-disk version (a directory-listing
     *      probe — no file read, no JSON parse, no Spark job), answer
-    *      from that handle's snapshot and its generation-cached
-    *      per-stream head lookup. On the hot path (repeated head
+    *      from that handle's snapshot, whose head layers cache each
+    *      stream's layered heads. On the hot path (repeated head
     *      queries between commits) this is pure memory.
     *   2. otherwise (no live handle, or a concurrent writer advanced
     *      the manifest) fall back to the full disk snapshot read.
     */
   def headsForRewrite(
-      spark: SparkSession,
       reg: RegisteredStore,
       streamId: String): Option[(ManifestState, Seq[StreamHead])] = {
     val live = Option(registry.get(normalizePath(s"${reg.root}/events")))
       .flatMap(e => Option(e._2.get()))
-    live match {
-      case Some(h) =>
-        val snap = h.manifest
-        if (snap.version > 0 &&
-            Manifest.newestVersion(reg.root).contains(snap.version))
-          Some((snap, h.lookupStreamHeads(snap, streamId)))
-        else headsFromDisk(spark, reg, streamId)
-      case None => headsFromDisk(spark, reg, streamId)
-    }
+    live.map(_.snap)
+      .filter(s => s.state.version > 0 &&
+        Manifest.newestVersion(reg.root).contains(s.state.version))
+      .map(s => (s.state, streamHeadsOf(s.state, streamId, s.heads.of(streamId))))
+      .orElse(headsFromDisk(reg, streamId))
   }
 
   /** Disk-snapshot view for [[graft.plans.HeadLookupRewrite]]: the
@@ -1422,51 +1356,29 @@ object EventStore {
     * under every key, so the rewrite must consider each entry — and
     * check the clamp at each entry's partition). Layer files are
     * immutable, so snapshot + layers is a consistent point-in-time
-    * view regardless of which live handle — if any — wrote it.
+    * view regardless of which live handle — if any — wrote it. With no
+    * live handle there is no snapshot to keep the layers' files in:
+    * they are listed and read for this call.
     */
-  def headsFromDisk(
-      spark: SparkSession,
+  private def headsFromDisk(
       reg: RegisteredStore,
       streamId: String): Option[(ManifestState, Seq[StreamHead])] =
-    Manifest.load(reg.root).map { snap =>
-      (snap, streamHeadsOf(reg.root, snap, streamId,
-        spark.sparkContext.hadoopConfiguration))
+    Manifest.load(reg.root).map { st =>
+      (st, streamHeadsOf(st, streamId, new HeadLayers(reg.root, st).of(streamId)))
     }
 
   private def headsBaseDir(root: String, v: Long) = s"$root/_heads/base-v$v"
   private def headsDeltaDir(root: String, v: Long) = s"$root/_heads/delta-v$v"
 
-  /** the snapshot's parquet head layers, newest first */
-  private def layersNewestFirst(root: String, snap: ManifestState): Seq[String] =
-    snap.headsDeltas.sorted.reverse.map(headsDeltaDir(root, _)) ++
-      (if (snap.headsBase > 0) Seq(headsBaseDir(root, snap.headsBase)) else Nil)
-
   /** Every head entry of one stream id across all partition keys in
-    * `snap`: the inline overlay (newest, wins per key) merged with the
-    * parquet layers. The layers are probed newest-first on the driver
-    * (footer-pruned reads, see [[HeadProbe]]) — no Spark job — and the
-    * first hit per key wins, which equals the layered max-priority merge
-    * because keys are unique within a layer. `cached` wraps that probe:
-    * a live handle serves it from its generation cache.
+    * `st`: the inline overlay (newest, wins per key) merged with the
+    * stream's `layered` heads ([[HeadLayers.of]]).
     */
-  private[api] def streamHeadsOf(root: String, snap: ManifestState,
-      sid: String, conf: org.apache.hadoop.conf.Configuration,
-      cached: (=> Seq[StreamHead]) => Seq[StreamHead] = probe => probe)
-      : Seq[StreamHead] = {
-    val inline = snap.streamHeads.collect {
+  private def streamHeadsOf(st: ManifestState, sid: String,
+      layered: Seq[StreamHead]): Seq[StreamHead] = {
+    val inline = st.streamHeads.collect {
       case (k, h) if isCompositeHeadKey(k) && headKeyStream(k) == sid => h
     }.toSeq
-    val layered =
-      if (snap.headsBase == 0 && snap.headsDeltas.isEmpty) Nil
-      else cached {
-        val merged = collection.mutable.LinkedHashMap.empty[String, StreamHead]
-        layersNewestFirst(root, snap).foreach { dir =>
-          HeadProbe.probeStream(dir, sid, conf).foreach { case (pk, pid, ver) =>
-            if (!merged.contains(pk)) merged(pk) = StreamHead(ver, pk, pid)
-          }
-        }
-        merged.values.toSeq
-      }
     val inlineKeys = inline.map(_.partitionKey).toSet
     inline ++ layered.filterNot(h => inlineKeys.contains(h.partitionKey))
   }
@@ -1523,7 +1435,7 @@ object EventStore {
   /** One stored record as an [[EventSchema.schema]] row; `partition_id`
     * comes from the directory, like Spark's partition discovery.
     */
-  private def eventRow(pid: Int, g: Group): Row = {
+  private[graft] def eventRow(pid: Int, g: Group): Row = {
     def bin(c: String): Array[Byte] =
       if (g.getFieldRepetitionCount(c) == 0) null else g.getBinary(c, 0).getBytes
     new GenericRowWithSchema(Array[Any](

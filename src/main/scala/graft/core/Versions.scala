@@ -44,9 +44,6 @@ object ExpectedVersion {
   /** Stream head must be exactly at this version. */
   final case class Exact(version: Long) extends ExpectedVersion
 
-  def fromNextVersion(version: Long): ExpectedVersion =
-    if (version == 0) Empty else Exact(version - 1)
-
   def parse(s: String): Either[String, ExpectedVersion] = s match {
     case "any"    => Right(Any)
     case "exists" => Right(Exists)
@@ -61,11 +58,6 @@ sealed trait CurrentVersion {
   def next: Long = this match {
     case CurrentVersion.Current(v) => v + 1
     case CurrentVersion.Empty      => 0L
-  }
-
-  def asExpected: ExpectedVersion = this match {
-    case CurrentVersion.Current(v) => ExpectedVersion.Exact(v)
-    case CurrentVersion.Empty      => ExpectedVersion.Empty
   }
 }
 

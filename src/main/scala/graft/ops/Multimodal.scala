@@ -25,14 +25,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  /** media metadata struct carried next to every binary column */
-  val MediaMetaSchema: StructType = StructType(Seq(
-    StructField("mime", StringType, nullable = false),
-    StructField("byte_len", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("duration_ms", LongType, nullable = true)))
-
   /** Attach a metadata struct derived from the payload envelope. */
   def withMediaMeta(df: DataFrame, binCol: String, mime: String): DataFrame =
     df.withColumn("media_meta", struct(

@@ -88,23 +88,6 @@ object TextAnalysis {
   def tokenCount(text: Column): Column =
     (length(text) - length(regexp_replace(text, lit(" "), lit(""))) + 1).cast("long")
 
-  /** Quality features: token count, mean token length, stopword ratio,
-    * uppercase ratio, digit ratio — the usual pretraining-filter
-    * signals, all exact-integer arithmetic.
-    */
-  def qualityFeatures(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    val toks = tokenCount(t).cast("double")
-    val chars = length(regexp_replace(t, lit(" "), lit(""))).cast("double")
-    val stop = langScore(t, "en").cast("double")
-    df.withColumn("n_tokens", toks)
-      .withColumn("mean_tok_len", chars / toks)
-      .withColumn("stop_ratio", stop / toks)
-      .withColumn("digit_ratio",
-        (length(t) - length(regexp_replace(t, lit("[0-9]"), lit("")))).cast("double")
-          / length(t).cast("double"))
-  }
-
   /** Content-defined fingerprint: md5 of lowercased, whitespace-
     * collapsed text. Identical normalization on any engine.
     */

@@ -105,11 +105,10 @@ case class HeadLookupRewrite() extends Rule[LogicalPlan] {
     // participate; an explicit partition_key narrows to one.
     // headsForRewrite keeps the optimizer I/O-free on the hot path: a
     // live handle whose version matches disk (listing probe) answers
-    // from memory + the generation-cached per-stream head lookup; only
-    // a stale/absent handle pays the full disk read.
-    val spark = org.apache.spark.sql.SparkSession.active
+    // from its snapshot's per-stream head cache; only a stale/absent
+    // handle pays the full disk read.
     val (snap, allHeads) =
-      EventStore.headsForRewrite(spark, reg, sid).getOrElse(return None)
+      EventStore.headsForRewrite(reg, sid).getOrElse(return None)
 
     val heads = partitionKey match {
       case Some(pk) => allHeads.filter(_.partitionKey == pk)

@@ -2,16 +2,15 @@ package graft.storage
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.column.statistics.{BinaryStatistics, LongStatistics}
 import org.apache.parquet.column.values.bloomfilter.BloomFilter
+import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.io.{ColumnIOFactory, LocalInputFile}
 import org.apache.parquet.io.api.Binary
 
 /** Driver-side, footer-pruned parquet reads — NO Spark job. A serving
@@ -23,11 +22,10 @@ import org.apache.parquet.io.api.Binary
   *
   *   - head layers (`<root>/_heads/{delta,base}-v{n}`): range-
   *     partitioned and sorted on (stream_id, partition_key), stream_id
-  *     bloom filter ([[probe]], [[probeStream]]);
+  *     bloom filter ([[probeStream]]);
   *   - event partitions (`<root>/events/partition_id=N`): files sorted
   *     by partition_sequence, event_id bloom filter (`EventStore`'s
-  *     command reads call [[scan]] directly on the files of their
-  *     snapshot's file index).
+  *     command reads and the streaming source's reader call [[scan]]).
   *
   * [[scan]] prunes in three steps, metadata-only until a row group
   * survives:
@@ -37,20 +35,17 @@ import org.apache.parquet.io.api.Binary
   *   3. a record scan of the surviving row groups, passing on only the
   *      records that satisfy every predicate exactly.
   *
-  * Data FILES are immutable once written — appends and compaction write
-  * new names, never rewrite one — so footers and bloom filters are
-  * cached process-wide by path. Directory listings are cached only for
-  * directories that are immutable as a whole: committed head layers.
-  * The one layer directory that CAN be rewritten is an uncommitted
-  * orphan (written, crash before the manifest commit, deleted on
-  * reopen, version number reused by the next spill) — safe because
-  * callers only probe layers a committed manifest snapshot references,
-  * so an uncommitted layer is never listed, hence never cached. An
-  * event partition gains a file per append: its listing is not cached
-  * here; the command reads take its files from the event store's
-  * snapshot file index instead. The caches are bounded by the live
-  * file count: callers drop a store's entries when its files are
-  * replaced ([[invalidate]] on head fold/spill, compaction and open).
+  * A file's metadata lives with the file: a [[File]] reads its footer
+  * and each bloom filter once, on first use, and keeps them for its own
+  * life. The reference opens and drops a segment's indexes with the
+  * segment; here whoever holds the file objects decides how long the
+  * metadata lives — the event store's snapshot for its data files and
+  * head layers, the streaming source for the files it listed. Files are
+  * never rewritten in place (appends and compaction write new names), so
+  * an object never describes a different file than the one it read.
+  * Files are opened through parquet's `LocalInputFile`, not Hadoop's
+  * local filesystem: no stat, no checksum stream, no Hadoop
+  * configuration.
   */
 object HeadProbe {
 
@@ -65,83 +60,83 @@ object HeadProbe {
   /** int64 column within [lo, hi], inclusive (stats prunable) */
   final case class Between(column: String, lo: Long, hi: Long) extends Pred
 
-  // private[storage] so the spec can pin invalidate()'s path-boundary
-  // semantics directly against the cache keys
-  private[storage] val dirListings =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Path]]()
-  private val footers =
-    new java.util.concurrent.ConcurrentHashMap[String, ParquetMetadata]()
-  // per (file, rowGroup, column): None = column has no bloom filter
-  private val blooms = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, String), Option[BloomFilter]]()
-
-  /** Drop every cached listing/footer/bloom under `rootPrefix` (a
-    * store root, its `_heads` or `events` tree, or one file). The
-    * caches are keyed on bare paths and would otherwise outlive the
-    * files they describe two ways: entries for folded-away layers and
-    * compacted-away event files accumulate for the life of the JVM, and
-    * a store path deleted and recreated within one process (test
-    * harnesses, reused temp dirs) would be served stale metadata. Both
-    * sides are normalized through Hadoop `Path` to the bare URI path
-    * before matching: cached keys may carry a filesystem scheme
-    * (`file:/...` from listStatus) while callers may pass bare paths,
-    * `file:///`-form URIs, or trailing slashes — raw substring matching
-    * would silently miss (and leave stale) every entry for a URI-form
-    * store root.
+  /** One parquet data file at local `path`, with its footer and its bloom
+    * filters per (row group, column), each read on first use. A task
+    * carries it to an executor without its metadata, which is read again
+    * there.
     */
-  def invalidate(rootPrefix: String): Unit = {
-    val want = new Path(rootPrefix).toUri.getPath
-    // path-BOUNDARY match, not bare startsWith: invalidating
-    // `/x/_heads` must not also drop a sibling store whose directory
-    // name merely extends it (`/x/_heads-backup`) — only
-    // over-invalidation, but it silently crosses store boundaries.
-    // Hadoop Path normalization strips trailing slashes, so `want`
-    // never ends with "/" and the "/"-suffix probe is exact.
-    def hit(key: String): Boolean = {
-      val p = new Path(key).toUri.getPath
-      p == want || p.startsWith(want + "/")
+  final class File(val path: String) extends Serializable {
+    @transient private[HeadProbe] lazy val footer: ParquetMetadata = {
+      val in = input
+      val s = in.newStream()
+      try ParquetFileReader.readFooter(in, options(), s) finally s.close()
     }
-    dirListings.keySet.removeIf(hit(_))
-    footers.keySet.removeIf(hit(_))
-    blooms.keySet.removeIf(k => hit(k._1))
+    // None: the column has no bloom filter in that row group
+    @transient private lazy val blooms =
+      new java.util.concurrent.ConcurrentHashMap[(Int, String), Option[BloomFilter]]()
+
+    private def input = new LocalInputFile(java.nio.file.Paths.get(path))
+
+    /** a reader over the cached footer; the caller closes it */
+    private[HeadProbe] def open(): ParquetFileReader = {
+      val in = input
+      val s = in.newStream()
+      try new ParquetFileReader(in, footer, options(), s)
+      catch { case e: Throwable => s.close(); throw e }
+    }
+
+    private[HeadProbe] def bloom(block: Int, column: String,
+        reader: => ParquetFileReader): Option[BloomFilter] =
+      blooms.computeIfAbsent((block, column), { _ =>
+        val b = footer.getBlocks.get(block)
+        val c = footer.getFileMetaData.getSchema.getFieldIndex(column)
+        Option(reader.getBloomFilterDataReader(b).readBloomFilter(b.getColumns.get(c)))
+      })
+
+    /** (min, max) of an int64 column over the whole file, from footer
+      * statistics alone; None when some row group carries no statistics.
+      */
+    def longRange(column: String): Option[(Long, Long)] = {
+      val c = footer.getFileMetaData.getSchema.getFieldIndex(column)
+      val ranges = footer.getBlocks.asScala.map(_.getColumns.get(c).getStatistics match {
+        case s: LongStatistics if s.hasNonNullValue => Some((s.getMin, s.getMax))
+        case _ => None
+      })
+      if (ranges.isEmpty || ranges.contains(None)) None
+      else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
+    }
+
+    override def toString: String = path
   }
 
-  /** Parquet data files directly under `dir`, by name; hidden names
+  /** Read options for one reader. Each reader needs its own: closing a
+    * reader releases its options' codec factory. A plain configuration
+    * costs microseconds; a Hadoop one parses its default resources.
+    */
+  private def options(): ParquetReadOptions =
+    ParquetReadOptions.builder(new PlainParquetConfiguration()).build()
+
+  /** The parquet data files directly under `dir`, by name; hidden names
     * (`.`/`_` prefix: in-flight temp files, checksums, markers) are
     * skipped exactly as Spark's file index skips them. A missing
-    * directory is empty. `immutable` caches the listing.
+    * directory is empty.
     */
-  def listFiles(dir: String, conf: Configuration,
-      immutable: Boolean = false): Seq[Path] = {
-    def list(d: String): Seq[Path] = {
-      val dirPath = new Path(d)
-      val fs = dirPath.getFileSystem(conf)
-      if (!fs.exists(dirPath)) Nil
-      else fs.listStatus(dirPath).toSeq
-        .filter(st => st.isFile && isDataFile(st.getPath.getName))
-        .map(_.getPath)
-        .sortBy(_.getName)
+  def listFiles(dir: String): Seq[File] = {
+    val d = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.isDirectory(d)) Nil
+    else {
+      val ls = java.nio.file.Files.list(d)
+      try ls.iterator().asScala
+        .filter { p =>
+          val name = p.getFileName.toString
+          name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_") &&
+            java.nio.file.Files.isRegularFile(p)
+        }
+        .toSeq
+        .sortBy(_.getFileName.toString)
+        .map(p => new File(p.toString))
+      finally ls.close()
     }
-    if (immutable) dirListings.computeIfAbsent(dir, list(_)) else list(dir)
-  }
-
-  /** A visible parquet data file name: not hidden by a `.`/`_` prefix. */
-  def isDataFile(name: String): Boolean =
-    name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")
-
-  /** (min, max) of an int64 column over the whole file, from footer
-    * statistics alone; None when some row group carries no statistics.
-    */
-  def longRange(file: Path, column: String,
-      conf: Configuration): Option[(Long, Long)] = {
-    val footer = footerOf(file, conf)
-    val c = footer.getFileMetaData.getSchema.getFieldIndex(column)
-    val ranges = footer.getBlocks.asScala.map(_.getColumns.get(c).getStatistics match {
-      case s: LongStatistics if s.hasNonNullValue => Some((s.getMin, s.getMax))
-      case _ => None
-    })
-    if (ranges.isEmpty || ranges.contains(None)) None
-    else Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
   }
 
   /** Visit every record of `files` that satisfies all `preds`, in file
@@ -149,39 +144,20 @@ object HeadProbe {
     * a layout sorted on the predicate columns: a row group's matches are
     * adjacent, so its scan stops at the first miss after a match.
     */
-  def scan(files: Seq[Path], preds: Seq[Pred], conf: Configuration,
+  def scan(files: Seq[File], preds: Seq[Pred],
       contiguous: Boolean = false)(visit: Group => Boolean): Unit = {
     val fi = files.iterator
-    while (fi.hasNext) if (!scanFile(fi.next(), preds, conf, contiguous, visit)) return
-  }
-
-  /** (partition_id, version) for the (stream_id, partition_key) head
-    * entry in one layer directory, or None if absent. Keys are unique
-    * within a layer (a layer is a snapshot of a head map), so the first
-    * match IS the layer's entry. Layer precedence (newest delta wins
-    * over base) is the CALLER's job: probe layers newest-first and stop
-    * at the first hit.
-    */
-  def probe(dir: String, streamId: String, partitionKey: String,
-      conf: Configuration): Option[(Int, Long)] = {
-    var hit: Option[(Int, Long)] = None
-    scan(listFiles(dir, conf, immutable = true),
-        Seq(Eq("stream_id", streamId), Eq("partition_key", partitionKey)), conf) { g =>
-      hit = Some((g.getInteger("partition_id", 0), g.getLong("version", 0)))
-      false
-    }
-    hit
+    while (fi.hasNext) if (!scanFile(fi.next(), preds, contiguous, visit)) return
   }
 
   /** ALL (partition_key, partition_id, version) entries of one stream
-    * id in one layer directory — the per-stream analogue of [[probe]]
-    * (ESVER wants every partition key's head for a stream).
+    * id in one head layer (its `files`). Keys are unique within a layer
+    * (a layer is a snapshot of a head map); layer precedence (newest
+    * delta wins over base) is the CALLER's job.
     */
-  def probeStream(dir: String, streamId: String,
-      conf: Configuration): Seq[(String, Int, Long)] = {
+  def probeStream(files: Seq[File], streamId: String): Seq[(String, Int, Long)] = {
     val out = Seq.newBuilder[(String, Int, Long)]
-    scan(listFiles(dir, conf, immutable = true), Seq(Eq("stream_id", streamId)), conf,
-        contiguous = true) { g =>
+    scan(files, Seq(Eq("stream_id", streamId)), contiguous = true) { g =>
       out += ((g.getString("partition_key", 0),
         g.getInteger("partition_id", 0), g.getLong("version", 0)))
       true
@@ -189,15 +165,10 @@ object HeadProbe {
     out.result()
   }
 
-  private def footerOf(file: Path, conf: Configuration): ParquetMetadata =
-    footers.computeIfAbsent(file.toString, { _ =>
-      ParquetFileReader.readFooter(conf, file, ParquetMetadataConverter.NO_FILTER)
-    })
-
   /** false when `visit` asked to stop */
-  private def scanFile(file: Path, preds: Seq[Pred], conf: Configuration,
+  private def scanFile(file: File, preds: Seq[Pred],
       contiguous: Boolean, visit: Group => Boolean): Boolean = {
-    val footer = footerOf(file, conf)
+    val footer = file.footer
     val schema = footer.getFileMetaData.getSchema
     val cols = preds.map(p => schema.getFieldIndex(p.column))
     val blocks = footer.getBlocks
@@ -209,27 +180,19 @@ object HeadProbe {
     }
     if (inRange.isEmpty) return true
 
-    // 2.+3. one reader for the bloom checks (cached after first touch)
-    //    and the surviving row-group scans
+    // 2.+3. one reader, opened on first need, for the bloom filters the
+    //    file has not read yet and the surviving row-group scans
     var reader: ParquetFileReader = null
     def theReader(): ParquetFileReader = {
-      if (reader == null) reader = new ParquetFileReader(conf, file, footer)
+      if (reader == null) reader = file.open()
       reader
     }
     try {
       val candidates = inRange.filter { b =>
-        preds.indices.forall { i =>
-          preds(i) match {
-            case eq: Eq =>
-              blooms.computeIfAbsent((file.toString, b, eq.column), { _ =>
-                Option(theReader().getBloomFilterDataReader(blocks.get(b))
-                  .readBloomFilter(blocks.get(b).getColumns.get(cols(i))))
-              }) match {
-                case Some(bloom) => bloom.findHash(bloom.hash(eq.binary))
-                case None => true // no bloom filter: cannot prune
-              }
-            case _ => true
-          }
+        preds.forall {
+          case eq: Eq => file.bloom(b, eq.column, theReader()).forall(
+            bloom => bloom.findHash(bloom.hash(eq.binary)))
+          case _ => true
         }
       }
       val columnIO = new ColumnIOFactory().getColumnIO(schema)

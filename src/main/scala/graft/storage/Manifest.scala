@@ -2,9 +2,11 @@ package graft.storage
 
 import java.nio.charset.{CharacterCodingException, StandardCharsets}
 import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
+
+import com.fasterxml.jackson.core.{JacksonException, JsonFactory, JsonGenerator}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
 /** Commit manifest: the Spark-native analogue of SierraDB's confirmation
   * watermark (`crates/sierradb-cluster/src/confirmation.rs:83-156`,
@@ -181,8 +183,9 @@ object Manifest {
     try Some(decode(Files.readString(dir.resolve(s"v$v.json"))))
     catch {
       case _: NoSuchFileException => onMissing(v); None
-      // torn: cut off mid-character or mid-document
-      case _: CharacterCodingException => None
+      // torn: cut off mid-character or mid-document (Jackson's parse
+      // errors are IOExceptions, unlike a failure to read the file)
+      case _: CharacterCodingException | _: JacksonException => None
       case NonFatal(e) if !e.isInstanceOf[java.io.IOException] => None
     }
 
@@ -255,76 +258,66 @@ object Manifest {
       } finally listing.close()
     } catch { case NonFatal(_) => () }
 
-  // --- minimal JSON codec (no external deps available offline) ---
+  // --- JSON codec: Jackson's generator and tree parser ---
 
   /** What one inline append changed on top of version `base`. */
   private final case class Delta(version: Long, base: Long,
       watermarks: Map[Int, Long], streamHeads: Map[String, StreamHead])
 
-  /** `s` JSON-escaped into `b`; a string that needs no escaping (every
-    * stream id and key in practice) is appended as is.
-    */
-  private def esc(b: java.lang.StringBuilder, s: String): Unit = {
-    var i = 0
-    while (i < s.length && { val c = s.charAt(i); c >= ' ' && c != '"' && c != '\\' }) i += 1
-    if (i == s.length) b.append(s)
-    else s.foreach {
-      case '"'  => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
+  // both thread-safe once configured
+  private val json = new JsonFactory()
+  private val mapper = new ObjectMapper(json)
+
+  private def generate(sizeHint: Int)(body: JsonGenerator => Unit): String = {
+    val w = new java.io.StringWriter(sizeHint)
+    val g = json.createGenerator(w)
+    try {
+      g.writeStartObject()
+      body(g)
+      g.writeEndObject()
+    } finally g.close()
+    w.toString
   }
 
-  private def renderEntries(b: java.lang.StringBuilder,
+  private def writeEntries(g: JsonGenerator,
       watermarks: Map[Int, Long], heads: Map[String, StreamHead]): Unit = {
-    b.append(",\"watermarks\":{")
-    var first = true
-    watermarks.toSeq.sorted.foreach { case (p, w) =>
-      if (!first) b.append(','); first = false
-      b.append('"').append(p).append("\":").append(w)
-    }
-    b.append("},\"stream_heads\":{")
-    first = true
+    g.writeObjectFieldStart("watermarks")
+    watermarks.toSeq.sorted.foreach { case (p, w) => g.writeNumberField(p.toString, w) }
+    g.writeEndObject()
+    g.writeObjectFieldStart("stream_heads")
     heads.toSeq.sortBy(_._1).foreach { case (sid, h) =>
-      if (!first) b.append(','); first = false
-      b.append('"'); esc(b, sid); b.append("\":[").append(h.version).append(",\"")
-      esc(b, h.partitionKey); b.append("\",").append(h.partitionId).append(']')
+      g.writeArrayFieldStart(sid)
+      g.writeNumber(h.version)
+      g.writeString(h.partitionKey)
+      g.writeNumber(h.partitionId)
+      g.writeEndArray()
     }
-    b.append('}')
+    g.writeEndObject()
   }
 
-  def render(m: ManifestState): String = {
-    val b = new java.lang.StringBuilder(128 + 64 * m.streamHeads.size)
-    b.append("{\"version\":").append(m.version)
-      .append(",\"num_partitions\":").append(m.numPartitions)
-    renderEntries(b, m.watermarks, m.streamHeads)
-    b.append(",\"stream_batch_ids\":{")
-    var first = true
-    m.streamBatchIds.toSeq.sortBy(_._1).foreach { case (k, v) =>
-      if (!first) b.append(','); first = false
-      b.append('"'); esc(b, k); b.append("\":").append(v)
-    }
-    b.append("},\"heads_base\":").append(m.headsBase)
-      .append(",\"heads_deltas\":").append(m.headsDeltas.mkString("[", ",", "]"))
-      .append('}')
-      .toString
+  def render(m: ManifestState): String = generate(128 + 64 * m.streamHeads.size) { g =>
+    g.writeNumberField("version", m.version)
+    g.writeNumberField("num_partitions", m.numPartitions)
+    writeEntries(g, m.watermarks, m.streamHeads)
+    g.writeObjectFieldStart("stream_batch_ids")
+    m.streamBatchIds.toSeq.sortBy(_._1).foreach { case (k, v) => g.writeNumberField(k, v) }
+    g.writeEndObject()
+    g.writeNumberField("heads_base", m.headsBase)
+    g.writeArrayFieldStart("heads_deltas")
+    m.headsDeltas.foreach(g.writeNumber(_))
+    g.writeEndArray()
   }
 
-  private def renderDelta(d: Delta): String = {
-    val b = new java.lang.StringBuilder(128 + 64 * d.streamHeads.size)
-    b.append("{\"version\":").append(d.version).append(",\"base\":").append(d.base)
-    renderEntries(b, d.watermarks, d.streamHeads)
-    b.append('}').toString
+  private def renderDelta(d: Delta): String = generate(128 + 64 * d.streamHeads.size) { g =>
+    g.writeNumberField("version", d.version)
+    g.writeNumberField("base", d.base)
+    writeEntries(g, d.watermarks, d.streamHeads)
   }
 
-  /** Tiny recursive-descent JSON parser for exactly what `render` emits.
-    * Integral fields parse through Long directly: partition sequences /
-    * watermarks must stay exact past 2^53, where a Double round-trip
-    * would silently round and corrupt watermark clamping.
+  /** Parse a checkpoint. Integral fields are read as exact Longs:
+    * partition sequences / watermarks must stay exact past 2^53, where a
+    * Double round-trip would silently round and corrupt watermark
+    * clamping.
     */
   def parse(s: String): ManifestState = decode(s) match {
     case Right(st) => st
@@ -334,98 +327,36 @@ object Manifest {
 
   /** A checkpoint (Right) or a delta (Left, marked by its `base`). */
   private def decode(s: String): Either[Delta, ManifestState] = {
-    val obj = new JsonP(s).obj()
-    def asLong(v: Any): Long = v match {
-      case l: Long   => l
-      case d: Double => d.toLong
-      case other     => throw new IllegalArgumentException(s"not a number: $other")
+    val obj = mapper.readTree(s)
+    def num(n: JsonNode): Long = {
+      require(n != null && n.isNumber, s"not a number: $n")
+      n.asLong
     }
-    val version = asLong(obj("version"))
-    val wm = obj("watermarks").asInstanceOf[Map[String, Any]]
-      .map { case (k, v) => k.toInt -> asLong(v) }
-    val heads = obj("stream_heads").asInstanceOf[Map[String, Any]]
-      .map { case (k, v) =>
-        val arr = v.asInstanceOf[Vector[Any]]
-        k -> StreamHead(
-          asLong(arr(0)),
-          arr(1).asInstanceOf[String],
-          asLong(arr(2)).toInt)
-      }
-    obj.get("base") match {
-      case Some(base) => Left(Delta(version, asLong(base), wm, heads))
+    def str(n: JsonNode): String = {
+      require(n != null && n.isTextual, s"not a string: $n")
+      n.textValue
+    }
+    def fields(n: JsonNode): Seq[(String, JsonNode)] = {
+      require(n != null && n.isObject, s"not an object: $n")
+      n.properties().asScala.toSeq.map(e => e.getKey -> e.getValue)
+    }
+    val version = num(obj.get("version"))
+    val wm = fields(obj.get("watermarks")).map { case (k, v) => k.toInt -> num(v) }.toMap
+    val heads = fields(obj.get("stream_heads")).map { case (k, v) =>
+      k -> StreamHead(num(v.get(0)), str(v.get(1)), num(v.get(2)).toInt)
+    }.toMap
+    Option(obj.get("base")) match {
+      case Some(base) => Left(Delta(version, num(base), wm, heads))
       case None =>
-        val np = asLong(obj("num_partitions")).toInt
-        val batches = obj.get("stream_batch_ids")
-          .map(_.asInstanceOf[Map[String, Any]]
-            .map { case (k, v) => k -> asLong(v) })
+        val np = num(obj.get("num_partitions")).toInt
+        val batches = Option(obj.get("stream_batch_ids"))
+          .map(fields(_).map { case (k, v) => k -> num(v) }.toMap)
           .getOrElse(Map.empty[String, Long])
-        val headsBase = obj.get("heads_base").map(asLong).getOrElse(0L)
-        val headsDeltas = obj.get("heads_deltas")
-          .map(_.asInstanceOf[Vector[Any]].map(asLong).toSeq)
+        val headsBase = Option(obj.get("heads_base")).map(num).getOrElse(0L)
+        val headsDeltas = Option(obj.get("heads_deltas"))
+          .map(_.elements().asScala.map(num).toSeq)
           .getOrElse(Nil)
         Right(ManifestState(version, np, wm, heads, batches, headsBase, headsDeltas))
-    }
-  }
-
-  private final class JsonP(s: String) {
-    private var i = 0
-    private def ws(): Unit = while (i < s.length && s(i).isWhitespace) i += 1
-    private def expect(c: Char): Unit = { ws(); require(s(i) == c, s"expected $c at $i"); i += 1 }
-    def obj(): Map[String, Any] = {
-      expect('{'); ws()
-      val m = mutable.Map.empty[String, Any]
-      if (s(i) == '}') { i += 1; return m.toMap }
-      while (true) {
-        val k = str(); expect(':'); m(k) = value(); ws()
-        if (s(i) == ',') { i += 1 } else { expect('}'); return m.toMap }
-      }
-      m.toMap
-    }
-    private def arr(): Vector[Any] = {
-      expect('['); ws()
-      val b = Vector.newBuilder[Any]
-      if (s(i) == ']') { i += 1; return b.result() }
-      while (true) {
-        b += value(); ws()
-        if (s(i) == ',') { i += 1 } else { expect(']'); return b.result() }
-      }
-      b.result()
-    }
-    private def str(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (s(i) != '"') {
-        if (s(i) == '\\') {
-          i += 1
-          s(i) match {
-            case 'n' => sb += '\n'; case 'r' => sb += '\r'; case 't' => sb += '\t'
-            case 'u' => sb += Integer.parseInt(s.substring(i + 1, i + 5), 16).toChar; i += 4
-            case c   => sb += c
-          }
-        } else sb += s(i)
-        i += 1
-      }
-      i += 1
-      sb.toString
-    }
-    def value(): Any = {
-      ws()
-      s(i) match {
-        case '{' => obj()
-        case '[' => arr()
-        case '"' => str()
-        case 't' => i += 4; true
-        case 'f' => i += 5; false
-        case 'n' => i += 4; null
-        case _ =>
-          val start = i
-          while (i < s.length && "+-0123456789.eE".indexOf(s(i)) >= 0) i += 1
-          val tok = s.substring(start, i)
-          // integral → exact Long (sequences can exceed 2^53); only
-          // fractional/exponent forms fall back to Double
-          if (tok.exists(c => c == '.' || c == 'e' || c == 'E')) tok.toDouble
-          else tok.toLong
-      }
     }
   }
 }

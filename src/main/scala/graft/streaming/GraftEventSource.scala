@@ -2,19 +2,12 @@ package graft.streaming
 
 import java.util.{Map => JMap, Set => JSet}
 
+import graft.api.EventStore
 import graft.core.EventSchema
 import graft.storage.{HeadProbe, Manifest}
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.example.data.Group
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -84,17 +77,29 @@ object SeqVectorOffset {
   *     driver-side mutable cursor to re-initialize on restart (the
   *     fragile part of the v1 `Source` contract this replaces).
   *
-  * Scale: `planInputPartitions` emits one task per pid under the
-  * subscribed partition directories only — directory pruning comes
-  * from the subscription matcher's pid set (`pids` option), not from
-  * optimizer goodwill. Files wholly outside the batch's (start, end]
-  * range are dropped at planning from their cached footer statistics
-  * (a partition fed by single-event appends holds thousands of small
-  * files, and a task per file cost ~10 ms each on a 4-core VM), and
-  * every reader pushes the same bounds into parquet row-group
-  * statistics, so catch-up over a long-compacted log skips cold files
-  * on footer stats alone. Readers run on executors, distributed like
-  * any batch scan; nothing funnels through the driver.
+  * Planning reads the store from disk, not from a live handle's
+  * snapshot: a subscription must see commits made through any handle
+  * on the root (another process, a reopened store), and a handle's
+  * snapshot only knows its own. Each trigger costs one manifest load
+  * (`latestOffset`) and one listing per subscribed partition with new
+  * events (`planInputPartitions`). The offsets plan a batch and a scan
+  * reads it, the split of Structured Streaming's sources:
+  *
+  *   - `planInputPartitions` emits one task per pid under the
+  *     subscribed partition directories only — directory pruning comes
+  *     from the subscription matcher's pid set (`pids` option), not
+  *     from optimizer goodwill. Files wholly outside the batch's
+  *     (start, end] range are dropped from their footer statistics (a
+  *     partition fed by single-event appends holds thousands of small
+  *     files, and a task per file cost ~10 ms each on a 4-core VM). The
+  *     source keeps the file objects of the files it last listed, so a
+  *     file's footer is read once, not once per trigger; a file that
+  *     leaves the listing (compaction, orphan recovery) is dropped.
+  *   - each task reads its files through [[HeadProbe.scan]] with the
+  *     bounds `partition_sequence` in [start + 1, end], pruned by
+  *     row-group statistics, and decodes records with the event store's
+  *     decoder. Readers run on executors, distributed like any batch
+  *     scan; nothing funnels through the driver.
   */
 final class GraftEventMicroBatchStream(
     root: String,
@@ -105,6 +110,8 @@ final class GraftEventMicroBatchStream(
   // rotates the budget-allocation start partition so a hot low
   // partition cannot starve higher ones across triggers
   private var allocRotation: Int = 0
+  // per partition, the files of its last listing by path
+  private var listed = Map.empty[Int, Map[String, HeadProbe.File]]
 
   private def watermarks(): Map[Int, Long] = {
     val wm = Manifest.load(root)
@@ -164,20 +171,25 @@ final class GraftEventMicroBatchStream(
 
   override def reportLatestOffset(): V2Offset = SeqVectorOffset(watermarks())
 
-  override def planInputPartitions(start: V2Offset, end: V2Offset): Array[InputPartition] = {
+  override def planInputPartitions(
+      start: V2Offset, end: V2Offset): Array[InputPartition] = synchronized {
     val s = SeqVectorOffset.of(start).seqs
     val e = SeqVectorOffset.of(end).seqs
-    val conf = new Configuration()
     e.toSeq.sortBy(_._1).flatMap { case (pid, hi) =>
       val lo = s.getOrElse(pid, -1L)
-      // footer statistics (cached by the shared probe) drop every file
-      // wholly outside (lo, hi] before any task opens it
       val files =
         if (hi <= lo) Nil
-        else HeadProbe.listFiles(s"$root/events/partition_id=$pid", conf)
-          .filter(f => HeadProbe.longRange(f, "partition_sequence", conf)
+        else {
+          val known = listed.getOrElse(pid, Map.empty)
+          val now = HeadProbe.listFiles(s"$root/events/partition_id=$pid")
+            .map(f => known.getOrElse(f.path, f))
+          listed = listed.updated(pid, now.map(f => f.path -> f).toMap)
+          // footer statistics drop every file wholly outside (lo, hi]
+          // before any task opens it
+          now.filter(_.longRange("partition_sequence")
             .forall { case (min, max) => max > lo && min <= hi })
-      Option.when(files.nonEmpty)(GraftFilePartition(pid, lo, hi, files.map(_.toString)))
+        }
+      Option.when(files.nonEmpty)(GraftFilePartition(pid, lo, hi, files))
     }.toArray
   }
 
@@ -194,7 +206,7 @@ final class GraftEventMicroBatchStream(
   * (lo, hi] sequence range — one task per partition, so a partition of
   * many small append files costs one task, not one per file.
   */
-final case class GraftFilePartition(pid: Int, lo: Long, hi: Long, files: Seq[String])
+final case class GraftFilePartition(pid: Int, lo: Long, hi: Long, files: Seq[HeadProbe.File])
   extends InputPartition
 
 final class GraftReaderFactory extends PartitionReaderFactory {
@@ -202,74 +214,41 @@ final class GraftReaderFactory extends PartitionReaderFactory {
     new GraftPartitionReader(partition.asInstanceOf[GraftFilePartition])
 }
 
-/** Reads a partition's event-log parquet files, one after another,
-  * through parquet-hadoop's Group API with the (lo, hi] sequence bounds
-  * compiled into a parquet filter predicate — row-group statistics
-  * pruning happens inside the reader. The directory-derived
-  * `partition_id` is re-attached here (Hive-style layout keeps it out
-  * of the files).
+/** Reads a partition's (lo, hi] sequence range from its files, one file
+  * at a time, through [[HeadProbe.scan]]; the directory-derived
+  * `partition_id` is attached by the event store's record decoder
+  * (Hive-style layout keeps it out of the files). A file's share of the
+  * range is decoded before its first row is handed on, so a task holds
+  * at most that many rows; `maxEventsPerTrigger` bounds the range.
   */
 final class GraftPartitionReader(p: GraftFilePartition)
   extends PartitionReader[InternalRow] {
 
-  private val filter = {
-    val seqCol = FilterApi.longColumn("partition_sequence")
-    FilterCompat.get(FilterApi.and(
-      FilterApi.gt(seqCol, java.lang.Long.valueOf(p.lo)),
-      FilterApi.ltEq(seqCol, java.lang.Long.valueOf(p.hi))))
-  }
+  private val range = Seq(HeadProbe.Between("partition_sequence", p.lo + 1, p.hi))
   private val pending = p.files.iterator
-  private var reader: ParquetReader[Group] = _
-  private val conf = new Configuration()
-
-  // built from an InputFile: the Path-based builder lists the path and
-  // reads its footer on a fresh thread pool, ~13 ms per file on a
-  // 4-core VM against ~0.2 ms this way
-  private def open(file: String): ParquetReader[Group] =
-    new ParquetReader.Builder[Group](HadoopInputFile.fromPath(new HPath(file), conf)) {
-      override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
-    }.withConf(conf)
-      .withFilter(filter)
-      .build()
-
+  private var rows: Iterator[Row] = Iterator.empty
+  private var current: Row = _
   private val toUnsafe = UnsafeProjection.create(EventSchema.schema)
-  private var current: Group = _
 
   override def next(): Boolean = {
-    current = if (reader == null) null else reader.read()
-    while (current == null && pending.hasNext) {
-      if (reader != null) reader.close()
-      reader = open(pending.next())
-      current = reader.read()
+    while (!rows.hasNext && pending.hasNext) {
+      val out = Vector.newBuilder[Row]
+      HeadProbe.scan(Seq(pending.next()), range) { g =>
+        out += EventStore.eventRow(p.pid, g)
+        true
+      }
+      rows = out.result().iterator
     }
-    current != null
+    rows.hasNext && { current = rows.next(); true }
   }
 
-  override def get(): InternalRow = {
-    val g = current
-    def str(name: String): UTF8String =
-      UTF8String.fromBytes(g.getBinary(name, 0).getBytes)
-    def binOrNull(name: String): Array[Byte] =
-      if (g.getFieldRepetitionCount(name) == 0) null
-      else g.getBinary(name, 0).getBytes
-    // EventSchema order: event_id, transaction_id, partition_key,
-    // partition_id, partition_sequence, stream_version, stream_id,
-    // event_name, timestamp_ns, metadata, payload
-    toUnsafe(new GenericInternalRow(Array[Any](
-      str("event_id"),
-      str("transaction_id"),
-      str("partition_key"),
-      p.pid,
-      g.getLong("partition_sequence", 0),
-      g.getLong("stream_version", 0),
-      str("stream_id"),
-      str("event_name"),
-      g.getLong("timestamp_ns", 0),
-      binOrNull("metadata"),
-      binOrNull("payload"))))
-  }
+  override def get(): InternalRow =
+    toUnsafe(InternalRow.fromSeq(current.toSeq.map {
+      case s: String => UTF8String.fromString(s)
+      case v => v
+    }))
 
-  override def close(): Unit = if (reader != null) reader.close()
+  override def close(): Unit = ()
 }
 
 /** `spark.readStream.format(classOf[GraftEventSourceProvider].getName)

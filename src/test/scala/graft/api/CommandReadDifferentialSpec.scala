@@ -6,10 +6,10 @@ import java.util.UUID
 import scala.jdk.CollectionConverters._
 
 import graft.core._
-import graft.streaming.GraftEventMicroBatchStream
+import graft.streaming.{GraftEventMicroBatchStream, SeqVectorOffset}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
-import org.apache.spark.sql.connector.read.streaming.ReadLimit
+import org.apache.spark.sql.connector.read.streaming.{Offset => V2Offset, ReadLimit}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -23,8 +23,9 @@ import org.scalatest.BeforeAndAfterAll
   * appendMany, compaction — must answer every command exactly as the
   * Spark plans over `events()` do, including past an uncommitted
   * orphan file and across partition keys sharing one stream name. The
-  * driver-written files must also read back field for field through
-  * Spark and through the streaming source.
+  * streaming source must read exactly a batch's (start, end] range of
+  * each partition from the same stores, and the driver-written files
+  * must read back field for field through Spark and the source.
   */
 class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
     with graft.PropHelpers {
@@ -114,6 +115,29 @@ class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
   })
   private def norm(rs: Seq[Row]): Seq[Seq[Any]] = rs.map(norm)
 
+  /** Every row the event source's readers deliver for (start, end]. */
+  private def readSource(stream: GraftEventMicroBatchStream,
+      start: V2Offset, end: V2Offset): Seq[Row] = {
+    val rf = stream.createReaderFactory()
+    stream.planInputPartitions(start, end).toSeq.flatMap { ip =>
+      val r = rf.createReader(ip)
+      val out = Seq.newBuilder[Row]
+      try while (r.next()) {
+        val ir = r.get()
+        out += new GenericRowWithSchema(EventSchema.schema.fields.indices.map { i =>
+          if (ir.isNullAt(i)) null else ir.get(i, EventSchema.schema(i).dataType) match {
+            case s: org.apache.spark.unsafe.types.UTF8String => s.toString
+            case v => v
+          }
+        }.toArray, EventSchema.schema)
+      } finally r.close()
+      out.result()
+    }
+  }
+
+  private def bySequence(rs: Seq[Row]): Seq[Row] =
+    rs.sortBy(r => (r.getAs[Int]("partition_id"), r.getAs[Long]("partition_sequence")))
+
   // ---- the reference answers: Spark plans over the watermark-clamped log
 
   private def refGet(ev: DataFrame, np: Int, id: UUID): Seq[Row] =
@@ -199,6 +223,35 @@ class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
     }
   }
 
+  test("the event source reads exactly each partition's (start, end] on random stores") {
+    forAllSampled(genStore, runs = 5) { case (np, ops, seed) =>
+      val (es, dir) = build(np, ops)
+      val rnd = new scala.util.Random(seed)
+      val all = es.events().collect().toSeq
+      val wm = es.manifest.watermarks.filter(_._2 >= 0)
+      // one stream per store: its file objects are kept across batches
+      val stream = new GraftEventMicroBatchStream(dir, None, None)
+      (0 until 6).foreach { _ =>
+        // per partition, -1 <= start <= end <= watermark; a start of -1
+        // (absent from the offset) reads from the first event
+        val range = wm.map { case (pid, w) =>
+          val a = rnd.nextLong(w + 2) - 1
+          val b = rnd.nextLong(w + 2) - 1
+          pid -> (math.min(a, b), math.max(a, b))
+        }
+        val start = SeqVectorOffset(range.collect { case (p, (lo, _)) if lo >= 0 => p -> lo })
+        val end = SeqVectorOffset(range.collect { case (p, (_, hi)) if hi >= 0 => p -> hi })
+        val want = all.filter { r =>
+          val (lo, hi) = range(r.getAs[Int]("partition_id"))
+          val seq = r.getAs[Long]("partition_sequence")
+          lo < seq && seq <= hi
+        }
+        assert(norm(bySequence(readSource(stream, start, end))) == norm(bySequence(want)),
+          s"batch ${start.json} -> ${end.json}")
+      }
+    }
+  }
+
   test("scans that stop early: one-event files, small COUNTs, tied EMAPPEND minimums") {
     forAllSampled(Gen.zip(Gen.oneOf(1, 2), Gen.chooseNum(0L, Long.MaxValue)), runs = 2) {
       case (np, seed) =>
@@ -277,8 +330,7 @@ class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(es.mappend(Ids.partitionKeyForStream("rt-0"),
       (6 until 9).map(i => input("rt-0", i))).isRight)
     assert(es.appendMany((9 until 13).map(i => input(s"rt-m$i", i))).forall(_.isRight))
-    val expected = es.events().collect().toSeq.sortBy(r =>
-      (r.getAs[Int]("partition_id"), r.getAs[Long]("partition_sequence")))
+    val expected = bySequence(es.events().collect().toSeq)
     assert(expected.size == 13)
     // empty and null metadata both survive the round trip
     val metadata = expected.map(r => Option(r.getAs[Array[Byte]]("metadata")).map(_.length))
@@ -310,25 +362,10 @@ class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
       .sortBy(r => (r.getAs[Int]("partition_id"), r.getAs[Long]("partition_sequence")))
     assert(norm(viaSpark) == norm(expected))
 
-    // the streaming source's parquet-hadoop reader
+    // the streaming source's reader
     val stream = new GraftEventMicroBatchStream(dir, None, None)
     val end = stream.latestOffset(stream.initialOffset(), ReadLimit.allAvailable())
-    val rf = stream.createReaderFactory()
-    val viaSource = stream.planInputPartitions(stream.initialOffset(), end).toSeq.flatMap { ip =>
-      val r = rf.createReader(ip)
-      val out = Seq.newBuilder[Row]
-      try while (r.next()) {
-        val ir = r.get()
-        out += new GenericRowWithSchema(EventSchema.schema.fields.indices.map { i =>
-          if (ir.isNullAt(i)) null else ir.get(i, EventSchema.schema(i).dataType) match {
-            case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-            case v => v
-          }
-        }.toArray, EventSchema.schema)
-      } finally r.close()
-      out.result()
-    }.sortBy(r => (r.getInt(3), r.getLong(4)))
-    assert(norm(viaSource) == norm(expected))
+    assert(norm(bySequence(readSource(stream, stream.initialOffset(), end))) == norm(expected))
 
     // every append file is a few KB: the bloom filter is sized to its rows
     val files = Files.walk(Paths.get(dir, "events")).iterator().asScala

@@ -3,6 +3,7 @@ package graft.api
 import java.nio.file.Files
 
 import graft.core._
+import graft.storage.HeadProbe
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -79,16 +80,17 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
       .sortWithinPartitions("stream_id")
       .write.option("parquet.bloom.filter.enabled#stream_id", "true")
       .parquet(dir)
-    val conf = spark.sessionState.newHadoopConf()
-    assert(graft.storage.HeadProbe.probe(dir, "s-0042", "pk-42", conf)
-      == Some((42 % 7, 42L)))
-    assert(graft.storage.HeadProbe.probe(dir, "s-0999", "pk-999", conf)
-      == Some((999 % 7, 999L)))
+    def probe(layer: String, sid: String, pk: String) =
+      HeadProbe.probeStream(HeadProbe.listFiles(layer), sid).collect {
+        case (`pk`, pid, ver) => (pid, ver)
+      }
+    assert(probe(dir, "s-0042", "pk-42") == Seq((42 % 7, 42L)))
+    assert(probe(dir, "s-0999", "pk-999") == Seq((999 % 7, 999L)))
     // absent stream, and present stream with the WRONG partition key
-    assert(graft.storage.HeadProbe.probe(dir, "s-9999", "pk-x", conf).isEmpty)
-    assert(graft.storage.HeadProbe.probe(dir, "s-0042", "pk-43", conf).isEmpty)
+    assert(probe(dir, "s-9999", "pk-x").isEmpty)
+    assert(probe(dir, "s-0042", "pk-43").isEmpty)
     // nonexistent layer dir is a miss, not a crash
-    assert(graft.storage.HeadProbe.probe(dir + "-nope", "s", "p", conf).isEmpty)
+    assert(probe(dir + "-nope", "s", "p").isEmpty)
   }
 
   test("HeadProbe.probeStream returns every partition key's entry for a stream") {
@@ -101,12 +103,12 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
       .sortWithinPartitions("stream_id", "partition_key")
       .write.option("parquet.bloom.filter.enabled#stream_id", "true")
       .parquet(dir)
-    val conf = spark.sessionState.newHadoopConf()
-    assert(graft.storage.HeadProbe.probeStream(dir, "t-dup", conf).toSet ==
+    val files = HeadProbe.listFiles(dir)
+    assert(HeadProbe.probeStream(files, "t-dup").toSet ==
       Set(("pk-a", 1, 5L), ("pk-b", 2, 7L)))
-    assert(graft.storage.HeadProbe.probeStream(dir, "t-0123", conf) ==
+    assert(HeadProbe.probeStream(files, "t-0123") ==
       Seq(("pk-123", 123 % 5, 123L)))
-    assert(graft.storage.HeadProbe.probeStream(dir, "t-none", conf).isEmpty)
+    assert(HeadProbe.probeStream(files, "t-none").isEmpty)
   }
 
   test("state persists across reopen; orphan layers are cleaned") {

@@ -7,10 +7,10 @@ import org.scalatest.BeforeAndAfterAll
 import graft.api.EventStore
 import graft.core.EventInput
 
-/** The probe's process-wide metadata caches must never outlive the
-  * layer files they describe: folds invalidate per store, and a store
-  * path deleted and recreated within one JVM (exactly what this spec
-  * does) must be served FRESH footers/listings, not the first store's.
+/** A parquet file's footer and bloom filters live with its file object,
+  * which a store's snapshot holds: a store path deleted and recreated
+  * within one JVM (exactly what this spec does) must be served the new
+  * store's files, never metadata read from the first store's.
   */
 class HeadProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -41,31 +41,8 @@ class HeadProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
       es2.append(EventInput(s"hp-$i", "E"))
       es2.append(EventInput(s"hp-$i", "E"))
     }
-    // stale cached footers/listings from store 1's layer files would
-    // either throw (files gone) or answer 0
+    // metadata read from store 1's layer files would either throw
+    // (files gone) or answer 0
     (0 until 8).foreach(i => assert(es2.sver(s"hp-$i").contains(1L), s"hp-$i"))
-  }
-
-  test("invalidate stops at path boundaries (no sibling-store bleed)") {
-    val root = "/hp-bound/store/_heads"
-    // cache keys as the probe actually stores them: bare paths AND
-    // scheme-qualified paths from listStatus
-    HeadProbe.dirListings.put(s"$root", Nil)
-    HeadProbe.dirListings.put(s"$root/delta-v1", Nil)
-    HeadProbe.dirListings.put(s"file:$root/base-v2", Nil)
-    // siblings whose names merely EXTEND the root must survive
-    HeadProbe.dirListings.put(s"$root-backup/delta-v1", Nil)
-    HeadProbe.dirListings.put(s"${root}ish", Nil)
-    try {
-      HeadProbe.invalidate(root)
-      assert(!HeadProbe.dirListings.containsKey(s"$root"))
-      assert(!HeadProbe.dirListings.containsKey(s"$root/delta-v1"))
-      assert(!HeadProbe.dirListings.containsKey(s"file:$root/base-v2"))
-      assert(HeadProbe.dirListings.containsKey(s"$root-backup/delta-v1"))
-      assert(HeadProbe.dirListings.containsKey(s"${root}ish"))
-    } finally {
-      HeadProbe.dirListings.remove(s"$root-backup/delta-v1")
-      HeadProbe.dirListings.remove(s"${root}ish")
-    }
   }
 }
