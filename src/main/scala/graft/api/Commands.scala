@@ -123,19 +123,7 @@ final class Commands(es: EventStore) {
               case k :: Nil => return Left(s"ERR missing value for ${k.text}")
             }
           }
-          val input = for {
-            ev <- opts.get("EXPECTED_VERSION")
-              .map(a => ExpectedVersion.parse(a.text).left.map("ERR " + _))
-              .getOrElse(Right(ExpectedVersion.Any))
-            eid <- parseUuidOpt(opts.get("EVENT_ID").map(_.text))
-            ts <- opts.get("TIMESTAMP")
-              .map(a => a.text.toLongOption.toRight(s"ERR invalid timestamp: ${a.text}").map(Some(_)))
-              .getOrElse(Right(None))
-          } yield EventInput(sid.text, name.text,
-            opts.get("PAYLOAD").map(_.bytes).getOrElse(Array.emptyByteArray),
-            opts.get("METADATA").map(_.bytes).getOrElse(Array.emptyByteArray),
-            ev, eid, ts)
-          input match {
+          eventInput(sid.text, name.text, opts) match {
             case Left(e)  => return Left(e)
             case Right(i) => out += i
           }
@@ -253,20 +241,9 @@ final class Commands(es: EventStore) {
       opts: Seq[Arg]): Either[String, Map[String, Any]] =
     for {
       o <- parseOpts(opts)
-      ev <- o.get("EXPECTED_VERSION")
-        .map(a => ExpectedVersion.parse(a.text).left.map("ERR " + _))
-        .getOrElse(Right(ExpectedVersion.Any))
-      eid <- parseUuidOpt(o.get("EVENT_ID").map(_.text))
+      in <- eventInput(streamId, eventName, o)
       pk <- parseUuidOpt(o.get("PARTITION_KEY").map(_.text))
-      ts <- o.get("TIMESTAMP")
-        .map(a => a.text.toLongOption.toRight(s"ERR invalid timestamp: ${a.text}").map(Some(_)))
-        .getOrElse(Right(None))
-      r <- es.append(
-        EventInput(streamId, eventName,
-          o.get("PAYLOAD").map(_.bytes).getOrElse(Array.emptyByteArray),
-          o.get("METADATA").map(_.bytes).getOrElse(Array.emptyByteArray),
-          ev, eid, ts),
-        pk)
+      r <- es.append(in, pk)
     } yield Map(
       "event_id" -> r.eventId,
       "partition_key" -> r.partitionKey,
@@ -275,15 +252,32 @@ final class Commands(es: EventStore) {
       "stream_version" -> r.streamVersion,
       "timestamp" -> r.timestampMs)
 
+  /** The event an EAPPEND/EMAPPEND option map describes: EXPECTED_VERSION
+    * (default any), EVENT_ID, TIMESTAMP, and the raw PAYLOAD and
+    * METADATA bytes (default empty).
+    */
+  private def eventInput(streamId: String, eventName: String,
+      o: Map[String, Arg]): Either[String, EventInput] =
+    for {
+      ev <- o.get("EXPECTED_VERSION")
+        .map(a => ExpectedVersion.parse(a.text).left.map("ERR " + _))
+        .getOrElse(Right(ExpectedVersion.Any))
+      eid <- parseUuidOpt(o.get("EVENT_ID").map(_.text))
+      ts <- o.get("TIMESTAMP")
+        .map(a => a.text.toLongOption.toRight(s"ERR invalid timestamp: ${a.text}").map(Some(_)))
+        .getOrElse(Right(None))
+    } yield EventInput(streamId, eventName,
+      o.get("PAYLOAD").map(_.bytes).getOrElse(Array.emptyByteArray),
+      o.get("METADATA").map(_.bytes).getOrElse(Array.emptyByteArray),
+      ev, eid, ts)
+
   /** EMAPPEND convenience: (stream_id, event_name, expected_version). */
   def emappend(partitionKey: String,
       events: Seq[(String, String, Option[String])]): Either[String, Map[String, Any]] =
     events.foldLeft(
       Right(Vector.empty[EventInput]): Either[String, Vector[EventInput]]) {
       case (acc, (sid, name, evOpt)) => acc.flatMap { v =>
-        evOpt.map(ExpectedVersion.parse(_).left.map("ERR " + _))
-          .getOrElse(Right(ExpectedVersion.Any))
-          .map(ev => v :+ EventInput(sid, name, expectedVersion = ev))
+        eventInput(sid, name, evOpt.map("EXPECTED_VERSION" -> Arg.text(_)).toMap).map(v :+ _)
       }
     }.flatMap(emappendInputs(partitionKey, _))
 

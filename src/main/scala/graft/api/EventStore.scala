@@ -2,8 +2,6 @@ package graft.api
 
 import java.util.UUID
 
-import scala.jdk.CollectionConverters._
-
 import graft.core._
 import graft.storage.{HeadProbe, Manifest, ManifestState, StreamHead}
 import org.apache.parquet.example.data.Group
@@ -101,151 +99,113 @@ final class EventStore private (
   def mappend(partitionKey: UUID, inputs: Seq[EventInput]): Either[String, MultiAppendResult] = {
     if (inputs.isEmpty) return Left("ERR no events")
     val t0 = System.nanoTime()
-    for (in <- inputs) {
-      StreamId.validate(in.streamId) match {
-        case Left(e) => return Left(s"ERR $e")
-        case _       =>
-      }
-      if (strictVersioning && !in.expectedVersion.isStrictAllowed)
-        return Left("ERR strict versioning requires empty or exact expected version")
-    }
     val pHash = Ids.partitionHash(partitionKey)
-    val pid = Ids.partitionIdFor(pHash, numPartitions)
-    for (in <- inputs; eid <- in.eventId)
-      if (!Ids.validateEventId(eid, pHash))
-        return Left("ERR event id does not carry the transaction's partition hash")
-
+    for (in <- inputs)
+      check(in, pHash, "transaction's").left.foreach(e => return Left(e))
     lock.synchronized {
-      // validate all expected versions against stored + intra-batch
-      // state; version counters are scoped per (partition_key, stream)
-      // like the reference's per-partition stream indexes
-      val batchHeads = collection.mutable.Map.empty[String, Long]
-      for (in <- inputs) {
-        val current = batchHeads.get(in.streamId)
-          .map(CurrentVersion.Current(_): CurrentVersion)
-          .getOrElse(currentVersionOf(in.streamId, partitionKey))
-        in.expectedVersion.gapFrom(current) match {
-          case VersionGap.None => batchHeads(in.streamId) = current.next
-          case gap => return Left(s"ERR version conflict on '${in.streamId}': $gap")
-        }
-      }
-
+      val batch = new Batch
       val txId = Ids.withSingleEventFlag(
         UUID.randomUUID(), flag = inputs.lengthCompare(1) == 0)
-      val startSeq = state.watermark(pid) + 1
-      val nowMs = System.currentTimeMillis()
-
-      val versionCursor = collection.mutable.Map.empty[String, Long]
-      val rows = inputs.zipWithIndex.map { case (in, i) =>
-        val tsMs = in.timestampMs.getOrElse(nowMs)
-        val version = versionCursor.get(in.streamId)
-          .map(_ + 1)
-          .getOrElse(currentVersionOf(in.streamId, partitionKey).next)
-        versionCursor(in.streamId) = version
-        Event(
-          event_id = in.eventId.getOrElse(Ids.newEventId(pHash)).toString,
-          transaction_id = txId.toString,
-          partition_key = partitionKey.toString,
-          partition_id = pid,
-          partition_sequence = startSeq + i,
-          stream_version = version,
-          stream_id = in.streamId,
-          event_name = in.eventName,
-          timestamp_ns = math.multiplyExact(tsMs, 1000000L),
-          metadata = in.metadata,
-          payload = in.payload)
-      }
-
-      val t1 = System.nanoTime()
-      val written = writeRows(rows)
-      val t2 = System.nanoTime()
-      val newHeads = rows.groupBy(_.stream_id).map { case (sid, evs) =>
-        EventStore.headKey(partitionKey.toString, sid) ->
-          StreamHead(evs.map(_.stream_version).max, partitionKey.toString, pid)
-      }
-      commitAppend(
-        Map(pid -> (startSeq + rows.size - 1)), newHeads.toMap, written)
-      appendLayers.record(t1 - t0, t2 - t1, System.nanoTime() - t2)
-
-      Right(MultiAppendResult(
-        partitionKey.toString, pid, startSeq, startSeq + rows.size - 1,
-        rows.map(r => AppendResult(
-          r.event_id, r.partition_key, r.partition_id,
-          r.partition_sequence, r.stream_version, r.timestamp_ns / 1000000L))))
+      val results = inputs.map(in => batch.stage(in, partitionKey, txId) match {
+        case Left(e)  => return Left(e)
+        case Right(r) => r
+      })
+      batch.commit(t0)
+      Right(MultiAppendResult(partitionKey.toString, results.head.partitionId,
+        results.head.partitionSequence, results.last.partitionSequence, results))
     }
   }
 
   /** Group-commit append (the reference syncs batched writes on
     * bytes/events/interval thresholds — `writer_thread_pool.rs:684-696`;
-    * here the caller batches). Each input routes by its own stream id;
-    * validation failures are reported per event while accepted events
-    * commit atomically in ONE parquet write + ONE manifest commit.
-    * Versions validate against stored state plus earlier accepted
-    * events in the batch, like EMAPPEND's intra-batch rule.
+    * here the caller batches). Each input routes by its own stream id
+    * and is its own single-event transaction; validation failures are
+    * reported per event while accepted events commit atomically in ONE
+    * parquet write + ONE manifest commit. Versions validate against
+    * stored state plus earlier accepted events in the batch, like
+    * EMAPPEND's intra-batch rule.
     */
   def appendMany(inputs: Seq[EventInput]): Seq[Either[String, AppendResult]] = {
     val t0 = System.nanoTime()
     lock.synchronized {
-      val nowMs = System.currentTimeMillis()
-      val seqCursor = collection.mutable.Map.empty[Int, Long]
-      val verCursor = collection.mutable.Map.empty[String, Long]
-      val rows = collection.mutable.ArrayBuffer.empty[Event]
+      val batch = new Batch
       val results = inputs.map { in =>
-        StreamId.validate(in.streamId) match {
-          case Left(e) => Left(s"ERR $e")
-          case Right(_) if strictVersioning && !in.expectedVersion.isStrictAllowed =>
-            Left("ERR strict versioning requires empty or exact expected version")
-          case Right(_) =>
-            val pk = Ids.partitionKeyForStream(in.streamId)
-            val pHash = Ids.partitionHash(pk)
-            val pid = Ids.partitionIdFor(pHash, numPartitions)
-            if (in.eventId.exists(id => !Ids.validateEventId(id, pHash)))
-              Left("ERR event id does not carry the stream's partition hash")
-            else {
-              val current = verCursor.get(in.streamId)
-                .map(CurrentVersion.Current(_): CurrentVersion)
-                .getOrElse(currentVersionOf(in.streamId, pk))
-              in.expectedVersion.gapFrom(current) match {
-                case VersionGap.None =>
-                  val seq = seqCursor.getOrElse(pid, state.watermark(pid)) + 1
-                  seqCursor(pid) = seq
-                  val version = current.next
-                  verCursor(in.streamId) = version
-                  val tsMs = in.timestampMs.getOrElse(nowMs)
-                  val ev = Event(
-                    event_id = in.eventId.getOrElse(Ids.newEventId(pHash)).toString,
-                    transaction_id = Ids.withSingleEventFlag(
-                      UUID.randomUUID(), flag = true).toString,
-                    partition_key = pk.toString,
-                    partition_id = pid,
-                    partition_sequence = seq,
-                    stream_version = version,
-                    stream_id = in.streamId,
-                    event_name = in.eventName,
-                    timestamp_ns = math.multiplyExact(tsMs, 1000000L),
-                    metadata = in.metadata,
-                    payload = in.payload)
-                  rows += ev
-                  Right(AppendResult(ev.event_id, ev.partition_key, pid,
-                    seq, version, tsMs))
-                case gap => Left(s"ERR version conflict on '${in.streamId}': $gap")
-              }
-            }
-        }
+        val pk = Ids.partitionKeyForStream(in.streamId)
+        check(in, Ids.partitionHash(pk), "stream's").flatMap(_ =>
+          batch.stage(in, pk, Ids.withSingleEventFlag(UUID.randomUUID(), flag = true)))
       }
-      if (rows.nonEmpty) {
-        val t1 = System.nanoTime()
-        val written = writeRows(rows.toSeq)
-        val t2 = System.nanoTime()
-        val newHeads = rows.groupBy(_.stream_id).map { case (sid, evs) =>
-          EventStore.headKey(evs.head.partition_key, sid) ->
-            StreamHead(evs.map(_.stream_version).max,
-              evs.head.partition_key, evs.head.partition_id)
-        }
-        commitAppend(seqCursor.toMap, newHeads.toMap, written)
-        appendLayers.record(t1 - t0, t2 - t1, System.nanoTime() - t2)
-      }
+      batch.commit(t0)
       results
+    }
+  }
+
+  /** The checks an event passes before it is staged, whatever the
+    * store holds: a valid stream id, an expected version strict mode
+    * allows, and an event id carrying the partition hash of its key
+    * (`whose` names that key in the error).
+    */
+  private def check(in: EventInput, pHash: Int, whose: String): Either[String, Unit] =
+    StreamId.validate(in.streamId).left.map("ERR " + _).flatMap { _ =>
+      if (strictVersioning && !in.expectedVersion.isStrictAllowed)
+        Left("ERR strict versioning requires empty or exact expected version")
+      else if (in.eventId.exists(id => !Ids.validateEventId(id, pHash)))
+        Left(s"ERR event id does not carry the $whose partition hash")
+      else Right(())
+    }
+
+  /** One append being staged under the write lock: its rows, and the
+    * sequence of its last row per partition and its head per
+    * (partition key, stream). Each staged event validates and numbers
+    * against the committed state plus the events staged before it.
+    */
+  private final class Batch {
+    private val nowMs = System.currentTimeMillis()
+    private val seqs = collection.mutable.Map.empty[Int, Long]
+    private val heads = collection.mutable.Map.empty[String, StreamHead]
+    private val rows = collection.mutable.ArrayBuffer.empty[Event]
+
+    /** Stage `in` under partition key `pk` in transaction `txId`, or
+      * report its version conflict and stage nothing.
+      */
+    def stage(in: EventInput, pk: UUID, txId: => UUID): Either[String, AppendResult] = {
+      val key = EventStore.headKey(pk.toString, in.streamId)
+      val current = CurrentVersion.fromOption(
+        heads.get(key).orElse(lookupHead(pk.toString, in.streamId)).map(_.version))
+      in.expectedVersion.gapFrom(current) match {
+        case VersionGap.None =>
+          val pHash = Ids.partitionHash(pk)
+          val pid = Ids.partitionIdFor(pHash, numPartitions)
+          val seq = seqs.getOrElse(pid, state.watermark(pid)) + 1
+          val tsMs = in.timestampMs.getOrElse(nowMs)
+          val ev = Event(
+            event_id = in.eventId.getOrElse(Ids.newEventId(pHash)).toString,
+            transaction_id = txId.toString,
+            partition_key = pk.toString,
+            partition_id = pid,
+            partition_sequence = seq,
+            stream_version = current.next,
+            stream_id = in.streamId,
+            event_name = in.eventName,
+            timestamp_ns = math.multiplyExact(tsMs, 1000000L),
+            metadata = in.metadata,
+            payload = in.payload)
+          seqs(pid) = seq
+          heads(key) = StreamHead(ev.stream_version, ev.partition_key, pid)
+          rows += ev
+          Right(AppendResult(ev.event_id, ev.partition_key, pid, seq, ev.stream_version, tsMs))
+        case gap => Left(s"ERR version conflict on '${in.streamId}': $gap")
+      }
+    }
+
+    /** Write the staged rows and commit them with their watermarks and
+      * heads; `t0` is when the append began, for the layer timers.
+      */
+    def commit(t0: Long): Unit = if (rows.nonEmpty) {
+      val t1 = System.nanoTime()
+      val written = writeRows(rows.toSeq)
+      val t2 = System.nanoTime()
+      commitAppend(seqs.toMap, heads.toMap, written)
+      appendLayers.record(t1 - t0, t2 - t1, System.nanoTime() - t2)
     }
   }
 
@@ -270,7 +230,7 @@ final class EventStore private (
     if (state.watermarks.isEmpty) return
     // one file per partition: size its bloom filters to the largest
     // partition's rows, or parquet allocates its 1 MB maximum per column
-    val ndv = (state.watermarks.values.max + 1).max(1L).toString
+    val ndv = (state.watermarks.values.max + 1).max(1L)
     val compacted = spark.read
       .schema(EventSchema.schema)
       .option("basePath", eventsDir)
@@ -278,27 +238,37 @@ final class EventStore private (
       .repartition(col("partition_id"))
       .sortWithinPartitions(col("partition_sequence"))
     val tmp = s"$root/${EventStore.CompactTmp}"
-    compacted.write
-      .mode("overwrite")
-      .partitionBy("partition_id")
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#event_id", "true")
-      .option("parquet.bloom.filter.enabled#stream_id", "true")
-      .option("parquet.bloom.filter.expected.ndv#event_id", ndv)
-      .option("parquet.bloom.filter.expected.ndv#stream_id", ndv)
-      .parquet(tmp)
+    writeEvents(compacted, "overwrite", tmp, Some(ndv))
     val ev = java.nio.file.Paths.get(eventsDir)
     val old = java.nio.file.Paths.get(s"$root/${EventStore.PreCompact}")
     java.nio.file.Files.move(ev, old)
     java.nio.file.Files.move(java.nio.file.Paths.get(tmp), ev)
-    deleteRecursively(old.toFile)
+    Fs.deleteRecursively(old.toFile)
     commitState(state.copy(version = state.version + 1), listIndex())
     // compaction also folds the head LSM into a fresh base table
     foldHeads()
   }
 
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.core.Fs.deleteRecursively(f)
+  /** Spark's writer of event files (the layout README "Storage model"
+    * sets out): one directory per `partition_id`, zstd, bloom filters on
+    * `event_id` and `stream_id`. The filters are sized to `ndv` values
+    * when the caller knows its rows per file; else each is the smallest
+    * of parquet's adaptive candidates (1 MB halving down to 1 KB) that
+    * holds the values its file got, not the 1 MB maximum.
+    */
+  private def writeEvents(df: DataFrame, mode: String, dir: String, ndv: Option[Long]): Unit = {
+    val blooms = Seq("event_id", "stream_id").flatMap(c => Seq(
+      s"parquet.bloom.filter.enabled#$c" -> "true",
+      s"parquet.bloom.filter.candidates.number#$c" -> EventStore.BloomCandidates.toString) ++
+      ndv.map(n => s"parquet.bloom.filter.expected.ndv#$c" -> n.toString))
+    df.write
+      .mode(mode)
+      .partitionBy("partition_id")
+      .option("compression", "zstd")
+      .option("parquet.bloom.filter.adaptive.enabled", "true")
+      .options(blooms.toMap)
+      .parquet(dir)
+  }
 
   /** Bulk ingest — the 100 TB path. Routes rows to partitions by
     * stream-id hash, assigns gapless partition sequences and stream
@@ -414,7 +384,7 @@ final class EventStore private (
 
     def paths(ix: Map[Int, Vector[DataFile]]) = ix.values.flatten.map(_.file.path).toSet
     val preFiles = paths(listIndex())
-    assigned
+    val sorted = assigned
       // each partition_id already lives in exactly one task: both
       // windows above run under the ONE hash(partition_id) exchange
       // (see `ws`), and nothing after them re-partitions — so the
@@ -424,13 +394,7 @@ final class EventStore private (
       // (partition columns first) is satisfied and rows land
       // sequence-sorted within each file without a writer-side re-sort.
       .sortWithinPartitions($"partition_id", $"partition_sequence")
-      .write
-      .mode("append")
-      .partitionBy("partition_id")
-      .option("compression", "zstd")
-      .option("parquet.bloom.filter.enabled#event_id", "true")
-      .option("parquet.bloom.filter.enabled#stream_id", "true")
-      .parquet(eventsDir)
+    writeEvents(sorted, "append", eventsDir, None)
 
     // head/watermark roll-up: ONE columnar scan over just the files
     // this commit wrote (4 columns, stats-friendly) — cheaper than
@@ -450,39 +414,25 @@ final class EventStore private (
     val newWm = wmStats.map(r => r.getInt(0) -> r.getLong(1)).toMap
     val n = newWm.map { case (k, nw) => nw - wmMap.getOrElse(k, -1L) }.sum
     val headCount = wmStats.map(_.getLong(2)).sum
-    val withTag = (st: ManifestState) => st.copy(
-      streamBatchIds = batchTag.fold(st.streamBatchIds) { case (ck, id) =>
-        st.streamBatchIds.updated(ck, id)
-      })
+    val next = state.copy(version = state.version + 1, watermarks = wmMap ++ newWm,
+      streamBatchIds = batchTag.fold(state.streamBatchIds)(state.streamBatchIds + _))
 
     if (state.streamHeads.size + headCount <= maxInlineHeads) {
       // small batch: heads stay in the inline overlay (no extra layer)
-      val newHeads = rollup.collect().map(r =>
-        EventStore.headKey(r.getString(1), r.getString(0)) ->
-          StreamHead(r.getLong(3), r.getString(1), r.getInt(2))).toMap
+      val newHeads = rollup.collect().map(headEntry).toMap
       rollup.unpersist()
-      commitState(withTag(state.copy(
-        version = state.version + 1,
-        watermarks = wmMap ++ newWm,
-        streamHeads = state.streamHeads ++ newHeads)), index)
+      commitState(next.copy(streamHeads = state.streamHeads ++ newHeads), index)
     } else {
       // big batch (the 100 TB path): spill batch heads ∪ inline overlay
       // to ONE parquet delta, straight from the executors — the driver
       // never holds the head set
-      val v = state.version + 1
       val batchDf = rollup
         .select($"stream_id", $"partition_key", $"partition_id", $"version")
       val deltaDf =
         if (state.streamHeads.isEmpty) batchDf
-        else resolveLayers(Seq(inlineHeadsDfOf(state) -> 0L, batchDf -> 1L))
-      writeHeadsParquet(deltaDf, headsDeltaDir(v),
-        approxRows = state.streamHeads.size + headCount)
+        else resolveLayers(Seq(inlineHeadsDf(state.streamHeads) -> 0L, batchDf -> 1L))
+      spillHeads(next, deltaDf, state.streamHeads.size + headCount, index)
       rollup.unpersist()
-      commitState(withTag(state.copy(
-        version = v,
-        watermarks = wmMap ++ newWm,
-        streamHeads = Map.empty,
-        headsDeltas = state.headsDeltas :+ v)), index)
       maybeFoldHeads()
     }
     n
@@ -502,11 +452,8 @@ final class EventStore private (
     */
   private[api] def recoverOrphans(): Unit = lock.synchronized {
     partitionDirs().foreach { case (_, dir) =>
-      val ls = java.nio.file.Files.list(dir)
-      try ls.iterator().asScala
-        .filter(_.getFileName.toString.startsWith(EventStore.InflightPrefix))
+      Fs.list(dir).filter(_.getFileName.toString.startsWith(EventStore.InflightPrefix))
         .foreach(java.nio.file.Files.deleteIfExists)
-      finally ls.close()
     }
     val files = listIndex().map { case (pid, fs) =>
       val (orphans, kept) = fs.partition(_.minOf("partition_sequence") > state.watermark(pid))
@@ -517,19 +464,11 @@ final class EventStore private (
   }
 
   /** The `partition_id=N` directories of the log, with their N. */
-  private def partitionDirs(): Seq[(Int, java.nio.file.Path)] = {
-    val dir = java.nio.file.Paths.get(eventsDir)
-    if (!java.nio.file.Files.isDirectory(dir)) Nil
-    else {
-      val ls = java.nio.file.Files.list(dir)
-      try ls.iterator().asScala
-        .filter(p => java.nio.file.Files.isDirectory(p) &&
-          p.getFileName.toString.startsWith("partition_id="))
-        .map(p => p.getFileName.toString.stripPrefix("partition_id=").toInt -> p)
-        .toSeq
-      finally ls.close()
-    }
-  }
+  private def partitionDirs(): Seq[(Int, java.nio.file.Path)] =
+    Fs.list(java.nio.file.Paths.get(eventsDir))
+      .filter(p => java.nio.file.Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith("partition_id="))
+      .map(p => p.getFileName.toString.stripPrefix("partition_id=").toInt -> p)
 
   /** Every visible data file of the log by partition, from one listing
     * — the file index [[ingest]] and [[compact]] publish. The files'
@@ -551,41 +490,40 @@ final class EventStore private (
 
   // ------------------------------------------------------- head-state (LSM)
 
-  /** The reference keeps per-partition live stream indexes in memory
+  /* The reference keeps per-partition live stream indexes in memory
     * (`writer_thread_pool.rs:188-267`); at billions of streams that is
     * a driver OOM, so heads are LSM-layered (see ManifestState): a
     * bounded inline overlay in the manifest JSON, spilled to versioned
     * parquet deltas under `<root>/_heads/`, folded into a base table.
     * Newer layer wins per (partition_key, stream_id).
     */
-  private val headsSchema = EventStore.headsParquetSchema
-
-  private def headsBaseDir(v: Long) = EventStore.headsBaseDir(root, v)
-  private def headsDeltaDir(v: Long) = EventStore.headsDeltaDir(root, v)
-
-  /** built once — newHadoopConf() copies the entire SQL conf and costs
-    * ~10 ms, which would dominate a jobless append
-    */
-  private lazy val writerConf = spark.sessionState.newHadoopConf()
-
   private def readHeads(dir: String): DataFrame =
-    spark.read.schema(headsSchema).parquet(dir)
+    spark.read.schema(EventStore.headsParquetSchema).parquet(dir)
 
-  private def inlineHeadsDfOf(snap: ManifestState): DataFrame =
-    snap.streamHeads.toSeq.map { case (k, h) =>
+  private def inlineHeadsDf(heads: Map[String, StreamHead]): DataFrame =
+    heads.toSeq.map { case (k, h) =>
       (EventStore.headKeyStream(k), h.partitionKey, h.partitionId, h.version)
     }.toDF("stream_id", "partition_key", "partition_id", "version")
 
-  /** parquet layers oldest-first as (df, priority); inline excluded.
-    * Always derive from ONE captured snapshot: re-reading live state
-    * mid-operation races a concurrent fold (layers can vanish between
-    * an emptiness check and the union).
+  /** a collected (stream_id, partition_key, partition_id, version) row
+    * as its inline head entry
     */
-  private def parquetHeadLayers(snap: ManifestState): Seq[(DataFrame, Long)] = {
-    val base =
-      if (snap.headsBase > 0) Seq(readHeads(headsBaseDir(snap.headsBase)) -> 0L)
-      else Nil
-    base ++ snap.headsDeltas.map(v => readHeads(headsDeltaDir(v)) -> v)
+  private def headEntry(r: Row): (String, StreamHead) =
+    EventStore.headKey(r.getString(1), r.getString(0)) ->
+      StreamHead(r.getLong(3), r.getString(1), r.getInt(2))
+
+  /** Every head layer of `snap` oldest-first as (df, priority): the
+    * parquet base and deltas, then the inline overlay (kept when empty
+    * if it is the only layer). Always derive from ONE captured
+    * snapshot: re-reading live state mid-operation races a concurrent
+    * fold (layers can vanish between an emptiness check and the union).
+    */
+  private def headLayers(snap: ManifestState): Seq[(DataFrame, Long)] = {
+    val parquet = EventStore.headLayerDirs(root, snap).map { case (d, p) => readHeads(d) -> p }
+    parquet ++
+      (if (snap.streamHeads.nonEmpty || parquet.isEmpty)
+        Seq(inlineHeadsDf(snap.streamHeads) -> Long.MaxValue)
+      else Nil)
   }
 
   private def hasParquetHeadLayers(snap: ManifestState): Boolean =
@@ -604,15 +542,7 @@ final class EventStore private (
   /** All current stream heads as a DataFrame — the scalable view
     * (columns: stream_id, partition_key, partition_id, version).
     */
-  def headsDf(): DataFrame = {
-    val snap = state
-    val parquet = parquetHeadLayers(snap)
-    val layers = parquet ++
-      (if (snap.streamHeads.nonEmpty || parquet.isEmpty)
-        Seq(inlineHeadsDfOf(snap) -> Long.MaxValue)
-      else Nil)
-    resolveLayers(layers)
-  }
+  def headsDf(): DataFrame = resolveLayers(headLayers(state))
 
   /** The head of (pk, sid): the inline overlay's entry, else the layered
     * entry for `pk` among the stream's layered heads, which the
@@ -648,15 +578,7 @@ final class EventStore private (
         val withHeads = next.copy(streamHeads = inline)
         val chain = Manifest.commitDelta(root, withHeads, s.chain, newWm, newHeads)
         snap = s.copy(state = withHeads, files = files, chain = chain)
-      } else {
-        writeHeadsParquet(
-          inline.toSeq.map { case (k, h) =>
-            (EventStore.headKeyStream(k), h.partitionKey, h.partitionId, h.version)
-          }.toDF("stream_id", "partition_key", "partition_id", "version"),
-          headsDeltaDir(next.version), approxRows = inline.size)
-        commitState(next.copy(streamHeads = Map.empty,
-          headsDeltas = next.headsDeltas :+ next.version), files)
-      }
+      } else spillHeads(next, inlineHeadsDf(inline), inline.size, files)
     } catch {
       case e: Throwable =>
         written.values.foreach(f =>
@@ -664,6 +586,17 @@ final class EventStore private (
         throw e
     }
     if (spill) maybeFoldHeads()
+  }
+
+  /** Head spill: write `heads` as the delta layer of `next`'s version
+    * and commit `next` with that layer and an empty inline overlay, as
+    * a full checkpoint publishing `files`.
+    */
+  private def spillHeads(next: ManifestState, heads: DataFrame, approxRows: Long,
+      files: Map[Int, Vector[DataFile]]): Unit = {
+    writeHeadsParquet(heads, EventStore.headsDeltaDir(root, next.version), approxRows)
+    commitState(next.copy(streamHeads = Map.empty,
+      headsDeltas = next.headsDeltas :+ next.version), files)
   }
 
   private val MaxHeadDeltas = 8
@@ -679,23 +612,17 @@ final class EventStore private (
     */
   private[api] def foldHeads(): Unit = lock.synchronized {
     if (!hasParquetHeadLayers(state)) return // inline-only: nothing to fold
-    val layers = parquetHeadLayers(state) ++
-      (if (state.streamHeads.nonEmpty)
-        Seq(inlineHeadsDfOf(state) -> Long.MaxValue)
-      else Nil)
-    val resolved = resolveLayers(layers)
+    val resolved = resolveLayers(headLayers(state))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val v = state.version + 1
       val total = resolved.count()
       if (total <= maxInlineHeads) {
-        val inline = resolved.collect().map(r =>
-          EventStore.headKey(r.getString(1), r.getString(0)) ->
-            StreamHead(r.getLong(3), r.getString(1), r.getInt(2))).toMap
+        val inline = resolved.collect().map(headEntry).toMap
         commitState(state.copy(
           version = v, streamHeads = inline, headsBase = 0L, headsDeltas = Nil))
       } else {
-        writeHeadsParquet(resolved, headsBaseDir(v), approxRows = total)
+        writeHeadsParquet(resolved, EventStore.headsBaseDir(root, v), approxRows = total)
         commitState(state.copy(
           version = v, streamHeads = Map.empty, headsBase = v, headsDeltas = Nil))
       }
@@ -731,17 +658,11 @@ final class EventStore private (
     * away). Runs once per open.
     */
   private[api] def recoverOrphanHeads(): Unit = lock.synchronized {
-    val dir = java.nio.file.Paths.get(root, "_heads")
-    if (!java.nio.file.Files.isDirectory(dir)) return
-    val keep = (if (state.headsBase > 0) Set(s"base-v${state.headsBase}") else Set.empty) ++
-      state.headsDeltas.map(v => s"delta-v$v")
-    val listing = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      listing.iterator().asScala
-        .filterNot(p => keep.contains(p.getFileName.toString))
-        .foreach(p => deleteRecursively(p.toFile))
-    } finally listing.close()
+    val keep = EventStore.headLayerDirs(root, state)
+      .map(d => java.nio.file.Paths.get(d._1).getFileName).toSet
+    Fs.list(java.nio.file.Paths.get(root, "_heads"))
+      .filterNot(p => keep.contains(p.getFileName))
+      .foreach(p => Fs.deleteRecursively(p.toFile))
   }
 
   /** Streaming ingest: continuous EAPPEND through Structured Streaming.
@@ -1037,20 +958,16 @@ final class EventStore private (
     if (wm < 0) None else Some(wm)
   }
 
-  private def currentVersionOf(streamId: String, pk: UUID): CurrentVersion =
-    CurrentVersion.fromOption(sver(streamId, Some(pk)))
-
   /** All stream heads as (stream_id, partition_key, version),
     * MATERIALIZED to the driver — test/diagnostic convenience; use
     * `headsDf()` at scale.
     */
-  def streamHeadEntries: Seq[(String, String, Long)] =
-    if (!hasParquetHeadLayers(state))
-      state.streamHeads.toSeq.map { case (k, h) =>
-        (EventStore.headKeyStream(k), h.partitionKey, h.version)
-      }
-    else headsDf().collect().toSeq.map(r =>
-      (r.getString(0), r.getString(1), r.getLong(3)))
+  def streamHeadEntries: Seq[(String, String, Long)] = {
+    val heads =
+      if (!hasParquetHeadLayers(state)) state.streamHeads.toSeq
+      else headsDf().collect().toSeq.map(headEntry)
+    heads.map { case (k, h) => (EventStore.headKeyStream(k), h.partitionKey, h.version) }
+  }
 
   /** Number of live (partition_key, stream) head entries. */
   def streamCount: Long =
@@ -1081,11 +998,16 @@ final class EventStore private (
       "delta_chain" -> s.chain.toLong,
       "data_files" -> s.files.values.map(_.size.toLong).sum,
       "inline_heads" -> s.state.streamHeads.size.toLong,
-      "head_layers" -> (s.state.headsDeltas.size + (if (s.state.headsBase > 0) 1 else 0)).toLong,
+      "head_layers" -> EventStore.headLayerDirs(root, s.state).size.toLong,
       "appends_sampled" -> appendLayers.size.toLong) ++ layerStats
   }
 
   // ------------------------------------------------------------- internals
+
+  /** built once — newHadoopConf() copies the entire SQL conf and costs
+    * ~10 ms, which would dominate a jobless append
+    */
+  private lazy val writerConf = spark.sessionState.newHadoopConf()
 
   /** The append write path, driver-side (no Spark job): one parquet
     * file per touched partition in the layout Spark's own writer
@@ -1167,14 +1089,7 @@ object EventStore {
     // dead: commit past them, never reusing their numbers, or a delta
     // left above them could later resolve over a new base
     val newest = Manifest.newestVersion(root).getOrElse(0L)
-    val st0 = if (newest > loaded.version) loaded.copy(version = newest) else loaded
-    // migrate legacy manifests whose heads were keyed by bare stream id
-    // (the StreamHead value always carried the partition key)
-    val st =
-      if (st0.streamHeads.keys.forall(isCompositeHeadKey)) st0
-      else st0.copy(streamHeads = st0.streamHeads.map { case (k, h) =>
-        (if (isCompositeHeadKey(k)) k else headKey(h.partitionKey, k)) -> h
-      })
+    val st = if (newest > loaded.version) loaded.copy(version = newest) else loaded
     // unless the state is exactly the newest version on disk, the first
     // commit must be a checkpoint, not a delta over it
     val es = new EventStore(spark, root, st.numPartitions.max(1), st,
@@ -1199,9 +1114,15 @@ object EventStore {
     val pre = java.nio.file.Paths.get(root, PreCompact)
     if (!java.nio.file.Files.exists(ev) && java.nio.file.Files.exists(pre))
       java.nio.file.Files.move(pre, ev)
-    graft.core.Fs.deleteRecursively(java.nio.file.Paths.get(root, CompactTmp).toFile)
-    graft.core.Fs.deleteRecursively(pre.toFile)
+    Fs.deleteRecursively(java.nio.file.Paths.get(root, CompactTmp).toFile)
+    Fs.deleteRecursively(pre.toFile)
   }
+
+  /** adaptive bloom candidates of a Spark-written event file: 1 MB
+    * halving to 1 KB, the smallest parquet keeps (it sizes candidates in
+    * steps of 500 values)
+    */
+  private val BloomCandidates = 11
 
   private[api] val CompactTmp = "events.compact.tmp"
   private[api] val PreCompact = "events.pre-compact"
@@ -1235,23 +1156,20 @@ object EventStore {
     * the layered max-priority merge.
     */
   private final class HeadLayers(root: String, st: ManifestState) {
-    private val base = st.headsBase
-    private val deltas = st.headsDeltas
+    private val dirs = headLayerDirs(root, st)
     private lazy val files: Seq[Seq[HeadProbe.File]] =
-      (deltas.sorted.reverse.map(headsDeltaDir(root, _)) ++
-        (if (base > 0) Seq(headsBaseDir(root, base)) else Nil)).map(HeadProbe.listFiles)
+      dirs.sortBy(-_._2).map(d => HeadProbe.listFiles(d._1))
     private val byStream =
       new java.util.LinkedHashMap[String, Seq[StreamHead]](64, 0.75f, true) {
         override def removeEldestEntry(
             e: java.util.Map.Entry[String, Seq[StreamHead]]): Boolean = size() > 4096
       }
 
-    def describes(next: ManifestState): Boolean =
-      next.headsBase == base && next.headsDeltas == deltas
+    def describes(next: ManifestState): Boolean = headLayerDirs(root, next) == dirs
 
     /** every layered head of stream `sid`, one per partition key */
     def of(sid: String): Seq[StreamHead] =
-      if (base == 0 && deltas.isEmpty) Nil
+      if (dirs.isEmpty) Nil
       else byStream.synchronized(Option(byStream.get(sid))).getOrElse {
         val merged = collection.mutable.LinkedHashMap.empty[String, StreamHead]
         files.foreach(layer => HeadProbe.probeStream(layer, sid).foreach {
@@ -1370,6 +1288,13 @@ object EventStore {
   private def headsBaseDir(root: String, v: Long) = s"$root/_heads/base-v$v"
   private def headsDeltaDir(root: String, v: Long) = s"$root/_heads/delta-v$v"
 
+  /** the parquet head layers of `st` as (directory, priority), oldest
+    * first: the folded base, then the deltas by version
+    */
+  private def headLayerDirs(root: String, st: ManifestState): Seq[(String, Long)] =
+    (if (st.headsBase > 0) Seq(headsBaseDir(root, st.headsBase) -> 0L) else Nil) ++
+      st.headsDeltas.map(v => headsDeltaDir(root, v) -> v)
+
   /** Every head entry of one stream id across all partition keys in
     * `st`: the inline overlay (newest, wins per key) merged with the
     * stream's `layered` heads ([[HeadLayers.of]]).
@@ -1377,7 +1302,7 @@ object EventStore {
   private def streamHeadsOf(st: ManifestState, sid: String,
       layered: Seq[StreamHead]): Seq[StreamHead] = {
     val inline = st.streamHeads.collect {
-      case (k, h) if isCompositeHeadKey(k) && headKeyStream(k) == sid => h
+      case (k, h) if k.length == 37 + sid.length && k.endsWith(sid) => h
     }.toSeq
     val inlineKeys = inline.map(_.partitionKey).toSet
     inline ++ layered.filterNot(h => inlineKeys.contains(h.partitionKey))
@@ -1459,8 +1384,4 @@ object EventStore {
 
   private[api] def headKeyStream(key: String): String = key.substring(37)
 
-  private val UuidRe = "[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12}".r
-
-  private[api] def isCompositeHeadKey(k: String): Boolean =
-    k.length > 37 && k.charAt(36) == ':' && UuidRe.matches(k.substring(0, 36))
 }

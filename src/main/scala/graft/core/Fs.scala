@@ -1,5 +1,7 @@
 package graft.core
 
+import scala.jdk.CollectionConverters._
+
 /** Small filesystem helpers shared by the store, server, and the
   * gate/bench harnesses (previously copy-pasted at each site).
   */
@@ -12,6 +14,14 @@ object Fs {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete()
   }
+
+  /** The entries of directory `dir`; none if it is not a directory. */
+  private[graft] def list(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
+    if (!java.nio.file.Files.isDirectory(dir)) Nil
+    else {
+      val ls = java.nio.file.Files.list(dir)
+      try ls.iterator().asScala.toVector finally ls.close()
+    }
 
   /** Hadoop FileSystem + Path for a location string — the I/O layer
     * the index-layout markers and generation manifests go through, so

@@ -121,23 +121,15 @@ object HeadProbe {
     * skipped exactly as Spark's file index skips them. A missing
     * directory is empty.
     */
-  def listFiles(dir: String): Seq[File] = {
-    val d = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(d)) Nil
-    else {
-      val ls = java.nio.file.Files.list(d)
-      try ls.iterator().asScala
-        .filter { p =>
-          val name = p.getFileName.toString
-          name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_") &&
-            java.nio.file.Files.isRegularFile(p)
-        }
-        .toSeq
-        .sortBy(_.getFileName.toString)
-        .map(p => new File(p.toString))
-      finally ls.close()
-    }
-  }
+  def listFiles(dir: String): Seq[File] =
+    graft.core.Fs.list(java.nio.file.Paths.get(dir))
+      .filter { p =>
+        val name = p.getFileName.toString
+        name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_") &&
+          java.nio.file.Files.isRegularFile(p)
+      }
+      .sortBy(_.getFileName.toString)
+      .map(p => new File(p.toString))
 
   /** Visit every record of `files` that satisfies all `preds`, in file
     * then row order, until `visit` returns false. `contiguous` declares

@@ -12,9 +12,12 @@ import org.scalatest.BeforeAndAfterAll
   * reference's proptest suite (`writer_thread_pool.rs:1560-1830`):
   * random batches of events with random expected versions are applied
   * both to the store and to a trivial in-memory model; outcomes and
-  * head states must agree, and sequences must stay gapless. Plus a
-  * multi-threaded append race: the per-store lock must serialize
-  * writers like the reference's single writer thread per bucket.
+  * head states must agree, and sequences must stay gapless. A
+  * differential test runs each random batch through `appendMany` on
+  * one store and one `append` per event on a twin: both must answer
+  * alike. Plus a multi-threaded append race: the per-store lock must
+  * serialize writers like the reference's single writer thread per
+  * bucket.
   */
 class AppendPropertySpec extends AnyFunSuite with BeforeAndAfterAll
     with graft.PropHelpers {
@@ -80,6 +83,49 @@ class AppendPropertySpec extends AnyFunSuite with BeforeAndAfterAll
         assert(r.getAs[Long]("hi") == r.getAs[Long]("n") - 1)
         assert(r.getAs[Long]("d") == r.getAs[Long]("n"))
       }
+  }
+
+  test("appendMany answers exactly as one append per event (differential)") {
+    // a small stream pool: batches repeat streams and span partitions
+    val pool = (0 until 10).map(i => s"d-$i")
+    assert(pool.map(Ids.partitionIdForStream(_, 4)).distinct.size > 1)
+    val genDiffBatch: Gen[List[(String, ExpectedVersion)]] =
+      Gen.chooseNum(1, 8).flatMap(n => Gen.listOfN(n, Gen.zip(
+        Gen.oneOf(pool),
+        Gen.oneOf(Gen.const(ExpectedVersion.Any), Gen.const(ExpectedVersion.Empty),
+          Gen.const(ExpectedVersion.Exists), Gen.chooseNum(0L, 4L).map(ExpectedVersion.Exact(_))))))
+    def fresh() = EventStore.open(spark, Files.createTempDirectory("graft-diff-").toString, 4)
+    val many = fresh()
+    val single = fresh()
+    var batchNo = 0
+    var sameStreamAccepted = 0
+
+    forAllSampled(genDiffBatch, runs = 40) { batch =>
+      batchNo += 1
+      val inputs = batch.zipWithIndex.map { case ((sid, ev), i) =>
+        EventInput(sid, "Diff", s"$batchNo-$i".getBytes, expectedVersion = ev)
+      }
+      val got = many.appendMany(inputs)
+      val want = inputs.map(single.append(_))
+      // ids and timestamps are each store's own; the rest must agree
+      def outcome(r: Either[String, AppendResult]) = r.map(a =>
+        (a.partitionKey, a.partitionId, a.partitionSequence, a.streamVersion))
+      assert(got.map(outcome) == want.map(outcome))
+      sameStreamAccepted += got.zip(inputs).collect { case (Right(_), in) => in.streamId }
+        .groupBy(identity).count(_._2.size > 1)
+      pool.foreach(sid => assert(many.sver(sid) == single.sver(sid), sid))
+      (0 until 4).foreach(p => assert(many.pseq(p) == single.pseq(p), p))
+    }
+    assert(sameStreamAccepted > 0, "no batch accepted one stream twice")
+
+    def rows(es: EventStore, p: Int) = es.pscan(p, count = 100000).events.map(r => (
+      r.getAs[String]("partition_key"), r.getAs[Long]("partition_sequence"),
+      r.getAs[String]("stream_id"), r.getAs[Long]("stream_version"),
+      r.getAs[String]("event_name"), new String(r.getAs[Array[Byte]]("payload"))))
+    (0 until 4).foreach { p =>
+      assert(rows(many, p) == rows(single, p), p)
+    }
+    assert((0 until 4).map(rows(many, _).size).sum > 40)
   }
 
   test("concurrent appenders: serialized writes keep sequences gapless") {

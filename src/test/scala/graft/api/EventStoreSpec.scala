@@ -64,9 +64,32 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("strict mode rejects any/exists") {
     val es = freshStore(strict = true)
-    assert(es.append(in("s", ev = ExpectedVersion.Any)).isLeft)
-    assert(es.append(in("s", ev = ExpectedVersion.Exists)).isLeft)
+    val strictErr = Left("ERR strict versioning requires empty or exact expected version")
+    assert(es.append(in("s", ev = ExpectedVersion.Any)) == strictErr)
+    assert(es.append(in("s", ev = ExpectedVersion.Exists)) == strictErr)
     assert(es.append(in("s", ev = ExpectedVersion.Empty)).isRight)
+    assert(es.append(in("s", ev = ExpectedVersion.Exact(0))).isRight)
+
+    // EMAPPEND: one loose expectation rejects the whole batch
+    val pk = Ids.partitionKeyForStream("m")
+    for (loose <- Seq(ExpectedVersion.Any, ExpectedVersion.Exists))
+      assert(es.mappend(pk, Seq(in("m", ev = ExpectedVersion.Empty), in("m", ev = loose))) ==
+        strictErr)
+    assert(es.sver("m").isEmpty)
+    assert(es.mappend(pk, Seq(
+      in("m", ev = ExpectedVersion.Empty), in("m", ev = ExpectedVersion.Exact(0)))).isRight)
+    assert(es.sver("m") == Some(1L))
+
+    // appendMany: rejected per event, the others still commit
+    val rs = es.appendMany(Seq(
+      in("n", ev = ExpectedVersion.Empty),
+      in("n", ev = ExpectedVersion.Any),
+      in("n", ev = ExpectedVersion.Exact(0)),
+      in("o", ev = ExpectedVersion.Exists)))
+    assert(rs(1) == strictErr && rs(3) == strictErr)
+    assert(rs(0).toOption.map(_.streamVersion) == Some(0L))
+    assert(rs(2).toOption.map(_.streamVersion) == Some(1L))
+    assert(es.sver("n") == Some(1L) && es.sver("o").isEmpty)
   }
 
   test("EMAPPEND: intra-batch versions validate against earlier events") {
@@ -258,6 +281,26 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       es.ingest(df2, "arrival")
       assert(es.sver("user-0").get == all.where($"stream_id" === "user-0").count())
     } finally all.unpersist()
+  }
+
+  test("bulk ingest sizes its bloom filters to the rows each file holds") {
+    // unsized, parquet gives every bloom filter its 1 MB maximum: a few
+    // hundred events over 32 partitions would write files of ~1 MB
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-bloom-").toString
+    val es = EventStore.open(spark, dir)
+    es.ingest((0 until 400).map(i => (s"b-${i % 50}", "Evt", i.toLong))
+      .toDF("stream_id", "event_name", "arrival"), "arrival")
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, "events"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally walk.close()
+    assert(files.nonEmpty)
+    files.foreach(f => assert(java.nio.file.Files.size(f) < 64 * 1024, f))
+    assert(es.events().count() == 400)
+    // the filters still answer point lookups
+    val some = es.scan("b-7").events
+    assert(some.size == 8)
+    assert(es.get(UUID.fromString(some.head.getAs[String]("event_id"))).isDefined)
   }
 
   test("mixed path: ingest then single appends stay consistent") {
