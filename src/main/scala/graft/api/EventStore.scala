@@ -10,6 +10,7 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
@@ -22,6 +23,15 @@ import org.apache.spark.sql.functions._
   * [[graft.core.EventSchema.schema]].
   */
 final case class ScanResult(events: Seq[Row], hasMore: Boolean)
+
+/** Two data files of one partition whose sequence ranges partly overlap:
+  * no writer produces them (a rollover's merged file holds its inputs'
+  * ranges whole), so the store cannot tell which rows are the real ones
+  * and refuses to open.
+  */
+final class OverlappingFilesException(val partition: Int, val first: String, val second: String)
+  extends IllegalStateException(
+    s"partition $partition: the sequence ranges of $first and $second partly overlap")
 
 /** Spark-native event store with SierraDB's command semantics
   * (SURVEY.md §2.1): optimistic-concurrency appends, point lookups,
@@ -66,7 +76,7 @@ final class EventStore private (
     maxInlineHeads: Int) {
 
   import spark.implicits._
-  import EventStore.{DataFile, HeadLayers, Snapshot}
+  import EventStore.{DataFile, FileStats, HeadLayers, Snapshot}
 
   private val eventsDir = s"$root/events"
   private val lock = new Object
@@ -206,25 +216,135 @@ final class EventStore private (
       val t2 = System.nanoTime()
       commitAppend(seqs.toMap, heads.toMap, written)
       appendLayers.record(t1 - t0, t2 - t1, System.nanoTime() - t2)
+      written.keys.foreach(requestRollover)
     }
   }
 
-  /** Compaction — the segment-rollover analogue
-    * (`writer_thread_pool.rs:698-793`): rewrite each partition
-    * directory into one sequence-sorted file so point lookups and range
-    * scans touch few, stat-tight row groups after many small group
-    * commits. Single-writer engine: done under the write lock with a
-    * directory swap. (A multi-writer deployment would track files in
-    * the manifest and swap there instead.)
+  // ------------------------------------------------------------- rollover
+
+  /* Segment rollover (`writer_thread_pool.rs:698-793`: the reference
+    * seals a segment at a size threshold and indexes it in a background
+    * pool). Here every append leaves one small file, and once a
+    * partition holds a run of 16 sequence-adjacent files of one size
+    * tier, the shared worker merges the run into one file, outside the
+    * write lock. Only an append requests a merge. Under the lock the
+    * merged file replaces the run in the file index, matched by path,
+    * and the run's files are deleted; no manifest version is committed,
+    * because the manifest does not list files. A merged file covers
+    * exactly the sequence range of its inputs, which is how
+    * [[recoverOrphans]] tells them apart after a crash.
+    */
+
+  /** partitions with a merge queued or running (under `lock`) */
+  private val rolling = collection.mutable.Set.empty[Int]
+  private val rolloverTimes = new EventStore.LayerTimes(1024, 1)
+  private val rollovers = new java.util.concurrent.atomic.AtomicLong
+  private val rolledFiles = new java.util.concurrent.atomic.AtomicLong
+  private val rolloverFailures = new java.util.concurrent.atomic.AtomicLong
+  /** merges this handle has queued on the worker */
+  private[api] val rolloverRequests = new java.util.concurrent.atomic.AtomicLong
+  private var generation = 0L
+
+  /** Under the lock, after a commit: queue partition `pid` on the worker
+    * if its files hold a full run and no merge of it is queued.
+    */
+  private def requestRollover(pid: Int): Unit =
+    if (!rolling(pid) && EventStore.fullRun(snap.files.getOrElse(pid, Vector.empty)).nonEmpty) {
+      rolling += pid
+      rolloverRequests.incrementAndGet()
+      EventStore.rolloverWorker.execute(() => rollOver(pid))
+    }
+
+  /** On the worker: merge `pid`'s full runs, one after another, until
+    * none is left or a merge does not swap.
+    */
+  private def rollOver(pid: Int): Unit = {
+    // cleared under the lock of the check that found no run: an append
+    // that fills a run after it queues a merge of its own
+    def next() = lock.synchronized {
+      val run = EventStore.fullRun(snap.files.getOrElse(pid, Vector.empty))
+      if (run.isEmpty) rolling -= pid
+      run
+    }
+    try {
+      var run = next()
+      while (run.nonEmpty) run = if (merge(pid, run)) next() else Vector.empty
+    } finally lock.synchronized(rolling -= pid)
+  }
+
+  /** Merge `run` into one hidden file, then swap it in under the lock.
+    * The swap is dropped, and the hidden file deleted, when some file of
+    * the run has left the index (`compact()`), the partition directory
+    * is gone or a newer handle owns the root; a write that fails in that
+    * state is not counted as a failure.
+    * Returns whether the swap happened.
+    */
+  private def merge(pid: Int, run: Vector[DataFile]): Boolean = {
+    if (!EventStore.startMerge(root, generation)) return false
+    val t0 = System.nanoTime()
+    val dir = java.nio.file.Paths.get(eventsDir, s"partition_id=$pid")
+    def current = {
+      val indexed = snap.files.getOrElse(pid, Vector.empty).map(_.file.path).toSet
+      run.forall(f => indexed(f.file.path)) && java.nio.file.Files.isDirectory(dir)
+    }
+    try {
+      val tmp =
+        try writeHidden(dir, run.map(_.stats.rows).sum)(put =>
+          HeadProbe.scan(run.map(_.file), Nil) { g => put(EventStore.copyGroup(g)); true })
+        catch {
+          case _: Exception =>
+            if (lock.synchronized(current)) rolloverFailures.incrementAndGet()
+            return false
+        }
+      lock.synchronized {
+        if (!current) {
+          java.nio.file.Files.deleteIfExists(tmp)
+          false
+        } else {
+          val merged = new DataFile(new HeadProbe.File(EventStore.publish(tmp).toString),
+            FileStats(run.head.stats.minSeq, run.last.stats.maxSeq,
+              run.map(_.stats.minVersion).min, run.map(_.stats.rows).sum))
+          val inputs = run.map(_.file.path).toSet
+          val files = snap.files(pid)
+          val at = files.indexWhere(f => inputs(f.file.path))
+          snap = snap.copy(files = snap.files.updated(pid,
+            files.filterNot(f => inputs(f.file.path)).patch(at, Seq(merged), 0)))
+          run.foreach(f => java.nio.file.Files.deleteIfExists(f.path))
+          rollovers.incrementAndGet()
+          rolledFiles.addAndGet(run.size.toLong)
+          rolloverTimes.record(System.nanoTime() - t0)
+          true
+        }
+      }
+    } finally EventStore.endMerge(root)
+  }
+
+  /** Wait until no merge of this handle is queued or running. */
+  private[api] def awaitRollover(): Unit = {
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (lock.synchronized(rolling.nonEmpty)) {
+      if (System.nanoTime() > deadline)
+        throw new IllegalStateException(s"rollover of $root still running after 60 s")
+      Thread.sleep(2)
+    }
+  }
+
+  /** Compaction: rewrite each partition directory into one
+    * sequence-sorted file so point lookups and range scans touch few,
+    * stat-tight row groups. Unlike rollover, which merges small runs
+    * in the background, this rewrites the whole log through Spark under
+    * the write lock with a directory swap, and it never requests a
+    * rollover; a merge running meanwhile finds its inputs gone and
+    * drops its file.
     *
     * Subscription checkpoints SURVIVE compaction: the streaming source
     * tracks per-partition sequences, not file paths
     * ([[graft.streaming.GraftEventSource]]), and compaction rewrites
     * files without renumbering sequences. A subscription resumed from a
     * pre-compaction checkpoint re-plans its next (start, end] range
-    * over the rewritten files — no duplicates, no gaps. (A query whose
-    * in-flight batch races the directory swap fails that batch and
-    * redelivers it on restart — fail-safe, never silent loss.)
+    * over the rewritten files — no duplicates, no gaps. A query whose
+    * in-flight batch races the directory swap lists the partition again
+    * and reads on ([[graft.streaming.GraftPartitionReader]]).
     */
   def compact(): Unit = lock.synchronized {
     if (state.watermarks.isEmpty) return
@@ -447,6 +567,11 @@ final class EventStore private (
     * advance the watermark over the second kind and surface duplicates
     * — so delete both before accepting any new writes. Each file's
     * lowest sequence comes from its footer statistics (no Spark job).
+    * A crash inside a rollover swap leaves its merged file next to all
+    * or some of its inputs; the merged file's sequence range holds each
+    * input's, so every file whose range lies inside another file's is
+    * deleted. Nothing writes files whose ranges partly overlap: finding
+    * two fails the open with [[OverlappingFilesException]].
     * The surviving files become the snapshot's file index. Runs once
     * per open.
     */
@@ -456,8 +581,19 @@ final class EventStore private (
         .foreach(java.nio.file.Files.deleteIfExists)
     }
     val files = listIndex().map { case (pid, fs) =>
-      val (orphans, kept) = fs.partition(_.minOf("partition_sequence") > state.watermark(pid))
-      orphans.foreach(f => java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(f.file.path)))
+      val (orphans, committed) = fs.partition(_.stats.minSeq > state.watermark(pid))
+      orphans.foreach(f => java.nio.file.Files.deleteIfExists(f.path))
+      // widest first among equal minimums: a merged file before its inputs
+      val bySeq = committed.sortBy(f => (f.stats.minSeq, -f.stats.maxSeq, f.file.path))
+      val kept = bySeq.foldLeft(Vector.empty[DataFile]) { (kept, f) =>
+        kept.lastOption match {
+          case Some(c) if f.stats.maxSeq <= c.stats.maxSeq =>
+            java.nio.file.Files.deleteIfExists(f.path); kept
+          case Some(c) if f.stats.minSeq <= c.stats.maxSeq =>
+            throw new OverlappingFilesException(pid, c.file.path, f.file.path)
+          case _ => kept :+ f
+        }
+      }
       pid -> kept
     }
     snap = snap.copy(files = files)
@@ -471,22 +607,18 @@ final class EventStore private (
       .map(p => p.getFileName.toString.stripPrefix("partition_id=").toInt -> p)
 
   /** Every visible data file of the log by partition, from one listing
-    * — the file index [[ingest]] and [[compact]] publish. The files'
-    * key minimums are read from their footers when a read first needs
-    * them.
+    * — the file index [[ingest]] and [[compact]] publish. A file the
+    * current index already holds keeps its object (and the footer that
+    * object read); the others' stats are read from their footers when
+    * first needed.
     */
-  private def listIndex(): Map[Int, Vector[DataFile]] =
+  private def listIndex(): Map[Int, Vector[DataFile]] = {
+    val known = snap.files.valuesIterator.flatten.map(f => f.file.path -> f).toMap
     partitionDirs().map { case (pid, dir) =>
-      pid -> HeadProbe.listFiles(dir.toString).map { f =>
-        new DataFile(f, {
-          // both writers keep int64 statistics (README "Storage model")
-          def min(c: String) = f.longRange(c).map(_._1)
-          (min("partition_sequence").getOrElse(throw new IllegalStateException(
-              s"$f has no partition_sequence statistics")),
-            min("stream_version").getOrElse(Long.MinValue))
-        })
-      }.toVector
+      pid -> HeadProbe.listFiles(dir.toString)
+        .map(f => known.getOrElse(f.path, DataFile.listed(f))).toVector
     }.toMap
+  }
 
   // ------------------------------------------------------- head-state (LSM)
 
@@ -699,8 +831,19 @@ final class EventStore private (
 
   /** Watermark-clamped snapshot of the event log (every read goes
     * through this — the visibility rule of `read.rs:460-489`).
+    *
+    * It scans the directory, not the file index, so it sees a rollover
+    * swap the way it sees `compact()`'s: a job whose listing raced a
+    * swap may fail on a file deleted after it was listed, or, if it
+    * listed the instant between the merged file's rename and its
+    * inputs' deletion, count their rows twice. It first waits out the
+    * merges this handle has queued, so a caller that has stopped
+    * appending scans a directory that holds still. The command reads
+    * and the streaming source are not exposed; no server command uses
+    * this.
     */
   def events(): DataFrame = {
+    awaitRollover()
     val snap = state
     if (snap.watermarks.isEmpty)
       return spark.createDataFrame(
@@ -730,9 +873,10 @@ final class EventStore private (
   }
 
   /** Run a command read against the current snapshot. Its files can
-    * vanish under it only when [[compact]] swaps the log; the read is
-    * then retried once under the write lock, which waits out the swap,
-    * against the snapshot compaction published.
+    * vanish under it only when [[compact]] swaps the log or a rollover
+    * swaps a run for its merged file; the read is then retried once
+    * under the write lock, which waits out the swap, against the
+    * snapshot the swap published.
     */
   private def onSnapshot[A](read: Snapshot => A): A =
     try read(snap)
@@ -984,8 +1128,10 @@ final class EventStore private (
   /** validation + lock wait, row write, manifest commit of recent appends */
   private val appendLayers = new EventStore.LayerTimes(1024, 3)
 
-  /** INFO STORE: the manifest and file-index shape, and p50/p99 (ms) of
-    * the three append layers over the last 1,024 appends.
+  /** INFO STORE: the manifest and file-index shape, p50/p99 (ms) of the
+    * three append layers over the last 1,024 appends, and the rollovers:
+    * merges swapped in, the files they replaced, merges that failed and
+    * p50/p99 (ms) of the last 1,024 merges.
     */
   def storeInfo: Map[String, Any] = {
     val s = snap
@@ -993,13 +1139,20 @@ final class EventStore private (
       .flatMap { case (layer, Seq(p50, p99)) =>
         Seq(s"append_${layer}_p50_ms" -> p50, s"append_${layer}_p99_ms" -> p99)
       }
+    val Seq(Seq(rollP50, rollP99)) = rolloverTimes.percentiles(0.5, 0.99)
     Map(
       "manifest_version" -> s.state.version,
       "delta_chain" -> s.chain.toLong,
       "data_files" -> s.files.values.map(_.size.toLong).sum,
+      "max_partition_files" -> s.files.values.map(_.size.toLong).maxOption.getOrElse(0L),
       "inline_heads" -> s.state.streamHeads.size.toLong,
       "head_layers" -> EventStore.headLayerDirs(root, s.state).size.toLong,
-      "appends_sampled" -> appendLayers.size.toLong) ++ layerStats
+      "appends_sampled" -> appendLayers.size.toLong,
+      "rollovers" -> rollovers.get(),
+      "rolled_files" -> rolledFiles.get(),
+      "rollover_failures" -> rolloverFailures.get(),
+      "rollover_p50_ms" -> rollP50,
+      "rollover_p99_ms" -> rollP99) ++ layerStats
   }
 
   // ------------------------------------------------------------- internals
@@ -1009,26 +1162,48 @@ final class EventStore private (
     */
   private lazy val writerConf = spark.sessionState.newHadoopConf()
 
-  /** The append write path, driver-side (no Spark job): one parquet
-    * file per touched partition in the layout Spark's own writer
-    * produces (see [[EventStore.fileSchema]]) — zstd, rows sorted by
-    * `partition_sequence`, an `event_id` bloom filter sized to the
-    * file's rows. Each file is written under a hidden in-flight name,
-    * which every listing skips, and renamed in whole before the caller
-    * commits the manifest; a crash leaves either a hidden temp file or
-    * a file above the watermark, and [[recoverOrphans]] removes both.
-    * A failure here deletes what this call already wrote, so the
+  /** The append write path, driver-side (no Spark job): one file per
+    * touched partition ([[writeHidden]]), renamed in whole before the
+    * caller commits the manifest; a crash leaves either a hidden temp
+    * file or a file above the watermark, and [[recoverOrphans]] removes
+    * both. A failure here deletes what this call already wrote, so the
     * sequences it held can be reused by the next append. Returns the
-    * files by partition, with their key minimums, for the file index.
+    * files by partition, with their stats, for the file index.
     */
   private def writeRows(rows: Seq[Event]): Map[Int, DataFile] = {
     val written = collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
     try rows.groupBy(_.partition_id).map { case (pid, prs) =>
       val dir = java.nio.file.Paths.get(eventsDir, s"partition_id=$pid")
       java.nio.file.Files.createDirectories(dir)
-      val name = s"part-${UUID.randomUUID()}.zstd.parquet"
-      val tmp = dir.resolve(EventStore.InflightPrefix + name)
+      val sorted = prs.sortBy(_.partition_sequence)
+      val tmp = writeHidden(dir, sorted.size.toLong)(put =>
+        sorted.foreach(e => put(EventStore.toGroup(e))))
       written += tmp
+      val dst = EventStore.publish(tmp)
+      written += dst
+      pid -> new DataFile(new HeadProbe.File(dst.toString),
+        FileStats(sorted.head.partition_sequence, sorted.last.partition_sequence,
+          prs.map(_.stream_version).min, prs.size.toLong))
+    } catch {
+      case e: Throwable =>
+        written.foreach(java.nio.file.Files.deleteIfExists)
+        throw e
+    }
+  }
+
+  /** The one driver-side writer of event files (no Spark job): `feed`
+    * puts `rows` records, sorted by `partition_sequence`, into a new
+    * file of partition directory `dir` in the layout Spark's own writer
+    * produces (see [[EventStore.fileSchema]]) — zstd, `event_id` and
+    * `stream_id` bloom filters sized to the file's rows. The file keeps
+    * a hidden in-flight name, which every listing skips, until
+    * [[EventStore.publish]]; it is deleted if the write fails. Appends
+    * and rollovers write through here.
+    */
+  private def writeHidden(dir: java.nio.file.Path, rows: Long)(
+      feed: (Group => Unit) => Unit): java.nio.file.Path = {
+    val tmp = dir.resolve(s"${EventStore.InflightPrefix}part-${UUID.randomUUID()}.zstd.parquet")
+    try {
       // a plain local file, like the manifest: Hadoop's local
       // filesystem would fork a `chmod` per create (~7 ms on a 4-core
       // VM, most of an append) and add a checksum side file
@@ -1038,18 +1213,15 @@ final class EventStore private (
         .withExtraMetaData(EventStore.fileMetadata)
         .withCompressionCodec(CompressionCodecName.ZSTD)
         .withBloomFilterEnabled("event_id", true)
-        .withBloomFilterNDV("event_id", prs.size.toLong)
+        .withBloomFilterNDV("event_id", rows)
+        .withBloomFilterEnabled("stream_id", true)
+        .withBloomFilterNDV("stream_id", rows)
         .build()
-      try prs.sortBy(_.partition_sequence).foreach(e => w.write(EventStore.toGroup(e)))
-      finally w.close()
-      val dst = dir.resolve(name)
-      java.nio.file.Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      written += dst
-      pid -> new DataFile(new HeadProbe.File(dst.toString),
-        (prs.map(_.partition_sequence).min, prs.map(_.stream_version).min))
+      try feed(g => w.write(g)) finally w.close()
+      tmp
     } catch {
       case e: Throwable =>
-        written.foreach(java.nio.file.Files.deleteIfExists)
+        java.nio.file.Files.deleteIfExists(tmp)
         throw e
     }
   }
@@ -1094,6 +1266,7 @@ object EventStore {
     // commit must be a checkpoint, not a delta over it
     val es = new EventStore(spark, root, st.numPartitions.max(1), st,
       if (st eq loaded) chain else -1, strictVersioning, maxInlineHeads)
+    es.generation = claimRoot(root)
     recoverCompaction(root)
     es.recoverOrphans()
     es.recoverOrphanHeads()
@@ -1134,17 +1307,107 @@ object EventStore {
   private final case class Snapshot(state: ManifestState,
       files: Map[Int, Vector[DataFile]], chain: Int, heads: HeadLayers)
 
-  /** One committed data file of the file index (its footer and bloom
-    * filters live with `file`), with the minimums of the two sort keys
-    * the scan cut-off orders by: known when an append writes the file,
-    * else read from its footer on first use.
+  /** What the file index knows of a data file: its sequence range, its
+    * lowest stream version and its row count.
     */
-  private final class DataFile(val file: HeadProbe.File, mins: => (Long, Long)) {
-    private lazy val (minSeq, minVersion) = mins
+  private final case class FileStats(minSeq: Long, maxSeq: Long, minVersion: Long, rows: Long)
+
+  /** One committed data file of the file index (its footer and bloom
+    * filters live with `file`), with its [[FileStats]]: known when an
+    * append or a rollover writes the file, else read from its footer on
+    * first use.
+    */
+  private final class DataFile(val file: HeadProbe.File, known: => FileStats) {
+    lazy val stats: FileStats = known
+    def path: java.nio.file.Path = java.nio.file.Paths.get(file.path)
     def minOf(key: String): Long = key match {
-      case "partition_sequence" => minSeq
-      case "stream_version"     => minVersion
+      case "partition_sequence" => stats.minSeq
+      case "stream_version"     => stats.minVersion
     }
+  }
+
+  private object DataFile {
+    /** a listed file, its stats read from its footer when first needed;
+      * both writers keep int64 statistics (README "Storage model")
+      */
+    def listed(f: HeadProbe.File): DataFile = new DataFile(f, {
+      def range(c: String) = f.longRange(c).getOrElse(
+        throw new IllegalStateException(s"$f has no $c statistics"))
+      val (lo, hi) = range("partition_sequence")
+      FileStats(lo, hi, f.longRange("stream_version").fold(Long.MinValue)(_._1), f.rows)
+    })
+  }
+
+  /** Files a rollover merges into one: [[RolloverFanIn]] adjacent files
+    * of one size tier (⌊log16 rows⌋).
+    */
+  private val RolloverFanIn = 16
+
+  /** Files of this tier or above (4,096 rows or more) are sealed: no
+    * rollover reads them, so one merge reads at most 16 × 4,095 rows.
+    * Larger files come from `ingest` and `compact()`.
+    */
+  private val SealedTier = 3
+
+  private def tier(rows: Long): Int =
+    if (rows < RolloverFanIn) 0 else 1 + tier(rows / RolloverFanIn)
+
+  /** The oldest [[RolloverFanIn]] files of the oldest run of that many
+    * sequence-adjacent files of one unsealed tier among `files`; empty
+    * when no tier has such a run.
+    */
+  private def fullRun(files: Vector[DataFile]): Vector[DataFile] = {
+    val tiered = files.sortBy(_.stats.minSeq).map(f => f -> tier(f.stats.rows))
+    Iterator.unfold(tiered)(rest => rest.headOption.map { case (_, t) => rest.span(_._2 == t) })
+      .find(run => run.sizeIs >= RolloverFanIn && run.head._2 < SealedTier)
+      .fold(Vector.empty[DataFile])(_.take(RolloverFanIn).map(_._1))
+  }
+
+  /** The one thread that merges runs for every store of this JVM,
+    * started by the first append that fills a run.
+    */
+  private[api] lazy val rolloverWorker: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newSingleThreadExecutor { r =>
+      val t = new Thread(r, "graft-rollover")
+      t.setDaemon(true)
+      t
+    }
+
+  /** Per store root (normalized): the generation of its newest handle and
+    * the merges running for it. A merge runs only for the newest handle
+    * of its root, and opening a root waits for running merges, so a
+    * superseded handle never swaps files under a newer one's index.
+    */
+  private final class RootMerges(var generation: Long, var running: Int)
+  private val rootMerges = collection.mutable.Map.empty[String, RootMerges]
+
+  /** A new handle's generation on `root`, once no merge of an older
+    * handle is running there.
+    */
+  private def claimRoot(root: String): Long = rootMerges.synchronized {
+    val r = rootMerges.getOrElseUpdate(normalizePath(root), new RootMerges(0L, 0))
+    r.generation += 1
+    val deadline = System.nanoTime() + 60L * 1000000000L
+    while (r.running > 0) {
+      val left = (deadline - System.nanoTime()) / 1000000L
+      if (left <= 0) throw new IllegalStateException(
+        s"a rollover of $root is still running after 60 s")
+      rootMerges.wait(left)
+    }
+    r.generation
+  }
+
+  /** Whether generation `gen` may merge on `root` (and the merge now
+    * counts as running); pair with [[endMerge]].
+    */
+  private def startMerge(root: String, gen: Long): Boolean = rootMerges.synchronized {
+    val r = rootMerges(normalizePath(root))
+    (r.generation == gen) && { r.running += 1; true }
+  }
+
+  private def endMerge(root: String): Unit = rootMerges.synchronized {
+    rootMerges(normalizePath(root)).running -= 1
+    rootMerges.notifyAll()
   }
 
   /** The parquet head layers of one manifest state, newest first: each
@@ -1324,6 +1587,12 @@ object EventStore {
     */
   private[api] val InflightPrefix = ".inflight-"
 
+  /** Rename a hidden in-flight file to its visible name. */
+  private def publish(tmp: java.nio.file.Path): java.nio.file.Path = {
+    val dst = tmp.resolveSibling(tmp.getFileName.toString.stripPrefix(InflightPrefix))
+    java.nio.file.Files.move(tmp, dst, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
   /** An event file's columns exactly as Spark writes a dataset of
     * [[graft.core.Event]] partitioned by `partition_id`: the encoder's
     * types and nullability (strings and binaries optional, longs
@@ -1340,6 +1609,22 @@ object EventStore {
   private val fileMetadata = java.util.Map.of(
     "org.apache.spark.version", org.apache.spark.SPARK_VERSION_SHORT,
     "org.apache.spark.sql.parquet.row.metadata", fileSchema.json)
+
+  /** A stored record, from a file of either writer, as a record of
+    * [[fileParquetSchema]].
+    */
+  private def copyGroup(src: Group): Group = {
+    val g = new SimpleGroup(fileParquetSchema)
+    (0 until fileParquetSchema.getFieldCount).foreach { i =>
+      val name = fileParquetSchema.getFieldName(i)
+      if (src.getFieldRepetitionCount(name) > 0)
+        fileParquetSchema.getType(i).asPrimitiveType.getPrimitiveTypeName match {
+          case PrimitiveTypeName.INT64 => g.add(i, src.getLong(name, 0))
+          case _                       => g.add(i, src.getBinary(name, 0))
+        }
+    }
+    g
+  }
 
   private def toGroup(e: Event): Group = {
     val g = new SimpleGroup(fileParquetSchema)

@@ -93,6 +93,9 @@ object HeadProbe {
         Option(reader.getBloomFilterDataReader(b).readBloomFilter(b.getColumns.get(c)))
       })
 
+    /** the file's row count, from its footer */
+    def rows: Long = footer.getBlocks.asScala.map(_.getRowCount).sum
+
     /** (min, max) of an int64 column over the whole file, from footer
       * statistics alone; None when some row group carries no statistics.
       */

@@ -98,8 +98,10 @@ object SeqVectorOffset {
   *   - each task reads its files through [[HeadProbe.scan]] with the
   *     bounds `partition_sequence` in [start + 1, end], pruned by
   *     row-group statistics, and decodes records with the event store's
-  *     decoder. Readers run on executors, distributed like any batch
-  *     scan; nothing funnels through the driver.
+  *     decoder. A file a rollover or `compact()` replaced after planning
+  *     is found again by listing the partition anew
+  *     ([[GraftPartitionReader]]). Readers run on executors, distributed
+  *     like any batch scan; nothing funnels through the driver.
   */
 final class GraftEventMicroBatchStream(
     root: String,
@@ -181,15 +183,16 @@ final class GraftEventMicroBatchStream(
         if (hi <= lo) Nil
         else {
           val known = listed.getOrElse(pid, Map.empty)
-          val now = HeadProbe.listFiles(s"$root/events/partition_id=$pid")
+          val now = HeadProbe.listFiles(GraftEventSource.partitionDir(root, pid))
             .map(f => known.getOrElse(f.path, f))
           listed = listed.updated(pid, now.map(f => f.path -> f).toMap)
           // footer statistics drop every file wholly outside (lo, hi]
-          // before any task opens it
-          now.filter(_.longRange("partition_sequence")
-            .forall { case (min, max) => max > lo && min <= hi })
+          // before any task opens it, and every file that vanished
+          // before its footer was read
+          now.filter(f => GraftEventSource.seqRange(f)
+            .exists { case (min, max) => max > lo && min <= hi })
         }
-      Option.when(files.nonEmpty)(GraftFilePartition(pid, lo, hi, files))
+      Option.when(files.nonEmpty)(GraftFilePartition(root, pid, lo, hi, files))
     }.toArray
   }
 
@@ -206,16 +209,32 @@ final class GraftEventMicroBatchStream(
   * (lo, hi] sequence range — one task per partition, so a partition of
   * many small append files costs one task, not one per file.
   */
-final case class GraftFilePartition(pid: Int, lo: Long, hi: Long, files: Seq[HeadProbe.File])
-  extends InputPartition
+final case class GraftFilePartition(root: String, pid: Int, lo: Long, hi: Long,
+    files: Seq[HeadProbe.File]) extends InputPartition
 
 final class GraftReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftPartitionReader(partition.asInstanceOf[GraftFilePartition])
 }
 
-/** Reads a partition's (lo, hi] sequence range from its files, one file
-  * at a time, through [[HeadProbe.scan]]; the directory-derived
+/** A partition's events in (lo, hi] are not on disk: after
+  * [[GraftEventSource.MaxStaleRelists]] re-listings that found none of
+  * the missing sequences, the next one to deliver is `missing`.
+  */
+final class MissingEventsException(val pid: Int, val missing: Long, val hi: Long)
+  extends IllegalStateException(
+    s"partition $pid: events $missing..$hi of a committed range are on no listed file")
+
+/** Reads a partition's (lo, hi] sequence range from its files through
+  * [[HeadProbe.scan]], exactly once and in sequence order, while
+  * rollovers and `compact()` replace the files under it. The planned
+  * files are read in order of their lowest sequence (widest first on a
+  * tie, so a merged file comes before the inputs it replaced), skipping
+  * every row at or below the last sequence handed on. When a file has
+  * vanished, or the next file does not start at the next sequence, the
+  * partition directory is listed again and reading goes on from there:
+  * sequences up to the watermark are gapless, so the range is on disk.
+  * Re-listings that make no progress are bounded. The directory-derived
   * `partition_id` is attached by the event store's record decoder
   * (Hive-style layout keeps it out of the files). A file's share of the
   * range is decoded before its first row is handed on, so a task holds
@@ -224,22 +243,61 @@ final class GraftReaderFactory extends PartitionReaderFactory {
 final class GraftPartitionReader(p: GraftFilePartition)
   extends PartitionReader[InternalRow] {
 
-  private val range = Seq(HeadProbe.Between("partition_sequence", p.lo + 1, p.hi))
-  private val pending = p.files.iterator
+  private var last = p.lo // the highest sequence handed on
+  private var pending = ordered(p.files)
   private var rows: Iterator[Row] = Iterator.empty
   private var current: Row = _
+  private var relists = 0 // re-listings in a row that handed nothing on
+  private var lastAtRelist = p.lo
   private val toUnsafe = UnsafeProjection.create(EventSchema.schema)
+  private val seqField = EventSchema.schema.fieldIndex("partition_sequence")
+
+  /** files that may hold sequences above `last`, by lowest sequence */
+  private def ordered(files: Seq[HeadProbe.File]): List[(HeadProbe.File, Long, Long)] =
+    files.flatMap(f => GraftEventSource.seqRange(f).map { case (lo, hi) => (f, lo, hi) })
+      .filter { case (_, lo, hi) => hi > last && lo <= p.hi }
+      .sortBy { case (f, lo, hi) => (lo, -hi, f.path) }
+      .toList
+
+  private def relist(): Unit = {
+    relists = if (last > lastAtRelist) 1 else relists + 1
+    lastAtRelist = last
+    if (relists > GraftEventSource.MaxStaleRelists)
+      throw new MissingEventsException(p.pid, last + 1, p.hi)
+    if (relists > 1) Thread.sleep(10L * relists) // let a swap finish
+    pending = ordered(HeadProbe.listFiles(GraftEventSource.partitionDir(p.root, p.pid)))
+  }
+
+  /** the rows of `f` from `last + 1` on, up to the first gap; none when
+    * `f` is gone
+    */
+  private def read(f: HeadProbe.File): Vector[Row] = {
+    val out = Vector.newBuilder[Row]
+    var next = last + 1
+    try HeadProbe.scan(Seq(f), Seq(HeadProbe.Between("partition_sequence", next, p.hi))) { g =>
+      val ok = g.getLong("partition_sequence", 0) == next
+      if (ok) { out += EventStore.eventRow(p.pid, g); next += 1 }
+      ok
+    } catch {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException =>
+    }
+    out.result()
+  }
 
   override def next(): Boolean = {
-    while (!rows.hasNext && pending.hasNext) {
-      val out = Vector.newBuilder[Row]
-      HeadProbe.scan(Seq(pending.next()), range) { g =>
-        out += EventStore.eventRow(p.pid, g)
-        true
-      }
-      rows = out.result().iterator
+    // a file that is gone, or breaks off, leaves the next file short of
+    // `last + 1`: that re-lists
+    while (!rows.hasNext && last < p.hi) pending match {
+      case (f, lo, hi) :: rest if lo <= last + 1 =>
+        pending = rest
+        if (hi > last) rows = read(f).iterator
+      case _ => relist()
     }
-    rows.hasNext && { current = rows.next(); true }
+    rows.hasNext && {
+      current = rows.next()
+      last = current.getLong(seqField)
+      true
+    }
   }
 
   override def get(): InternalRow =
@@ -249,6 +307,24 @@ final class GraftPartitionReader(p: GraftFilePartition)
     }))
 
   override def close(): Unit = ()
+}
+
+object GraftEventSource {
+  /** re-listings in a row that find none of a range's missing events
+    * before a reader gives up
+    */
+  val MaxStaleRelists = 5
+
+  def partitionDir(root: String, pid: Int): String = s"$root/events/partition_id=$pid"
+
+  /** a file's (min, max) `partition_sequence` from its footer; None when
+    * the file vanished before its footer was read
+    */
+  def seqRange(f: HeadProbe.File): Option[(Long, Long)] =
+    try f.longRange("partition_sequence")
+    catch {
+      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => None
+    }
 }
 
 /** `spark.readStream.format(classOf[GraftEventSourceProvider].getName)

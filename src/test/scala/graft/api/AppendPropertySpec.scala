@@ -12,7 +12,8 @@ import org.scalatest.BeforeAndAfterAll
   * reference's proptest suite (`writer_thread_pool.rs:1560-1830`):
   * random batches of events with random expected versions are applied
   * both to the store and to a trivial in-memory model; outcomes and
-  * head states must agree, and sequences must stay gapless. A
+  * head states must agree, sequences must stay gapless and rollovers
+  * must keep the files per partition bounded. A
   * differential test runs each random batch through `appendMany` on
   * one store and one `append` per event on a twin: both must answer
   * alike. Plus a multi-threaded append race: the per-store lock must
@@ -49,11 +50,14 @@ class AppendPropertySpec extends AnyFunSuite with BeforeAndAfterAll
     } yield EventInput(sid, "PropEvt", expectedVersion = ev)))
 
   test("random append batches agree with the in-memory model") {
+    // two partitions and 600 batches: each partition gets hundreds of
+    // files, so rollovers merge runs of append files and runs of merged
+    // files while the model checks go on
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-prop-").toString, 8)
+      spark, Files.createTempDirectory("graft-prop-").toString, 2)
     val model = collection.mutable.Map.empty[String, Long] // head versions
 
-    forAllSampled(genBatch, runs = 40) { batch =>
+    forAllSampled(genBatch, runs = 600) { batch =>
       val results = es.appendMany(batch)
       // apply the same semantics to the model
       results.zip(batch).foreach { case (r, in) =>
@@ -73,6 +77,15 @@ class AppendPropertySpec extends AnyFunSuite with BeforeAndAfterAll
         assert(es.sver(sid) == model.get(sid))
       }
     }
+
+    // files per partition stay within 15 per size tier once the merges
+    // have run (no ingest or compact() files here)
+    es.awaitRollover()
+    val events = (0 until 2).map(p => es.pseq(p).fold(0L)(_ + 1))
+    val tiers = Iterator.iterate(events.max)(_ / 16).takeWhile(_ >= 16).size
+    assert(tiers >= 2, s"$events events per partition cross fewer than two tiers")
+    assert(es.storeInfo("max_partition_files").asInstanceOf[Long] <= 15L * (tiers + 1))
+    assert(es.storeInfo("rollovers").asInstanceOf[Long] > 16)
 
     // final global invariant: gapless per-partition sequences
     import org.apache.spark.sql.functions._

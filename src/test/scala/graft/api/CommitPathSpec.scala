@@ -210,6 +210,75 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
     }
   }
 
+  test("a crash inside a rollover swap reopens to the log as it was") {
+    import java.nio.file.{Path, Paths}
+    val dir = Files.createTempDirectory("graft-roll-crash-").toString
+    val es = EventStore.open(spark, dir, 1)
+    val pdir = Paths.get(dir, "events", "partition_id=0")
+    def dataFiles(d: Path) = Fs.list(d).filter(_.getFileName.toString.endsWith(".parquet"))
+    // 15 files of one and two events: one short of a full run
+    (0 until 13).foreach(i => assert(es.append(in(streams(i % 5))).isRight))
+    (0 until 2).foreach(i => assert(es.mappend(Ids.partitionKeyForStream("p-0"),
+      Seq(in("p-5", s"T$i"), in("p-6", s"T$i"))).isRight))
+    // hold the worker: the tree with all 16 inputs of the run on disk
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    EventStore.rolloverWorker.execute(() => gate.await())
+    assert(es.append(in("p-1")).isRight)
+    val preSwap = Files.createTempDirectory("graft-roll-pre-").resolve("store")
+    copyTree(Paths.get(dir), preSwap)
+    gate.countDown()
+    es.awaitRollover()
+    assert(es.storeInfo("rollovers") == 1L && es.storeInfo("rolled_files") == 16L)
+    val Seq(merged) = dataFiles(pdir)
+    val inputs = dataFiles(preSwap.resolve("events/partition_id=0")).sortBy(_.getFileName.toString)
+    assert(inputs.size == 16)
+
+    def rows(e: EventStore) = norm(e.events()
+      .orderBy("partition_id", "partition_sequence").collect().toSeq)
+    val expectedRows = rows(es)
+    val expected = answers(es)
+    val wm = es.manifest.watermark(0)
+    val head = es.sver("p-1").get
+
+    // the states a crash can leave: the merged file still hidden, the
+    // merged file renamed in next to all its inputs, or next to half
+    val crashes: Seq[(String, Path => Unit, Int)] = Seq(
+      ("merged file still hidden", (p: Path) =>
+        Files.copy(merged, p.resolve(EventStore.InflightPrefix + merged.getFileName)), 16),
+      ("merged file next to all inputs", (p: Path) =>
+        Files.copy(merged, p.resolve(merged.getFileName)), 1),
+      ("merged file next to half the inputs", { (p: Path) =>
+        Files.copy(merged, p.resolve(merged.getFileName))
+        inputs.take(8).foreach(f => Files.delete(p.resolve(f.getFileName)))
+      }, 1))
+    crashes.foreach { case (crash, step, filesLeft) =>
+      val copy = Files.createTempDirectory("graft-roll-state-").resolve("store")
+      copyTree(preSwap, copy)
+      step(copy.resolve("events/partition_id=0"))
+      val reopened = EventStore.open(spark, copy.toString, 1)
+      val left = Fs.list(copy.resolve("events/partition_id=0")).map(_.getFileName.toString)
+      assert(left.size == filesLeft && !left.exists(_.startsWith(".")), crash)
+      assert(rows(reopened) == expectedRows, crash)
+      assert(answers(reopened) == expected, crash)
+      val r = reopened.append(in("p-1")).toOption.get
+      assert(r.partitionSequence == wm + 1 && r.streamVersion == head + 1, crash)
+      assertGapless(reopened)
+    }
+
+    // a file whose range partly overlaps another's is never written: a
+    // planted one fails the open with the typed error
+    (0 until 3).foreach(i => assert(es.append(in(streams(i))).isRight))
+    val spill = Files.createTempDirectory("graft-roll-overlap-").resolve("rows").toString
+    es.events().where(col("partition_sequence").between(10, 19)).drop("partition_id")
+      .coalesce(1).write.parquet(spill)
+    val planted = Files.createTempDirectory("graft-roll-planted-").resolve("store")
+    copyTree(Paths.get(dir), planted)
+    dataFiles(Paths.get(spill)).foreach(f =>
+      Files.copy(f, planted.resolve("events/partition_id=0").resolve(f.getFileName)))
+    val err = intercept[OverlappingFilesException](EventStore.open(spark, planted.toString, 1))
+    assert(err.partition == 0)
+  }
+
   // ---- property: every write path, interleaved
 
   private sealed trait Op

@@ -337,7 +337,9 @@ class RespServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       l <- Seq("validate", "write", "commit"); q <- Seq("p50", "p99")
     } yield s"append_${l}_${q}_ms"
     assert(info.keySet == Set("manifest_version", "delta_chain", "data_files",
-      "inline_heads", "head_layers", "appends_sampled") ++ layers)
+      "max_partition_files", "inline_heads", "head_layers", "appends_sampled",
+      "rollovers", "rolled_files", "rollover_failures", "rollover_p50_ms",
+      "rollover_p99_ms") ++ layers)
     assert(info("manifest_version") == Num(es.manifest.version))
     assert(info("inline_heads") == Num(es.manifest.streamHeads.size.toLong))
     assert(info("head_layers") == Num(0))
@@ -350,6 +352,24 @@ class RespServerSpec extends AnyFunSuite with BeforeAndAfterAll {
         ms(s"append_${l}_p50_ms") <= ms(s"append_${l}_p99_ms"))
     }
     assert(ms("append_write_p99_ms") > 0.0 && ms("append_commit_p99_ms") > 0.0)
+    assert(n("max_partition_files") >= 1 && n("max_partition_files") <= n("data_files"))
+
+    // one-event appends to one stream fill its partition's first tier:
+    // the counters move once the worker has swapped the run in
+    val before = n("rollovers")
+    (1 to 16).foreach(i => asMap(c.call("EAPPEND", "store-s", s"R$i")))
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    def rolled() = asMap(c.call("INFO", "STORE"))
+    var after = rolled()
+    while (after("rollovers").asInstanceOf[Num].v == before && System.nanoTime() < deadline) {
+      Thread.sleep(20); after = rolled()
+    }
+    val m = (k: String) => after(k).asInstanceOf[Num].v
+    val mms = (k: String) => after(k).asInstanceOf[Dbl].v
+    assert(m("rollovers") > before)
+    assert(m("rolled_files") == 16 * m("rollovers"))
+    assert(m("rollover_failures") == 0)
+    assert(0.0 < mms("rollover_p50_ms") && mms("rollover_p50_ms") <= mms("rollover_p99_ms"))
     // INFO CACHE keeps the reference key set
     assert(asMap(c.call("INFO", "CACHE")).keySet == Set("hits", "misses", "hit_ratio",
       "entries", "memory_bytes", "max_bytes", "block_size_bytes", "evictions"))

@@ -110,4 +110,61 @@ class GraftEventSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.size.toLong == wm(keep) + 1)
     assert(rows.forall(_._1 == keep))
   }
+
+  /** 15 one-event files in partition 0 of a one-partition store, then
+    * the 16th append, whose file fills the run; returns once the merged
+    * file has replaced the run (the run's files are those `before` sees)
+    */
+  private def fillRun(es: EventStore, before: () => Unit): Unit = {
+    (0 until 15).foreach(_ => es.append(EventInput("roll", "E")))
+    before()
+    es.append(EventInput("roll", "E"))
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (es.storeInfo("rollovers") != 1L && System.nanoTime() < deadline) Thread.sleep(5)
+    assert(es.storeInfo("rollovers") == 1L && es.storeInfo("data_files") == 1L)
+  }
+
+  private def dataFiles(dir: java.nio.file.Path) =
+    graft.core.Fs.list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
+
+  test("a planned file that a rollover deleted before its task ran still yields exactly (lo, hi]") {
+    val dir = Files.createTempDirectory("graft-src-roll-").toString
+    val es = EventStore.open(spark, dir, 1)
+    val stream = new GraftEventMicroBatchStream(dir, None, None)
+    var planned: GraftFilePartition = null
+    var reader: org.apache.spark.sql.connector.read.PartitionReader[
+      org.apache.spark.sql.catalyst.InternalRow] = null
+    val got = Seq.newBuilder[Long]
+    // the task hands on its first event, then the run it planned over
+    // is merged away under it
+    fillRun(es, before = { () =>
+      val Array(ip) = stream.planInputPartitions(
+        SeqVectorOffset(Map(0 -> 2L)), SeqVectorOffset(Map(0 -> 14L)))
+      planned = ip.asInstanceOf[GraftFilePartition]
+      reader = stream.createReaderFactory().createReader(ip)
+      assert(reader.next())
+      got += reader.get().getLong(4)
+    })
+    assert(planned.files.size == 12)
+    assert(planned.files.forall(f => !Files.exists(java.nio.file.Paths.get(f.path))))
+    while (reader.next()) got += reader.get().getLong(4)
+    assert(got.result() == (3L to 14L))
+  }
+
+  test("a listing that holds a merged file and its inputs delivers each event once") {
+    val dir = Files.createTempDirectory("graft-src-both-").toString
+    val es = EventStore.open(spark, dir, 1)
+    val pdir = java.nio.file.Paths.get(dir, "events", "partition_id=0")
+    val side = Files.createTempDirectory("graft-src-inputs-")
+    // keep copies of 15 of the run's inputs, then put them back next to
+    // the merged file: the state a listing sees mid-swap or after a crash
+    fillRun(es, before = () => dataFiles(pdir).foreach(f => Files.copy(f, side.resolve(f.getFileName))))
+    dataFiles(side).foreach(f => Files.copy(f, pdir.resolve(f.getFileName)))
+    assert(dataFiles(pdir).size == 16)
+
+    val stream = new GraftEventMicroBatchStream(dir, None, None)
+    val end = stream.latestOffset(stream.initialOffset(), ReadLimit.allAvailable())
+    assert(readRange(stream, stream.initialOffset(), end) == (0L to 15L).map(0 -> _))
+    assert(readRange(stream, SeqVectorOffset(Map(0 -> 6L)), end) == (7L to 15L).map(0 -> _))
+  }
 }

@@ -274,4 +274,26 @@ class SubscriptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.nonEmpty)
     assert(got.forall(e => Ids.partitionIdForStream(e._1, 8) == pid))
   }
+
+  test("catch-up while rollovers replace the partition's files delivers each event once, in order") {
+    val es = freshStore()
+    (0 until 300).foreach(i => es.append(in("roll", s"e$i")))
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
+    val sub = subscribe(es, Matcher(streams = Seq("roll")), From.Value(0), window = 40)
+    val q = deliver(sub, Files.createTempDirectory("graft-roll-ck-").toString,
+      byStream = true)(rows => rows.foreach(r =>
+        got.add((r.getAs[Long]("stream_version"), r.getAs[String]("event_name")))))
+    // appends go on during the catch-up: each 16th fills a run, and the
+    // worker swaps merged files in under the micro-batches' readers
+    val appender = new Thread(() => (300 until 500).foreach(i => es.append(in("roll", s"e$i"))))
+    try {
+      appender.start()
+      q.processAllAvailable()
+      appender.join()
+      q.processAllAvailable()
+    } finally q.stop()
+    import scala.jdk.CollectionConverters._
+    assert(got.asScala.toSeq == (0 until 500).map(i => (i.toLong, s"e$i")))
+    assert(es.storeInfo("rollovers").asInstanceOf[Long] >= 20)
+  }
 }
