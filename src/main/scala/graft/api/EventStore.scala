@@ -289,8 +289,10 @@ final class EventStore private (
     }
     try {
       val tmp =
-        try writeHidden(dir, run.map(_.stats.rows).sum)(put =>
-          HeadProbe.scan(run.map(_.file), Nil) { g => put(EventStore.copyGroup(g)); true })
+        try writeHidden(dir, run.map(_.stats.rows).sum)(put => run.foreach { f =>
+          if (f.events.nonEmpty) f.events.foreach(e => put(EventStore.toGroup(e)))
+          else HeadProbe.scan(Seq(f.file), Nil) { g => put(EventStore.copyGroup(g)); true }
+        })
         catch {
           case _: Exception =>
             if (lock.synchronized(current)) rolloverFailures.incrementAndGet()
@@ -1183,7 +1185,8 @@ final class EventStore private (
       written += dst
       pid -> new DataFile(new HeadProbe.File(dst.toString),
         FileStats(sorted.head.partition_sequence, sorted.last.partition_sequence,
-          prs.map(_.stream_version).min, prs.size.toLong))
+          prs.map(_.stream_version).min, prs.size.toLong),
+        if (EventStore.tier(prs.size.toLong) == 0) sorted else Nil)
     } catch {
       case e: Throwable =>
         written.foreach(java.nio.file.Files.deleteIfExists)
@@ -1315,9 +1318,11 @@ object EventStore {
   /** One committed data file of the file index (its footer and bloom
     * filters live with `file`), with its [[FileStats]]: known when an
     * append or a rollover writes the file, else read from its footer on
-    * first use.
+    * first use. A tier-0 file this handle appended keeps its `events`,
+    * so the rollover that merges it need not read it back.
     */
-  private final class DataFile(val file: HeadProbe.File, known: => FileStats) {
+  private final class DataFile(val file: HeadProbe.File, known: => FileStats,
+      val events: Seq[Event] = Nil) {
     lazy val stats: FileStats = known
     def path: java.nio.file.Path = java.nio.file.Paths.get(file.path)
     def minOf(key: String): Long = key match {

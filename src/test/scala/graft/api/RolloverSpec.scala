@@ -141,13 +141,18 @@ class RolloverSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("graft-roll-bulk-").toString
     val es = EventStore.open(spark, dir, 1)
     def files() = es.storeInfo("data_files").asInstanceOf[Long]
-    def idle() = es.rolloverRequests.get() == 0 && es.storeInfo("rollovers") == 0L
+    def requests() = es.rolloverRequests.get()
+    def rows() = es.events().orderBy("partition_sequence").collect().toSeq
+      .map(r => EventSchema.columnNames.map(r.getAs[Any](_)).map {
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      })
     val schema = StructType(Seq(StructField("stream_id", StringType),
       StructField("event_name", StringType), StructField("ord", LongType)))
     // one-row ingests: each leaves one file, together a full run of tier 0
     (0 until 16).foreach(i =>
       es.ingest(spark.createDataFrame(Seq(Row(s"b-${i % 3}", "I", i.toLong)).asJava, schema), "ord"))
-    assert(files() == 16 && idle())
+    assert(files() == 16 && requests() == 0)
 
     val src = Files.createTempDirectory("graft-roll-src-").toString
     (0 until 3).foreach(i => Seq((s"b-$i", "S", i.toLong)).toDF("stream_id", "event_name", "ord")
@@ -155,18 +160,19 @@ class RolloverSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = es.ingestStream(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
       .parquet(src), "ord", Files.createTempDirectory("graft-roll-ck-").toString)
     try q.processAllAvailable() finally q.stop()
-    assert(files() == 19 && idle())
+    assert(files() == 19 && requests() == 0)
+
+    // the first append finds the full run and requests it: the merge
+    // reads back the files Spark wrote
+    val ingested = rows()
+    assert(es.append(EventInput("b-1", "E")).isRight)
+    assert(requests() == 1)
+    es.awaitRollover()
+    assert(es.storeInfo("rollovers") == 1L && files() == 5)
+    assert(rows().init == ingested && rows().size == 20)
 
     es.compact()
-    assert(files() == 1 && idle())
-
-    // appends request a merge once their files fill a run
-    (0 until 15).foreach(_ => assert(es.append(EventInput("b-1", "E")).isRight))
-    assert(idle())
-    assert(es.append(EventInput("b-1", "E")).isRight)
-    assert(es.rolloverRequests.get() == 1)
-    es.awaitRollover()
-    assert(es.storeInfo("rollovers") == 1L && files() == 2)
-    assert(es.events().count() == 35)
+    assert(files() == 1 && requests() == 1)
+    assert(rows().init == ingested)
   }
 }
