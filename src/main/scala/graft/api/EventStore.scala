@@ -235,41 +235,43 @@ final class EventStore private (
     * [[recoverOrphans]] tells them apart after a crash.
     */
 
-  /** partitions with a merge queued or running (under `lock`) */
+  /** partitions with a merge queued or running (under `lock`, which the
+    * worker notifies when a merge ends)
+    */
   private val rolling = collection.mutable.Set.empty[Int]
+  /** merges this handle has queued on the worker (under `lock`) */
+  private[api] var rolloversQueued = 0L
   private val rolloverTimes = new EventStore.LayerTimes(1024, 1)
   private val rollovers = new java.util.concurrent.atomic.AtomicLong
   private val rolledFiles = new java.util.concurrent.atomic.AtomicLong
   private val rolloverFailures = new java.util.concurrent.atomic.AtomicLong
-  /** merges this handle has queued on the worker */
-  private[api] val rolloverRequests = new java.util.concurrent.atomic.AtomicLong
-  private var generation = 0L
 
-  /** Under the lock, after a commit: queue partition `pid` on the worker
-    * if its files hold a full run and no merge of it is queued.
+  /** Under the lock, after a commit or a swap: queue partition `pid` on
+    * the worker if its files hold a full run and no merge of it is
+    * queued.
     */
   private def requestRollover(pid: Int): Unit =
-    if (!rolling(pid) && EventStore.fullRun(snap.files.getOrElse(pid, Vector.empty)).nonEmpty) {
+    if (!rolling(pid) && EventStore.fullRuns(snap.files.getOrElse(pid, Vector.empty)).nonEmpty) {
       rolling += pid
-      rolloverRequests.incrementAndGet()
+      rolloversQueued += 1
       EventStore.rolloverWorker.execute(() => rollOver(pid))
     }
 
-  /** On the worker: merge `pid`'s full runs, one after another, until
-    * none is left or a merge does not swap.
+  /** On the worker: merge `pid`'s oldest full run; after a swap, queue
+    * the partition again if a run is left (the merged file may have
+    * filled the next tier's). The run is picked from the published
+    * snapshot without the lock: the swap checks it again under the lock.
     */
   private def rollOver(pid: Int): Unit = {
-    // cleared under the lock of the check that found no run: an append
-    // that fills a run after it queues a merge of its own
-    def next() = lock.synchronized {
-      val run = EventStore.fullRun(snap.files.getOrElse(pid, Vector.empty))
-      if (run.isEmpty) rolling -= pid
-      run
-    }
+    var swapped = false
     try {
-      var run = next()
-      while (run.nonEmpty) run = if (merge(pid, run)) next() else Vector.empty
-    } finally lock.synchronized(rolling -= pid)
+      val run = EventStore.fullRuns(snap.files.getOrElse(pid, Vector.empty)).nextOption()
+      swapped = run.exists(merge(pid, _))
+    } finally lock.synchronized {
+      rolling -= pid
+      if (swapped) requestRollover(pid)
+      lock.notifyAll()
+    }
   }
 
   /** Merge `run` into one hidden file, then swap it in under the lock.
@@ -280,7 +282,7 @@ final class EventStore private (
     * Returns whether the swap happened.
     */
   private def merge(pid: Int, run: Vector[DataFile]): Boolean = {
-    if (!EventStore.startMerge(root, generation)) return false
+    if (!EventStore.startMerge(this)) return false
     val t0 = System.nanoTime()
     val dir = java.nio.file.Paths.get(eventsDir, s"partition_id=$pid")
     def current = {
@@ -289,10 +291,8 @@ final class EventStore private (
     }
     try {
       val tmp =
-        try writeHidden(dir, run.map(_.stats.rows).sum)(put => run.foreach { f =>
-          if (f.events.nonEmpty) f.events.foreach(e => put(EventStore.toGroup(e)))
-          else HeadProbe.scan(Seq(f.file), Nil) { g => put(EventStore.copyGroup(g)); true }
-        })
+        try writeHidden(dir, run.map(_.stats.rows).sum)(put =>
+          HeadProbe.scan(run.map(_.file), Nil) { g => put(EventStore.copyGroup(g)); true })
         catch {
           case _: Exception =>
             if (lock.synchronized(current)) rolloverFailures.incrementAndGet()
@@ -321,14 +321,18 @@ final class EventStore private (
     } finally EventStore.endMerge(root)
   }
 
-  /** Wait until no merge of this handle is queued or running. */
-  private[api] def awaitRollover(): Unit = {
-    val deadline = System.nanoTime() + 60L * 1000000000L
-    while (lock.synchronized(rolling.nonEmpty)) {
-      if (System.nanoTime() > deadline)
-        throw new IllegalStateException(s"rollover of $root still running after 60 s")
-      Thread.sleep(2)
+  /** Wait until no merge of this handle is queued or running or, with
+    * `all` false, until every run that was full at the call has been
+    * merged or its partition's merges have stopped (a merge that failed
+    * or did not swap): runs that fill later are not waited for.
+    */
+  private[api] def awaitRollover(all: Boolean = true): Unit = lock.synchronized {
+    val pending = rolling.toSeq.flatMap(pid =>
+      EventStore.fullRuns(snap.files.getOrElse(pid, Vector.empty)).flatten.map(f => pid -> f.file.path))
+    def merging = pending.exists { case (pid, path) =>
+      rolling(pid) && snap.files.getOrElse(pid, Vector.empty).exists(_.file.path == path)
     }
+    while (if (all) rolling.nonEmpty else merging) lock.wait()
   }
 
   /** Compaction: rewrite each partition directory into one
@@ -838,14 +842,15 @@ final class EventStore private (
     * swap the way it sees `compact()`'s: a job whose listing raced a
     * swap may fail on a file deleted after it was listed, or, if it
     * listed the instant between the merged file's rename and its
-    * inputs' deletion, count their rows twice. It first waits out the
-    * merges this handle has queued, so a caller that has stopped
-    * appending scans a directory that holds still. The command reads
-    * and the streaming source are not exposed; no server command uses
-    * this.
+    * inputs' deletion, count their rows twice. It first waits until the
+    * runs that were full when it was called are merged (not for runs
+    * that fill later), so a caller that has stopped appending scans a
+    * directory that holds still unless a merge filled the next tier.
+    * The command reads and the streaming source are not exposed; no
+    * server command uses this.
     */
   def events(): DataFrame = {
-    awaitRollover()
+    awaitRollover(all = false)
     val snap = state
     if (snap.watermarks.isEmpty)
       return spark.createDataFrame(
@@ -1185,8 +1190,7 @@ final class EventStore private (
       written += dst
       pid -> new DataFile(new HeadProbe.File(dst.toString),
         FileStats(sorted.head.partition_sequence, sorted.last.partition_sequence,
-          prs.map(_.stream_version).min, prs.size.toLong),
-        if (EventStore.tier(prs.size.toLong) == 0) sorted else Nil)
+          prs.map(_.stream_version).min, prs.size.toLong))
     } catch {
       case e: Throwable =>
         written.foreach(java.nio.file.Files.deleteIfExists)
@@ -1198,14 +1202,21 @@ final class EventStore private (
     * puts `rows` records, sorted by `partition_sequence`, into a new
     * file of partition directory `dir` in the layout Spark's own writer
     * produces (see [[EventStore.fileSchema]]) — zstd, `event_id` and
-    * `stream_id` bloom filters sized to the file's rows. The file keeps
+    * `stream_id` bloom filters sized to the file's rows. A tier-0 file
+    * (under 16 rows: an append's, until a rollover merges it) is left
+    * uncompressed: zstd saves nothing on a page of a few rows, and its
+    * per-column compressor streams cost about a quarter of a one-event
+    * append's file write. The file keeps
     * a hidden in-flight name, which every listing skips, until
     * [[EventStore.publish]]; it is deleted if the write fails. Appends
     * and rollovers write through here.
     */
   private def writeHidden(dir: java.nio.file.Path, rows: Long)(
       feed: (Group => Unit) => Unit): java.nio.file.Path = {
-    val tmp = dir.resolve(s"${EventStore.InflightPrefix}part-${UUID.randomUUID()}.zstd.parquet")
+    val codec =
+      if (EventStore.tier(rows) == 0) CompressionCodecName.UNCOMPRESSED else CompressionCodecName.ZSTD
+    val tmp = dir.resolve(
+      s"${EventStore.InflightPrefix}part-${UUID.randomUUID()}${codec.getExtension}.parquet")
     try {
       // a plain local file, like the manifest: Hadoop's local
       // filesystem would fork a `chmod` per create (~7 ms on a 4-core
@@ -1214,7 +1225,7 @@ final class EventStore private (
         .withConf(writerConf)
         .withType(EventStore.fileParquetSchema)
         .withExtraMetaData(EventStore.fileMetadata)
-        .withCompressionCodec(CompressionCodecName.ZSTD)
+        .withCompressionCodec(codec)
         .withBloomFilterEnabled("event_id", true)
         .withBloomFilterNDV("event_id", rows)
         .withBloomFilterEnabled("stream_id", true)
@@ -1269,11 +1280,10 @@ object EventStore {
     // commit must be a checkpoint, not a delta over it
     val es = new EventStore(spark, root, st.numPartitions.max(1), st,
       if (st eq loaded) chain else -1, strictVersioning, maxInlineHeads)
-    es.generation = claimRoot(root)
+    claimRoot(es)
     recoverCompaction(root)
     es.recoverOrphans()
     es.recoverOrphanHeads()
-    register(es)
     es
   }
 
@@ -1318,11 +1328,9 @@ object EventStore {
   /** One committed data file of the file index (its footer and bloom
     * filters live with `file`), with its [[FileStats]]: known when an
     * append or a rollover writes the file, else read from its footer on
-    * first use. A tier-0 file this handle appended keeps its `events`,
-    * so the rollover that merges it need not read it back.
+    * first use.
     */
-  private final class DataFile(val file: HeadProbe.File, known: => FileStats,
-      val events: Seq[Event] = Nil) {
+  private final class DataFile(val file: HeadProbe.File, known: => FileStats) {
     lazy val stats: FileStats = known
     def path: java.nio.file.Path = java.nio.file.Paths.get(file.path)
     def minOf(key: String): Long = key match {
@@ -1357,15 +1365,14 @@ object EventStore {
   private def tier(rows: Long): Int =
     if (rows < RolloverFanIn) 0 else 1 + tier(rows / RolloverFanIn)
 
-  /** The oldest [[RolloverFanIn]] files of the oldest run of that many
-    * sequence-adjacent files of one unsealed tier among `files`; empty
-    * when no tier has such a run.
+  /** Every full run among `files`, oldest first: [[RolloverFanIn]]
+    * sequence-adjacent files of one unsealed tier.
     */
-  private def fullRun(files: Vector[DataFile]): Vector[DataFile] = {
+  private def fullRuns(files: Vector[DataFile]): Iterator[Vector[DataFile]] = {
     val tiered = files.sortBy(_.stats.minSeq).map(f => f -> tier(f.stats.rows))
     Iterator.unfold(tiered)(rest => rest.headOption.map { case (_, t) => rest.span(_._2 == t) })
-      .find(run => run.sizeIs >= RolloverFanIn && run.head._2 < SealedTier)
-      .fold(Vector.empty[DataFile])(_.take(RolloverFanIn).map(_._1))
+      .filter(_.head._2 < SealedTier)
+      .flatMap(_.map(_._1).grouped(RolloverFanIn).filter(_.sizeIs == RolloverFanIn))
   }
 
   /** The one thread that merges runs for every store of this JVM,
@@ -1378,41 +1385,42 @@ object EventStore {
       t
     }
 
-  /** Per store root (normalized): the generation of its newest handle and
-    * the merges running for it. A merge runs only for the newest handle
-    * of its root, and opening a root waits for running merges, so a
-    * superseded handle never swaps files under a newer one's index.
+  /** Merges running per store root (its registry key). A merge runs only
+    * for the handle the registry holds for its root, and opening a root
+    * waits for the merges running there, so a superseded handle never
+    * swaps files under a newer one's index.
     */
-  private final class RootMerges(var generation: Long, var running: Int)
-  private val rootMerges = collection.mutable.Map.empty[String, RootMerges]
+  private val runningMerges = collection.mutable.Map.empty[String, Int]
 
-  /** A new handle's generation on `root`, once no merge of an older
-    * handle is running there.
+  /** Register `es` as its root's handle, then wait until no merge of an
+    * older handle runs there.
     */
-  private def claimRoot(root: String): Long = rootMerges.synchronized {
-    val r = rootMerges.getOrElseUpdate(normalizePath(root), new RootMerges(0L, 0))
-    r.generation += 1
+  private def claimRoot(es: EventStore): Unit = runningMerges.synchronized {
+    register(es)
     val deadline = System.nanoTime() + 60L * 1000000000L
-    while (r.running > 0) {
+    while (runningMerges.contains(registryKey(es.root))) {
       val left = (deadline - System.nanoTime()) / 1000000L
       if (left <= 0) throw new IllegalStateException(
-        s"a rollover of $root is still running after 60 s")
-      rootMerges.wait(left)
+        s"a rollover of ${es.root} is still running after 60 s")
+      runningMerges.wait(left)
     }
-    r.generation
   }
 
-  /** Whether generation `gen` may merge on `root` (and the merge now
-    * counts as running); pair with [[endMerge]].
+  /** Whether `es` may merge (and the merge now counts as running); pair
+    * with [[endMerge]].
     */
-  private def startMerge(root: String, gen: Long): Boolean = rootMerges.synchronized {
-    val r = rootMerges(normalizePath(root))
-    (r.generation == gen) && { r.running += 1; true }
+  private def startMerge(es: EventStore): Boolean = runningMerges.synchronized {
+    val key = registryKey(es.root)
+    Option(registry.get(key)).exists(_._2.get() eq es) && {
+      runningMerges(key) = runningMerges.getOrElse(key, 0) + 1
+      true
+    }
   }
 
-  private def endMerge(root: String): Unit = rootMerges.synchronized {
-    rootMerges(normalizePath(root)).running -= 1
-    rootMerges.notifyAll()
+  private def endMerge(root: String): Unit = runningMerges.synchronized {
+    val key = registryKey(root)
+    if (runningMerges(key) == 1) runningMerges -= key else runningMerges(key) -= 1
+    runningMerges.notifyAll()
   }
 
   /** The parquet head layers of one manifest state, newest first: each
@@ -1495,8 +1503,10 @@ object EventStore {
   private def normalizePath(p: String): String =
     java.nio.file.Paths.get(p).normalize().toString
 
+  private def registryKey(root: String): String = normalizePath(s"$root/events")
+
   private def register(es: EventStore): Unit =
-    registry.put(normalizePath(s"${es.root}/events"),
+    registry.put(registryKey(es.root),
       (RegisteredStore(es.root, es.numPartitions),
         new java.lang.ref.WeakReference(es)))
 
@@ -1527,7 +1537,7 @@ object EventStore {
   def headsForRewrite(
       reg: RegisteredStore,
       streamId: String): Option[(ManifestState, Seq[StreamHead])] = {
-    val live = Option(registry.get(normalizePath(s"${reg.root}/events")))
+    val live = Option(registry.get(registryKey(reg.root)))
       .flatMap(e => Option(e._2.get()))
     live.map(_.snap)
       .filter(s => s.state.version > 0 &&

@@ -39,6 +39,9 @@ class RolloverSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("reads racing rollovers across several tiers answer as the model") {
     val es = EventStore.open(spark, Files.createTempDirectory("graft-roll-race-").toString, 2)
     val acked = new ConcurrentHashMap[String, Acked]()
+    // the ids readers pick from: added once every event of their
+    // transaction is in `acked`
+    val readable = ConcurrentHashMap.newKeySet[String]()
     val heads = new ConcurrentHashMap[String, Long]()
     val done = new AtomicBoolean(false)
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
@@ -60,12 +63,14 @@ class RolloverSpec extends AnyFunSuite with BeforeAndAfterAll {
           val ids = r.events.map(_.eventId)
           r.events.foreach(e => acked.put(e.eventId,
             Acked(sid, e.streamVersion, e.partitionId, e.partitionSequence, ids)))
+          readable.addAll(ids.asJava)
           next(sid) = v + 2
         } else {
           val v = next(sid)
           val e = es.append(EventInput(sid, "E", payload(sid, v), expectedVersion = expect(v)))
             .fold(e => throw new AssertionError(e), identity)
           acked.put(e.eventId, Acked(sid, v, e.partitionId, e.partitionSequence, Seq(e.eventId)))
+          readable.add(e.eventId)
           next(sid) = v + 1
         }
         heads.put(sid, next(sid) - 1)
@@ -83,7 +88,7 @@ class RolloverSpec extends AnyFunSuite with BeforeAndAfterAll {
     def reader(r: Int): Thread = new Thread(() => {
       val rnd = new scala.util.Random(100 + r)
       while (!done.get()) try {
-        val ids = acked.keySet().asScala.toVector
+        val ids = readable.asScala.toVector
         if (ids.nonEmpty) {
           val id = ids(rnd.nextInt(ids.size))
           val a = acked.get(id)
@@ -141,7 +146,7 @@ class RolloverSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("graft-roll-bulk-").toString
     val es = EventStore.open(spark, dir, 1)
     def files() = es.storeInfo("data_files").asInstanceOf[Long]
-    def requests() = es.rolloverRequests.get()
+    def requests() = es.rolloversQueued
     def rows() = es.events().orderBy("partition_sequence").collect().toSeq
       .map(r => EventSchema.columnNames.map(r.getAs[Any](_)).map {
         case b: Array[Byte] => b.toSeq
