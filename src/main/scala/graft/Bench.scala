@@ -871,7 +871,7 @@ object Bench {
             window = window),
           ck.toString,
           byStream = true)(rows => n.addAndGet(rows.size))
-        try q.processAllAvailable()
+        try graft.streaming.Drain.processAllAvailable(q, "esub_catchup")
         finally {
           // the checkpoint is this run's subscription identity — keeping
           // it would leak one temp dir per bench invocation

@@ -1924,8 +1924,9 @@ object SparkEntry {
 
     // Near-dup pairs → dedup CLUSTERS: connected components over the
     // verified MinHash-LSH pair graph (alternating large-star /
-    // small-star, O(log² n) shuffle rounds); cluster id = min doc id =
-    // the canonical keeper.
+    // small-star, O(log² n) rounds of three exchanges and one
+    // checkpoint job each, the fixpoint fingerprint observed inside
+    // that job); cluster id = min doc id = the canonical keeper.
     "dedup_clusters" -> ((s, d) => {
       val pairs = graft.ops.Dedup.minhashLsh(
         Tables.documents(s, d), "text", "doc_id", threshold = 0.5)
@@ -3377,7 +3378,7 @@ object SparkEntry {
         perBatch(batch).collect().foreach(r => got.add(extract(r)))
       }
       .start()
-    try q.processAllAvailable()
+    try graft.streaming.Drain.processAllAvailable(q, s"drainStream($ckPrefix)")
     finally { q.stop(); graft.core.Fs.deleteRecursively(ck.toFile) }
     import scala.jdk.CollectionConverters._
     got.asScala.toSeq
@@ -3457,10 +3458,11 @@ object SparkEntry {
           batch.collect().foreach(r => extract(r).foreach(got.add))
         }
         .start()
+      val leg = s"drainWithSentinel(${sentinelNames.mkString(",")})"
       try {
-        q.processAllAvailable()
+        graft.streaming.Drain.processAllAvailable(q, s"$leg phase 1")
         writeSentinels(farNs + 86400L * 1000000000L, "b")
-        q.processAllAvailable()
+        graft.streaming.Drain.processAllAvailable(q, s"$leg phase 2")
       } finally q.stop()
       got.asScala.toSeq
     } finally {
@@ -3519,7 +3521,7 @@ object SparkEntry {
       .min(Int.MaxValue.toLong).toInt
     val q = deliver(subscribe(es, matcher, From.Value(0), window = window),
       ck.toString, byStream)(onBatch)
-    try q.processAllAvailable()
+    try graft.streaming.Drain.processAllAvailable(q, s"foldSubscription($matcher)")
     finally { q.stop(); graft.core.Fs.deleteRecursively(ck.toFile) }
   }
 

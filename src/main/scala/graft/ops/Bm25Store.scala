@@ -142,27 +142,18 @@ object Bm25Store {
     * one driver-built single-row parquet write (a ~ms job), replacing
     * the pre-r19 corpus-scan aggregation job. `sum_dl` is null for an
     * empty batch, exactly as the old `agg` row was. Bounded wait on
-    * the observation (the write has already completed when this runs,
-    * so the listener normally lands within ms); if the metrics have
-    * not arrived after 60 s the delta is recomputed from `base`'s
-    * lineage — one extra scan, never a hang and never a wrong row.
+    * the observation ([[Observed.row]]: the write has already completed
+    * when this runs, so the listener normally lands within ms; past
+    * the bound the delta is recomputed from `base`'s lineage).
     */
   private def writeStatsRow(spark: SparkSession,
       obs: org.apache.spark.sql.Observation, base: DataFrame,
       dir: String, mode: String): Unit = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
-    val m =
-      try Await.result(Future(obs.get), 60.seconds)
-      catch { case _: java.util.concurrent.TimeoutException =>
-        val r = base.agg(statsAggs.head, statsAggs.tail: _*).head
-        Map[String, Any]("n_docs" -> r.get(0), "sum_dl" -> r.get(1))
-      }
-    val nDocs = m("n_docs").asInstanceOf[Number].longValue()
-    val sumDl: java.lang.Long = m.get("sum_dl").collect {
+    val r = Observed.row(obs, base, statsAggs)
+    val nDocs = r.getAs[Number](0).longValue()
+    val sumDl: java.lang.Long = Option(r.get(1)).collect {
       case v: Number => java.lang.Long.valueOf(v.longValue())
     }.orNull
     spark.createDataFrame(

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale (100 TB) text corpora.
@@ -160,27 +161,27 @@ object Dedup {
   /** ONE candidate-verify pair plan behind [[jaccardForCandidates]]
     * and [[containmentForCandidates]] (the shingleOverlap discipline:
     * measures differ in one arithmetic column, so they must share the
-    * pair generation or silently diverge): restricted shingles →
-    * per-pair intersection counts → size joins, returning
-    * (a, b, ni, na, nb).
+    * pair generation or silently diverge): restricted shingles, each
+    * row carrying its document's shingle count `n` → per-pair
+    * intersection counts, with both sizes riding the pair join,
+    * returning (a, b, na, nb, ni).
     */
   private def overlapForCandidates(candidates: DataFrame,
       shingles: DataFrame): DataFrame = {
     val (cand, sh) = candidateRestrictedShingles(candidates, shingles)
-    val sizes = sh.groupBy(col("id")).agg(count(lit(1)).as("n"))
     cand
-      .join(sh.select(col("id").as("a"), col("sh")), "a")
-      .join(sh.select(col("id").as("b"), col("sh")), Seq("b", "sh"))
-      .groupBy(col("a"), col("b"))
+      .join(sh.select(col("id").as("a"), col("sh"), col("n").as("na")), "a")
+      .join(sh.select(col("id").as("b"), col("sh"), col("n").as("nb")),
+        Seq("b", "sh"))
+      // na/nb are functions of a/b: grouping by them only carries them
+      .groupBy(col("a"), col("b"), col("na"), col("nb"))
       .agg(count(lit(1)).as("ni"))
-      .join(sizes.select(col("id").as("a"), col("n").as("na")), "a")
-      .join(sizes.select(col("id").as("b"), col("n").as("nb")), "b")
   }
 
   /** Materialization discipline of the verify tails: the CANDIDATE
     * frame is referenced three times downstream (both sides of the id
     * union + the pair join) and the candidate-RESTRICTED shingle table
-    * three more (sizes + both pair-join sides) — without pinning them,
+    * twice more (both pair-join sides) — without pinning them,
     * each reference re-derives its whole subtree (for the LSH callers
     * that is the banded self-join, re-run ~6×; the r15 plan audit
     * caught exactly this shape in dedup_containment_lsh). Both are
@@ -190,7 +191,9 @@ object Dedup {
     * they already checkpointed for their own probe derivation; the
     * second checkpoint here copies a bounded frame once more, which
     * is accepted over threading a was-it-checkpointed flag through
-    * the API.
+    * the API. Each restricted shingle row carries its document's
+    * shingle count `n` (a window over the semi-join's output, in the
+    * same checkpoint job), so no size aggregate is joined back later.
     */
   private def candidateRestrictedShingles(candidates: DataFrame,
       shingles: DataFrame): (DataFrame, DataFrame) = {
@@ -198,6 +201,7 @@ object Dedup {
     val candIds = cand.select(col("a").as("id"))
       .unionAll(cand.select(col("b").as("id"))).distinct()
     val sh = shingles.join(candIds, Seq("id"), "left_semi")
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("id")))
       .localCheckpoint()
     (cand, sh)
   }
@@ -357,7 +361,6 @@ object Dedup {
     */
   def substringDupSpans(df: DataFrame, textCol: String, idCol: String,
       k: Int = 8, minRun: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val toks = split(col(textCol), " ")
     val gram = md5(concat_ws(" ",
       (0 until k).map(j => element_at(col("t"), col("i") + j)): _*)
@@ -442,21 +445,20 @@ object Dedup {
   def dedupPipeline(df: DataFrame, textCol: String, idCol: String,
       k: Int = 3, numHashes: Int = 8, bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
-    val withFp = df.select(col(idCol).as("id"), col(textCol).as("text"),
-      md5(col(textCol).cast("binary")).as("fp"))
-    val keepers = withFp.groupBy(col("fp")).agg(min(col("id")).as("rep"))
-    val docRep = withFp.join(keepers, "fp").select(col("id"), col("rep"))
-    val reps = docRep.where(col("id") === col("rep"))
-      .join(withFp.select(col("id"), col("text")), "id")
+    // one exchange on the content hash: every document learns its
+    // exact group's min id, and the representatives keep their text
+    val ranked = df.select(col(idCol).as("id"), col(textCol).as("text"),
+        md5(col(textCol).cast("binary")).as("fp"))
+      .withColumn("rep", min(col("id")).over(Window.partitionBy("fp")))
+    val reps = ranked.where(col("id") === col("rep"))
       .select(col("id"), col("text"))
     val pairs = minhashLsh(reps, "text", "id", k, numHashes, bands, threshold)
     val cc = connectedComponents(pairs.select(col("a"), col("b")))
-    val repCluster = keepers.select(col("rep")).distinct()
+    // a representative in no near-dup pair is its own cluster
+    ranked.select(col("id"), col("rep"))
       .join(cc.withColumnRenamed("id", "rep"), Seq("rep"), "left")
-      .select(col("rep"), coalesce(col("cluster"), col("rep")).as("cluster"))
-    docRep.join(repCluster, "rep")
-      .select(col("id"), col("cluster"),
-        (col("id") === col("cluster")).as("keeper"))
+      .select(col("id"), coalesce(col("cluster"), col("rep")).as("cluster"))
+      .withColumn("keeper", col("id") === col("cluster"))
   }
 
   /** Chunk-level exact substring dedup: split every document into
@@ -802,12 +804,17 @@ object Dedup {
     * "Connected Components in MapReduce and Beyond", SoCC'14) — the
     * standard shuffle-based CC that converges in O(log² n) rounds on
     * ANY graph shape (min-label propagation would need O(diameter)
-    * rounds, unbounded on chain-shaped dup clusters). Each round is
-    * two aggregations + two joins keyed on node id; data never
-    * collects to the driver — the driver runs only the fixpoint test,
-    * a (count, hash-sum) aggregate per round. `localCheckpoint` cuts
-    * the iterative lineage so round N's plan does not replay rounds
-    * 0..N-1.
+    * rounds, unbounded on chain-shaped dup clusters). A round is three
+    * exchanges and one job: large-star is a `min(v)` window over the
+    * bidirected edges partitioned by `u`, small-star a `min(v)` window
+    * over the edges oriented large→small, and one `distinct` closes
+    * the round; `localCheckpoint` materializes it (cutting the
+    * iterative lineage, so round N's plan does not replay rounds
+    * 0..N-1). Data never collects to the driver. The fixpoint test —
+    * an unchanged (count, xxhash64-sum) edge-set fingerprint — is
+    * observed inside that checkpoint job ([[Observed]]), so no round
+    * runs a job of its own for it; the input's observed count decides
+    * emptiness.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25): DataFrame =
     connectedComponentsWithRounds(edges, maxIter)._1
@@ -824,24 +831,25 @@ object Dedup {
   def connectedComponentsWithRounds(edges: DataFrame,
       maxIter: Int = 25): (DataFrame, Int) = {
     val Seq(uc, vc) = edges.columns.take(2).toSeq
-    var cur = edges.select(col(uc).as("u"), col(vc).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
-    // order-independent edge-set checksum; decimal(38,0) so the sum
-    // cannot overflow under ANSI arithmetic at any edge count
-    def fingerprint(e: DataFrame): (Long, BigDecimal) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-          lit(BigDecimal(0)))).head()
-      (r.getLong(0), BigDecimal(r.getDecimal(1)))
+    // order-independent edge-set checksum, observed on the checkpoint
+    // job; decimal(38,0) so the sum cannot overflow under ANSI
+    // arithmetic at any edge count
+    val fpAggs = Seq(count(lit(1)),
+      coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
+        lit(BigDecimal(0))))
+    def checkpointed(e: DataFrame): (DataFrame, (Long, BigDecimal)) = {
+      val obs = org.apache.spark.sql.Observation()
+      val cp = e.observe(obs, fpAggs.head, fpAggs.tail: _*).localCheckpoint()
+      val r = Observed.row(obs, cp, fpAggs)
+      (cp, (r.getLong(0), BigDecimal(r.getDecimal(1))))
     }
-    var fp = fingerprint(cur)
+    var (cur, fp) = checkpointed(edges.select(col(uc).as("u"), col(vc).as("v"))
+      .where(col("u") =!= col("v"))
+      .distinct())
     var it = 0
-    var converged = cur.isEmpty
+    var converged = fp._1 == 0L
     while (!converged && it < maxIter) {
-      val next = smallStar(largeStar(cur)).localCheckpoint()
-      val nfp = fingerprint(next)
+      val (next, nfp) = checkpointed(smallStar(largeStar(cur)))
       converged = nfp == fp
       fp = nfp
       cur = next
@@ -860,30 +868,31 @@ object Dedup {
   }
 
   /** Large-star: connect every neighbor LARGER than `u` to
-    * `m = min(Γ(u) ∪ {u})`. Operates on both orientations.
+    * `m = min(Γ(u) ∪ {u})`. Operates on both orientations; one
+    * window, one exchange on `u`. Every emitted edge has `u > v`
+    * (`v > u ≥ m`), so no self-loop needs filtering. May emit an edge
+    * more than once: [[smallStar]]'s `distinct` removes the copies,
+    * so the round's edge set is the same as with a `distinct` here.
     */
   private def largeStar(e: DataFrame): DataFrame = {
-    val bidir = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    val mins = bidir.groupBy(col("u"))
-      .agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("u"), col("mn")).as("m"))
-    bidir.join(mins, "u")
+    e.union(e.select(col("v").as("u"), col("u").as("v")))
+      .withColumn("m", least(col("u"), min(col("v")).over(Window.partitionBy("u"))))
       .where(col("v") > col("u"))
       .select(col("v").as("u"), col("m").as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
   }
 
   /** Small-star: orient each edge large→small, then connect all of
-    * `u`'s smaller neighbors (and `u` itself) to their minimum.
+    * `u`'s smaller neighbors (and `u` itself) to their minimum `m`.
+    * One window over the oriented edges emits both `(v, m)` and
+    * `(u, m)` per edge; one `distinct` leaves each edge once.
     */
   private def smallStar(e: DataFrame): DataFrame = {
-    val oriented = e.select(
-      greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
-    val mins = oriented.groupBy(col("u")).agg(min(col("v")).as("m"))
-    oriented.join(mins, "u")
-      .select(col("v").as("u"), col("m").as("v"))
-      .union(mins.select(col("u"), col("m").as("v")))
+    e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+      .withColumn("m", min(col("v")).over(Window.partitionBy("u")))
+      .select(explode(array(
+        struct(col("v").as("u"), col("m").as("v")),
+        struct(col("u").as("u"), col("m").as("v")))).as("e"))
+      .select(col("e.u").as("u"), col("e.v").as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
   }

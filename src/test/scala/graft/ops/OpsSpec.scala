@@ -1026,15 +1026,17 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("connected components report their round count (bench scale witness)") {
     import spark.implicits._
     // chain: needs real contraction rounds; star at min: one round to
-    // confirm the fixpoint
+    // re-orient its edges and one to confirm the fixpoint. The counts
+    // are pinned: a rewrite of a round that changed its edge set would
+    // move them
     val (chainDf, chainRounds) = Dedup.connectedComponentsWithRounds(
       Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b"))
     assert(chainDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
       (1L to 6L).map(_ -> 1L).toMap)
-    assert(chainRounds >= 1 && chainRounds <= 25)
+    assert(chainRounds == 4)
     val (_, starRounds) = Dedup.connectedComponentsWithRounds(
       Seq((1L, 5L), (1L, 9L)).toDF("a", "b"))
-    assert(starRounds >= 1 && starRounds <= chainRounds)
+    assert(starRounds == 2)
   }
 
   test("guards: over-wide hamming fingerprint and exhausted cc iteration cap fail loudly") {
@@ -1076,6 +1078,163 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = Dedup.connectedComponents(edges.toDF("a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == lbl)
+  }
+
+  /** Driver-side union-find: every node of a non-self-loop edge →
+    * its component's minimum id. */
+  private def unionFind(edges: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    edges.filter { case (a, b) => a != b }.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      // root = smaller id, so find(x) is the component minimum
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    parent.keys.map(n => n -> find(n)).toMap
+  }
+
+  /** Rounds of the large-star / small-star loop on driver-side sets,
+    * with the edge sets `connectedComponentsWithRounds` defines: a
+    * rewrite of a round's Spark plan that keeps these sets keeps the
+    * round count. */
+  private def starRounds(edges: Seq[(Long, Long)]): Int = {
+    type E = Set[(Long, Long)]
+    def mins(e: E): Map[Long, Long] =
+      e.groupBy(_._1).map { case (u, es) => u -> es.map(_._2).min }
+    def large(e: E): E = {
+      val bi = e ++ e.map(_.swap)
+      val m = mins(bi)
+      bi.collect { case (u, v) if v > u => (v, math.min(u, m(u))) }
+    }
+    def small(e: E): E = {
+      val o = e.map { case (u, v) => (math.max(u, v), math.min(u, v)) }
+      val m = mins(o)
+      (o.map { case (u, v) => (v, m(u)) } ++ m).filter { case (a, b) => a != b }
+    }
+    var cur: E = edges.filter { case (a, b) => a != b }.toSet
+    var it = 0
+    var converged = cur.isEmpty
+    while (!converged) {
+      val next = small(large(cur))
+      converged = next == cur
+      cur = next
+      it += 1
+    }
+    it
+  }
+
+  test("connected components == driver union-find on seeded random graphs") {
+    import spark.implicits._
+    val fallbacks0 = Observed.fallbacks.get()
+    val rnd = new scala.util.Random(1109)
+    def shuffledIds(n: Int): IndexedSeq[Long] =
+      rnd.shuffle((1 to n).map(_ => 1L + rnd.nextInt(10000)).distinct)
+    def chain(n: Int) = { val ids = shuffledIds(n); ids.zip(ids.tail) }
+    def star(n: Int) = {
+      val ids = shuffledIds(n); val c = ids.max
+      ids.filter(_ != c).map(c -> _)
+    }
+    def cycle(n: Int) = { val ids = shuffledIds(n); ids.zip(ids.tail :+ ids.head) }
+    def noisy(e: Seq[(Long, Long)]) = rnd.shuffle(
+      e ++ e.take(e.size / 3).map(_.swap) ++ e.takeRight(e.size / 4) ++
+        e.take(3).map { case (a, _) => (a, a) } :+ (20000L, 20000L))
+    val graphs: Seq[Seq[(Long, Long)]] =
+      Seq(Nil, Seq((5L, 5L)), chain(64), star(40), cycle(30)) ++
+        (1 to 18).map { i =>
+          val parts = Seq(chain(2 + rnd.nextInt(63)), star(2 + rnd.nextInt(20)),
+            cycle(3 + rnd.nextInt(20)), chain(2 + rnd.nextInt(10)))
+          val g = parts.take(1 + i % 4).flatten
+          if (i % 2 == 0) noisy(g) else g
+        }
+    graphs.zipWithIndex.foreach { case (g, i) =>
+      val (out, rounds) = Dedup.connectedComponentsWithRounds(g.toDF("a", "b"))
+      val got = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == unionFind(g), s"graph $i")
+      assert(rounds == starRounds(g), s"graph $i rounds")
+    }
+    // the fixpoint fingerprint arrived through the observation every
+    // round, never through the recompute fallback
+    assert(Observed.fallbacks.get() == fallbacks0 && fallbacks0 == 0L)
+  }
+
+  test("connected components run one job per round") {
+    import spark.implicits._
+    val input = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+      .toDF("a", "b")
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      Dedup.connectedComponentsWithRounds(input)
+      // the bus delivers in order: once the marker job's start has
+      // arrived, every job the call ran has been counted
+      sc.setJobDescription("cc-marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.contains("cc-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.contains("cc-marker"), "listener bus did not drain in 30 s")
+      // the input's checkpoint (one exchange + its job), then for each
+      // of the chain's 4 rounds three exchanges + the checkpoint job
+      // that observes the fingerprint; a job of its own per round for
+      // the fixpoint test would add to it
+      assert(jobs.size - 1 == 2 + 4 * 4, s"jobs: ${jobs.size - 1}")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("dedup pipeline == md5 groups + minhash pairs + driver union-find") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(2211)
+    val vocab = (0 until 400).map(i => s"w$i")
+    def words(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size)))
+    def edit(t: String) = {
+      val ws = t.split(" "); ws(rnd.nextInt(ws.length)) = s"edit${rnd.nextInt(1000)}"
+      ws.mkString(" ")
+    }
+    val texts = scala.collection.mutable.ArrayBuffer.empty[String]
+    (0 until 200).foreach(_ => texts += words(12).mkString(" "))
+    (0 until 40).foreach(_ => texts += texts(rnd.nextInt(200)))      // exact copies
+    (0 until 40).foreach(_ => texts += edit(texts(rnd.nextInt(200)))) // one-word edits
+    texts += "too short"                                               // < k words
+    // an exact group whose representative is a near-dup of another
+    // group's representative
+    val base = words(30).mkString(" "); val near = edit(base)
+    texts ++= Seq(near, base, near, base, near)
+    (0 until 12).foreach(_ => texts += texts(rnd.nextInt(texts.size)))
+    val ids = rnd.shuffle((1 to texts.size).map(_ * 7L).toIndexedSeq)
+    val corpus = ids.zip(texts)
+    val df = corpus.toDF("doc_id", "text")
+
+    // model: md5 groups → min-id representatives
+    def md5(t: String) = java.security.MessageDigest.getInstance("MD5")
+      .digest(t.getBytes("UTF-8")).toSeq
+    val rep = corpus.groupBy { case (_, t) => md5(t) }.values
+      .flatMap { g => val r = g.map(_._1).min; g.map(_._1 -> r) }.toMap
+    val reps = corpus.filter { case (id, _) => rep(id) == id }
+    val pairs = Dedup.minhashLsh(reps.toDF("doc_id", "text"), "text", "doc_id",
+        threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs.nonEmpty, "planted edits must yield near-dup pairs")
+    val cluster = unionFind(pairs)
+    val want = corpus.map { case (id, _) =>
+      val c = cluster.getOrElse(rep(id), rep(id)); (id, c, id == c)
+    }.toSet
+    val got = Dedup.dedupPipeline(df, "text", "doc_id")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
+    assert(got.size == corpus.size)
+    assert(got == want)
+    // the planted group pair merged into one cluster
+    val planted = corpus.filter { case (_, t) => t == base || t == near }.map(_._1)
+    assert(got.filter(r => planted.contains(r._1)).map(_._2).size == 1)
   }
 
   test("decontamination probes the corpus with a broadcast benchmark side") {

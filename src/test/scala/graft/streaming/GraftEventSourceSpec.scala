@@ -167,4 +167,26 @@ class GraftEventSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(readRange(stream, stream.initialOffset(), end) == (0L to 15L).map(0 -> _))
     assert(readRange(stream, SeqVectorOffset(Map(0 -> 6L)), end) == (7L to 15L).map(0 -> _))
   }
+
+  test("a drain that outlives its bound stops the query and names the leg") {
+    import scala.concurrent.duration._
+    val dir = Files.createTempDirectory("graft-drain-")
+    try {
+      val in = Files.createDirectories(dir.resolve("in"))
+      Files.write(in.resolve("a.txt"), "row\n".getBytes("UTF-8"))
+      // a batch that stalls: processAllAvailable alone would never return
+      val q = spark.readStream.text(in.toString).writeStream
+        .option("checkpointLocation", dir.resolve("ck").toString)
+        .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+          Thread.sleep(10.minutes.toMillis)
+        }
+        .start()
+      val t0 = System.nanoTime()
+      val e = intercept[DrainTimeoutException](
+        Drain.processAllAvailable(q, "stalled-leg", 2.seconds))
+      assert(e.leg == "stalled-leg" && e.getMessage.startsWith("stalled-leg:"))
+      assert(!q.isActive, "the timed-out query is stopped")
+      assert((System.nanoTime() - t0) / 1e9 < 60)
+    } finally graft.core.Fs.deleteRecursively(dir.toFile)
+  }
 }
