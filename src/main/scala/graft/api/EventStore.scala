@@ -2,6 +2,8 @@ package graft.api
 
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import graft.core._
 import graft.storage.{HeadProbe, Manifest, ManifestState, StreamHead}
 import org.apache.parquet.example.data.Group
@@ -55,7 +57,7 @@ final class OverlappingFilesException(val partition: Int, val first: String, val
   *     ([[graft.storage.HeadProbe.scan]]) clamped to the snapshot's
   *     watermark, and sort and limit on the driver;
   *   - the ANALYTICS path is [[events]], a watermark-clamped Spark scan
-  *     of the whole log, used by the bulk operators and as the
+  *     of the snapshot's files, used by the bulk operators and as the
   *     reference the command reads are tested against.
   *
   * Scale notes (100 TB): command reads touch one partition directory
@@ -229,7 +231,7 @@ final class EventStore private (
     * tier, the shared worker merges the run into one file, outside the
     * write lock. Only an append requests a merge. Under the lock the
     * merged file replaces the run in the file index, matched by path,
-    * and the run's files are deleted; no manifest version is committed,
+    * and the run's files are retired; no manifest version is committed,
     * because the manifest does not list files. A merged file covers
     * exactly the sequence range of its inputs, which is how
     * [[recoverOrphans]] tells them apart after a crash.
@@ -257,120 +259,157 @@ final class EventStore private (
       EventStore.rolloverWorker.execute(() => rollOver(pid))
     }
 
-  /** On the worker: merge `pid`'s oldest full run; after a swap, queue
-    * the partition again if a run is left (the merged file may have
-    * filled the next tier's). The run is picked from the published
-    * snapshot without the lock: the swap checks it again under the lock.
+  /** On the worker: merge `pid`'s oldest full run, read from a pinned
+    * snapshot; after a swap, queue the partition again if a run is left
+    * (the merged file may have filled the next tier's). The run is
+    * picked without the lock: the swap checks it again under the lock.
     */
   private def rollOver(pid: Int): Unit = {
     var swapped = false
+    val s = pin()
     try {
-      val run = EventStore.fullRuns(snap.files.getOrElse(pid, Vector.empty)).nextOption()
+      val run = EventStore.fullRuns(s.files.getOrElse(pid, Vector.empty)).nextOption()
       swapped = run.exists(merge(pid, _))
-    } finally lock.synchronized {
-      rolling -= pid
-      if (swapped) requestRollover(pid)
-      lock.notifyAll()
+    } finally {
+      unpin(s)
+      lock.synchronized {
+        rolling -= pid
+        if (swapped) requestRollover(pid)
+        lock.notifyAll()
+      }
     }
   }
 
-  /** Merge `run` into one hidden file, then swap it in under the lock.
-    * The swap is dropped, and the hidden file deleted, when some file of
-    * the run has left the index (`compact()`), the partition directory
-    * is gone or a newer handle owns the root; a write that fails in that
-    * state is not counted as a failure.
+  /** Merge `run` into one hidden file, then swap it in under the lock and
+    * retire the run. The swap is dropped, and the hidden file deleted,
+    * when some file of the run has left the index (`compact()`) or a
+    * newer handle owns the root. The run is pinned, so only a store
+    * directory deleted under the merge fails it.
     * Returns whether the swap happened.
     */
   private def merge(pid: Int, run: Vector[DataFile]): Boolean = {
     if (!EventStore.startMerge(this)) return false
     val t0 = System.nanoTime()
-    val dir = java.nio.file.Paths.get(eventsDir, s"partition_id=$pid")
-    def current = {
-      val indexed = snap.files.getOrElse(pid, Vector.empty).map(_.file.path).toSet
-      run.forall(f => indexed(f.file.path)) && java.nio.file.Files.isDirectory(dir)
-    }
+    val inputs = run.map(_.file.path).toSet
     try {
-      val tmp =
-        try writeHidden(dir, run.map(_.stats.rows).sum)(put =>
-          HeadProbe.scan(run.map(_.file), Nil) { g => put(EventStore.copyGroup(g)); true })
-        catch {
-          case _: Exception =>
-            if (lock.synchronized(current)) rolloverFailures.incrementAndGet()
-            return false
-        }
+      val tmp = writeHidden(java.nio.file.Paths.get(eventsDir, s"partition_id=$pid"),
+        run.map(_.stats.rows).sum)(put =>
+        HeadProbe.scan(run.map(_.file), Nil) { g => put(EventStore.copyGroup(g)); true })
       lock.synchronized {
-        if (!current) {
+        val files = snap.files.getOrElse(pid, Vector.empty)
+        if (files.count(f => inputs(f.file.path)) < run.size) {
           java.nio.file.Files.deleteIfExists(tmp)
           false
         } else {
           val merged = new DataFile(new HeadProbe.File(EventStore.publish(tmp).toString),
             FileStats(run.head.stats.minSeq, run.last.stats.maxSeq,
               run.map(_.stats.minVersion).min, run.map(_.stats.rows).sum))
-          val inputs = run.map(_.file.path).toSet
-          val files = snap.files(pid)
           val at = files.indexWhere(f => inputs(f.file.path))
           snap = snap.copy(files = snap.files.updated(pid,
             files.filterNot(f => inputs(f.file.path)).patch(at, Seq(merged), 0)))
-          run.foreach(f => java.nio.file.Files.deleteIfExists(f.path))
+          retire(run.map(pid -> _))
           rollovers.incrementAndGet()
           rolledFiles.addAndGet(run.size.toLong)
           rolloverTimes.record(System.nanoTime() - t0)
           true
         }
       }
+    } catch {
+      case _: java.io.IOException =>
+        rolloverFailures.incrementAndGet()
+        false
     } finally EventStore.endMerge(root)
   }
 
-  /** Wait until no merge of this handle is queued or running or, with
-    * `all` false, until every run that was full at the call has been
-    * merged or its partition's merges have stopped (a merge that failed
-    * or did not swap): runs that fill later are not waited for.
-    */
-  private[api] def awaitRollover(all: Boolean = true): Unit = lock.synchronized {
-    val pending = rolling.toSeq.flatMap(pid =>
-      EventStore.fullRuns(snap.files.getOrElse(pid, Vector.empty)).flatten.map(f => pid -> f.file.path))
-    def merging = pending.exists { case (pid, path) =>
-      rolling(pid) && snap.files.getOrElse(pid, Vector.empty).exists(_.file.path == path)
-    }
-    while (if (all) rolling.nonEmpty else merging) lock.wait()
+  /** Wait until no merge of this handle is queued or running. */
+  private[graft] def awaitRollover(): Unit = lock.synchronized {
+    while (rolling.nonEmpty) lock.wait()
   }
 
-  /** Compaction: rewrite each partition directory into one
-    * sequence-sorted file so point lookups and range scans touch few,
-    * stat-tight row groups. Unlike rollover, which merges small runs
-    * in the background, this rewrites the whole log through Spark under
-    * the write lock with a directory swap, and it never requests a
-    * rollover; a merge running meanwhile finds its inputs gone and
-    * drops its file.
+  // ----------------------------------------------------------- pins
+
+  /* After open, the published snapshot is the only list of data files,
+    * and nothing deletes one under a reader (as the reference's readers
+    * iterate sealed segments, `bucket/iter.rs`). Under `pins`: pinned
+    * snapshots by identity with their counts, the retired files, and the
+    * snapshot of the latest [[events]] call.
+    */
+  private val pins = new java.util.IdentityHashMap[Snapshot, Integer]
+  private var retired = Vector.empty[(Int, DataFile)]
+  private var eventsPin: Option[Snapshot] = None
+
+  /** The published snapshot, pinned until [[unpin]]. A swap publishes
+    * before it calls [[retire]], which takes the same monitor, so a pin
+    * holds either the old snapshot (its files wait) or the new one
+    * (which does not name them).
+    */
+  private[graft] def pin(): Snapshot = pins.synchronized {
+    val s = snap
+    pins.put(s, Option(pins.get(s)).fold(1)(_ + 1))
+    s
+  }
+
+  private[graft] def unpin(s: Snapshot): Unit = pins.synchronized {
+    if (pins.get(s) > 1) pins.put(s, pins.get(s) - 1)
+    else {
+      pins.remove(s)
+      if (retired.exists(names(s, _))) reclaim()
+    }
+  }
+
+  /** After a swap has published: `files` (by partition) left the index.
+    * A file is deleted once no pinned snapshot names it, so a pin holds
+    * back only its own snapshot's files, never those written after it.
+    */
+  private def retire(files: Iterable[(Int, DataFile)]): Unit = pins.synchronized {
+    retired ++= files
+    reclaim()
+  }
+
+  private def names(s: Snapshot, f: (Int, DataFile)): Boolean =
+    s.files.getOrElse(f._1, Vector.empty).exists(_.file.path == f._2.file.path)
+
+  /** delete every retired file no pinned snapshot names */
+  private def reclaim(): Unit = {
+    val (keep, gone) = retired.partition(f => pins.keySet.asScala.exists(names(_, f)))
+    gone.foreach(f => java.nio.file.Files.deleteIfExists(f._2.path))
+    retired = keep
+  }
+
+  /** Compaction: rewrite each partition into one sequence-sorted file
+    * so point lookups and range scans touch few, stat-tight row groups.
+    * Unlike rollover, which merges small runs in the background, this
+    * rewrites the snapshot's files through Spark under the write lock,
+    * swaps the index by path and retires every old file; it never
+    * requests a rollover, and a merge running meanwhile finds its inputs
+    * gone and drops its file. A crash after some compacted files were
+    * renamed in leaves them next to the old files; each holds every old
+    * file's range of its partition, so open deletes the old ones.
     *
     * Subscription checkpoints SURVIVE compaction: the streaming source
     * tracks per-partition sequences, not file paths
-    * ([[graft.streaming.GraftEventSource]]), and compaction rewrites
+    * ([[graft.streaming.GraftEventMicroBatchStream]]), and compaction rewrites
     * files without renumbering sequences. A subscription resumed from a
     * pre-compaction checkpoint re-plans its next (start, end] range
-    * over the rewritten files — no duplicates, no gaps. A query whose
-    * in-flight batch races the directory swap lists the partition again
-    * and reads on ([[graft.streaming.GraftPartitionReader]]).
+    * over the rewritten files — no duplicates, no gaps. A batch planned
+    * before the swap reads the old files, which its pin keeps.
     */
   def compact(): Unit = lock.synchronized {
-    if (state.watermarks.isEmpty) return
+    val old = snap.files.toSeq.flatMap { case (pid, fs) => fs.map(pid -> _) }
+    if (old.isEmpty) return
     // one file per partition: size its bloom filters to the largest
     // partition's rows, or parquet allocates its 1 MB maximum per column
     val ndv = (state.watermarks.values.max + 1).max(1L)
     val compacted = spark.read
       .schema(EventSchema.schema)
       .option("basePath", eventsDir)
-      .parquet(eventsDir)
+      .parquet(old.map(_._2.file.path): _*)
       .repartition(col("partition_id"))
-      .sortWithinPartitions(col("partition_sequence"))
-    val tmp = s"$root/${EventStore.CompactTmp}"
-    writeEvents(compacted, "overwrite", tmp, Some(ndv))
-    val ev = java.nio.file.Paths.get(eventsDir)
-    val old = java.nio.file.Paths.get(s"$root/${EventStore.PreCompact}")
-    java.nio.file.Files.move(ev, old)
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp), ev)
-    Fs.deleteRecursively(old.toFile)
-    commitState(state.copy(version = state.version + 1), listIndex())
+      // led by partition_id, the writer's required ordering: a sort on
+      // partition_sequence alone is dropped under the writer's own sort
+      .sortWithinPartitions(col("partition_id"), col("partition_sequence"))
+    commitState(state.copy(version = state.version + 1), writeEvents(compacted, Some(ndv)))
+    retire(old)
     // compaction also folds the head LSM into a fresh base table
     foldHeads()
   }
@@ -380,20 +419,35 @@ final class EventStore private (
     * `event_id` and `stream_id`. The filters are sized to `ndv` values
     * when the caller knows its rows per file; else each is the smallest
     * of parquet's adaptive candidates (1 MB halving down to 1 KB) that
-    * holds the values its file got, not the 1 MB maximum.
+    * holds the values its file got, not the 1 MB maximum. Spark writes
+    * into the hidden staging directory; each file is then renamed into
+    * its `events/partition_id=N/` directory. Returns the files by
+    * partition, for the caller to publish.
     */
-  private def writeEvents(df: DataFrame, mode: String, dir: String, ndv: Option[Long]): Unit = {
+  private def writeEvents(df: DataFrame, ndv: Option[Long]): Map[Int, Vector[DataFile]] = {
     val blooms = Seq("event_id", "stream_id").flatMap(c => Seq(
       s"parquet.bloom.filter.enabled#$c" -> "true",
       s"parquet.bloom.filter.candidates.number#$c" -> EventStore.BloomCandidates.toString) ++
       ndv.map(n => s"parquet.bloom.filter.expected.ndv#$c" -> n.toString))
+    val staging = java.nio.file.Paths.get(root, EventStore.Staging)
     df.write
-      .mode(mode)
+      .mode("overwrite")
       .partitionBy("partition_id")
       .option("compression", "zstd")
       .option("parquet.bloom.filter.adaptive.enabled", "true")
       .options(blooms.toMap)
-      .parquet(dir)
+      .parquet(staging.toString)
+    try EventStore.partitionDirs(staging).map { case (pid, dir) =>
+      val target = java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get(eventsDir, s"partition_id=$pid"))
+      pid -> HeadProbe.listFiles(dir.toString).map { f =>
+        val dst = target.resolve(java.nio.file.Paths.get(f.path).getFileName)
+        java.nio.file.Files.move(java.nio.file.Paths.get(f.path), dst,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        DataFile.listed(new HeadProbe.File(dst.toString))
+      }.toVector
+    }.toMap
+    finally Fs.deleteRecursively(staging.toFile)
   }
 
   /** Bulk ingest — the 100 TB path. Routes rows to partitions by
@@ -508,8 +562,6 @@ final class EventStore private (
       .withColumn("timestamp_ns", $"timestamp_ms" * lit(1000000L))
       .select(EventSchema.columnNames.map(col): _*)
 
-    def paths(ix: Map[Int, Vector[DataFile]]) = ix.values.flatten.map(_.file.path).toSet
-    val preFiles = paths(listIndex())
     val sorted = assigned
       // each partition_id already lives in exactly one task: both
       // windows above run under the ONE hash(partition_id) exchange
@@ -520,17 +572,18 @@ final class EventStore private (
       // (partition columns first) is satisfied and rows land
       // sequence-sorted within each file without a writer-side re-sort.
       .sortWithinPartitions($"partition_id", $"partition_sequence")
-    writeEvents(sorted, "append", eventsDir, None)
+    val written = writeEvents(sorted, None)
+    val index = snap.files ++ written.map { case (pid, fs) =>
+      pid -> (snap.files.getOrElse(pid, Vector.empty) ++ fs)
+    }
 
     // head/watermark roll-up: ONE columnar scan over just the files
     // this commit wrote (4 columns, stats-friendly) — cheaper than
     // caching and re-walking the whole assignment plan
-    val index = listIndex()
-    val newFiles = (paths(index) -- preFiles).toSeq
     val rollup = spark.read
       .schema(EventSchema.schema)
       .option("basePath", eventsDir)
-      .parquet(newFiles: _*)
+      .parquet(written.values.flatten.map(_.file.path).toSeq: _*)
       .groupBy($"stream_id", $"partition_key", $"partition_id")
       .agg(max($"stream_version").as("version"), max($"partition_sequence").as("ps"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -576,17 +629,19 @@ final class EventStore private (
     * A crash inside a rollover swap leaves its merged file next to all
     * or some of its inputs; the merged file's sequence range holds each
     * input's, so every file whose range lies inside another file's is
-    * deleted. Nothing writes files whose ranges partly overlap: finding
+    * deleted; so is an old file next to the `compact()` file that holds
+    * its range, and a staging directory `ingest` or `compact()` left.
+    * Nothing writes files whose ranges partly overlap: finding
     * two fails the open with [[OverlappingFilesException]].
-    * The surviving files become the snapshot's file index. Runs once
-    * per open.
+    * The surviving files become the snapshot's file index: the one
+    * listing of the log. Runs once per open.
     */
   private[api] def recoverOrphans(): Unit = lock.synchronized {
-    partitionDirs().foreach { case (_, dir) =>
+    Fs.deleteRecursively(java.nio.file.Paths.get(root, EventStore.Staging).toFile)
+    val files = EventStore.partitionDirs(java.nio.file.Paths.get(eventsDir)).map { case (pid, dir) =>
       Fs.list(dir).filter(_.getFileName.toString.startsWith(EventStore.InflightPrefix))
         .foreach(java.nio.file.Files.deleteIfExists)
-    }
-    val files = listIndex().map { case (pid, fs) =>
+      val fs = HeadProbe.listFiles(dir.toString).map(DataFile.listed).toVector
       val (orphans, committed) = fs.partition(_.stats.minSeq > state.watermark(pid))
       orphans.foreach(f => java.nio.file.Files.deleteIfExists(f.path))
       // widest first among equal minimums: a merged file before its inputs
@@ -602,28 +657,7 @@ final class EventStore private (
       }
       pid -> kept
     }
-    snap = snap.copy(files = files)
-  }
-
-  /** The `partition_id=N` directories of the log, with their N. */
-  private def partitionDirs(): Seq[(Int, java.nio.file.Path)] =
-    Fs.list(java.nio.file.Paths.get(eventsDir))
-      .filter(p => java.nio.file.Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("partition_id="))
-      .map(p => p.getFileName.toString.stripPrefix("partition_id=").toInt -> p)
-
-  /** Every visible data file of the log by partition, from one listing
-    * — the file index [[ingest]] and [[compact]] publish. A file the
-    * current index already holds keeps its object (and the footer that
-    * object read); the others' stats are read from their footers when
-    * first needed.
-    */
-  private def listIndex(): Map[Int, Vector[DataFile]] = {
-    val known = snap.files.valuesIterator.flatten.map(f => f.file.path -> f).toMap
-    partitionDirs().map { case (pid, dir) =>
-      pid -> HeadProbe.listFiles(dir.toString)
-        .map(f => known.getOrElse(f.path, DataFile.listed(f))).toVector
-    }.toMap
+    snap = snap.copy(files = files.toMap)
   }
 
   // ------------------------------------------------------- head-state (LSM)
@@ -835,31 +869,28 @@ final class EventStore private (
 
   // ----------------------------------------------------------------- reads
 
-  /** Watermark-clamped snapshot of the event log (every read goes
-    * through this — the visibility rule of `read.rs:460-489`).
-    *
-    * It scans the directory, not the file index, so it sees a rollover
-    * swap the way it sees `compact()`'s: a job whose listing raced a
-    * swap may fail on a file deleted after it was listed, or, if it
-    * listed the instant between the merged file's rename and its
-    * inputs' deletion, count their rows twice. It first waits until the
-    * runs that were full when it was called are merged (not for runs
-    * that fill later), so a caller that has stopped appending scans a
-    * directory that holds still unless a merge filled the next tier.
-    * The command reads and the streaming source are not exposed; no
-    * server command uses this.
+  /** Watermark-clamped snapshot of the event log (the visibility rule
+    * of `read.rs:460-489`): a Spark scan of exactly the files of the
+    * snapshot it pins, `basePath` the log's directory. A DataFrame is
+    * lazy, so the handle keeps the snapshot of its LATEST `events()`
+    * call pinned until the next call: a DataFrame must not be used
+    * after the handle's next `events()`. No server command uses this.
     */
   def events(): DataFrame = {
-    awaitRollover(all = false)
-    val snap = state
-    if (snap.watermarks.isEmpty)
+    val s = pin()
+    pins.synchronized {
+      eventsPin.foreach(unpin)
+      eventsPin = Some(s)
+    }
+    val paths = s.files.values.flatten.map(_.file.path).toSeq
+    if (paths.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[Row], EventSchema.schema)
-    val df = spark.read
+    spark.read
       .schema(EventSchema.schema)
       .option("basePath", eventsDir)
-      .parquet(eventsDir)
-    df.where(wmClamp(snap))
+      .parquet(paths: _*)
+      .where(wmClamp(s.state))
   }
 
   private def wmClamp(snap: ManifestState): Column = {
@@ -879,18 +910,11 @@ final class EventStore private (
     }
   }
 
-  /** Run a command read against the current snapshot. Its files can
-    * vanish under it only when [[compact]] swaps the log or a rollover
-    * swaps a run for its merged file; the read is then retried once
-    * under the write lock, which waits out the swap, against the
-    * snapshot the swap published.
-    */
-  private def onSnapshot[A](read: Snapshot => A): A =
-    try read(snap)
-    catch {
-      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException =>
-        lock.synchronized(read(snap))
-    }
+  /** Run a command read against the current snapshot, pinned. */
+  private def onSnapshot[A](read: Snapshot => A): A = {
+    val s = pin()
+    try read(s) finally unpin(s)
+  }
 
   /** Command-read core: the events of partition `pid`, as of snapshot
     * `s`, in `files` order, that satisfy `preds`, handed to `visit`
@@ -1135,7 +1159,8 @@ final class EventStore private (
   /** validation + lock wait, row write, manifest commit of recent appends */
   private val appendLayers = new EventStore.LayerTimes(1024, 3)
 
-  /** INFO STORE: the manifest and file-index shape, p50/p99 (ms) of the
+  /** INFO STORE: the manifest and file-index shape, the retired files
+    * not yet deleted and the snapshots pinned, p50/p99 (ms) of the
     * three append layers over the last 1,024 appends, and the rollovers:
     * merges swapped in, the files they replaced, merges that failed and
     * p50/p99 (ms) of the last 1,024 merges.
@@ -1152,6 +1177,8 @@ final class EventStore private (
       "delta_chain" -> s.chain.toLong,
       "data_files" -> s.files.values.map(_.size.toLong).sum,
       "max_partition_files" -> s.files.values.map(_.size.toLong).maxOption.getOrElse(0L),
+      "retired_files" -> pins.synchronized(retired.size.toLong),
+      "pinned_snapshots" -> pins.synchronized(pins.size.toLong),
       "inline_heads" -> s.state.streamHeads.size.toLong,
       "head_layers" -> EventStore.headLayerDirs(root, s.state).size.toLong,
       "appends_sampled" -> appendLayers.size.toLong,
@@ -1287,9 +1314,10 @@ object EventStore {
     es
   }
 
-  /** `compact()` writes the rewritten log to [[CompactTmp]], moves
-    * `events/` to [[PreCompact]], moves the rewritten log in, then
-    * deletes [[PreCompact]]. A crash between the two moves leaves no
+  /** `compact()` of earlier versions wrote the rewritten log to
+    * [[CompactTmp]], moved `events/` to [[PreCompact]], moved the
+    * rewritten log in, then deleted [[PreCompact]]; a store it left
+    * behind may hold those states. A crash between the two moves leaves no
     * `events/`: move the old log back. Either tree holds the same
     * events under the same sequences (compaction never renumbers), so
     * rolling back is always sound; whatever is left of the other tree
@@ -1310,27 +1338,38 @@ object EventStore {
     */
   private val BloomCandidates = 11
 
+  /** the crash states [[recoverCompaction]] heals */
   private[api] val CompactTmp = "events.compact.tmp"
   private[api] val PreCompact = "events.pre-compact"
+
+  /** where Spark writes `ingest`'s and `compact()`'s files (hidden) */
+  private[api] val Staging = "_staging"
+
+  /** The `partition_id=N` directories under `dir`, with their N. */
+  private def partitionDirs(dir: java.nio.file.Path): Seq[(Int, java.nio.file.Path)] =
+    Fs.list(dir)
+      .filter(p => java.nio.file.Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith("partition_id="))
+      .map(p => p.getFileName.toString.stripPrefix("partition_id=").toInt -> p)
 
   /** A reader's view of the store: a committed manifest state, the data
     * files it covers by partition, the delta chain its version sits on
     * (-1: the version is not on disk) and its parquet head layers.
     */
-  private final case class Snapshot(state: ManifestState,
+  private[graft] final case class Snapshot(state: ManifestState,
       files: Map[Int, Vector[DataFile]], chain: Int, heads: HeadLayers)
 
   /** What the file index knows of a data file: its sequence range, its
     * lowest stream version and its row count.
     */
-  private final case class FileStats(minSeq: Long, maxSeq: Long, minVersion: Long, rows: Long)
+  private[graft] final case class FileStats(minSeq: Long, maxSeq: Long, minVersion: Long, rows: Long)
 
   /** One committed data file of the file index (its footer and bloom
     * filters live with `file`), with its [[FileStats]]: known when an
     * append or a rollover writes the file, else read from its footer on
     * first use.
     */
-  private final class DataFile(val file: HeadProbe.File, known: => FileStats) {
+  private[graft] final class DataFile(val file: HeadProbe.File, known: => FileStats) {
     lazy val stats: FileStats = known
     def path: java.nio.file.Path = java.nio.file.Paths.get(file.path)
     def minOf(key: String): Long = key match {
@@ -1431,7 +1470,7 @@ object EventStore {
     * within a layer, so the newest layer's entry per partition key is
     * the layered max-priority merge.
     */
-  private final class HeadLayers(root: String, st: ManifestState) {
+  private[graft] final class HeadLayers(root: String, st: ManifestState) {
     private val dirs = headLayerDirs(root, st)
     private lazy val files: Seq[Seq[HeadProbe.File]] =
       dirs.sortBy(-_._2).map(d => HeadProbe.listFiles(d._1))
@@ -1510,17 +1549,22 @@ object EventStore {
       (RegisteredStore(es.root, es.numPartitions),
         new java.lang.ref.WeakReference(es)))
 
-  /** The registered store whose events directory backs this file
-    * relation, if any — how the optimizer rules prove a scan is a
-    * graft event log (path identity, not column-name guessing).
+  /** The registered store whose events directory is this file
+    * relation's `basePath`, if any — how the optimizer rules prove a scan
+    * is a graft event log (path identity, not column-name guessing).
+    * [[EventStore.events]] lists the snapshot's files with `basePath` set
+    * to the log's directory, as every Spark read of the log does.
     */
   def registeredFor(
       fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation)
       : Option[RegisteredStore] =
-    fs.location.rootPaths.iterator
-      .map(p => normalizePath(p.toUri.getPath))
+    fs.options.get("basePath")
+      .map(p => normalizePath(new org.apache.hadoop.fs.Path(p).toUri.getPath))
       .flatMap(p => Option(registry.get(p)).map(_._1))
-      .nextOption()
+
+  /** The live handle the registry holds for `root`, if any. */
+  private[graft] def openHandle(root: String): Option[EventStore] =
+    Option(registry.get(registryKey(root))).flatMap(e => Option(e._2.get()))
 
   /** Snapshot + per-stream heads for [[graft.plans.HeadLookupRewrite]],
     * cheapest sound path first:
@@ -1537,9 +1581,7 @@ object EventStore {
   def headsForRewrite(
       reg: RegisteredStore,
       streamId: String): Option[(ManifestState, Seq[StreamHead])] = {
-    val live = Option(registry.get(registryKey(reg.root)))
-      .flatMap(e => Option(e._2.get()))
-    live.map(_.snap)
+    openHandle(reg.root).map(_.snap)
       .filter(s => s.state.version > 0 &&
         Manifest.newestVersion(reg.root).contains(s.state.version))
       .map(s => (s.state, streamHeadsOf(s.state, streamId, s.heads.of(streamId))))
@@ -1596,9 +1638,8 @@ object EventStore {
     org.apache.spark.sql.types.StructField("version",
       org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** Name prefix of an append's file while it is written: hidden, so
-    * Spark's file index, the command reads and the streaming source all
-    * skip it until the rename publishes it.
+  /** Name prefix of a driver-written file until its rename publishes
+    * it: hidden, so the listing at open skips it.
     */
   private[api] val InflightPrefix = ".inflight-"
 

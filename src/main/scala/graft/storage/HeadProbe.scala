@@ -38,9 +38,9 @@ import org.apache.parquet.io.api.Binary
   * A file's metadata lives with the file: a [[File]] reads its footer
   * and each bloom filter once, on first use, and keeps them for its own
   * life. The reference opens and drops a segment's indexes with the
-  * segment; here whoever holds the file objects decides how long the
-  * metadata lives — the event store's snapshot for its data files and
-  * head layers, the streaming source for the files it listed. Files are
+  * segment; here the event store's snapshot holds the file objects of
+  * its data files and head layers, and the metadata lives as long as
+  * the snapshot (the streaming source plans from a pinned one). Files are
   * never rewritten in place (appends and compaction write new names), so
   * an object never describes a different file than the one it read.
   * Files are opened through parquet's `LocalInputFile`, not Hadoop's

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.api.EventStore
-import graft.core.EventSchema
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -15,6 +14,15 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventTimeAggs {
 
+  /** The log of `es` through the graft event source: each committed
+    * event once, however its files are merged; a trigger reads them all.
+    */
+  private def log(es: EventStore): DataFrame =
+    es.spark.readStream
+      .format(classOf[GraftEventSourceProvider].getName)
+      .option("root", es.root)
+      .load()
+
   /** Tumbling-window counts per event_name over the streaming log.
     * `lateness` bounds state: windows older than the watermark are
     * finalized and their state dropped — required for unbounded runs.
@@ -23,10 +31,7 @@ object EventTimeAggs {
       es: EventStore,
       windowLength: String = "1 hour",
       lateness: String = "10 minutes"): DataFrame =
-    es.spark.readStream
-      .schema(EventSchema.schema)
-      .option("basePath", s"${es.root}/events")
-      .parquet(s"${es.root}/events")
+    log(es)
       .withColumn("event_time", timestamp_micros(expr("timestamp_ns div 1000")))
       .withWatermark("event_time", lateness)
       .groupBy(window(col("event_time"), windowLength), col("event_name"))
@@ -153,10 +158,7 @@ object EventTimeAggs {
     val spark = es.spark
     import spark.implicits._
     sessionizeFeed(
-      spark.readStream
-        .schema(EventSchema.schema)
-        .option("basePath", s"${es.root}/events")
-        .parquet(s"${es.root}/events")
+      log(es)
         .select(col("stream_id"), col("timestamp_ns"))
         .as[SessionInput],
       gapNs, idleFlushMs)

@@ -4,14 +4,14 @@ import java.util.{Map => JMap, Set => JSet}
 
 import graft.api.EventStore
 import graft.core.EventSchema
-import graft.storage.{HeadProbe, Manifest}
+import graft.storage.HeadProbe
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset => V2Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset => V2Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -58,8 +58,8 @@ object SeqVectorOffset {
   * history→live seam, `subscription.rs:402-439`).
   *
   * Why not Spark's file source: that tracks processed FILES by path, so
-  * compaction (all-new paths, same rows) redelivers history, and rate
-  * limiting is files-per-trigger. Here:
+  * compaction or a rollover (new paths, same rows) redelivers history,
+  * and rate limiting is files-per-trigger. Here:
   *
   *   - `latestOffset` offers only manifest-COMMITTED watermarks — an
   *     event above the watermark (data file written, commit pending) is
@@ -77,31 +77,22 @@ object SeqVectorOffset {
   *     driver-side mutable cursor to re-initialize on restart (the
   *     fragile part of the v1 `Source` contract this replaces).
   *
-  * Planning reads the store from disk, not from a live handle's
-  * snapshot: a subscription must see commits made through any handle
-  * on the root (another process, a reopened store), and a handle's
-  * snapshot only knows its own. Each trigger costs one manifest load
-  * (`latestOffset`) and one listing per subscribed partition with new
-  * events (`planInputPartitions`). The offsets plan a batch and a scan
-  * reads it, the split of Structured Streaming's sources:
+  * Watermarks and files come from the snapshots of the open
+  * [[EventStore]] handle the store registry holds for `root` (none open:
+  * [[StoreNotOpenException]]); the source holds the last handle it used.
+  * `latestOffset` pins the published snapshot and offers its
+  * watermarks, and `planInputPartitions` plans from it (or pins one for
+  * a batch replayed after a restart). Pins are released on the next
+  * `latestOffset`, which Structured Streaming calls only after the
+  * previous batch has run, and on `stop()`: a batch's files stay on disk
+  * through any swap, so every range handed out can be replayed.
   *
-  *   - `planInputPartitions` emits one task per pid under the
-  *     subscribed partition directories only — directory pruning comes
-  *     from the subscription matcher's pid set (`pids` option), not
-  *     from optimizer goodwill. Files wholly outside the batch's
-  *     (start, end] range are dropped from their footer statistics (a
-  *     partition fed by single-event appends holds thousands of small
-  *     files, and a task per file cost ~10 ms each on a 4-core VM). The
-  *     source keeps the file objects of the files it last listed, so a
-  *     file's footer is read once, not once per trigger; a file that
-  *     leaves the listing (compaction, orphan recovery) is dropped.
-  *   - each task reads its files through [[HeadProbe.scan]] with the
-  *     bounds `partition_sequence` in [start + 1, end], pruned by
-  *     row-group statistics, and decodes records with the event store's
-  *     decoder. A file a rollover or `compact()` replaced after planning
-  *     is found again by listing the partition anew
-  *     ([[GraftPartitionReader]]). Readers run on executors, distributed
-  *     like any batch scan; nothing funnels through the driver.
+  *   - `planInputPartitions` emits one task per subscribed partition
+  *     with events in the batch, holding the snapshot's files that
+  *     overlap its (start, end] range (a task per file cost ~10 ms each
+  *     on a 4-core VM); the `pids` option prunes partitions.
+  *   - each task reads its files in sequence order
+  *     ([[GraftPartitionReader]]) on an executor, like any batch scan.
   */
 final class GraftEventMicroBatchStream(
     root: String,
@@ -112,12 +103,29 @@ final class GraftEventMicroBatchStream(
   // rotates the budget-allocation start partition so a hot low
   // partition cannot starve higher ones across triggers
   private var allocRotation: Int = 0
-  // per partition, the files of its last listing by path
-  private var listed = Map.empty[Int, Map[String, HeadProbe.File]]
+  // the handle last used, held so the registry's weak entry stays live
+  private var store: EventStore = _
+  // the snapshots pinned since the last latestOffset, newest first
+  private var pinned = List.empty[(EventStore, EventStore.Snapshot)]
 
-  private def watermarks(): Map[Int, Long] = {
-    val wm = Manifest.load(root)
-      .map(_.watermarks.filter(_._2 >= 0)).getOrElse(Map.empty)
+  private def handle(): EventStore = {
+    store = EventStore.openHandle(root).getOrElse(throw new StoreNotOpenException(root))
+    store
+  }
+
+  private def pin(): EventStore.Snapshot = {
+    val s = handle().pin()
+    pinned ::= store -> s
+    s
+  }
+
+  private def release(): Unit = {
+    pinned.foreach { case (es, s) => es.unpin(s) }
+    pinned = Nil
+  }
+
+  private def watermarks(st: graft.storage.ManifestState): Map[Int, Long] = {
+    val wm = st.watermarks.filter(_._2 >= 0)
     subscribedPids match {
       case Some(ps) => wm.filter { case (p, _) => ps.contains(p) }
       case None     => wm
@@ -140,13 +148,13 @@ final class GraftEventMicroBatchStream(
       "admission-control latestOffset(start, limit) is the entry point")
 
   override def latestOffset(start: V2Offset, limit: ReadLimit): V2Offset = synchronized {
+    release()
     val cursor = SeqVectorOffset.of(start).seqs
-    val wm = watermarks()
+    val wm = watermarks(pin().state)
     if (wm.isEmpty) return start
     val budget = limit match {
-      case r: ReadMaxRows      => Some(r.maxRows())
-      case _: ReadAllAvailable => None
-      case _                   => None
+      case r: ReadMaxRows => Some(r.maxRows())
+      case _              => None
     }
     val target = budget match {
       case None => mergeMax(cursor, wm)
@@ -171,28 +179,23 @@ final class GraftEventMicroBatchStream(
     if (offered.isEmpty) start else SeqVectorOffset(offered)
   }
 
-  override def reportLatestOffset(): V2Offset = SeqVectorOffset(watermarks())
+  override def reportLatestOffset(): V2Offset = synchronized {
+    SeqVectorOffset(watermarks(handle().manifest))
+  }
 
   override def planInputPartitions(
       start: V2Offset, end: V2Offset): Array[InputPartition] = synchronized {
     val s = SeqVectorOffset.of(start).seqs
     val e = SeqVectorOffset.of(end).seqs
+    val snap = pinned.headOption.map(_._2)
+      .filter(p => e.forall { case (pid, hi) => p.state.watermark(pid) >= hi })
+      .getOrElse(pin())
     e.toSeq.sortBy(_._1).flatMap { case (pid, hi) =>
       val lo = s.getOrElse(pid, -1L)
-      val files =
-        if (hi <= lo) Nil
-        else {
-          val known = listed.getOrElse(pid, Map.empty)
-          val now = HeadProbe.listFiles(GraftEventSource.partitionDir(root, pid))
-            .map(f => known.getOrElse(f.path, f))
-          listed = listed.updated(pid, now.map(f => f.path -> f).toMap)
-          // footer statistics drop every file wholly outside (lo, hi]
-          // before any task opens it, and every file that vanished
-          // before its footer was read
-          now.filter(f => GraftEventSource.seqRange(f)
-            .exists { case (min, max) => max > lo && min <= hi })
-        }
-      Option.when(files.nonEmpty)(GraftFilePartition(root, pid, lo, hi, files))
+      val files = snap.files.getOrElse(pid, Vector.empty)
+        .filter(f => f.stats.maxSeq > lo && f.stats.minSeq <= hi)
+        .sortBy(_.stats.minSeq)
+      Option.when(hi > lo && files.nonEmpty)(GraftFilePartition(pid, lo, hi, files.map(_.file)))
     }.toArray
   }
 
@@ -200,16 +203,26 @@ final class GraftEventMicroBatchStream(
 
   override def commit(end: V2Offset): Unit = ()
 
-  override def stop(): Unit = ()
+  override def stop(): Unit = synchronized {
+    release()
+    store = null
+  }
 
   override def toString: String = s"GraftEventMicroBatchStream[$root]"
 }
 
-/** The files of one store partition that hold part of the batch's
-  * (lo, hi] sequence range — one task per partition, so a partition of
-  * many small append files costs one task, not one per file.
+/** No [[EventStore]] is open at `root`: the event source reads the
+  * snapshots of an open handle, never the directory.
   */
-final case class GraftFilePartition(root: String, pid: Int, lo: Long, hi: Long,
+final class StoreNotOpenException(val root: String)
+  extends IllegalStateException(s"no EventStore is open at $root")
+
+/** The files of one store partition that hold part of the batch's
+  * (lo, hi] sequence range, in sequence order — one task per partition,
+  * so a partition of many small append files costs one task, not one
+  * per file.
+  */
+final case class GraftFilePartition(pid: Int, lo: Long, hi: Long,
     files: Seq[HeadProbe.File]) extends InputPartition
 
 final class GraftReaderFactory extends PartitionReaderFactory {
@@ -217,88 +230,43 @@ final class GraftReaderFactory extends PartitionReaderFactory {
     new GraftPartitionReader(partition.asInstanceOf[GraftFilePartition])
 }
 
-/** A partition's events in (lo, hi] are not on disk: after
-  * [[GraftEventSource.MaxStaleRelists]] re-listings that found none of
-  * the missing sequences, the next one to deliver is `missing`.
-  */
-final class MissingEventsException(val pid: Int, val missing: Long, val hi: Long)
-  extends IllegalStateException(
-    s"partition $pid: events $missing..$hi of a committed range are on no listed file")
-
-/** Reads a partition's (lo, hi] sequence range from its files through
-  * [[HeadProbe.scan]], exactly once and in sequence order, while
-  * rollovers and `compact()` replace the files under it. The planned
-  * files are read in order of their lowest sequence (widest first on a
-  * tie, so a merged file comes before the inputs it replaced), skipping
-  * every row at or below the last sequence handed on. When a file has
-  * vanished, or the next file does not start at the next sequence, the
-  * partition directory is listed again and reading goes on from there:
-  * sequences up to the watermark are gapless, so the range is on disk.
-  * Re-listings that make no progress are bounded. The directory-derived
-  * `partition_id` is attached by the event store's record decoder
-  * (Hive-style layout keeps it out of the files). A file's share of the
-  * range is decoded before its first row is handed on, so a task holds
-  * at most that many rows; `maxEventsPerTrigger` bounds the range.
+/** Reads a partition's (lo, hi] sequence range from its planned files
+  * through [[HeadProbe.scan]], in sequence order. A pinned snapshot's
+  * files are gapless up to its watermark, so a row that is not the next
+  * sequence due is a bug: the read fails with `IllegalStateException`.
+  * The event store's record decoder attaches `partition_id`. A file's
+  * share of the range is decoded before its first row is handed on, so
+  * a task holds at most that many rows.
   */
 final class GraftPartitionReader(p: GraftFilePartition)
   extends PartitionReader[InternalRow] {
 
-  private var last = p.lo // the highest sequence handed on
-  private var pending = ordered(p.files)
-  private var rows: Iterator[Row] = Iterator.empty
+  private var due = p.lo + 1 // the next sequence to hand on
+  private val rows = p.files.iterator.flatMap(read)
   private var current: Row = _
-  private var relists = 0 // re-listings in a row that handed nothing on
-  private var lastAtRelist = p.lo
   private val toUnsafe = UnsafeProjection.create(EventSchema.schema)
-  private val seqField = EventSchema.schema.fieldIndex("partition_sequence")
 
-  /** files that may hold sequences above `last`, by lowest sequence */
-  private def ordered(files: Seq[HeadProbe.File]): List[(HeadProbe.File, Long, Long)] =
-    files.flatMap(f => GraftEventSource.seqRange(f).map { case (lo, hi) => (f, lo, hi) })
-      .filter { case (_, lo, hi) => hi > last && lo <= p.hi }
-      .sortBy { case (f, lo, hi) => (lo, -hi, f.path) }
-      .toList
-
-  private def relist(): Unit = {
-    relists = if (last > lastAtRelist) 1 else relists + 1
-    lastAtRelist = last
-    if (relists > GraftEventSource.MaxStaleRelists)
-      throw new MissingEventsException(p.pid, last + 1, p.hi)
-    if (relists > 1) Thread.sleep(10L * relists) // let a swap finish
-    pending = ordered(HeadProbe.listFiles(GraftEventSource.partitionDir(p.root, p.pid)))
-  }
-
-  /** the rows of `f` from `last + 1` on, up to the first gap; none when
-    * `f` is gone
-    */
+  /** the rows of `f` from `due` up to `hi` */
   private def read(f: HeadProbe.File): Vector[Row] = {
     val out = Vector.newBuilder[Row]
-    var next = last + 1
-    try HeadProbe.scan(Seq(f), Seq(HeadProbe.Between("partition_sequence", next, p.hi))) { g =>
-      val ok = g.getLong("partition_sequence", 0) == next
-      if (ok) { out += EventStore.eventRow(p.pid, g); next += 1 }
-      ok
-    } catch {
-      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException =>
+    HeadProbe.scan(Seq(f), Seq(HeadProbe.Between("partition_sequence", due, p.hi))) { g =>
+      val seq = g.getLong("partition_sequence", 0)
+      if (seq != due) throw new IllegalStateException(
+        s"partition ${p.pid}: $f holds sequence $seq where $due is due")
+      out += EventStore.eventRow(p.pid, g)
+      due += 1
+      true
     }
     out.result()
   }
 
-  override def next(): Boolean = {
-    // a file that is gone, or breaks off, leaves the next file short of
-    // `last + 1`: that re-lists
-    while (!rows.hasNext && last < p.hi) pending match {
-      case (f, lo, hi) :: rest if lo <= last + 1 =>
-        pending = rest
-        if (hi > last) rows = read(f).iterator
-      case _ => relist()
-    }
-    rows.hasNext && {
+  override def next(): Boolean =
+    if (rows.hasNext) {
       current = rows.next()
-      last = current.getLong(seqField)
       true
-    }
-  }
+    } else if (due <= p.hi)
+      throw new IllegalStateException(s"partition ${p.pid}: no planned file holds $due..${p.hi}")
+    else false
 
   override def get(): InternalRow =
     toUnsafe(InternalRow.fromSeq(current.toSeq.map {
@@ -307,24 +275,6 @@ final class GraftPartitionReader(p: GraftFilePartition)
     }))
 
   override def close(): Unit = ()
-}
-
-object GraftEventSource {
-  /** re-listings in a row that find none of a range's missing events
-    * before a reader gives up
-    */
-  val MaxStaleRelists = 5
-
-  def partitionDir(root: String, pid: Int): String = s"$root/events/partition_id=$pid"
-
-  /** a file's (min, max) `partition_sequence` from its footer; None when
-    * the file vanished before its footer was read
-    */
-  def seqRange(f: HeadProbe.File): Option[(Long, Long)] =
-    try f.longRange("partition_sequence")
-    catch {
-      case _: java.io.FileNotFoundException | _: java.nio.file.NoSuchFileException => None
-    }
 }
 
 /** `spark.readStream.format(classOf[GraftEventSourceProvider].getName)
@@ -346,7 +296,7 @@ class GraftEventSourceProvider extends TableProvider with DataSourceRegister {
       properties: JMap[String, String]): Table =
     new GraftEventTable
 
-  /** Offsets/partitions come from the manifest, not file listings. */
+  /** Offsets/partitions come from the store's snapshot, not file listings. */
   override def supportsExternalMetadata(): Boolean = false
 }
 

@@ -11,14 +11,16 @@ import org.apache.spark.sql.Row
   * (reference behavior: `crates/sierradb-cluster/src/subscription.rs`,
   * commands `esub.rs`/`epsub.rs`/`eack.rs`; SURVEY.md §2.1 #8-10, §3.3).
   *
-  * The event log IS the stream, read through [[GraftEventSource]] —
-  * a custom source whose offsets are per-partition SEQUENCE vectors
-  * (the reference's per-subscription cursor), not file paths. That
-  * gives the same catch-up→live seam the reference implements by
-  * replaying segment history and then following the broadcast bus,
-  * with exactly-once per-subscription delivery guaranteed by source
-  * offsets + checkpoint instead of `has_seen` cursors — and it
-  * survives `compact()`, which renames files but never sequences.
+  * The event log IS the stream, read through
+  * [[GraftEventMicroBatchStream]] — a custom source whose offsets are
+  * per-partition SEQUENCE vectors (the reference's per-subscription
+  * cursor), not file paths. That gives the same catch-up→live seam the
+  * reference implements by replaying segment history and then
+  * following the broadcast bus, with exactly-once per-subscription
+  * delivery guaranteed by source offsets + checkpoint instead of
+  * `has_seen` cursors — and it survives `compact()`, which renames
+  * files but never sequences. Each batch reads a snapshot pinned on the
+  * store's open handle, which must stay open while the query runs.
   *
   *   - FROM version/sequence → a `stream_version`/`partition_sequence`
   *     lower-bound filter (per stream/partition map supported);

@@ -10,7 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * where every prior round used TIMESTAMP(NANOS), which silently
   * broke all 17 event queries at analysis time.
   */
-class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TablesSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[2]")
@@ -23,7 +23,7 @@ class TablesSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def withTempDir(f: String => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory("tables-spec-").toString
+    val dir = tempDir("tables-spec-").toString
     try f(dir)
     finally graft.core.Fs.deleteRecursively(new java.io.File(dir))
   }

@@ -20,7 +20,7 @@ import org.scalatest.BeforeAndAfterAll
   * serialize writers like the reference's single writer thread per
   * bucket.
   */
-class AppendPropertySpec extends AnyFunSuite with BeforeAndAfterAll
+class AppendPropertySpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll
     with graft.PropHelpers {
 
   private lazy val spark = SparkSession.builder()
@@ -54,7 +54,7 @@ class AppendPropertySpec extends AnyFunSuite with BeforeAndAfterAll
     // files, so rollovers merge runs of append files and runs of merged
     // files while the model checks go on
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-prop-").toString, 2)
+      spark, tempDir("graft-prop-").toString, 2)
     val model = collection.mutable.Map.empty[String, Long] // head versions
 
     forAllSampled(genBatch, runs = 600) { batch =>
@@ -107,7 +107,7 @@ class AppendPropertySpec extends AnyFunSuite with BeforeAndAfterAll
         Gen.oneOf(pool),
         Gen.oneOf(Gen.const(ExpectedVersion.Any), Gen.const(ExpectedVersion.Empty),
           Gen.const(ExpectedVersion.Exists), Gen.chooseNum(0L, 4L).map(ExpectedVersion.Exact(_))))))
-    def fresh() = EventStore.open(spark, Files.createTempDirectory("graft-diff-").toString, 4)
+    def fresh() = EventStore.open(spark, tempDir("graft-diff-").toString, 4)
     val many = fresh()
     val single = fresh()
     var batchNo = 0
@@ -143,7 +143,7 @@ class AppendPropertySpec extends AnyFunSuite with BeforeAndAfterAll
 
   test("concurrent appenders: serialized writes keep sequences gapless") {
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-conc-").toString, 4)
+      spark, tempDir("graft-conc-").toString, 4)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     try {
       val futures = (0 until 8).map { t =>

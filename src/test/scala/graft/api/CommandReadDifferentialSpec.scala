@@ -27,7 +27,7 @@ import org.scalatest.BeforeAndAfterAll
   * each partition from the same stores, and the driver-written files
   * must read back field for field through Spark and the source.
   */
-class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
+class CommandReadDifferentialSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll
     with graft.PropHelpers {
 
   private lazy val spark = SparkSession.builder()
@@ -77,7 +77,7 @@ class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
     * watermark, as after a crash between rename and commit.
     */
   private def build(np: Int, ops: Seq[Op]): (EventStore, String) = {
-    val dir = Files.createTempDirectory("graft-diff-").toString
+    val dir = tempDir("graft-diff-").toString
     val es = EventStore.open(spark, dir, np)
     var i = 0
     def next(): Int = { i += 1; i }
@@ -256,7 +256,7 @@ class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
     forAllSampled(Gen.zip(Gen.oneOf(1, 2), Gen.chooseNum(0L, Long.MaxValue)), runs = 2) {
       case (np, seed) =>
         val rnd = new scala.util.Random(seed)
-        val dir = Files.createTempDirectory("graft-diff-cut-").toString
+        val dir = tempDir("graft-diff-cut-").toString
         val es = EventStore.open(spark, dir, np)
         // three streams under one key share a partition; an EMAPPEND of
         // all three writes one file whose minimum ties with the one-event
@@ -324,7 +324,7 @@ class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
   }
 
   test("driver-written files read back field for field through Spark and the event source") {
-    val dir = Files.createTempDirectory("graft-diff-rt-").toString
+    val dir = tempDir("graft-diff-rt-").toString
     val es = EventStore.open(spark, dir, 4)
     (0 until 6).foreach(i => assert(es.append(input(s"rt-${i % 2}", i)).isRight))
     assert(es.mappend(Ids.partitionKeyForStream("rt-0"),
@@ -346,7 +346,7 @@ class CommandReadDifferentialSpec extends AnyFunSuite with BeforeAndAfterAll
         new org.apache.hadoop.conf.Configuration(), new org.apache.hadoop.fs.Path(f))
         .getFileMetaData.getSchema
     }
-    val bySpark = Files.createTempDirectory("graft-diff-spark-").toString + "/events"
+    val bySpark = tempDir("graft-diff-spark-").toString + "/events"
     import spark.implicits._
     Seq(Event("e", "t", "k", 0, 0L, 0L, "s", "n", 0L, null, null)).toDS()
       .write.partitionBy("partition_id").parquet(bySpark)

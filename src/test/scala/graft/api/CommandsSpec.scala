@@ -10,7 +10,7 @@ import org.scalatest.BeforeAndAfterAll
   * (`sierradb-client/examples/comprehensive_test.rs`), including the
   * argument grammar edge cases.
   */
-class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CommandsSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -19,7 +19,7 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   private lazy val es =
-    EventStore.open(spark, Files.createTempDirectory("graft-cmd-").toString, 8)
+    EventStore.open(spark, tempDir("graft-cmd-").toString, 8)
   private lazy val cmd = new Commands(es)
 
   override def afterAll(): Unit = spark.stop()
@@ -236,7 +236,7 @@ class CommandsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("EAPPEND, EMAPPEND, EGET miss, EGET TRANSACTION, ESCAN and EPSCAN launch no Spark job") {
     val store = EventStore.open(spark,
-      Files.createTempDirectory("graft-cmd-jobless-").toString, 8)
+      tempDir("graft-cmd-jobless-").toString, 8)
     val c = new Commands(store)
     // files from both writers: a bulk ingest (Spark) and appends (driver)
     import spark.implicits._

@@ -20,7 +20,7 @@ import org.scalatest.BeforeAndAfterAll
   * state and a store that, reopened from disk, answers every command
   * the same way.
   */
-class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
+class CommitPathSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll
     with graft.PropHelpers {
 
   private lazy val spark = SparkSession.builder()
@@ -56,7 +56,7 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
       }
 
   test("an inline EAPPEND over 20,000 inline heads commits a delta under 1 KB") {
-    val dir = Files.createTempDirectory("graft-delta-size-").toString
+    val dir = tempDir("graft-delta-size-").toString
     val es = EventStore.open(spark, dir, 4)
     ingest(es, (0 until 20000).map(i => s"h-$i"))
     assert(es.manifest.streamHeads.size == 20000)
@@ -73,7 +73,7 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
   }
 
   test("a failed manifest commit removes the append's files") {
-    val dir = Files.createTempDirectory("graft-commit-fail-").toString
+    val dir = tempDir("graft-commit-fail-").toString
     val es = EventStore.open(spark, dir, 2)
     (0 until 3).foreach(i => assert(es.append(in(s"f-$i")).isRight))
     def failNextCommit[A](write: => A): Unit = {
@@ -98,7 +98,7 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
   }
 
   test("a store whose newest versions do not resolve reopens at the last complete one") {
-    val dir = Files.createTempDirectory("graft-commit-dead-").toString
+    val dir = tempDir("graft-commit-dead-").toString
     val es = EventStore.open(spark, dir, 1)
     (0 until 6).foreach(i => assert(es.append(in(s"d-$i")).isRight))
     assert(es.manifest.version == 6)
@@ -114,8 +114,8 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
     assertGapless(reopened)
   }
 
-  test("command reads racing compact() retry on the new snapshot") {
-    val dir = Files.createTempDirectory("graft-commit-race-").toString
+  test("command reads racing compact() answer from their pinned snapshot") {
+    val dir = tempDir("graft-commit-race-").toString
     val es = EventStore.open(spark, dir, 1)
     val sids = (0 until 3).map(i => s"r-$i")
     (0 until 2).foreach { round =>
@@ -175,7 +175,7 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
         Files.move(ev, pre); Files.move(tmp, ev)
       })
     crashes.foreach { case (crash, step) =>
-      val dir = Files.createTempDirectory("graft-compact-crash-").toString
+      val dir = tempDir("graft-compact-crash-").toString
       val es = EventStore.open(spark, dir, 3)
       streams.foreach(s => assert(es.append(in(s)).isRight))
       ingest(es, streams ++ streams.take(3))
@@ -188,7 +188,7 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
       val heads = streams.map(s => s -> es.sver(s)).toMap
 
       // a real compacted tree: compact a copy of the store
-      val copy = Files.createTempDirectory("graft-compact-copy-").resolve("store")
+      val copy = tempDir("graft-compact-copy-").resolve("store")
       copyTree(Paths.get(dir), copy)
       EventStore.open(spark, copy.toString, 3).compact()
       val ev = Paths.get(dir, "events")
@@ -210,9 +210,72 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
     }
   }
 
+  test("a crash inside compact() after Spark wrote its files reopens to the log as it was") {
+    import java.nio.file.{Path, Paths}
+    def dataFiles(d: Path) = Fs.list(d).filter(_.getFileName.toString.endsWith(".parquet"))
+    val dir = tempDir("graft-compact-stage-").toString
+    val es = EventStore.open(spark, dir, 3)
+    streams.foreach(s => assert(es.append(in(s)).isRight))
+    ingest(es, streams ++ streams.take(3))
+    (0 until 12).foreach(i => assert(es.append(in(streams(i % 5))).isRight))
+    def rows(e: EventStore) = norm(e.events()
+      .orderBy("partition_id", "partition_sequence").collect().toSeq)
+    val expectedRows = rows(es)
+    val expected = answers(es)
+    val wm = es.manifest
+    val head = es.sver("p-1").get
+    val pids = (0 until 3).filter(p => wm.watermark(p) >= 0)
+    assert(pids.size >= 2)
+
+    // the files compact() writes: compact a copy of the store
+    val compacted = tempDir("graft-compact-files-").resolve("store")
+    copyTree(Paths.get(dir), compacted)
+    EventStore.open(spark, compacted.toString, 3).compact()
+    def compactedFile(pid: Int): Path = {
+      val Seq(f) = dataFiles(compacted.resolve(s"events/partition_id=$pid"))
+      f
+    }
+
+    // the states a crash can leave: Spark's output still in the staging
+    // directory, or renamed into some or all partitions next to the old
+    // files, the manifest not yet committed
+    def renameIn(ps: Seq[Int]): Path => Unit = store => ps.foreach { pid =>
+      val f = compactedFile(pid)
+      Files.copy(f, store.resolve(s"events/partition_id=$pid").resolve(f.getFileName))
+    }
+    val crashes: Seq[(String, Path => Unit)] = Seq(
+      "files left in staging" -> { (store: Path) =>
+        pids.foreach { pid =>
+          val d = Files.createDirectories(store.resolve(s"${EventStore.Staging}/partition_id=$pid"))
+          Files.copy(compactedFile(pid), d.resolve(compactedFile(pid).getFileName))
+        }
+      },
+      "files renamed into some partitions" -> renameIn(pids.take(1)),
+      "files renamed into every partition" -> renameIn(pids))
+    crashes.foreach { case (crash, step) =>
+      val copy = tempDir("graft-compact-state-").resolve("store")
+      copyTree(Paths.get(dir), copy)
+      step(copy)
+      val reopened = EventStore.open(spark, copy.toString, 3)
+      assert(!Files.exists(copy.resolve(EventStore.Staging)), crash)
+      pids.foreach { pid =>
+        val left = dataFiles(copy.resolve(s"events/partition_id=$pid")).map(_.getFileName)
+        if (left.contains(compactedFile(pid).getFileName)) assert(left.size == 1, crash)
+      }
+      assert(rows(reopened) == expectedRows, crash)
+      assert(answers(reopened) == expected, crash)
+      val r = reopened.append(in("p-1")).toOption.get
+      assert(r.partitionSequence == wm.watermark(r.partitionId) + 1, crash)
+      assert(r.streamVersion == head + 1, crash)
+      assertGapless(reopened)
+      reopened.compact()
+      assertGapless(reopened)
+    }
+  }
+
   test("a crash inside a rollover swap reopens to the log as it was") {
     import java.nio.file.{Path, Paths}
-    val dir = Files.createTempDirectory("graft-roll-crash-").toString
+    val dir = tempDir("graft-roll-crash-").toString
     val es = EventStore.open(spark, dir, 1)
     val pdir = Paths.get(dir, "events", "partition_id=0")
     def dataFiles(d: Path) = Fs.list(d).filter(_.getFileName.toString.endsWith(".parquet"))
@@ -224,7 +287,7 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
     val gate = new java.util.concurrent.CountDownLatch(1)
     EventStore.rolloverWorker.execute(() => gate.await())
     assert(es.append(in("p-1")).isRight)
-    val preSwap = Files.createTempDirectory("graft-roll-pre-").resolve("store")
+    val preSwap = tempDir("graft-roll-pre-").resolve("store")
     copyTree(Paths.get(dir), preSwap)
     gate.countDown()
     es.awaitRollover()
@@ -252,7 +315,7 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
         inputs.take(8).foreach(f => Files.delete(p.resolve(f.getFileName)))
       }, 1))
     crashes.foreach { case (crash, step, filesLeft) =>
-      val copy = Files.createTempDirectory("graft-roll-state-").resolve("store")
+      val copy = tempDir("graft-roll-state-").resolve("store")
       copyTree(preSwap, copy)
       step(copy.resolve("events/partition_id=0"))
       val reopened = EventStore.open(spark, copy.toString, 1)
@@ -268,10 +331,10 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
     // a file whose range partly overlaps another's is never written: a
     // planted one fails the open with the typed error
     (0 until 3).foreach(i => assert(es.append(in(streams(i))).isRight))
-    val spill = Files.createTempDirectory("graft-roll-overlap-").resolve("rows").toString
+    val spill = tempDir("graft-roll-overlap-").resolve("rows").toString
     es.events().where(col("partition_sequence").between(10, 19)).drop("partition_id")
       .coalesce(1).write.parquet(spill)
-    val planted = Files.createTempDirectory("graft-roll-planted-").resolve("store")
+    val planted = tempDir("graft-roll-planted-").resolve("store")
     copyTree(Paths.get(dir), planted)
     dataFiles(Paths.get(spill)).foreach(f =>
       Files.copy(f, planted.resolve("events/partition_id=0").resolve(f.getFileName)))
@@ -326,7 +389,7 @@ class CommitPathSpec extends AnyFunSuite with BeforeAndAfterAll
 
   test("random write mix: the manifest loads back to the store's state, reopened stores agree") {
     forAllSampled(genRun, runs = 3) { case (np, ops) =>
-      val dir = Files.createTempDirectory("graft-commit-prop-").toString
+      val dir = tempDir("graft-commit-prop-").toString
       val es = EventStore.open(spark, dir, np, maxInlineHeads = 4)
       ops.foreach { op =>
         op match {

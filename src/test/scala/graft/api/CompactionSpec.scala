@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CompactionSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -29,7 +29,7 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     EventInput(sid, name, name.getBytes, Array.emptyByteArray, ev)
 
   test("appendMany: one commit, gapless sequences, per-event failures isolated") {
-    val dir = Files.createTempDirectory("graft-gc-").toString
+    val dir = tempDir("graft-gc-").toString
     val es = EventStore.open(spark, dir, 8)
     val v0 = es.manifest.version
 
@@ -55,7 +55,7 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("appendMany throughput batch then compact shrinks files, preserves data") {
-    val dir = Files.createTempDirectory("graft-cp-").toString
+    val dir = tempDir("graft-cp-").toString
     val es = EventStore.open(spark, dir, 8)
     // many small group commits → many files
     (0 until 10).foreach { b =>
@@ -73,16 +73,18 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     es.compact()
 
+    // the events() DataFrame taken before compact() keeps the old files
+    // until the next events() call
+    assert(snapshot() == dataBefore)
     val after = parquetFiles(dir)
     assert(after < before, s"expected fewer files: $before -> $after")
     assert(after <= 8)
-    assert(snapshot() == dataBefore)
     // store still writable after compaction
     assert(es.append(in("s-0", ev = ExpectedVersion.Exact(es.sver("s-0").get))).isRight)
   }
 
   test("appendMany matches mappend semantics for a same-stream batch") {
-    val dir = Files.createTempDirectory("graft-eq-").toString
+    val dir = tempDir("graft-eq-").toString
     val es = EventStore.open(spark, dir, 8)
     val r = es.appendMany(Seq(
       in("x", "a", ExpectedVersion.Empty),
@@ -93,7 +95,7 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("compacted files carry bloom filters sized to their rows") {
-    val dir = Files.createTempDirectory("graft-cp-bloom-").toString
+    val dir = tempDir("graft-cp-bloom-").toString
     val es = EventStore.open(spark, dir, 4)
     (0 until 4).foreach { b =>
       assert(es.appendMany((0 until 50).map(i => in(s"b-${i % 9}", s"e$b-$i"))).forall(_.isRight))

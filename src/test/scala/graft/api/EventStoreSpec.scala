@@ -15,7 +15,7 @@ import org.scalatest.BeforeAndAfterAll
   * EMAPPEND intra-batch validation + atomicity, paging, and
   * manifest-recovered state (SURVEY.md §5, FIXTURES.md §3).
   */
-class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EventStoreSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -27,7 +27,7 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def freshStore(np: Int = 32, strict: Boolean = false): EventStore = {
-    val dir = Files.createTempDirectory("graft-es-").toString
+    val dir = tempDir("graft-es-").toString
     EventStore.open(spark, dir, np, strict)
   }
 
@@ -182,7 +182,7 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("crash recovery: orphan files beyond the watermark are purged on open") {
-    val dir = Files.createTempDirectory("graft-orphan-").toString
+    val dir = tempDir("graft-orphan-").toString
     val es1 = EventStore.open(spark, dir)
     es1.append(in("orph")); es1.append(in("orph"))
     val committed = java.nio.file.Files.list(
@@ -228,7 +228,7 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("manifest recovery: reopening preserves heads and sequences") {
-    val dir = Files.createTempDirectory("graft-es-").toString
+    val dir = tempDir("graft-es-").toString
     val es1 = EventStore.open(spark, dir)
     es1.append(in("persist"))
     es1.append(in("persist"))
@@ -287,7 +287,7 @@ class EventStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     // unsized, parquet gives every bloom filter its 1 MB maximum: a few
     // hundred events over 32 partitions would write files of ~1 MB
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-bloom-").toString
+    val dir = tempDir("graft-bloom-").toString
     val es = EventStore.open(spark, dir)
     es.ingest((0 until 400).map(i => (s"b-${i % 50}", "Evt", i.toLong))
       .toDF("stream_id", "event_name", "arrival"), "arrival")

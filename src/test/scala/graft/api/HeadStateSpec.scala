@@ -13,7 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * append-validation / ingest path stays correct across spills, folds,
   * and reopens — the driver never holds more than the bounded overlay.
   */
-class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HeadStateSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -30,7 +30,7 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
     EventInput(sid, "E", "p".getBytes, Array.emptyByteArray, ev)
 
   test("appends spill past maxInlineHeads; lookups and validation stay correct") {
-    val dir = Files.createTempDirectory("graft-heads-").toString
+    val dir = tempDir("graft-heads-").toString
     val es = EventStore.open(spark, dir, 4, maxInlineHeads = 4)
     (0 until 10).foreach(i => assert(es.append(in(s"h-$i")).isRight))
 
@@ -57,7 +57,7 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("layered point lookups launch NO Spark job (driver-side footer probe)") {
-    val dir = Files.createTempDirectory("graft-heads-").toString
+    val dir = tempDir("graft-heads-").toString
     val es = EventStore.open(spark, dir, 4, maxInlineHeads = 4)
     (0 until 32).foreach(i => assert(es.append(in(s"jp-$i")).isRight))
     assert(es.manifest.headsDeltas.nonEmpty || es.manifest.headsBase > 0)
@@ -73,7 +73,7 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("HeadProbe prunes by row-group stats and finds exact entries") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-probe-").toString + "/layer"
+    val dir = tempDir("graft-probe-").toString + "/layer"
     val rows = (0 until 1000).map(i => (f"s-$i%04d", s"pk-$i", i % 7, i.toLong))
     rows.toDF("stream_id", "partition_key", "partition_id", "version")
       .repartitionByRange(4, col("stream_id"))
@@ -95,7 +95,7 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("HeadProbe.probeStream returns every partition key's entry for a stream") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-probe-s-").toString + "/layer"
+    val dir = tempDir("graft-probe-s-").toString + "/layer"
     val rows = (0 until 500).map(i => (f"t-$i%04d", s"pk-$i", i % 5, i.toLong)) ++
       Seq(("t-dup", "pk-a", 1, 5L), ("t-dup", "pk-b", 2, 7L))
     rows.toDF("stream_id", "partition_key", "partition_id", "version")
@@ -112,7 +112,7 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("state persists across reopen; orphan layers are cleaned") {
-    val dir = Files.createTempDirectory("graft-heads-").toString
+    val dir = tempDir("graft-heads-").toString
     val es = EventStore.open(spark, dir, 4, maxInlineHeads = 2)
     (0 until 6).foreach(i => es.append(in(s"p-$i")))
     // fabricate an orphan layer (crash between layer write and commit)
@@ -126,7 +126,7 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("bulk ingest spills straight from executors and versions continue") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-heads-").toString
+    val dir = tempDir("graft-heads-").toString
     val es = EventStore.open(spark, dir, 4, maxInlineHeads = 4)
     val batch = (0 until 40)
       .map(i => (s"b-${i % 20}", "E", i.toLong))
@@ -151,7 +151,7 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("concurrent readers race spills and folds without stale or crashed lookups") {
-    val dir = Files.createTempDirectory("graft-heads-race-").toString
+    val dir = tempDir("graft-heads-race-").toString
     val es = EventStore.open(spark, dir, 4, maxInlineHeads = 2)
     val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -190,7 +190,7 @@ class HeadStateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("deltas fold into a base past the threshold and after compact()") {
-    val dir = Files.createTempDirectory("graft-heads-").toString
+    val dir = tempDir("graft-heads-").toString
     val es = EventStore.open(spark, dir, 4, maxInlineHeads = 1)
     // every second append spills; > 8 deltas triggers a fold
     (0 until 22).foreach(i => es.append(in(s"f-$i")))

@@ -19,7 +19,7 @@ import org.scalatest.BeforeAndAfterAll
   * of every command `ingest` runs are captured and their
   * payload-carrying shuffles counted.
   */
-class IngestPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IngestPlanSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -76,7 +76,7 @@ class IngestPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("broadcast heads: the payload crosses one shuffle exchange") {
     val es = EventStore.open(spark,
-      Files.createTempDirectory("graft-ingest-plan-").toString, 8)
+      tempDir("graft-ingest-plan-").toString, 8)
     es.ingest(batch("a"), "arrival")
     val plans = executedPlans(es.ingest(batch("a"), "arrival"))
     assert(es.sver("ip-a-3").contains(7L))
@@ -87,7 +87,7 @@ class IngestPlanSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("parquet heads: the payload crosses one shuffle exchange") {
     val es = EventStore.open(spark,
-      Files.createTempDirectory("graft-ingest-plan-layered-").toString, 8,
+      tempDir("graft-ingest-plan-layered-").toString, 8,
       maxInlineHeads = 0)
     es.ingest(batch("b"), "arrival") // spills the heads to a parquet layer
     assert(es.manifest.streamHeads.isEmpty)

@@ -11,7 +11,7 @@ import org.scalatest.BeforeAndAfterAll
   * EventStore bulk path, across multiple micro-batches, with gapless
   * sequences spanning the batch boundary.
   */
-class IngestStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IngestStreamSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -23,9 +23,9 @@ class IngestStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming ingest spans micro-batches with gapless sequences") {
     import spark.implicits._
-    val srcDir = Files.createTempDirectory("graft-ss-src-").toString
-    val storeDir = Files.createTempDirectory("graft-ss-store-").toString
-    val ckDir = Files.createTempDirectory("graft-ss-ck-").toString
+    val srcDir = tempDir("graft-ss-src-").toString
+    val storeDir = tempDir("graft-ss-store-").toString
+    val ckDir = tempDir("graft-ss-ck-").toString
     val es = EventStore.open(spark, storeDir, 8)
 
     def emit(from: Int, n: Int): Unit =
@@ -66,9 +66,9 @@ class IngestStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("restart with same checkpoint neither drops nor duplicates") {
     import spark.implicits._
-    val srcDir = Files.createTempDirectory("graft-rs-src-").toString
-    val storeDir = Files.createTempDirectory("graft-rs-store-").toString
-    val ckDir = Files.createTempDirectory("graft-rs-ck-").toString
+    val srcDir = tempDir("graft-rs-src-").toString
+    val storeDir = tempDir("graft-rs-store-").toString
+    val ckDir = tempDir("graft-rs-ck-").toString
     val es = EventStore.open(spark, storeDir, 4)
     val schema = StructType(Seq(
       StructField("stream_id", StringType),

@@ -16,7 +16,7 @@ import org.scalatest.BeforeAndAfterAll
 /** Segment rollover: merges race appends and command reads without
   * changing an answer, and only appends ever request one.
   */
-class RolloverSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RolloverSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -37,7 +37,7 @@ class RolloverSpec extends AnyFunSuite with BeforeAndAfterAll {
   private final case class Acked(sid: String, version: Long, pid: Int, seq: Long, tx: Seq[String])
 
   test("reads racing rollovers across several tiers answer as the model") {
-    val es = EventStore.open(spark, Files.createTempDirectory("graft-roll-race-").toString, 2)
+    val es = EventStore.open(spark, tempDir("graft-roll-race-").toString, 2)
     val acked = new ConcurrentHashMap[String, Acked]()
     // the ids readers pick from: added once every event of their
     // transaction is in `acked`
@@ -141,9 +141,147 @@ class RolloverSpec extends AnyFunSuite with BeforeAndAfterAll {
     heads.asScala.foreach { case (sid, v) => assert(es.sver(sid).contains(v)) }
   }
 
+  /** the data files on disk, by path */
+  private def filesOnDisk(dir: String): Set[String] = {
+    val walk = Files.walk(java.nio.file.Paths.get(dir, "events"))
+    try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(_.toString).toSet
+    finally walk.close()
+  }
+
+  /** the files a DataFrame of `events()` reads, by path */
+  private def inputFiles(df: org.apache.spark.sql.DataFrame): Set[String] =
+    df.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).toUri.getPath).toSet
+
+  test("an events() DataFrame taken before a rollover swap reads exactly its snapshot") {
+    val dir = tempDir("graft-roll-pin-").toString
+    val es = EventStore.open(spark, dir, 1)
+    (0 until 15).foreach(i => assert(es.append(EventInput(s"pin-${i % 3}", "E")).isRight))
+    val before = es.events()
+    // the 16th append fills the run: the swap replaces the 15 files the
+    // DataFrame lists, and the new file it does not list
+    assert(es.append(EventInput("pin-0", "E")).isRight)
+    es.awaitRollover()
+    assert(es.storeInfo("rollovers") == 1L && es.storeInfo("data_files") == 1L)
+    assert(before.count() == 15)
+    assert(before.select("partition_sequence").collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L to 14L))
+    assert(es.storeInfo("retired_files") == 15L && es.storeInfo("pinned_snapshots") == 1L)
+    // the next events() releases the pin: the retired files go
+    val after = es.events()
+    assert(after.count() == 16)
+    assert(es.storeInfo("retired_files") == 0L && es.storeInfo("pinned_snapshots") == 1L)
+    assert(filesOnDisk(dir) == inputFiles(after))
+  }
+
+  test("readers racing rollovers and compact() answer as the model, and leave only the index's files") {
+    import org.apache.spark.sql.functions.{col, count, countDistinct, lit, max, min}
+    import graft.streaming.Subscriptions
+    val dir = tempDir("graft-roll-swaps-").toString
+    val es = EventStore.open(spark, dir, 2)
+    // three streams in each partition
+    val sids = (0 until 100).map(i => s"s-$i").groupBy(Ids.partitionIdForStream(_, 2))
+      .values.flatMap(_.take(3)).toVector
+    val acked = new ConcurrentHashMap[String, Acked]()
+    val ackedIds = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val heads = new ConcurrentHashMap[String, Long]()
+    val done = new AtomicBoolean(false)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val scans, frames = new AtomicLong
+
+    // one writer: appends that roll over across two tiers (300 events
+    // per partition between compactions), a compact() every 600 appends
+    val writer = new Thread(() => try {
+      val rnd = new scala.util.Random(7)
+      (0 until 1800).foreach { i =>
+        val sid = sids(rnd.nextInt(sids.size))
+        val v = heads.getOrDefault(sid, -1L) + 1
+        val e = es.append(EventInput(sid, "E", payload(sid, v), expectedVersion = expect(v)))
+          .fold(e => throw new AssertionError(e), identity)
+        acked.put(e.eventId, Acked(sid, v, e.partitionId, e.partitionSequence, Seq(e.eventId)))
+        ackedIds.add(e.eventId)
+        heads.put(sid, v)
+        if (i % 600 == 599) es.compact()
+      }
+    } catch { case e: Throwable => errors.add(e) })
+
+    // events(): one DataFrame, three jobs; each sees the same snapshot
+    val frameReader = new Thread(() => while (!done.get()) try {
+      val lo = acked.size
+      val df = es.events()
+      val n = df.count()
+      val parts = df.groupBy(col("partition_id"))
+        .agg(min(col("partition_sequence")), max(col("partition_sequence")), count(lit(1)),
+          countDistinct(col("partition_sequence"))).collect()
+      val rows = df.select("event_id", "partition_id", "partition_sequence", "stream_version")
+        .collect()
+      val hi = acked.size
+      assert(n >= lo && n <= hi + 1, s"$n events outside [$lo, ${hi + 1}]")
+      assert(parts.map(_.getLong(3)).sum == n && rows.length == n)
+      parts.foreach(r => assert(r.getLong(1) == 0L && r.getLong(2) == r.getLong(3) - 1 &&
+        r.getLong(4) == r.getLong(3), s"partition not gapless: $r"))
+      rows.foreach { r =>
+        Option(acked.get(r.getString(0))).foreach(a =>
+          assert((r.getInt(1), r.getLong(2), r.getLong(3)) == (a.pid, a.seq, a.version)))
+      }
+      assert(ackedIds.asScala.take(lo).forall(rows.map(_.getString(0)).toSet))
+      frames.incrementAndGet()
+    } catch { case e: Throwable => errors.add(e) })
+
+    // EGET and ESCAN against the acknowledged events
+    val commandReader = new Thread(() => {
+      val rnd = new scala.util.Random(11)
+      while (!done.get()) try {
+        if (!ackedIds.isEmpty) {
+          val id = ackedIds.get(rnd.nextInt(ackedIds.size))
+          val a = acked.get(id)
+          val head = heads.get(a.sid)
+          val row = es.get(UUID.fromString(id)).get
+          assert((row.getAs[String]("stream_id"), row.getAs[Long]("stream_version"),
+            row.getAs[Int]("partition_id"), row.getAs[Long]("partition_sequence")) ==
+            (a.sid, a.version, a.pid, a.seq))
+          val got = es.scan(a.sid, count = 100000).events
+          assert(got.map(_.getAs[Long]("stream_version")) == got.indices.map(_.toLong))
+          assert(got.size > head)
+          got.foreach(r => assert(r.getAs[Array[Byte]]("payload").toSeq ==
+            payload(a.sid, r.getAs[Long]("stream_version")).toSeq))
+          scans.incrementAndGet()
+        }
+      } catch { case e: Throwable => errors.add(e) }
+    })
+
+    val delivered = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
+    val sub = Subscriptions.deliver(
+      Subscriptions.subscribe(es, Subscriptions.Matcher(allPartitions = true), window = 200),
+      tempDir("graft-roll-swaps-ck-").toString, byStream = false)(rows => rows.foreach(r =>
+        delivered.add((r.getAs[Int]("partition_id"), r.getAs[Long]("partition_sequence")))))
+    try {
+      Seq(writer, frameReader, commandReader).foreach(_.start())
+      writer.join()
+      done.set(true)
+      frameReader.join()
+      commandReader.join()
+      sub.processAllAvailable()
+    } finally sub.stop()
+    Option(errors.peek()).foreach(e => fail(s"${errors.size} failed operations", e))
+    assert(frames.get() >= 3 && scans.get() > 20)
+    es.awaitRollover()
+    assert(es.storeInfo("rollovers").asInstanceOf[Long] > 2 * 16)
+    assert(es.storeInfo("rollover_failures") == 0L)
+
+    val model = acked.values.asScala.map(a => (a.pid, a.seq)).toSeq.sorted
+    assert(delivered.asScala.toSeq.sorted == model)
+    // once every reader is done, the disk holds exactly the index's files
+    val last = es.events()
+    assert(last.count() == acked.size)
+    assert(es.storeInfo("retired_files") == 0L && es.storeInfo("pinned_snapshots") == 1L)
+    assert(filesOnDisk(dir) == inputFiles(last))
+    assert(es.storeInfo("data_files") == filesOnDisk(dir).size.toLong)
+  }
+
   test("ingest, ingestStream and compact() never roll over and queue no merge") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-roll-bulk-").toString
+    val dir = tempDir("graft-roll-bulk-").toString
     val es = EventStore.open(spark, dir, 1)
     def files() = es.storeInfo("data_files").asInstanceOf[Long]
     def requests() = es.rolloversQueued
@@ -159,11 +297,11 @@ class RolloverSpec extends AnyFunSuite with BeforeAndAfterAll {
       es.ingest(spark.createDataFrame(Seq(Row(s"b-${i % 3}", "I", i.toLong)).asJava, schema), "ord"))
     assert(files() == 16 && requests() == 0)
 
-    val src = Files.createTempDirectory("graft-roll-src-").toString
+    val src = tempDir("graft-roll-src-").toString
     (0 until 3).foreach(i => Seq((s"b-$i", "S", i.toLong)).toDF("stream_id", "event_name", "ord")
       .coalesce(1).write.mode(SaveMode.Append).parquet(src))
     val q = es.ingestStream(spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-      .parquet(src), "ord", Files.createTempDirectory("graft-roll-ck-").toString)
+      .parquet(src), "ord", tempDir("graft-roll-ck-").toString)
     try q.processAllAvailable() finally q.stop()
     assert(files() == 19 && requests() == 0)
 

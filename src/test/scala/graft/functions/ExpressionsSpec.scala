@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ExpressionsSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -36,7 +36,7 @@ class ExpressionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     // local Seqs plan as LocalTableScan (no codegen at all), so stage
     // the data through parquet to get a real scan pipeline
-    val dir = java.nio.file.Files.createTempDirectory("graft-expr-").toString
+    val dir = tempDir("graft-expr-").toString
     (1 to 100).map(_ => Ids.newEventId(7).toString).toDF("event_id")
       .write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)

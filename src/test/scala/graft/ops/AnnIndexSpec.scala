@@ -24,7 +24,7 @@ import org.scalatest.BeforeAndAfterAll
   *    retention bounds the directory count, and the rewrite leaves
   *    one file per inverted list.
   */
-class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnIndexSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -60,7 +60,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val want = rows(Similarity.ivfPqTopKBatch(corpus,
       queryPred = col("vec_id").isin(0, 1, 2), kNN = 3, nlist = nlist,
       nprobe = 2, trainIters = ti, m = m, k = k, iters = pi))
-    val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+    val root = tempDir("annix-spec-")
     try {
       AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi)
@@ -75,7 +75,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val (nlist, ti, m, k, pi) = Geom
     val allowedSet = ids.filter(_ % 3 != 0).toSet
-    val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+    val root = tempDir("annix-spec-")
     try {
       AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi)
@@ -110,7 +110,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       queryPred = col("vec_id").isin(0, 1, 2), kNN = 3, rerank = 6,
       nlist = nlist, nprobe = 2, trainIters = ti, m = m, k = k,
       iters = pi))
-    val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+    val root = tempDir("annix-spec-")
     try {
       AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi)
@@ -127,7 +127,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val want = rows(Similarity.ivfSq8TopKBatch(corpus,
       queryPred = col("vec_id").isin(0, 1, 2), kNN = 3, nlist = nlist,
       nprobe = 2, trainIters = ti))
-    val root = java.nio.file.Files.createTempDirectory("annsq8-spec-")
+    val root = tempDir("annsq8-spec-")
     try {
       AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi, codec = "sq8")
@@ -162,7 +162,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val want = rows(Similarity.binaryHammingRefineTopKBatch(corpus,
       queryPred = col("vec_id").isin(0, 1, 2), kNN = 3, rerank = 10,
       dims = Dims))
-    val root = java.nio.file.Files.createTempDirectory("annbq-spec-")
+    val root = tempDir("annbq-spec-")
     try {
       AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi, codec = "bq")
@@ -196,7 +196,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val want = rows(Similarity.ivfPqTopKBatch(rot,
       queryPred = col("vec_id").isin(0, 1, 2), kNN = 3, nlist = nlist,
       nprobe = 2, trainIters = ti, m = m, k = k, iters = pi))
-    val root = java.nio.file.Files.createTempDirectory("annopq-spec-")
+    val root = tempDir("annopq-spec-")
     try {
       AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi, opqSteps = t, opqDims = Dims)
@@ -222,7 +222,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val wantSq8 = rows(Similarity.ivfSq8TopKBatch(rot,
       queryPred = col("vec_id").isin(0, 1, 2), kNN = 3, nlist = nlist,
       nprobe = 2, trainIters = ti))
-    val r1 = java.nio.file.Files.createTempDirectory("annsq8opq-spec-")
+    val r1 = tempDir("annsq8opq-spec-")
     try {
       AnnIndex.seed(corpus, r1.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi, codec = "sq8", opqSteps = t,
@@ -235,7 +235,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val wantRes = rows(Similarity.ivfPqResidualTopKBatch(rot,
       queryPred = col("vec_id").isin(0, 1, 2), kNN = 3, nlist = nlist,
       nprobe = 2, trainIters = ti, m = m, k = k, iters = pi))
-    val r2 = java.nio.file.Files.createTempDirectory("annresopq-spec-")
+    val r2 = tempDir("annresopq-spec-")
     try {
       AnnIndex.seed(corpus, r2.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi, residual = true, opqSteps = t,
@@ -255,7 +255,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val flatBq = rows(Similarity.binaryHammingRefineTopKBatch(rot,
       queryPred = col("vec_id").isin(0, 1, 2), kNN = 10, rerank = 10,
       dims = Dims))
-    val r3 = java.nio.file.Files.createTempDirectory("annbqopq-spec-")
+    val r3 = tempDir("annbqopq-spec-")
     try {
       AnnIndex.seed(corpus, r3.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi, codec = "bq", opqSteps = t,
@@ -276,7 +276,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nw = corpus.where(col("vec_id").isin(NewIds.toSeq: _*))
 
     def build(chunks: Seq[Seq[Long]], compactAfter: Int): Set[(Long, Long, Double, Long)] = {
-      val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+      val root = tempDir("annix-spec-")
       try {
         AnnIndex.seed(old, root.toString, nlist = nlist, trainIters = ti,
           m = m, k = k, pqIters = pi)
@@ -299,7 +299,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // neighbor set mentions a NewIds member OR the old-only build
     // differs (the split was chosen so it does)
     val oldOnly = {
-      val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+      val root = tempDir("annix-spec-")
       try {
         AnnIndex.seed(old, root.toString, nlist = nlist, trainIters = ti,
           m = m, k = k, pqIters = pi)
@@ -318,7 +318,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nw = corpus.where(col("vec_id").isin(NewIds.toSeq: _*))
     // fresh seed of the FULL corpus — the reseed equality target
     val want = {
-      val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+      val root = tempDir("annix-spec-")
       try {
         AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
           m = m, k = k, pqIters = pi)
@@ -326,7 +326,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
           kNN = 3, nprobe = 2))
       } finally graft.core.Fs.deleteRecursively(root.toFile)
     }
-    val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+    val root = tempDir("annix-spec-")
     try {
       AnnIndex.seed(old, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi)
@@ -368,7 +368,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     for ((label, codec, opqSteps) <- Seq(
         ("sq8", "sq8", 0), ("bq", "bq", 0), ("opq", "pq", 6))) {
       val want = {
-        val root = java.nio.file.Files.createTempDirectory("annrsx-spec-")
+        val root = tempDir("annrsx-spec-")
         try {
           AnnIndex.seed(corpus, root.toString, nlist = nlist,
             trainIters = ti, m = m, k = k, pqIters = pi, codec = codec,
@@ -377,7 +377,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
             kNN = 3, nprobe = 2))
         } finally graft.core.Fs.deleteRecursively(root.toFile)
       }
-      val root = java.nio.file.Files.createTempDirectory("annrsx-spec-")
+      val root = tempDir("annrsx-spec-")
       try {
         AnnIndex.seed(old, root.toString, nlist = nlist, trainIters = ti,
           m = m, k = k, pqIters = pi, codec = codec,
@@ -396,7 +396,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("reseed refuses to shrink the index unless explicitly allowed") {
     val (nlist, ti, m, k, pi) = Geom
-    val root = java.nio.file.Files.createTempDirectory("annshr-spec-")
+    val root = tempDir("annshr-spec-")
     try {
       AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi)
@@ -439,7 +439,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("generations: manifest flip, retention bound, one file per list") {
     val (nlist, ti, m, k, pi) = Geom
-    val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+    val root = tempDir("annix-spec-")
     try {
       AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi)
@@ -470,7 +470,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val old = corpus.where(!col("vec_id").isin(NewIds.toSeq: _*))
     val nw = corpus.where(col("vec_id").isin(NewIds.toSeq: _*))
-    val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+    val root = tempDir("annix-spec-")
     try {
       AnnIndex.seed(old, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi)
@@ -508,7 +508,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val old = corpus.where(!col("vec_id").isin(NewIds.toSeq: _*))
     val nw = corpus.where(col("vec_id").isin(NewIds.toSeq: _*))
     // full-corpus seed must equal the in-session residual batch
-    val root1 = java.nio.file.Files.createTempDirectory("annix-spec-")
+    val root1 = tempDir("annix-spec-")
     try {
       AnnIndex.seed(corpus, root1.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi, residual = true)
@@ -518,7 +518,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"persisted residual query diverged from in-session:\n$got\nvs\n$want")
     } finally graft.core.Fs.deleteRecursively(root1.toFile)
     // and the frozen residual model is append/compaction-invariant
-    val root2 = java.nio.file.Files.createTempDirectory("annix-spec-")
+    val root2 = tempDir("annix-spec-")
     try {
       AnnIndex.seed(old, root2.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi, residual = true)
@@ -536,7 +536,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       "delete wins within a generation, re-insert after compaction works") {
     val (nlist, ti, m, k, pi) = Geom
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+    val root = tempDir("annix-spec-")
     try {
       AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi)
@@ -598,7 +598,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("the probe bounds the read: unprobed lists' vectors never score") {
     val (nlist, ti, m, k, pi) = Geom
-    val root = java.nio.file.Files.createTempDirectory("annix-spec-")
+    val root = tempDir("annix-spec-")
     try {
       AnnIndex.seed(corpus, root.toString, nlist = nlist, trainIters = ti,
         m = m, k = k, pqIters = pi)

@@ -24,7 +24,7 @@ import graft.streaming.GenIndex
   *    the served answer tracks the new corpus (df/N/Σdl are
   *    corpus-era constants).
   */
-class Bm25StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Bm25StoreSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -56,7 +56,7 @@ class Bm25StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
         r.getAs[Long]("rk"))).toSeq
 
   test("persisted serving == corpus-scan bm25TopK, scores bit-identical") {
-    val root = java.nio.file.Files.createTempDirectory("bm25store-spec-")
+    val root = tempDir("bm25store-spec-")
     try {
       Bm25Store.seed(corpus, root.toString)
       val want = rows(Ranking.bm25TopK(corpus, "text", "doc_id", terms,
@@ -69,7 +69,7 @@ class Bm25StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a query term the corpus has never seen contributes zero") {
-    val root = java.nio.file.Files.createTempDirectory("bm25store-spec-")
+    val root = tempDir("bm25store-spec-")
     try {
       Bm25Store.seed(corpus, root.toString)
       val want = rows(Bm25Store.scoreQuery(spark, root.toString, terms,
@@ -87,7 +87,7 @@ class Bm25StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       "after drift the answer tracks the new corpus; retention bounds " +
       "generations") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("bm25store-spec-")
+    val root = tempDir("bm25store-spec-")
     try {
       Bm25Store.seed(corpus, root.toString)
       val gen0 = rows(Bm25Store.scoreQuery(spark, root.toString, terms,
@@ -119,8 +119,8 @@ class Bm25StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("seed + appends == one build of the union (any batch division), " +
       "and compact preserves the served answer while flipping the " +
       "generation") {
-    val root = java.nio.file.Files.createTempDirectory("bm25store-spec-")
-    val rootAll = java.nio.file.Files.createTempDirectory("bm25store-spec-")
+    val root = tempDir("bm25store-spec-")
+    val rootAll = tempDir("bm25store-spec-")
     try {
       // split 6 docs into seed {1,2} + appends {3,4} and {5,6}
       Bm25Store.seed(corpus.where(col("doc_id") <= 2), root.toString)
@@ -150,7 +150,7 @@ class Bm25StoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("the pruned posting read only opens the query terms' buckets " +
       "(partition filter present in the plan)") {
-    val root = java.nio.file.Files.createTempDirectory("bm25store-spec-")
+    val root = tempDir("bm25store-spec-")
     try {
       Bm25Store.seed(corpus, root.toString)
       val gen = GenIndex.currentGen(root.toString)

@@ -23,7 +23,7 @@ import graft.streaming.GenIndex
   *    corpus readers get the fresh merges, and retention bounds the
   *    generation count.
   */
-class BpeStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BpeStoreSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -50,7 +50,7 @@ class BpeStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("persisted round trip == in-session encode (merge table survives " +
       "the parquet round trip in application order)") {
-    val root = java.nio.file.Files.createTempDirectory("bpestore-spec-")
+    val root = tempDir("bpestore-spec-")
     try {
       BpeStore.seed(corpus, root.toString, numMerges = 4)
       val merges = BpeTrain.trainBpe(corpus, "text", 4)
@@ -67,7 +67,7 @@ class BpeStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("OOV fallback: a drifted corpus encodes through the frozen merge " +
       "chain exactly as the direct encode would") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("bpestore-spec-")
+    val root = tempDir("bpestore-spec-")
     try {
       BpeStore.seed(corpus, root.toString, numMerges = 4)
       // "lowest" exercises the trained merges (es, est, lo, low) but
@@ -91,7 +91,7 @@ class BpeStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
       "into a new generation; drifted corpus retrains; retention bounds " +
       "the directory count") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("bpestore-spec-")
+    val root = tempDir("bpestore-spec-")
     try {
       BpeStore.seed(corpus, root.toString, numMerges = 4)
       val gen0 = GenIndex.currentGen(root.toString)

@@ -5,13 +5,13 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-class BucketedJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketedJoinSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft-bkt-wh-").toString)
+      tempDir("graft-bkt-wh-").toString)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 

@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
   * proves engine-equivalence; these prove the operators do the right
   * THING: near-dups found, skew path equivalent, multimodal shapes).
   */
-class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class OpsSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -91,8 +91,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // the signature store the gated leg probes: seedMinhashIndex over
     // the FULL corpus (same default geometry on both sides)
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("ops-mh-idx-").toString
+    val idxDir = tempDir("ops-mh-idx-").toString
     try {
       graft.streaming.StreamingDedup.seedMinhashIndex(
         docs, "text", "doc_id", idxDir)
@@ -115,8 +114,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
     val expected = full.filter(p => newIds(p._1) || newIds(p._2))
-    val idxDir = java.nio.file.Files
-      .createTempDirectory("ops-cont-idx-").toString
+    val idxDir = tempDir("ops-cont-idx-").toString
     try {
       graft.streaming.StreamingDedup.seedMinhashIndex(
         docs, "text", "doc_id", idxDir)

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * with GraftExtensions gets the optimizer rule, the planner strategy,
   * and the SQL functions without any per-session experimental wiring.
   */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends AnyFunSuite with graft.TempDirs {
 
   test("a session built with GraftExtensions has rule, strategy, functions") {
     val prevActive = SparkSession.getActiveSession
@@ -41,7 +41,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
       // (numPartitions config default 32 — just checking the conjunct
       // appears; full behavior covered in PartitionPruningSpec.)
       val es = graft.api.EventStore.open(spark,
-        java.nio.file.Files.createTempDirectory("graft-ext-").toString, 32)
+        tempDir("graft-ext-").toString, 32)
       val id = es.append(graft.core.EventInput("ext-s", "E")).toOption.get.eventId
       val df = spark.read
         .option("basePath", s"${es.root}/events")

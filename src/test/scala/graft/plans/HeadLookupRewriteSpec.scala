@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
   * on provably-clamp-shaped filters over a registered event log, and
   * always returns exactly what the scan would.
   */
-class HeadLookupRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HeadLookupRewriteSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[2]")
@@ -22,7 +22,7 @@ class HeadLookupRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val es = {
     val store = graft.api.EventStore.open(spark,
-      java.nio.file.Files.createTempDirectory("graft-hlr-").toString, 8)
+      tempDir("graft-hlr-").toString, 8)
     (1 to 5).foreach(_ => store.append(graft.core.EventInput("hl-a", "E")))
     (1 to 2).foreach(_ => store.append(graft.core.EventInput("hl-b", "E")))
     store
@@ -97,7 +97,7 @@ class HeadLookupRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     // layered store: a tiny inline budget forces heads into parquet
     // deltas, the expensive path the rule used to aggregate inline
     val store = graft.api.EventStore.open(spark,
-      java.nio.file.Files.createTempDirectory("graft-hlr-hot-").toString, 8,
+      tempDir("graft-hlr-hot-").toString, 8,
       maxInlineHeads = 4)
     (1 to 12).foreach(i => store.append(graft.core.EventInput(s"hp-$i", "E")))
 
@@ -130,7 +130,7 @@ class HeadLookupRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("disk path: a handle behind disk answers like the scan, with no Spark job") {
-    val root = java.nio.file.Files.createTempDirectory("graft-hlr-disk-").toString
+    val root = tempDir("graft-hlr-disk-").toString
     val writer = graft.api.EventStore.open(spark, root, 8, maxInlineHeads = 4)
     (1 to 12).foreach(i => writer.append(graft.core.EventInput(s"hd-$i", "E")))
     // the same stream under a second key, so one stream has two heads
@@ -182,7 +182,7 @@ class HeadLookupRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("unregistered parquet with the same columns is untouched") {
     // copy the files elsewhere: same schema, no registered store
-    val other = java.nio.file.Files.createTempDirectory("graft-hlr-copy-").toString
+    val other = tempDir("graft-hlr-copy-").toString
     es.events().write.parquet(s"$other/events-copy")
     val q = maxVer(spark.read.parquet(s"$other/events-copy")
       .where(col("stream_id") === "hl-a"))

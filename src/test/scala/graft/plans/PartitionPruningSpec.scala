@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-class PartitionPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
+class PartitionPruningSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -25,7 +25,7 @@ class PartitionPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.conf.set("spark.graft.numPartitions", "8")
     try {
       val es = EventStore.open(
-        spark, Files.createTempDirectory("graft-prune-").toString, 8)
+        spark, tempDir("graft-prune-").toString, 8)
       val ids = (1 to 20).map { i =>
         es.append(EventInput(s"prune-$i", "E")).toOption.get.eventId
       }
@@ -58,7 +58,7 @@ class PartitionPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(InjectEventIdPartitionPruning())
     try {
       val es = EventStore.open(
-        spark, Files.createTempDirectory("graft-prune2-").toString, 8)
+        spark, tempDir("graft-prune2-").toString, 8)
       es.append(EventInput("a", "E"))
       val df = spark.read
         .option("basePath", s"${es.root}/events")

@@ -13,7 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * in the style of the reference's comprehensive client test
   * (`crates/sierradb-client/examples/comprehensive_test.rs`).
   */
-class RespServerSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RespServerSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -23,7 +23,7 @@ class RespServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   private lazy val es =
-    EventStore.open(spark, Files.createTempDirectory("graft-srv-").toString, 8)
+    EventStore.open(spark, tempDir("graft-srv-").toString, 8)
   private lazy val server = new RespServer(es).start()
 
   override def afterAll(): Unit = {
@@ -337,9 +337,9 @@ class RespServerSpec extends AnyFunSuite with BeforeAndAfterAll {
       l <- Seq("validate", "write", "commit"); q <- Seq("p50", "p99")
     } yield s"append_${l}_${q}_ms"
     assert(info.keySet == Set("manifest_version", "delta_chain", "data_files",
-      "max_partition_files", "inline_heads", "head_layers", "appends_sampled",
-      "rollovers", "rolled_files", "rollover_failures", "rollover_p50_ms",
-      "rollover_p99_ms") ++ layers)
+      "max_partition_files", "retired_files", "pinned_snapshots", "inline_heads",
+      "head_layers", "appends_sampled", "rollovers", "rolled_files",
+      "rollover_failures", "rollover_p50_ms", "rollover_p99_ms") ++ layers)
     assert(info("manifest_version") == Num(es.manifest.version))
     assert(info("inline_heads") == Num(es.manifest.streamHeads.size.toLong))
     assert(info("head_layers") == Num(0))
@@ -361,12 +361,16 @@ class RespServerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deadline = System.nanoTime() + 30L * 1000000000L
     def rolled() = asMap(c.call("INFO", "STORE"))
     var after = rolled()
-    while (after("rollovers").asInstanceOf[Num].v == before && System.nanoTime() < deadline) {
+    val m = (k: String) => after(k).asInstanceOf[Num].v
+    // the run's files are retired by the swap and deleted once no
+    // reader's pinned snapshot names them
+    while ((m("rollovers") == before || m("retired_files") != 0) &&
+        System.nanoTime() < deadline) {
       Thread.sleep(20); after = rolled()
     }
-    val m = (k: String) => after(k).asInstanceOf[Num].v
     val mms = (k: String) => after(k).asInstanceOf[Dbl].v
     assert(m("rollovers") > before)
+    assert(m("retired_files") == 0 && m("pinned_snapshots") >= 0)
     assert(m("rolled_files") == 16 * m("rollovers"))
     assert(m("rollover_failures") == 0)
     assert(0.0 < mms("rollover_p50_ms") && mms("rollover_p50_ms") <= mms("rollover_p99_ms"))

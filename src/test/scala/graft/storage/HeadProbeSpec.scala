@@ -12,7 +12,7 @@ import graft.core.EventInput
   * within one JVM (exactly what this spec does) must be served the new
   * store's files, never metadata read from the first store's.
   */
-class HeadProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HeadProbeSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -27,7 +27,7 @@ class HeadProbeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("deleted-and-recreated store path serves fresh probe metadata") {
-    val dir = java.nio.file.Files.createTempDirectory("hp-recreate-").toString
+    val dir = tempDir("hp-recreate-").toString
     // store 1: tiny inline budget forces heads into parquet layers,
     // every stream at version 0
     val es1 = EventStore.open(spark, dir, numPartitions = 4, maxInlineHeads = 2)

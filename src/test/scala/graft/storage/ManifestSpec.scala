@@ -4,7 +4,7 @@ import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.Gen
 
-class ManifestSpec extends AnyFunSuite with graft.PropHelpers {
+class ManifestSpec extends AnyFunSuite with graft.TempDirs with graft.PropHelpers {
 
   private val genState: Gen[ManifestState] = for {
     v <- Gen.chooseNum(0L, 1000L)
@@ -44,7 +44,7 @@ class ManifestSpec extends AnyFunSuite with graft.PropHelpers {
   }
 
   test("commit picks newest version on load") {
-    val dir = Files.createTempDirectory("graft-mf-").toString
+    val dir = tempDir("graft-mf-").toString
     assert(Manifest.load(dir).isEmpty)
     Manifest.commit(dir, ManifestState(1, 4, Map(0 -> 1L), Map.empty))
     Manifest.commit(dir, ManifestState(2, 4, Map(0 -> 9L), Map.empty))
@@ -53,7 +53,7 @@ class ManifestSpec extends AnyFunSuite with graft.PropHelpers {
   }
 
   test("retention: 10k commits leave at most Retain+1 manifest files") {
-    val dir = Files.createTempDirectory("graft-mf-gc-").toString
+    val dir = tempDir("graft-mf-gc-").toString
     (1 to 10000).foreach { v =>
       Manifest.commit(dir, ManifestState(v.toLong, 4, Map(0 -> v.toLong), Map.empty))
     }
@@ -71,7 +71,7 @@ class ManifestSpec extends AnyFunSuite with graft.PropHelpers {
   }
 
   test("retention also sweeps stale temp files from crashed commits") {
-    val dir = Files.createTempDirectory("graft-mf-tmp-").toString
+    val dir = tempDir("graft-mf-tmp-").toString
     Manifest.commit(dir, ManifestState(1, 4, Map(0 -> 1L), Map.empty))
     // simulate a crash that left a temp file behind at an old version
     Files.write(Manifest.dirFor(dir).resolve(".v2.json.tmp"), Array[Byte](123))
@@ -113,7 +113,7 @@ class ManifestSpec extends AnyFunSuite with graft.PropHelpers {
     Files.readString(Manifest.dirFor(dir).resolve(s"v$v.json")).contains("\"base\":")
 
   test("delta commits: checkpoints every CheckpointEvery versions, load resolves the chain") {
-    val dir = Files.createTempDirectory("graft-mf-delta-").toString
+    val dir = tempDir("graft-mf-delta-").toString
     val model = appendCommits(dir, 15)
     // a new store's first commit has no base on disk: a checkpoint
     assert(!isDelta(dir, 1))
@@ -129,7 +129,7 @@ class ManifestSpec extends AnyFunSuite with graft.PropHelpers {
   }
 
   test("retention with deltas: at most Retain+1 files, the newest chain always kept") {
-    val dir = Files.createTempDirectory("graft-mf-delta-gc-").toString
+    val dir = tempDir("graft-mf-delta-gc-").toString
     val model = appendCommits(dir, 2003) // checkpoint 2000, deltas 2001..2003
     val names = manifestFiles(dir)
     assert(names.count(_.matches("v\\d+\\.json")) <= Manifest.Retain + 1, names.sorted.mkString(","))
@@ -142,7 +142,7 @@ class ManifestSpec extends AnyFunSuite with graft.PropHelpers {
   }
 
   test("a torn delta or a missing base falls back to an older complete version") {
-    val dir = Files.createTempDirectory("graft-mf-torn-").toString
+    val dir = tempDir("graft-mf-torn-").toString
     val model = appendCommits(dir, 13) // checkpoint 8, deltas 9..13
     val mdir = Manifest.dirFor(dir)
     // torn newest delta: cut short mid-document
@@ -162,7 +162,7 @@ class ManifestSpec extends AnyFunSuite with graft.PropHelpers {
   }
 
   test("full manifests in the checkpoint format load unchanged") {
-    val dir = Files.createTempDirectory("graft-mf-legacy-").toString
+    val dir = tempDir("graft-mf-legacy-").toString
     Files.createDirectories(Manifest.dirFor(dir))
     Files.writeString(Manifest.dirFor(dir).resolve("v3.json"),
       "{\"version\":3,\"num_partitions\":4,\"watermarks\":{\"0\":5,\"2\":1}," +

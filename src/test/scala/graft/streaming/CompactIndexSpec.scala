@@ -9,7 +9,7 @@ import org.scalatest.BeforeAndAfterAll
   * pairs are unchanged), and it actually bounds the file count that
   * per-batch appends grow without bound.
   */
-class CompactIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CompactIndexSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -26,7 +26,7 @@ class CompactIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("compaction preserves content, bounds files, probes stay correct") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val indexDir = java.nio.file.Files.createTempDirectory("cmp-spec-")
+    val indexDir = tempDir("cmp-spec-")
     try {
       val mk = (id: Long, text: String) => Seq((id, text)).toDF("id", "text")
       StreamingDedup.seedSimhashIndex(

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class EventTimeAggsSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -23,7 +23,7 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming tumbling window with watermark aggregates per hour") {
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-eta-").toString, 4)
+      spark, tempDir("graft-eta-").toString, 4)
     val base = 1700000000000L // ms
     // 3 events in hour H, 2 in hour H+1, mixed names
     es.appendMany(Seq(
@@ -53,7 +53,7 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // pins Spark's close boundary (watermark >= window end ⇒ emitted) —
     // the stream_trending oracle's kept-window predicate mirrors this
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-eta-append-").toString, 4)
+      spark, tempDir("graft-eta-append-").toString, 4)
     val base = 1700000000000L
     val h0 = base - base % 3600000
     es.appendMany(Seq(
@@ -73,9 +73,32 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
+  test("tumbling counts read each event once while rollovers merge its files") {
+    val es = EventStore.open(spark, tempDir("graft-eta-roll-").toString, 1)
+    val h0 = 1700000000000L - 1700000000000L % 3600000
+    def append(from: Int, n: Int): Unit = (from until from + n).foreach(i =>
+      assert(es.append(EventInput("roll", "A", timestampMs = Some(h0 + i * 1000L))).isRight))
+    // 20 one-event files: 16 merge into one; then 12 more fill the next
+    // run of 16, whose merged file holds 4 events already read
+    append(0, 20)
+    es.awaitRollover()
+    val q = EventTimeAggs.tumblingCounts(es, "1 hour", "5 minutes")
+      .writeStream.outputMode("complete").format("memory")
+      .queryName("eta_rollover").start()
+    try {
+      q.processAllAvailable()
+      append(20, 12)
+      es.awaitRollover()
+      q.processAllAvailable()
+      assert(es.storeInfo("rollovers") == 2L)
+      val n = spark.table("eta_rollover").collect().map(_.getAs[Long]("n"))
+      assert(n.toSeq == Seq(32L))
+    } finally q.stop()
+  }
+
   test("stateful sessionizer closes sessions on gap, keeps open ones in state") {
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-sess-").toString, 4)
+      spark, tempDir("graft-sess-").toString, 4)
     val base = 1700000000000L
     es.appendMany(Seq(
       // stream s1: two sessions separated by a 2-hour gap
@@ -105,7 +128,7 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("dedupDeliveries collapses an at-least-once doubled feed to exactly once") {
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-sdd-").toString, 4)
+      spark, tempDir("graft-sdd-").toString, 4)
     val base = 1700000000000L
     es.appendMany((0 until 20).map(i =>
       EventInput(s"dd-${i % 3}", s"E$i", timestampMs = Some(base + i * 1000L))))
@@ -139,7 +162,7 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // per micro-batch afterwards — every one a cross-batch duplicate
     // that only the watermark-bounded key state can recognize
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-sddx-").toString, 4)
+      spark, tempDir("graft-sddx-").toString, 4)
     val base = 1700000000000L
     // two appends so the log spans several files
     es.appendMany((0 until 10).map(i =>
@@ -173,7 +196,7 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("intervalJoin matches same-stream events inside the inclusive window only") {
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-ij-").toString, 4)
+      spark, tempDir("graft-ij-").toString, 4)
     val t0 = 1700000000000L
     val Hour = 3600000L
     es.appendMany(Seq(
@@ -207,7 +230,7 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("intervalJoinLeft: unmatched clicks emit NULL rows once the watermark clears their window") {
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-loj-").toString, 4)
+      spark, tempDir("graft-loj-").toString, 4)
     val t0 = 1700000000000L
     val Hour = 3600000L
     es.appendMany(Seq(
@@ -269,7 +292,7 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // choices BELOW the operator — flipping them must never change
     // emitted rows. Same fixture as the outer-join test above.
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-lojv3-").toString, 4)
+      spark, tempDir("graft-lojv3-").toString, 4)
     val t0 = 1700000000000L
     val Hour = 3600000L
     es.appendMany(Seq(
@@ -371,7 +394,7 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sessionizeFeed is unit-agnostic: µs timestamps with a µs gap") {
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-sessus-").toString, 4)
+      spark, tempDir("graft-sessus-").toString, 4)
     val base = 1700000000000L
     val GapMs = 30L * 60000L
     es.appendMany(Seq(
@@ -411,7 +434,7 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sessionizeFeed: out-of-order arrival across batches cannot regress the session frontier") {
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-sessoo-").toString, 4)
+      spark, tempDir("graft-sessoo-").toString, 4)
     val base = 1700000000000L
     val Min = 60000L
     // four separate appends = four parquet files; maxFilesPerTrigger=1
@@ -450,7 +473,7 @@ class EventTimeAggsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("sessionizeFeed: idle flush closes the trailing session via state timeout") {
     val es = EventStore.open(
-      spark, Files.createTempDirectory("graft-sessidle-").toString, 4)
+      spark, tempDir("graft-sessidle-").toString, 4)
     val base = 1700000000000L
     // idle-1 gets two events inside one session, then goes quiet
     es.appendMany(Seq(

@@ -13,7 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * Integration: the pruned streaming probe run via manifest
   * resolution emits the same pairs across an interleaved compaction.
   */
-class GenIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GenIndexSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -24,7 +24,7 @@ class GenIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def withRoot[A](f: String => A): A = {
-    val root = java.nio.file.Files.createTempDirectory("genidx-spec-")
+    val root = tempDir("genidx-spec-")
     try f(root.toString)
     finally graft.core.Fs.deleteRecursively(root.toFile)
   }

@@ -14,7 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   * (start, end] partition planning + parquet reading — the mechanics
   * the engine-level SubscriptionsSpec exercises only indirectly.
   */
-class GraftEventSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraftEventSourceSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -51,7 +51,7 @@ class GraftEventSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("budget caps each offer in events; offers converge to the watermarks") {
-    val dir = Files.createTempDirectory("graft-src-").toString
+    val dir = tempDir("graft-src-").toString
     val es = EventStore.open(spark, dir, 4)
     // two streams in (very likely) different partitions, 5 events each
     (1 to 5).foreach(_ => es.append(EventInput("src-a", "E")))
@@ -95,7 +95,7 @@ class GraftEventSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("subscribed-pid restriction prunes offsets and planned files") {
-    val dir = Files.createTempDirectory("graft-src-pids-").toString
+    val dir = tempDir("graft-src-pids-").toString
     val es = EventStore.open(spark, dir, 4)
     (1 to 4).foreach(_ => es.append(EventInput("pids-a", "E")))
     (1 to 4).foreach(_ => es.append(EventInput("pids-b", "E")))
@@ -127,35 +127,57 @@ class GraftEventSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def dataFiles(dir: java.nio.file.Path) =
     graft.core.Fs.list(dir).filter(_.getFileName.toString.endsWith(".parquet"))
 
-  test("a planned file that a rollover deleted before its task ran still yields exactly (lo, hi]") {
-    val dir = Files.createTempDirectory("graft-src-roll-").toString
+  private def exists(f: graft.storage.HeadProbe.File) = Files.exists(java.nio.file.Paths.get(f.path))
+
+  test("a batch planned before a swap reads (lo, hi]; its files stay until the next latestOffset") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val dir = tempDir("graft-src-roll-").toString
     val es = EventStore.open(spark, dir, 1)
     val stream = new GraftEventMicroBatchStream(dir, None, None)
+    var end: V2Offset = null
     var planned: GraftFilePartition = null
     var reader: org.apache.spark.sql.connector.read.PartitionReader[
       org.apache.spark.sql.catalyst.InternalRow] = null
     val got = Seq.newBuilder[Long]
     // the task hands on its first event, then the run it planned over
-    // is merged away under it
+    // is merged and swapped out under it
     fillRun(es, before = { () =>
-      val Array(ip) = stream.planInputPartitions(
-        SeqVectorOffset(Map(0 -> 2L)), SeqVectorOffset(Map(0 -> 14L)))
+      end = stream.latestOffset(stream.initialOffset(), ReadLimit.allAvailable())
+      assert(SeqVectorOffset.of(end).seqs == Map(0 -> 14L))
+      val Array(ip) = stream.planInputPartitions(SeqVectorOffset(Map(0 -> 2L)), end)
       planned = ip.asInstanceOf[GraftFilePartition]
       reader = stream.createReaderFactory().createReader(ip)
       assert(reader.next())
       got += reader.get().getLong(4)
     })
-    assert(planned.files.size == 12)
-    assert(planned.files.forall(f => !Files.exists(java.nio.file.Paths.get(f.path))))
+    assert(planned.files.size == 12 && planned.files.forall(exists))
+    // the source's pin names the 15 files it planned from; the 16th,
+    // appended after it, is deleted at once
+    eventually(timeout(30.seconds)) { assert(es.storeInfo("retired_files") == 15L) }
     while (reader.next()) got += reader.get().getLong(4)
     assert(got.result() == (3L to 14L))
+
+    val next = stream.latestOffset(end, ReadLimit.allAvailable())
+    assert(es.storeInfo("retired_files") == 0L && !planned.files.exists(exists))
+    assert(readRange(stream, end, next) == Seq(0 -> 15L))
+    stream.stop()
+    assert(es.storeInfo("pinned_snapshots") == 0L)
+  }
+
+  test("a source with no open store at its root fails with the typed error") {
+    val dir = tempDir("graft-src-closed-").toString
+    val stream = new GraftEventMicroBatchStream(dir, None, None)
+    val e = intercept[StoreNotOpenException](
+      stream.latestOffset(stream.initialOffset(), ReadLimit.allAvailable()))
+    assert(e.root == dir && e.getMessage.contains(dir))
   }
 
   test("a listing that holds a merged file and its inputs delivers each event once") {
-    val dir = Files.createTempDirectory("graft-src-both-").toString
+    val dir = tempDir("graft-src-both-").toString
     val es = EventStore.open(spark, dir, 1)
     val pdir = java.nio.file.Paths.get(dir, "events", "partition_id=0")
-    val side = Files.createTempDirectory("graft-src-inputs-")
+    val side = tempDir("graft-src-inputs-")
     // keep copies of 15 of the run's inputs, then put them back next to
     // the merged file: the state a listing sees mid-swap or after a crash
     fillRun(es, before = () => dataFiles(pdir).foreach(f => Files.copy(f, side.resolve(f.getFileName))))
@@ -170,7 +192,7 @@ class GraftEventSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("a drain that outlives its bound stops the query and names the leg") {
     import scala.concurrent.duration._
-    val dir = Files.createTempDirectory("graft-drain-")
+    val dir = tempDir("graft-drain-")
     try {
       val in = Files.createDirectories(dir.resolve("in"))
       Files.write(in.resolve("a.txt"), "row\n".getBytes("UTF-8"))

@@ -20,7 +20,7 @@ import org.scalatest.BeforeAndAfterAll
   * batches, and parts values both tiny (everything collides) and
   * large (most directories absent).
   */
-class PrunedEquivalencePropSpec extends AnyFunSuite with BeforeAndAfterAll
+class PrunedEquivalencePropSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll
     with PropHelpers {
 
   private lazy val spark = SparkSession.builder()
@@ -60,8 +60,8 @@ class PrunedEquivalencePropSpec extends AnyFunSuite with BeforeAndAfterAll
       val cut = 1 + rng.nextInt(newDocs.size)
       val batches = Seq(newDocs.take(cut), newDocs.drop(cut))
         .filter(_.nonEmpty)
-      val flatDir = java.nio.file.Files.createTempDirectory("peq-flat-")
-      val prunedDir = java.nio.file.Files.createTempDirectory("peq-pr-")
+      val flatDir = tempDir("peq-flat-")
+      val prunedDir = tempDir("peq-pr-")
       try {
         StreamingDedup.seedSimhashIndex(
           oldDocs.toDF("id", "text"), "text", "id", flatDir.toString)

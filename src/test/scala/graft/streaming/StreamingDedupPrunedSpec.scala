@@ -22,7 +22,7 @@ import org.scalatest.BeforeAndAfterAll
   *    with partitionCols=pfx rewrites to one file per directory with
   *    identical content, and probes after it still prune.
   */
-class StreamingDedupPrunedSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingDedupPrunedSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -52,7 +52,7 @@ class StreamingDedupPrunedSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def withPrunedIndex[A](f: String => A): A = {
     import spark.implicits._
-    val indexDir = java.nio.file.Files.createTempDirectory("pdx-spec-")
+    val indexDir = tempDir("pdx-spec-")
     try {
       StreamingDedup.seedSimhashIndexPruned(
         docs.filterNot(d => newIds(d._1)).toDF("id", "text"),
@@ -153,7 +153,7 @@ class StreamingDedupPrunedSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(wantMh.nonEmpty, "minhash fixture lost its pairs")
     splits.foreach { split =>
-      val dir = java.nio.file.Files.createTempDirectory("pmh-spec-")
+      val dir = tempDir("pmh-spec-")
       try {
         StreamingDedup.seedMinhashIndexPruned(
           docs.filterNot(d => newIds(d._1)).toDF("id", "text"),
@@ -175,7 +175,7 @@ class StreamingDedupPrunedSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(wantWn.exists { case (_, _, n) => n >= 2L },
       "winnow fixture lost its counted pairs")
     splits.foreach { split =>
-      val dir = java.nio.file.Files.createTempDirectory("pwn-spec-")
+      val dir = tempDir("pwn-spec-")
       try {
         StreamingDedup.seedWinnowIndexPruned(
           docs.filterNot(d => newIds(d._1)).toDF("id", "text"),
@@ -204,7 +204,7 @@ class StreamingDedupPrunedSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter { case (a, b, _) => newIds(a) || newIds(b) }.toSet
     assert(wantCs.nonEmpty, "cosine fixture lost its pairs")
     splits.foreach { split =>
-      val dir = java.nio.file.Files.createTempDirectory("pcs-spec-")
+      val dir = tempDir("pcs-spec-")
       try {
         StreamingDedup.seedCosineIndexPruned(
           vecSource.where(!col("vec_id").isin(newIds.toSeq: _*)),

@@ -26,7 +26,7 @@ import org.scalatest.BeforeAndAfterAll
   *     (a, b) dedups), and every LATER batch emits exactly what it
   *     would have without the replay.
   */
-class StreamingDedupRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingDedupRecoverySpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -57,8 +57,8 @@ class StreamingDedupRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("restart on the same checkpoint + index resumes mid-corpus") {
     import spark.implicits._
-    val indexDir = java.nio.file.Files.createTempDirectory("sdr-spec-")
-    val ck = java.nio.file.Files.createTempDirectory("sdr-spec-ck-")
+    val indexDir = tempDir("sdr-spec-")
+    val ck = tempDir("sdr-spec-ck-")
     try {
       StreamingDedup.seedSimhashIndex(
         docs.filterNot(d => newIds(d._1)).toDF("id", "text"),
@@ -113,7 +113,7 @@ class StreamingDedupRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     val byId = docs.toMap
     def batchDf(ids: Seq[Long]) = ids.map(i => (i, byId(i))).toDF("id", "text")
     def run(replayFirst: Boolean): (Set[(Long, Long, Long)], Seq[Set[(Long, Long, Long)]]) = {
-      val indexDir = java.nio.file.Files.createTempDirectory("sdr-rp-")
+      val indexDir = tempDir("sdr-rp-")
       try {
         StreamingDedup.seedSimhashIndex(
           docs.filterNot(d => newIds(d._1)).toDF("id", "text"),
@@ -148,7 +148,7 @@ class StreamingDedupRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     val byId = docs.toMap
     def batchDf(ids: Seq[Long]) = ids.map(i => (i, byId(i))).toDF("id", "text")
     def run(replayFirst: Boolean): Set[(Long, Long, Long)] = {
-      val indexDir = java.nio.file.Files.createTempDirectory("wdr-rp-")
+      val indexDir = tempDir("wdr-rp-")
       try {
         StreamingDedup.seedWinnowIndex(
           docs.filterNot(d => newIds(d._1)).toDF("id", "text"),

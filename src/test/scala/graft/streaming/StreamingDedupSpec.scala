@@ -13,7 +13,7 @@ import org.scalatest.BeforeAndAfterAll
   * the same old/new split) — including pairs whose two members arrive
   * in DIFFERENT batches, which only the growing index can find.
   */
-class StreamingDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamingDedupSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -48,8 +48,8 @@ class StreamingDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def runSplit(batches: Seq[Seq[Long]]): Set[(Long, Long, Long)] = {
     import spark.implicits._
     assert(batches.flatten.toSet == newIds, "splits must cover the new set")
-    val indexDir = java.nio.file.Files.createTempDirectory("sdx-spec-")
-    val ck = java.nio.file.Files.createTempDirectory("sdx-spec-ck-")
+    val indexDir = tempDir("sdx-spec-")
+    val ck = tempDir("sdx-spec-ck-")
     try {
       StreamingDedup.seedSimhashIndex(
         docs.filterNot(d => newIds(d._1)).toDF("id", "text"),
@@ -94,8 +94,8 @@ class StreamingDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       batches: Seq[Seq[Long]]): Set[(Long, Long, Double)] = {
     import spark.implicits._
     assert(batches.flatten.toSet == newIds, "splits must cover the new set")
-    val indexDir = java.nio.file.Files.createTempDirectory("mdx-spec-")
-    val ck = java.nio.file.Files.createTempDirectory("mdx-spec-ck-")
+    val indexDir = tempDir("mdx-spec-")
+    val ck = tempDir("mdx-spec-ck-")
     try {
       StreamingDedup.seedMinhashIndex(
         docs.filterNot(d => newIds(d._1)).toDF("id", "text"),
@@ -157,8 +157,8 @@ class StreamingDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       batches: Seq[Seq[Long]]): Set[(Long, Long, Long)] = {
     import spark.implicits._
     assert(batches.flatten.toSet == newIds, "splits must cover the new set")
-    val indexDir = java.nio.file.Files.createTempDirectory("wdx-spec-")
-    val ck = java.nio.file.Files.createTempDirectory("wdx-spec-ck-")
+    val indexDir = tempDir("wdx-spec-")
+    val ck = tempDir("wdx-spec-ck-")
     try {
       StreamingDedup.seedWinnowIndex(
         docs.filterNot(d => newIds(d._1)).toDF("id", "text"),
@@ -237,8 +237,8 @@ class StreamingDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       batches: Seq[Seq[Long]]): Set[(Long, Long, Double)] = {
     import spark.implicits._
     assert(batches.flatten.toSet == newIds, "splits must cover the new set")
-    val indexDir = java.nio.file.Files.createTempDirectory("cdx-spec-")
-    val ck = java.nio.file.Files.createTempDirectory("cdx-spec-ck-")
+    val indexDir = tempDir("cdx-spec-")
+    val ck = tempDir("cdx-spec-ck-")
     try {
       val vecSource = vecs.toDF("vec_id", "embedding")
       StreamingDedup.seedCosineIndex(

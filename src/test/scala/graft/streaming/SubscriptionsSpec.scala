@@ -14,7 +14,7 @@ import org.scalatest.BeforeAndAfterAll
   * (no gaps, no duplicates), FROM version/map variants, and partition
   * subscriptions.
   */
-class SubscriptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SubscriptionsSpec extends AnyFunSuite with graft.TempDirs with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -26,7 +26,7 @@ class SubscriptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def freshStore(): EventStore =
-    EventStore.open(spark, Files.createTempDirectory("graft-sub-").toString, 8)
+    EventStore.open(spark, tempDir("graft-sub-").toString, 8)
 
   private def in(sid: String, name: String): EventInput =
     EventInput(sid, name, name.getBytes, Array.emptyByteArray)
@@ -37,7 +37,7 @@ class SubscriptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       appendDuringLive: () => Unit = () => ()): Seq[(String, Long, String)] = {
     val delivered = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, String)]()
     val sub = subscribe(es, matcher, from)
-    val q = deliver(sub, Files.createTempDirectory("graft-ck-").toString, byStream) {
+    val q = deliver(sub, tempDir("graft-ck-").toString, byStream) {
       rows => rows.foreach { r =>
         delivered.add((
           r.getAs[String]("stream_id"),
@@ -112,7 +112,7 @@ class SubscriptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("EACK semantics: restart on same checkpoint delivers only unacked events") {
     val es = freshStore()
     (1 to 4).foreach(i => es.append(in("ack", s"h$i")))
-    val ck = Files.createTempDirectory("graft-ack-").toString
+    val ck = tempDir("graft-ack-").toString
     val first = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val q1 = deliver(subscribe(es, Matcher(streams = Seq("ack")), From.Value(0)),
       ck, byStream = true)(rows =>
@@ -135,7 +135,7 @@ class SubscriptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("subscription checkpoint survives compact(): resume without duplicates or gaps") {
     val es = freshStore()
     (1 to 5).foreach(i => es.append(in("c", s"h$i")))
-    val ck = Files.createTempDirectory("graft-compact-ck-").toString
+    val ck = tempDir("graft-compact-ck-").toString
     val first = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val q1 = deliver(subscribe(es, Matcher(streams = Seq("c")), From.Value(0)),
       ck, byStream = true)(rows =>
@@ -167,7 +167,7 @@ class SubscriptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // restart — and only that batch, then the tail.
     val es = freshStore()
     (1 to 8).foreach(i => es.append(in("crash", s"h$i")))
-    val ck = Files.createTempDirectory("graft-crash-ck-").toString
+    val ck = tempDir("graft-crash-ck-").toString
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val batches = new java.util.concurrent.atomic.AtomicInteger(0)
     // WINDOW=3 bounds every micro-batch to 3 events, so the 8-event
@@ -205,7 +205,7 @@ class SubscriptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     (1 to 7).foreach(i => es.append(in("w", s"e$i")))
     val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
     val sub = subscribe(es, Matcher(streams = Seq("w")), From.Value(0), window = 2)
-    val q = deliver(sub, Files.createTempDirectory("graft-win-").toString,
+    val q = deliver(sub, tempDir("graft-win-").toString,
       byStream = true)(rows =>
       batches.add(rows.map(_.getAs[Long]("stream_version"))))
     try q.processAllAvailable() finally q.stop()
@@ -280,7 +280,7 @@ class SubscriptionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     (0 until 300).foreach(i => es.append(in("roll", s"e$i")))
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String)]()
     val sub = subscribe(es, Matcher(streams = Seq("roll")), From.Value(0), window = 40)
-    val q = deliver(sub, Files.createTempDirectory("graft-roll-ck-").toString,
+    val q = deliver(sub, tempDir("graft-roll-ck-").toString,
       byStream = true)(rows => rows.foreach(r =>
         got.add((r.getAs[Long]("stream_version"), r.getAs[String]("event_name")))))
     // appends go on during the catch-up: each 16th fills a run, and the
