@@ -46,9 +46,10 @@ object Bench {
   /** Worker threads of the measuring session: `SPARK_GRAFT_CPUS`, else 32. */
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  /** The session conf every measuring main (`Bench`, `tools.ProbeLeg`,
-    * `tools.Plans`) runs on, so a settled level, a plan dump and a
-    * bench reading all come from the same session.
+  /** The session conf every program main (`Bench`, `Verify`,
+    * `tools.ProbeLeg`, `tools.Plans`) runs on, so a settled level, a
+    * plan dump, a bench reading and the oracle dump all come from the
+    * same session.
     */
   def sessionConf(cpus: String): Seq[(String, String)] = Seq(
     "spark.master" -> s"local[$cpus]",
@@ -66,7 +67,8 @@ object Bench {
     "spark.sql.codegen.cache.maxEntries" -> "2000",
     "spark.ui.enabled" -> "false")
 
-  def session(): SparkSession =
+  /** A session on [[sessionConf]] with `cpus` worker threads. */
+  def session(cpus: String = Bench.cpus): SparkSession =
     sessionConf(cpus).foldLeft(SparkSession.builder()) {
       case (b, (k, v)) => b.config(k, v)
     }.getOrCreate()

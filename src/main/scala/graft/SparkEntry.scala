@@ -1360,10 +1360,7 @@ object SparkEntry {
           m = PqM, k = PqK, pqIters = PqIters)
         val batchNo = new java.util.concurrent.atomic.AtomicInteger(0)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${ves.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${ves.root}/events"),
+            ingestFeed(ves),
             "verify-sannix-ck-",
             perBatch = { b =>
               val ids = b.select(
@@ -1512,10 +1509,7 @@ object SparkEntry {
         graft.ops.BpeStore.seed(docs, root.toString, BpeEncodeMerges)
         val reader = graft.ops.BpeStore.resolve(s, root.toString)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${des.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${des.root}/events"),
+            ingestFeed(des),
             "verify-sbpe-ck-",
             perBatch = b => graft.ops.BpeStore.encodeWith(reader,
               b.select(
@@ -2146,10 +2140,7 @@ object SparkEntry {
         graft.ops.Bm25Store.seed(docs.where(!isNew), root.toString)
         val batchNo = new java.util.concurrent.atomic.AtomicInteger(0)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${des.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${des.root}/events"),
+            ingestFeed(des),
             "verify-sbm25-ck-",
             perBatch = { b =>
               graft.ops.Bm25Store.append(
@@ -2591,7 +2582,7 @@ object SparkEntry {
     }),
 
     // Streaming exactly-once from at-least-once: the SAME event log
-    // delivered TWICE (two independent file-stream readers unioned — a
+    // delivered TWICE (two independent graft-source readers unioned — a
     // redelivering feed), collapsed back to exactly-once by
     // EventTimeAggs.dedupDeliveries — watermark-BOUNDED dedup state
     // keyed on event_id, the shape that survives an unbounded 100 TB
@@ -2606,10 +2597,7 @@ object SparkEntry {
     "stream_dedup_deliver" -> ((s, d) => {
       val es = StoreProvider.storeFor(s, d)
       import s.implicits._
-      def feed() = s.readStream
-        .schema(graft.core.EventSchema.schema)
-        .option("basePath", s"${es.root}/events")
-        .parquet(s"${es.root}/events")
+      def feed() = graft.streaming.GraftEventSource.log(es)
       drainStream(
           graft.streaming.EventTimeAggs
             .dedupDeliveries(feed().unionAll(feed()), horizon = "45 days")
@@ -2640,9 +2628,9 @@ object SparkEntry {
     // exactly once, at the batch of its later member —
     // StreamingDedupSpec pins it across splits), so the oracle is the
     // SAME restricted recount as dedup_simhash_incremental.
-    // maxFilesPerTrigger forces a real multi-batch catch-up: the index
-    // genuinely grows mid-stream, which is what distinguishes this
-    // from the batch incremental form.
+    // ingestFeed's trigger bound forces a real multi-batch catch-up:
+    // the index genuinely grows mid-stream, which is what
+    // distinguishes this from the batch incremental form.
     // STREAMING perceptual image dedup: the banded fingerprint index
     // is FAMILY-GENERIC (one (id, simhash, band, bkey) machine behind
     // text simhash AND the multimodal tiers), gated here end-to-end
@@ -2711,10 +2699,7 @@ object SparkEntry {
         // oracle result is unchanged by construction
         val batchNo = new java.util.concurrent.atomic.AtomicInteger(0)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${des.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${des.root}/events"),
+            ingestFeed(des),
             "verify-sdx-ck-",
             perBatch = { b =>
               val pairs = graft.streaming.StreamingDedup
@@ -2767,10 +2752,7 @@ object SparkEntry {
         }
         val batchNo = new java.util.concurrent.atomic.AtomicInteger(0)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${des.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${des.root}/events"),
+            ingestFeed(des),
             "verify-pdx-ck-",
             perBatch = { b =>
               val pairs = graft.streaming.StreamingDedup
@@ -2815,10 +2797,7 @@ object SparkEntry {
           Tables.documents(s, d).where(!isNew), "text", "doc_id",
           indexDir.toString)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${des.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${des.root}/events"),
+            ingestFeed(des),
             "verify-mdx-ck-",
             perBatch = b => graft.streaming.StreamingDedup
               .minhashProbeBatch(
@@ -2858,10 +2837,7 @@ object SparkEntry {
         }
         val batchNo = new java.util.concurrent.atomic.AtomicInteger(0)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${des.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${des.root}/events"),
+            ingestFeed(des),
             "verify-pmdx-ck-",
             perBatch = { b =>
               val pairs = graft.streaming.StreamingDedup
@@ -2906,10 +2882,7 @@ object SparkEntry {
         }
         val batchNo = new java.util.concurrent.atomic.AtomicInteger(0)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${des.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${des.root}/events"),
+            ingestFeed(des),
             "verify-pcdx-ck-",
             perBatch = { b =>
               val pairs = graft.streaming.StreamingDedup
@@ -2956,10 +2929,7 @@ object SparkEntry {
           Tables.documents(s, d).where(!isNew), "text", "doc_id",
           indexDir.toString)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${des.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${des.root}/events"),
+            ingestFeed(des),
             "verify-wdx-ck-",
             perBatch = b => graft.streaming.StreamingDedup
               .winnowProbeBatch(
@@ -2996,10 +2966,7 @@ object SparkEntry {
         }
         val batchNo = new java.util.concurrent.atomic.AtomicInteger(0)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${des.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${des.root}/events"),
+            ingestFeed(des),
             "verify-pwdx-ck-",
             perBatch = { b =>
               val pairs = graft.streaming.StreamingDedup
@@ -3050,10 +3017,7 @@ object SparkEntry {
           Tables.embeddings(s, d).where(!isNew), "vec_id", "embedding",
           indexDir.toString, NearDupPlanes, NearDupTables)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${ves.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${ves.root}/events"),
+            ingestFeed(ves),
             "verify-cdx-ck-",
             perBatch = b => graft.streaming.StreamingDedup
               .cosineProbeBatch(
@@ -3089,10 +3053,7 @@ object SparkEntry {
         }
         val batchNo = new java.util.concurrent.atomic.AtomicInteger(0)
         drainStream(
-            s.readStream.schema(graft.core.EventSchema.schema)
-              .option("basePath", s"${ves.root}/events")
-              .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-              .parquet(s"${ves.root}/events"),
+            ingestFeed(ves),
             "verify-pcdx-ck-",
             perBatch = { b =>
               val pairs = graft.streaming.StreamingDedup
@@ -3130,10 +3091,7 @@ object SparkEntry {
     "stream_interval_join" -> ((s, d) => {
       val es = StoreProvider.storeFor(s, d)
       import s.implicits._
-      def feed() = s.readStream
-        .schema(graft.core.EventSchema.schema)
-        .option("basePath", s"${es.root}/events")
-        .parquet(s"${es.root}/events")
+      def feed() = graft.streaming.GraftEventSource.log(es)
       drainStream(
           graft.streaming.EventTimeAggs
             .intervalJoin(feed(), feed(), "click", "purchase",
@@ -3223,10 +3181,7 @@ object SparkEntry {
     "stream_sessions" -> ((s, d) => {
       val es = StoreProvider.storeFor(s, d)
       import s.implicits._
-      val feed = s.readStream
-        .schema(graft.core.EventSchema.schema)
-        .option("basePath", s"${es.root}/events")
-        .parquet(s"${es.root}/events")
+      val feed = graft.streaming.GraftEventSource.log(es)
         .select(col("stream_id"),
           expr("timestamp_ns div 1000").as("timestamp_ns"))
         .as[graft.streaming.EventTimeAggs.SessionInput]
@@ -3308,10 +3263,7 @@ object SparkEntry {
         indexDir.toString)
       val batchNo = new java.util.concurrent.atomic.AtomicInteger(0)
       drainStream(
-          s.readStream.schema(graft.core.EventSchema.schema)
-            .option("basePath", s"${des.root}/events")
-            .option("maxFilesPerTrigger", StreamFilesPerTrigger)
-            .parquet(s"${des.root}/events"),
+          ingestFeed(des),
           prefix + "ck-",
           perBatch = { b =>
             val ids = b.select(
@@ -3390,10 +3342,10 @@ object SparkEntry {
     * once the watermark passes the corpus (outer-join NULL rows,
     * closed session windows):
     *
-    *   - phase 1: one data micro-batch (all event files + one sentinel
-    *     event per name in `sentinelNames`, at maxTs + 90 days, on the
-    *     reserved `__sentinel__` stream) — the post-batch watermark
-    *     then clears every real row's window;
+    *   - phase 1: one data micro-batch (every committed event + one
+    *     sentinel event per name in `sentinelNames`, at maxTs + 90
+    *     days, on the reserved `__sentinel__` stream) — the post-batch
+    *     watermark then clears every real row's window;
     *   - phase 2: one more sentinel file forces a REAL batch under the
     *     phase-1 watermark (results emit in the batch AFTER the
     *     advance, and a no-data batch is not guaranteed before
@@ -3420,10 +3372,7 @@ object SparkEntry {
     import scala.jdk.CollectionConverters._
     tuneStateStore(s)
     val lateness = s"$latenessDays days"
-    val eventsPath = s"${es.root}/events"
-    val maxNs = s.read.schema(graft.core.EventSchema.schema)
-      .option("basePath", eventsPath).parquet(eventsPath)
-      .agg(max(col("timestamp_ns"))).head.getLong(0)
+    val maxNs = es.events().agg(max(col("timestamp_ns"))).head.getLong(0)
     val farNs = maxNs + 2L * latenessDays * 24 * 3600 * 1000000000L
     // both temp dirs are created inside the try: a failure anywhere
     // before the query starts (sentinel write, build, start) must not
@@ -3441,12 +3390,8 @@ object SparkEntry {
           .coalesce(1).write.mode("append").parquet(sentinelDir.toString)
       }
       writeSentinels(farNs, "a")
-      // unionByName: the store's events dir is partition_id-partitioned,
-      // so its reader moves that column to the end — a positional union
-      // against the flat sentinel dir misaligns
-      def feed() = s.readStream
-        .schema(graft.core.EventSchema.schema)
-        .option("basePath", eventsPath).parquet(eventsPath)
+      // the sentinel directory is not a store: it keeps Spark's file source
+      def feed() = graft.streaming.GraftEventSource.log(es)
         .unionByName(s.readStream
           .schema(graft.core.EventSchema.schema)
           .parquet(sentinelDir.toString))
@@ -3516,7 +3461,7 @@ object SparkEntry {
     // flow-control surface for live tails — this only widens the bulk
     // catch-up batches. This is the ONE home of that measured policy;
     // runSubscription delegates here.
-    val backlog = es.manifest.watermarks.values.map(_ + 1).sum
+    val backlog = graft.streaming.GraftEventSource.backlog(es)
     val window = math.max(50000L, backlog / 2)
       .min(Int.MaxValue.toLong).toInt
     val q = deliver(subscribe(es, matcher, From.Value(0), window = window),
@@ -3990,20 +3935,22 @@ object SparkEntry {
     */
   private val StreamEmbNewBp = 5000
 
-  /** Catch-up granularity of the gated streaming-ingest legs. The
-    * store writes one event file per partition (32), so 11 files per
-    * trigger gives THREE micro-batches — the minimum that still
-    * exercises everything the gate is for (cross-batch pair discovery
-    * through a genuinely growing index, one mid-stream compaction, a
-    * post-compaction probe against the new generation) without paying
-    * per-batch fixed cost eight times over. Correctness is
-    * batch-division-invariant by construction (StreamingDedupSpec pins
-    * it across splits), so the batch count is a COST knob, not a
-    * semantics knob: at 4 files/trigger the four pruned legs alone
-    * cost ~107 s of base scaffold, which is what starved BENCH_r13's
-    * scale budget into skipping 24 legs.
+  /** The store's log for the gated streaming-ingest legs, bounded to a
+    * third of its backlog per trigger: THREE micro-batches on any file
+    * layout — the minimum that still exercises everything the gate is
+    * for (cross-batch pair discovery through a genuinely growing index,
+    * one mid-stream compaction, a post-compaction probe against the new
+    * generation) without paying per-batch fixed cost eight times over.
+    * Correctness is batch-division-invariant by construction
+    * (StreamingDedupSpec pins it across splits), so the batch count is
+    * a COST knob, not a semantics knob: at eight batches the four
+    * pruned legs alone cost ~107 s of base scaffold, which is what
+    * starved BENCH_r13's scale budget into skipping 24 legs.
     */
-  private val StreamFilesPerTrigger = "11"
+  private[graft] def ingestFeed(es: graft.api.EventStore): DataFrame = {
+    val backlog = graft.streaming.GraftEventSource.backlog(es)
+    graft.streaming.GraftEventSource.log(es, Some(math.max(1L, (backlog + 2) / 3)))
+  }
 
   /** In-stream index-compaction cadence for the same legs: every 2nd
     * micro-batch (was every 3rd at the old 8-batch granularity), so a

@@ -16,12 +16,23 @@ import org.apache.spark.sql.functions._
 object StoreProvider {
   val NumPartitions = 32
 
+  /** One directory per JVM for every store and index built here,
+    * deleted with everything in it when the JVM exits.
+    */
+  private lazy val storesDir: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft-stores-")
+    sys.addShutdownHook(graft.core.Fs.deleteRecursively(d.toFile))
+    d
+  }
+
+  private def newDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(storesDir, prefix).toString
+
   private val cache = scala.collection.concurrent.TrieMap.empty[String, EventStore]
 
   def storeFor(spark: SparkSession, sfDir: String): EventStore =
     cache.getOrElseUpdate(sfDir + "@" + System.identityHashCode(spark), {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-store-").toString
+      val root = newDir("graft-store-")
       val es = EventStore.open(spark, root, NumPartitions)
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val src = Tables.events(spark, sfDir)
@@ -63,8 +74,7 @@ object StoreProvider {
   def docStoreFor(spark: SparkSession, sfDir: String,
       pred: org.apache.spark.sql.Column): EventStore =
     docCache.getOrElseUpdate(storeKey(spark, sfDir, pred), {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-docstore-").toString
+      val root = newDir("graft-docstore-")
       val es = EventStore.open(spark, root, NumPartitions)
       val src = Tables.documents(spark, sfDir)
         .where(pred)
@@ -96,8 +106,7 @@ object StoreProvider {
       sfDir: String): org.apache.spark.sql.DataFrame = {
     val dir = minhashIdxCache.getOrElseUpdate(
       sfDir + "@" + System.identityHashCode(spark), {
-        val d = java.nio.file.Files
-          .createTempDirectory("graft-minhash-idx-").toString
+        val d = newDir("graft-minhash-idx-")
         graft.streaming.StreamingDedup.seedMinhashIndex(
           Tables.documents(spark, sfDir), "text", "doc_id", d)
         d
@@ -117,8 +126,7 @@ object StoreProvider {
   def embStoreFor(spark: SparkSession, sfDir: String,
       pred: org.apache.spark.sql.Column): EventStore =
     embCache.getOrElseUpdate(storeKey(spark, sfDir, pred), {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft-embstore-").toString
+      val root = newDir("graft-embstore-")
       val es = EventStore.open(spark, root, NumPartitions)
       val src = Tables.embeddings(spark, sfDir)
         .where(pred)

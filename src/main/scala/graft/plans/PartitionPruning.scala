@@ -90,15 +90,16 @@ case class InjectEventIdPartitionPruning() extends Rule[LogicalPlan] {
     } catch { case _: IllegalArgumentException => None }
 }
 
-/** One-stop registration for everything graft adds to a session:
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
-  * (or per-session via `spark.experimental.*`).
+/** Registers graft's optimizer rules and SQL functions in a session:
+  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
+  * The top-k planner strategy is not here: [[TopK.topKPerKey]]
+  * registers it in whatever session it runs in, so a session built
+  * with these extensions holds it once, like any other.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => InjectEventIdPartitionPruning())
     e.injectOptimizerRule(_ => HeadLookupRewrite())
-    e.injectPlannerStrategy(_ => TopKStrategy)
     e.injectFunction(graft.functions.UuidPartitionHashDescriptor.descriptor)
     e.injectFunction(graft.functions.UuidTimestampMsDescriptor.descriptor)
   }

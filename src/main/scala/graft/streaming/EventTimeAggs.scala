@@ -14,15 +14,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object EventTimeAggs {
 
-  /** The log of `es` through the graft event source: each committed
-    * event once, however its files are merged; a trigger reads them all.
-    */
-  private def log(es: EventStore): DataFrame =
-    es.spark.readStream
-      .format(classOf[GraftEventSourceProvider].getName)
-      .option("root", es.root)
-      .load()
-
   /** Tumbling-window counts per event_name over the streaming log.
     * `lateness` bounds state: windows older than the watermark are
     * finalized and their state dropped — required for unbounded runs.
@@ -31,7 +22,7 @@ object EventTimeAggs {
       es: EventStore,
       windowLength: String = "1 hour",
       lateness: String = "10 minutes"): DataFrame =
-    log(es)
+    GraftEventSource.log(es)
       .withColumn("event_time", timestamp_micros(expr("timestamp_ns div 1000")))
       .withWatermark("event_time", lateness)
       .groupBy(window(col("event_time"), windowLength), col("event_name"))
@@ -158,7 +149,7 @@ object EventTimeAggs {
     val spark = es.spark
     import spark.implicits._
     sessionizeFeed(
-      log(es)
+      GraftEventSource.log(es)
         .select(col("stream_id"), col("timestamp_ns"))
         .as[SessionInput],
       gapNs, idleFlushMs)

@@ -5,7 +5,7 @@ import java.util.{Map => JMap, Set => JSet}
 import graft.api.EventStore
 import graft.core.EventSchema
 import graft.storage.HeadProbe
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeProjection
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -16,6 +16,32 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+/** The one way to stream a store's log (batch reads go through
+  * [[EventStore.events]]). No reader lists `events/`: the source plans
+  * from the snapshots of the store's open handle.
+  */
+object GraftEventSource {
+
+  /** `es`'s log as a streaming DataFrame ([[EventSchema.schema]]): each
+    * committed event once, in sequence order per partition, however
+    * its files are merged or compacted. `maxEventsPerTrigger` bounds a
+    * micro-batch in events (none: a trigger reads everything
+    * committed); `pids` restricts the stream to those partitions.
+    */
+  def log(es: EventStore, maxEventsPerTrigger: Option[Long] = None,
+      pids: Option[Seq[Int]] = None): DataFrame = {
+    val rs = es.spark.readStream
+      .format(classOf[GraftEventSourceProvider].getName)
+      .option("root", es.root)
+    val bounded = maxEventsPerTrigger.fold(rs)(n => rs.option("maxEventsPerTrigger", n))
+    pids.fold(bounded)(ps => bounded.option("pids", ps.mkString(","))).load()
+  }
+
+  /** The events committed to `es`: Σ(watermark + 1) over its partitions. */
+  def backlog(es: EventStore): Long =
+    es.manifest.watermarks.values.map(_ + 1).sum
+}
 
 /** Offset of a graft event-log stream: the highest delivered
   * `partition_sequence` per partition id — the same per-partition
@@ -277,11 +303,11 @@ final class GraftPartitionReader(p: GraftFilePartition)
   override def close(): Unit = ()
 }
 
-/** `spark.readStream.format(classOf[GraftEventSourceProvider].getName)
-  * .option("root", storeRoot).option("maxEventsPerTrigger", n)
-  * .option("pids", "3,17").load()` — `pids` (optional) restricts the
-  * source to the subscription matcher's partitions, which prunes both
-  * the offset vector and the planned file set.
+/** The provider behind [[GraftEventSource.log]], which is the one place
+  * that builds it: options `root`, `maxEventsPerTrigger` (optional) and
+  * `pids` (optional, e.g. "3,17"), which restricts the source to the
+  * subscription matcher's partitions and so prunes both the offset
+  * vector and the planned file set.
   */
 class GraftEventSourceProvider extends TableProvider with DataSourceRegister {
 

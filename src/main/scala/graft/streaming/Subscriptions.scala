@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.api.EventStore
 import graft.core.Ids
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
@@ -73,7 +73,6 @@ object Subscriptions {
       matcher: Matcher,
       from: From = From.Value(0),
       window: Int = 1000): DataFrame = {
-    val spark = es.spark
     // the matcher's partition set, handed to the source so BOTH the
     // offset vector and the planned file set prune to subscribed
     // partitions (directory pruning by construction, not by optimizer)
@@ -92,13 +91,7 @@ object Subscriptions {
     // manifest-committed watermarks, so a crash between a data-file
     // write and its manifest commit can never phantom-deliver rows
     // that recoverOrphans() later deletes.
-    val src = {
-      val rs = spark.readStream
-        .format(classOf[GraftEventSourceProvider].getName)
-        .option("root", es.root)
-        .option("maxEventsPerTrigger", window.toString)
-      matchedPids.fold(rs)(ps => rs.option("pids", ps.mkString(","))).load()
-    }
+    val src = GraftEventSource.log(es, Some(window.toLong), matchedPids)
 
     val matched = {
       val streamFilter =
@@ -106,17 +99,13 @@ object Subscriptions {
           // exact reference semantics (`subscription.rs:163-199`): a
           // stream entry matches (stream_id, partition_key) precisely,
           // with bare entries resolving to the derived default key
-          // (`esub.rs` parse). The partition_id conjunct is implied by
-          // the key and lets the file source directory-prune (the EGET
-          // routing trick) without changing which rows match.
+          // (`esub.rs` parse). The source already prunes to the
+          // partitions of these keys (`matchedPids`).
           val entries: Seq[(String, java.util.UUID)] =
             matcher.streams.map(s => s -> Ids.partitionKeyForStream(s)) ++
               matcher.streamKeys
           val perEntry = entries.distinct.map { case (s, pk) =>
-            val pid = Ids.partitionIdFor(Ids.partitionHash(pk), es.numPartitions)
-            col("stream_id") === s &&
-              col("partition_key") === pk.toString &&
-              col("partition_id") === pid
+            col("stream_id") === s && col("partition_key") === pk.toString
           }
           Some(perEntry.reduce(_ || _))
         } else None

@@ -4,25 +4,38 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Proves the spark.sql.extensions registration path: a session built
-  * with GraftExtensions gets the optimizer rule, the planner strategy,
-  * and the SQL functions without any per-session experimental wiring.
+  * with GraftExtensions gets the optimizer rule and the SQL functions
+  * without any per-session wiring. The top-k planner strategy is
+  * registered by `TopK.topKPerKey` in any session, so such a session
+  * plans the top-k exec and holds the strategy once.
   */
 class GraftExtensionsSpec extends AnyFunSuite with graft.TempDirs {
 
-  test("a session built with GraftExtensions has rule, strategy, functions") {
+  /** `body` on a new session built with GraftExtensions; the caller's
+    * active and default sessions are restored afterwards.
+    */
+  private def withExtensionsSession(body: SparkSession => Unit): Unit = {
     val prevActive = SparkSession.getActiveSession
     val prevDefault = SparkSession.getDefaultSession
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    try {
-      val spark = SparkSession.builder()
-        .master("local[2]")
-        .appName("graft-ext-probe")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    try body(SparkSession.builder()
+      .master("local[2]")
+      .appName("graft-ext-probe")
+      .config("spark.sql.shuffle.partitions", "2")
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate())
+    finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      prevDefault.foreach(SparkSession.setDefaultSession)
+      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
 
+  test("a session built with GraftExtensions has rule, strategy, functions") {
+    withExtensionsSession { spark =>
       // SQL function injection
       val h = spark.sql(
         "SELECT uuid_partition_hash('019ff476-1879-7000-a244-1e3d4ec26e52') AS h")
@@ -30,7 +43,7 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.TempDirs {
       assert(h == graft.core.Ids.partitionHash(
         java.util.UUID.fromString("019ff476-1879-7000-a244-1e3d4ec26e52")))
 
-      // planner strategy injection: custom top-k plans through the exec
+      // top-k strategy: custom top-k plans through the exec
       val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       val custom = TopK.topKPerKey(orders, Seq("o_custkey"),
         Seq(org.apache.spark.sql.functions.col("o_orderkey").asc), 2)
@@ -49,11 +62,15 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.TempDirs {
         .where(org.apache.spark.sql.functions.col("event_id") === id)
       assert(df.queryExecution.optimizedPlan.toString.contains("partition_id"))
       assert(df.count() == 1)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+    }
+  }
+
+  test("a GraftExtensions session holds the top-k strategy once after topKPerKey") {
+    withExtensionsSession { spark =>
+      import org.apache.spark.sql.functions.col
+      val rows = spark.range(0, 100).select((col("id") % 7).as("k"), col("id"))
+      TopK.topKPerKey(rows, Seq("k"), Seq(col("id").asc), 2).count()
+      assert(spark.sessionState.planner.strategies.count(_ == TopKStrategy) == 1)
     }
   }
 }

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.api.EventStore
 import graft.core.EventInput
 import org.apache.spark.sql.SparkSession
@@ -109,6 +111,66 @@ class GraftEventSourceSpec extends AnyFunSuite with graft.TempDirs with BeforeAn
     val rows = readRange(stream, stream.initialOffset(), end)
     assert(rows.size.toLong == wm(keep) + 1)
     assert(rows.forall(_._1 == keep))
+  }
+
+  /** A 32-partition store of 320 events written by `ingest` alone. */
+  private def ingestedStore(prefix: String): EventStore = {
+    import org.apache.spark.sql.functions._
+    val es = EventStore.open(spark, tempDir(prefix).toString, 32)
+    es.ingest(spark.range(0, 320).select(
+      concat(lit("s-"), col("id") % 40).as("stream_id"),
+      lit("E").as("event_name"),
+      col("id").as("timestamp_ms"),
+      col("id").as("arrival")), "arrival")
+    es
+  }
+
+  /** The (partition_id, partition_sequence) rows of each non-empty
+    * micro-batch of the gated ingest legs' feed over `es`, run to
+    * completion; `afterBatch` runs in the sink after each batch.
+    */
+  private def ingestFeedBatches(es: EventStore, afterBatch: Long => Unit = _ => ())
+      : Seq[Seq[(Int, Long)]] = {
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Seq[(Int, Long)]]()
+    val ck = tempDir("graft-src-feed-ck-")
+    val q = graft.SparkEntry.ingestFeed(es).writeStream
+      .option("checkpointLocation", ck.toString)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        val rows = b.select("partition_id", "partition_sequence").collect()
+          .map(r => (r.getInt(0), r.getLong(1))).toSeq
+        if (rows.nonEmpty) got.add(rows)
+        afterBatch(id)
+      }
+      .start()
+    try Drain.processAllAvailable(q, "ingestFeedBatches") finally q.stop()
+    got.asScala.toSeq
+  }
+
+  private def committed(es: EventStore): Set[(Int, Long)] =
+    es.manifest.watermarks.toSeq.flatMap { case (p, w) => (0L to w).map(p -> _) }.toSet
+
+  test("the ingest legs' third-of-backlog bound gives three batches, each event once") {
+    val es = ingestedStore("graft-src-third-")
+    assert(GraftEventSource.backlog(es) == 320L)
+    val batches = ingestFeedBatches(es)
+    assert(batches.size == 3)
+    val all = batches.flatten
+    assert(all.size == 320 && all.toSet == committed(es))
+  }
+
+  test("a compact() between the first and second batch re-delivers nothing") {
+    val es = ingestedStore("graft-src-compact-")
+    def files() = {
+      val w = Files.walk(java.nio.file.Paths.get(es.root, "events"))
+      try w.iterator().asScala.filter(_.toString.endsWith(".parquet")).toSet finally w.close()
+    }
+    val before = files()
+    val batches = ingestFeedBatches(es, afterBatch = id => if (id == 0L) es.compact())
+    // every file the first batch read was replaced by a compacted one
+    assert(before.nonEmpty && (files() intersect before).isEmpty)
+    assert(batches.size == 3)
+    val all = batches.flatten
+    assert(all.size == 320 && all.toSet == committed(es))
   }
 
   /** 15 one-event files in partition 0 of a one-partition store, then
